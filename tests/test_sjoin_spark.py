@@ -79,6 +79,105 @@ def test_on_attribute(data, spark):
     assert got == exp
 
 
+# on_attribute values per side, as (Spark column, Python value) builders
+# over the row id. Spark SQL `=` join semantics: NULL never matches,
+# NaN matches NaN, -0.0 matches 0.0.
+_NAN = float("nan")
+_ATTRS = {
+    "null": [(
+        lambda k: F.when(k % 5 == 0, F.lit(None).cast("long")).otherwise(k % 3),
+        lambda k: None if k % 5 == 0 else k % 3,
+        lambda k: F.when(k % 4 == 1, F.lit(None).cast("long")).otherwise(k % 3),
+        lambda k: None if k % 4 == 1 else k % 3,
+    )],
+    "nan": [(
+        lambda k: F.when(k % 4 == 0, F.lit(_NAN)).otherwise((k % 2).cast("double")),
+        lambda k: _NAN if k % 4 == 0 else float(k % 2),
+        lambda k: F.when(k % 3 == 0, F.lit(_NAN)).otherwise((k % 2).cast("double")),
+        lambda k: _NAN if k % 3 == 0 else float(k % 2),
+    )],
+    "negzero": [(
+        lambda k: F.when(k % 2 == 0, F.lit(-0.0)).otherwise(F.lit(1.0)),
+        lambda k: -0.0 if k % 2 == 0 else 1.0,
+        lambda k: F.when(k % 3 == 0, F.lit(0.0)).when(k % 3 == 1, F.lit(-0.0))
+                   .otherwise(F.lit(1.0)),
+        lambda k: 0.0 if k % 3 == 0 else (-0.0 if k % 3 == 1 else 1.0),
+    )],
+    "string": [(
+        lambda k: F.concat(F.lit("s"), (k % 3).cast("string")),
+        lambda k: f"s{k % 3}",
+        lambda k: F.concat(F.lit("s"), (k % 3).cast("string")),
+        lambda k: f"s{k % 3}",
+    )],
+    "two": [
+        (lambda k: k % 2, lambda k: k % 2, lambda k: k % 2, lambda k: k % 2),
+        (lambda k: F.concat(F.lit("s"), (k % 3).cast("string")),
+         lambda k: f"s{k % 3}",
+         lambda k: F.concat(F.lit("s"), (k % 3).cast("string")),
+         lambda k: f"s{k % 3}"),
+    ],
+}
+
+_PLANS = {
+    "auto": {},
+    "broadcast": {"broadcast_right": True},
+    "shuffle": {"broadcast_right": False},
+    "salted": {"salt_hot_cells": True, "hot_cell_threshold": 2,
+               "salt_factor": 4},
+    "dwithin": {"predicate": "dwithin", "distance": 0.05},
+    "left": {"how": "left"},
+    "right": {"how": "right"},
+}
+
+
+def _sql_eq(a, b):
+    if a is None or b is None:
+        return False
+    if isinstance(a, float) and a != a:
+        return b != b
+    return a == b
+
+
+@pytest.mark.parametrize("plan", list(_PLANS))
+@pytest.mark.parametrize("attr", list(_ATTRS))
+def test_on_attribute_plans(data, spark, attr, plan):
+    """Differential: every plan sjoin can pick for an on_attribute join
+    returns the brute-force pair set under Spark SQL `=` semantics."""
+    pdf, tdf, lb, rb = data
+    kw = dict(_PLANS[plan])
+    how = kw.pop("how", "inner")
+    pred = kw.get("predicate", "intersects")
+    cols = [f"a{i}" for i in range(len(_ATTRS[attr]))]
+    p2, t2 = pdf, tdf
+    for c, (lcol, _, rcol, _) in zip(cols, _ATTRS[attr]):
+        p2 = p2.withColumn(c, lcol(F.col("pid")))
+        t2 = t2.withColumn(c, rcol(F.col("tid")))
+    if attr == "negzero":  # the data really holds a signed zero
+        assert any(str(r.a0) == "-0.0" for r in p2.select("a0").collect())
+
+    def match(p, t):
+        return all(_sql_eq(lv(p), rv(t)) for _, lv, _, rv in _ATTRS[attr])
+
+    exp = [(int(p), int(t)) for p, t in brute(lb, rb, pred, kw.get("distance"))
+           if match(p, t)]
+    out = sjoin(p2, t2, how=how, on_attribute=cols, left_id="pid",
+                right_id="tid", **kw)
+    if how == "right":
+        got = [(r.tid, r.index_left)
+               for r in out.select("tid", "index_left").collect()]
+        exp = [(t, p) for p, t in exp]
+        hit = {t for t, _ in exp}
+        exp += [(t, None) for t in range(NTRI) if t not in hit]
+    else:
+        got = [(r.pid, r.index_right)
+               for r in out.select("pid", "index_right").collect()]
+        if how == "left":
+            hit = {p for p, _ in exp}
+            exp += [(p, None) for p in range(NPTS) if p not in hit]
+    key = lambda r: (r[0], -1 if r[1] is None else r[1])  # noqa: E731
+    assert sorted(got, key=key) == sorted(exp, key=key)
+
+
 def test_salted_join_same_result(data, spark):
     pdf, tdf, lb, rb = data
     out = sjoin(pdf, tdf, left_id="pid", right_id="tid",

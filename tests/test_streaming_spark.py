@@ -71,6 +71,50 @@ def test_sjoin_stream_matches_batch(spark, tmpdir):
     assert sorted((r.pid, r.index_right) for r in got.collect()) == expected
 
 
+def _row_key(row):
+    # NaN != NaN: compare floats by repr so NaN rows still pair up
+    return tuple("nan" if isinstance(v, float) and v != v else v
+                 for v in row)
+
+
+def test_sjoin_stream_carries_left_columns(spark, tmpdir):
+    """Every stream-side column rides through the join unchanged (a
+    string column, a long column holding nulls, a double column holding
+    nulls and NaN), batch and stream, and equals the batch sjoin."""
+    from geopandas_spark.operators.sjoin import sjoin
+    from geopandas_spark.streaming import sjoin_stream
+
+    pts, _, _ = make_points_df(spark, 300)
+    tris, _ = make_triangles_df(spark, 40)
+    left = pts.select(
+        "pid", "geometry", "name",
+        F.when(F.col("pid") % 3 == 0, F.lit(None).cast("long"))
+        .otherwise(F.col("pid") * 7).alias("opt"),
+        F.when(F.col("pid") % 4 == 0, F.lit(None).cast("double"))
+        .when(F.col("pid") % 4 == 1, F.lit(float("nan")))
+        .otherwise(F.col("value")).alias("dv"))
+    right = tris.select(F.col("tid").alias("index_right"), "geometry")
+    cols = ["pid", "geometry", "name", "opt", "dv", "index_right"]
+
+    ref = sjoin(left, tris.select("tid", "geometry"), left_id="pid",
+                right_id="tid")
+    expected = sorted(_row_key(r) for r in ref.select(*cols).collect())
+    assert len(expected) > 0
+    assert any(r[3] is None for r in expected)
+    assert any(r[4] == "nan" for r in expected)
+
+    batch = sjoin_stream(left, right, predicate="intersects", resolution=5)
+    assert batch.columns == left.columns + ["index_right"]
+    assert sorted(_row_key(r) for r in batch.select(*cols).collect()) \
+        == expected
+
+    stream = _stream_rows(spark, left, tmpdir, "sj_cols")
+    out = sjoin_stream(stream, right, predicate="intersects", resolution=5)
+    got = _run_to_memory(out, spark, "sj_cols_mem", tmpdir)
+    assert sorted(_row_key(r) for r in got.select(*cols).collect()) \
+        == expected
+
+
 def test_sjoin_stream_polygon_left_dedups_pairs(spark, tmpdir):
     """A polygon covered by many cells still emits each pair once
     (reference-point rule, no dropDuplicates state)."""
@@ -228,6 +272,29 @@ def test_sjoin_nearest_stream_line_left(spark):
     got = sorted((r.lid, r.tid, round(r.dist, 12))
                  for r in sjoin_nearest_stream(
                      lines, right, resolution=6,
+                     left_id="lid", right_id="tid").collect())
+    assert got == expected
+
+
+def test_sjoin_nearest_stream_areal_right(spark):
+    """Polygon (areal) right side with line left rows: the stream
+    operator equals the batch sjoin_nearest, ties and distances."""
+    from geopandas_spark.operators.nearest import sjoin_nearest
+    from geopandas_spark.streaming import sjoin_nearest_stream
+
+    lines = _lines_df(spark, 60, seed=8, length=0.2)
+    tris, _ = make_triangles_df(spark, 30, seed=4, scale=0.1)
+    right = tris.select("tid", "geometry")
+
+    ref = sjoin_nearest(lines, right, distance_col="dist",
+                        left_id="lid", right_id="tid")
+    expected = sorted((r.lid, r.index_right, round(r.dist, 12))
+                      for r in ref.select("lid", "index_right",
+                                          "dist").collect())
+    assert any(d == 0.0 for _, _, d in expected)  # some lines hit a polygon
+    got = sorted((r.lid, r.tid, round(r.dist, 12))
+                 for r in sjoin_nearest_stream(
+                     lines, right, resolution=5,
                      left_id="lid", right_id="tid").collect())
     assert got == expected
 
