@@ -17,10 +17,6 @@ import os
 import sys
 import time
 
-os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -29,19 +25,10 @@ def main():
         cpus = int(sys.argv[sys.argv.index("--cpus") + 1])
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from pyspark.sql import SparkSession
+    from geopandas_spark.conf import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("geopandas-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("geopandas-spark-bench", cpus=cpus,
+                      shuffle_partitions=max(2 * cpus, 16))
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E

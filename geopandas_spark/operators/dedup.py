@@ -596,11 +596,11 @@ def hash_split(df: DataFrame, key_col: str = "doc_id",
     """
     if fractions is None:
         fractions = {"train": 0.9, "val": 0.05, "test": 0.05}
+    if not fractions:
+        raise ValueError("fractions must not be empty")
     total = sum(fractions.values())
     if abs(total - 1.0) > 1e-9:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    if not fractions:
-        raise ValueError("fractions must not be empty")
     bucket = F.pmod(
         F.conv(F.substring(
             F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))),

@@ -52,9 +52,9 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.st import st_bounds, st_cells_from_bbox
 from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
-from .sjoin import (BROADCAST_EXPLODED_ROWS, _BUILD_CACHE_MAX,
-                    _est_exploded, _min_cover_res, _prep_side,
-                    _suffix_columns)
+from .sjoin import (BROADCAST_EXPLODED_ROWS, _BUILD_CACHE_MAX, _assemble,
+                    _est_exploded, _min_cover_res, _output_columns,
+                    _prep_side)
 
 
 def _disk_cells_udf(k: int):
@@ -498,7 +498,7 @@ def _all_lineal_headers(prefixes: list[str]) -> bool:
 
 
 def _collect_knn_build(right: DataFrame, rid: str, right_geom: str,
-                       resolution: int, domain):
+                       resolution: int, domain, max_cells: int = 4096):
     """Arrow-collect the build side as (rid, wkb, bbox) and build the
     row-major (cellkey -> build row) flat index ON THE DRIVER with
     vectorized bbox_cover. The first cut computed the cover with the
@@ -546,7 +546,7 @@ def _collect_knn_build(right: DataFrame, rid: str, right_geom: str,
     # distance still decides, and the disk bounds stay valid because
     # always-rows are searched in every probe. (The shuffle path instead
     # clamps the grid to the max bbox's cover res.)
-    giant = cnt > 4096
+    giant = cnt > max_cells
     if giant.any():
         always = np.nonzero(giant)[0].astype(np.int64)
         cnt = np.where(giant, 0, cnt)
@@ -633,14 +633,16 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
                    right_geom: str, resolution: int, domain,
                    min_cell: float, k_cap: int,
                    max_distance: float | None, exclusive: bool,
-                   emit_geom: bool, lid_t: str, rid_t: str) -> DataFrame:
+                   emit_geom: bool, lid_t: str, rid_t: str,
+                   max_cells: int = 4096) -> DataFrame:
     """k=1 nearest (ties kept) as a single probe-side mapInPandas pass
     against a broadcast right side. Same certify/escalate/exact-probe
     maths as the shuffle path (disk(1) certify at d + lrad < cell;
     exhaustive re-probe at ceil((d+lrad)/cell)+1), so results are
-    bit-identical — only the execution plan changes."""
+    bit-identical — only the execution plan changes. Build rows covering
+    more than ``max_cells`` fine cells are candidates of every probe."""
     cache_key, bc, nb, rid_vals = _collect_knn_build(
-        right, rid, right_geom, resolution, domain)
+        right, rid, right_geom, resolution, domain, max_cells)
     g = 1 << resolution
     COMBO_CAP = 262_144  # keep per-block temporaries L2/L3-resident
     mdist = max_distance
@@ -1136,7 +1138,6 @@ def sjoin_nearest(
     right_id: str | None = None,
     resolution: int | None = None,
     domain=DOMAIN_UNIT,
-    max_iters: int = 8,
     broadcast_right: bool | None = None,
 ) -> DataFrame:
     # reference _basic_checks (tools/sjoin.py:123-127): pre-existing
@@ -1159,7 +1160,7 @@ def sjoin_nearest(
             lsuffix=rsuffix, rsuffix=lsuffix, distance_col=distance_col,
             exclusive=exclusive, left_geom=right_geom,
             right_geom=left_geom, left_id=right_id, right_id=left_id,
-            resolution=resolution, domain=domain, max_iters=max_iters,
+            resolution=resolution, domain=domain,
             broadcast_right=broadcast_right)
         return out.withColumnRenamed("index_right", "index_left")
     if how not in ("inner", "left"):
@@ -1242,18 +1243,9 @@ def sjoin_nearest(
     rcells = st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
                                 "__bb.maxy", resolution, domain=domain)
 
-    # narrow fast path (mirrors sjoin): when both sides carry nothing
-    # beyond (id, geometry) and how='inner', the pass output IS the join
-    # output — certified rows carry the left WKB so BOTH assembly joins
-    # (two |result|-row shuffles) are skipped
-    auto_l = left_id is None
-    auto_r = right_id is None
-    _ldata = [c for c in left.columns
-              if c != "__bb" and not (auto_l and c == lid)]
-    _rdata = [c for c in right.columns
-              if c != "__bb" and c != right_geom and not (auto_r and c == rid)]
-    narrow = (how == "inner" and set(_ldata) <= {lid, left_geom}
-              and set(_rdata) <= {rid})
+    ldata, rdata, narrow = _output_columns(
+        left, right, lid, rid, left_id is None, right_id is None, left_geom,
+        right_geom, how)
 
     grid_n = 1 << resolution
     k_cap = grid_n  # full-grid disk == brute force
@@ -1274,48 +1266,5 @@ def sjoin_nearest(
             resolution, domain, min_cell, k_cap, grid_n, max_distance,
             exclusive, narrow, lid_t, rid_t)
 
-    if narrow:
-        # zero-join output: ids + left geometry + distance straight from
-        # the pass (collision naming mirrors _suffix_columns)
-        collide = (not auto_l) and (not auto_r) and lid == rid
-        cols = []
-        if not auto_l:
-            cols.append(F.col("__xlid").alias(
-                f"{lid}_{lsuffix}" if collide else lid))
-        if left_geom in _ldata:
-            cols.append(F.col("__lgeom").alias(left_geom))
-        if not auto_r:
-            cols.append(F.col("__xrid").alias(
-                f"{rid}_{rsuffix}" if collide else rid))
-        cols.append(F.col("__xrid").alias("index_right"))
-        if distance_col is not None:
-            cols.append(F.col("__d").alias(distance_col))
-        return matched.select(*cols)
-
-    # ---- assemble (same rules as sjoin) ---------------------------------
-    lclean = left.drop("__bb")
-    rclean = right.drop("__bb")
-    ldata = [c for c in lclean.columns if not (auto_l and c == lid)]
-    rdata = [c for c in rclean.columns if not (auto_r and c == rid) and c != right_geom]
-    lmap, rmap = _suffix_columns(
-        lclean.select(ldata), rclean.select(rdata), lsuffix, rsuffix, exclude=set()
-    )
-    lfull = lclean.select(
-        *[F.col(c).alias(lmap.get(c, c)) for c in ldata],
-        F.col(lid).alias("__LID"),
-    )
-    rfull = rclean.select(
-        *[F.col(c).alias(rmap.get(c, c)) for c in rdata],
-        F.col(rid).alias("__RID"),
-    )
-    pairs_out = matched.select(
-        F.col("__xlid").alias("__LID"), F.col("__xrid").alias("__RID"), "__d"
-    )
-    joined = (
-        lfull.join(pairs_out, on="__LID", how="inner" if how == "inner" else "left")
-        .join(rfull, on="__RID", how="left")
-        .withColumn("index_right", F.col("__RID"))
-    )
-    if distance_col is not None:
-        joined = joined.withColumn(distance_col, F.col("__d"))
-    return joined.drop("__LID", "__RID", "__d")
+    return _assemble(matched, left, right, lid, rid, ldata, rdata, narrow,
+                     how, left_geom, lsuffix, rsuffix, distance_col)

@@ -34,7 +34,8 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.st import st_bounds, st_cells, st_is_empty, st_predicate
 from ..index.cells import DOMAIN_UNIT
-from .sjoin import _estimate_resolution, _prep_side, _suffix_columns
+from .sjoin import (_canonical_cells, _estimate_resolution, _prep_side,
+                    _suffix_columns)
 
 VALID_HOW = ("intersection", "union", "identity", "symmetric_difference", "difference")
 
@@ -112,7 +113,8 @@ def _broadcast_probe_intersection(probe_raw, rcov, i1: str, i2: str,
     """
     from .sjoin import _collect_build_index, _flat_ancestors, _load_build
 
-    cache_key, bc, nb, rid_vals = _collect_build_index(rcov, i2)
+    cache_key, bc, nb, rids = _collect_build_index(rcov, i2)
+    rid_vals = np.asarray(rids.to_pandas(), dtype=object)
     i1_t = dict(probe_raw.dtypes)[i1]
     i2_t = dict(rcov.dtypes)[i2]
     probe = probe_raw.select(F.col(i1).alias("__xi1"), "__g1")
@@ -232,14 +234,8 @@ def _intersection_rp_udf(resolution: int, domain):
                          resolution, domain=domain)
         rr = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
                          resolution, domain=domain)
-        rc = np.minimum(rl, rr)
-        rx = np.maximum(lbb[:, 0], rbb[:, 0])
-        ry = np.maximum(lbb[:, 1], rbb[:, 1])
-        canon = np.empty(len(rc), dtype=np.int64)
-        for r in np.unique(rc):
-            m = rc == r
-            canon[m] = C.point_cell(rx[m], ry[m], int(r), domain)
-        keep = canon == cell.to_numpy(dtype=np.int64)
+        keep = (_canonical_cells(lbb, rbb, rl, rr, domain)
+                == cell.to_numpy(dtype=np.int64))
         # bbox-overlap prefilter: disjoint bboxes cannot intersect
         keep &= (
             (lbb[:, 0] <= rbb[:, 2]) & (rbb[:, 0] <= lbb[:, 2])
@@ -281,7 +277,6 @@ def _difference_vs_union_udf():
             if general:
                 # arbitrary polygons: Martinez-Rueda difference vs each
                 # intersecting neighbor in turn
-                from .sjoin import _ancestors_udf  # noqa: F401 (no-op import guard)
                 from ..geom.boolean import boolean_rings, group_rings
                 from ..geom.clipping import _all_poly_rings
 

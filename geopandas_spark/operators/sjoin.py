@@ -8,22 +8,37 @@ column collisions suffixed (sjoin.py:193-224); outer rows null-padded
 
 Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
 
-1. **Cover**: each side computes bbox -> quadtree cell cover at a shared
-   resolution (adaptive if not given) — one Arrow-UDF projection, no
-   shuffle.
-2. **Coarse join**: explode cells, hash equi-join on (cell [, salt]
-   [, on_attribute...]). The small side is broadcast when below threshold;
-   otherwise a shuffle join with AQE skew splitting plus *explicit salting*
-   of hot cells (north rule: explicit skew handling — ocean/megacity cells
-   are replicated on the build side, probe rows hash into salt buckets).
-3. **Dedupe**: a pair can share several cells -> dropDuplicates on ids.
-4. **Refine**: exact predicate via the vectorized numpy kernels
-   (geom/predicates.py) — the distributed analogue of the reference's
-   prepared-geometry refinement (sindex.py:86-87).
-5. **Assemble**: suffix collided columns, attach ``index_right``
-   (``index_left`` for how='right'), null-pad outer rows via anti-join.
+1. **Prep + stats**: each side gets a row id (if none supplied) and a
+   bbox struct; ONE tiny agg job reads both sides' bbox extents. They
+   fix the quadtree resolution (adaptive if not given), the coarsest
+   per-row cover res each side can fall back to (the other side then
+   emits ancestor cells down to it), and the estimated exploded size of
+   the right side's cell cover.
+2. **Pair pass**: one of two ``mapInPandas``/``mapInArrow`` kernels.
+   Candidate pairs are generated, deduped and refined with the exact
+   vectorized predicate (geom/predicates.py) in-kernel, and leave the
+   pass as id pairs — no per-pair WKB crosses an Arrow boundary.
 
-At 100 TB the dominant cost is the coarse-join shuffle; the cell id is a
+   * **Broadcast probe** (``_broadcast_probe_refined``): chosen when the
+     right side's exploded cover is under BROADCAST_EXPLODED_ROWS (or
+     ``broadcast_right=True``) and neither ``on_attribute`` nor
+     ``salt_hot_cells`` is set. The right side is collected once into a
+     cell->row CSR index and broadcast; the left side streams through
+     one pass that covers each row in-kernel, looks its cells up and
+     dedups on the (probe, build) key. No join, no shuffle.
+   * **Cogroup** (``_cogroup_refined``): every other case. Both sides
+     are exploded per cover cell, union-tagged and hash-partitioned by
+     (cell, salt[, attribute hash]). Each group's pairs are generated
+     in-kernel and kept only in their canonical cell (reference-point
+     rule, ``_canonical_cells``); ``on_attribute`` equality is checked
+     exactly per pair. Hot cells are salted on request (build rows
+     replicated into salt buckets, probe rows hashed into one).
+3. **Assemble** (``_assemble``): suffix collided columns, attach
+   ``index_right`` (``index_left`` for how='right'), null-pad outer
+   rows. When both sides carry only (id, geometry) and how='inner', the
+   pass output already is the result and both re-joins are skipped.
+
+At 100 TB the dominant cost is the cogroup shuffle; the cell id is a
 single int64 so shuffle rows are (cell, id, wkb). Resolution is chosen so
 an average geometry covers ~1-2 cells (index/cells.pick_resolution),
 bounding both candidate-pair inflation and refine selectivity.
@@ -31,11 +46,15 @@ bounding both candidate-pair inflation and refine selectivity.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, MapType, StructType
 
 from ..functions.st import st_bounds, st_cells_from_bbox, st_predicate
 from ..index.cells import DOMAIN_UNIT, pick_resolution
@@ -45,13 +64,6 @@ VALID_PRED = (
     "intersects", "contains", "contains_properly", "within", "covers",
     "covered_by", "touches", "crosses", "overlaps", "dwithin", "equals",
 )
-
-
-def _check_crs_like(left_geom: str, right_geom: str) -> None:
-    # CRS metadata travels at the table level in this engine; equality is
-    # asserted by callers that attach it (sources/geoparquet.py). The
-    # reference warns on mismatch (array.py:38-63).
-    return None
 
 
 def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
@@ -90,7 +102,6 @@ def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
 # exploded build-side rows below this -> broadcast the exploded cell cover
 # instead of shuffling both sides (UDF-derived sizes defeat AQE's own
 # auto-broadcast estimation, so the operators decide from the stats job)
-BROADCAST_ROWS = 100_000
 BROADCAST_EXPLODED_ROWS = 2_000_000
 
 
@@ -170,66 +181,6 @@ def _ancestors_udf(down_to: int):
     return _f
 
 
-def _refine_rp_udf(pred: str, resolution: int, domain, distance, lpad: float):
-    """Exact predicate AND reference-point dedup in one Arrow pass.
-
-    A candidate pair that shares k cover cells is evaluated k times but
-    kept exactly once: in the canonical cell — the cell (at the pair's
-    coarser per-row cover res) containing (max(minx), max(miny)) of the
-    two bboxes. Replaces a dropDuplicates shuffle with pure map-side math;
-    the canonical cell is always among the joined cells because it lies in
-    both bboxes and both sides emit ancestors down to the other's min res.
-
-    Bounds arrive as columns carried through the cell join (computed once
-    in _prep_side) — round 1 recomputed them from a second decode here.
-    """
-
-    @pandas_udf("boolean")
-    def _f(lg: pd.Series, rg: pd.Series, cell: pd.Series,
-           lmnx: pd.Series, lmny: pd.Series, lmxx: pd.Series, lmxy: pd.Series,
-           rmnx: pd.Series, rmny: pd.Series, rmxx: pd.Series, rmxy: pd.Series,
-           ) -> pd.Series:
-        from ..geom.predicates import pairwise_predicate
-        from ..geom.wkb import from_wkb
-        from ..index import cells as C
-
-        # candidate batches repeat the same build-side geometry many
-        # times (every probe row joined to a rect repeats the rect WKB):
-        # decode UNIQUES once and gather — WKB parse is the hot cost
-        lcod, luniq = pd.factorize(lg, use_na_sentinel=False)
-        rcod, runiq = pd.factorize(rg, use_na_sentinel=False)
-        lb = from_wkb(pd.Series(luniq))
-        rb = from_wkb(pd.Series(runiq))
-        # all-unique columns factorize to identity codes -> skip the gather
-        if len(luniq) != len(lg):
-            lb = lb.take(lcod)
-        if len(runiq) != len(rg):
-            rb = rb.take(rcod)
-        ok = pairwise_predicate(pred, lb, rb, distance)
-        lbb = np.nan_to_num(np.column_stack([
-            lmnx.to_numpy(np.float64), lmny.to_numpy(np.float64),
-            lmxx.to_numpy(np.float64), lmxy.to_numpy(np.float64)]))
-        rbb = np.nan_to_num(np.column_stack([
-            rmnx.to_numpy(np.float64), rmny.to_numpy(np.float64),
-            rmxx.to_numpy(np.float64), rmxy.to_numpy(np.float64)]))
-        if lpad:
-            lbb = lbb + np.array([-lpad, -lpad, lpad, lpad])
-        rl = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                         resolution, domain=domain)
-        rr = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                         resolution, domain=domain)
-        rc = np.minimum(rl, rr)
-        rx = np.maximum(lbb[:, 0], rbb[:, 0])
-        ry = np.maximum(lbb[:, 1], rbb[:, 1])
-        canon = np.empty(len(rc), dtype=np.int64)
-        for r in np.unique(rc):
-            m = rc == r
-            canon[m] = C.point_cell(rx[m], ry[m], int(r), domain)
-        return pd.Series(ok & (canon == cell.to_numpy(dtype=np.int64)))
-
-    return _f
-
-
 def _widen(df: DataFrame) -> DataFrame:
     from ..conf import widen
 
@@ -271,7 +222,8 @@ def _collect_build_index(rcov, rid: str):
     """Arrow-collect a (rid, __rgeom, __cells) build side into a broadcast
     cell->row CSR index (+ raw WKB). Shared by the sjoin broadcast probe
     and overlay's broadcast intersection probe. Returns
-    (cache_key, broadcast, n_build_rows, rid_values)."""
+    (cache_key, broadcast, n_build_rows, rids) — ``rids`` is the build
+    ids as one Arrow array, gathered with ``take``."""
     import uuid
 
     spark = rcov.sparkSession
@@ -279,7 +231,6 @@ def _collect_build_index(rcov, rid: str):
                        F.col("__cells").alias("c"))
            .toArrow().combine_chunks())
     nb = tbl.num_rows
-    rid_vals = np.asarray(tbl["i"].to_pandas(), dtype=object)
     rwkb: list = tbl["g"].to_pylist()
     ccol = tbl["c"].combine_chunks()
     flat = ccol.values.to_numpy(zero_copy_only=False).astype(np.int64,
@@ -309,7 +260,7 @@ def _collect_build_index(rcov, rid: str):
     cache_key = uuid.uuid4().hex
     bc = spark.sparkContext.broadcast(
         {"wkb": rwkb, "ucells": ucells, "off": off, "ridx": fi})
-    return cache_key, bc, nb, rid_vals
+    return cache_key, bc, nb, tbl["i"].combine_chunks()
 
 
 def _load_build(cache_key: str, bc):
@@ -331,11 +282,10 @@ def _load_build(cache_key: str, bc):
     return got
 
 
-def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
+def _broadcast_probe_refined(lraw, rcov, rid: str, predicate: str,
                              distance, lpad: float, resolution: int, domain,
-                             anc_down_to: int | None,
-                             emit_geom: bool = False):
-    """Broadcast spatial join as a single probe-side ``mapInPandas`` pass.
+                             anc_down_to: int | None, carry: list[str]):
+    """Broadcast spatial join as a single probe-side ``mapInArrow`` pass.
 
     Round-2 scale fix: the round-1 plan materialized every candidate
     pair's full payload (probe WKB + build WKB + two bbox structs +
@@ -348,32 +298,33 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
     explode and NO pair materialization: candidates are generated
     in-kernel from the CSR, deduped per probe row, and refined against
     the cached decoded build batch.  Wire traffic is O(|probe| +
-    |build|) + O(|matches|) id pairs out.
+    |build|) + O(|matches|) rows out.
 
-    ``lraw`` carries ONLY (lid, __lgeom): bounds, cell cover and the
-    ancestor chain are computed in-kernel from the decoded geometry
-    (vectorized bbox_cover over flat offsets), so the probe side pays a
-    single Arrow stage — the earlier plan ran st_bounds +
-    st_cells_from_bbox + a per-row-Python _ancestors_udf upstream and
-    shipped the cell arrays through Arrow.
+    ``lraw`` carries the probe geometry as ``__lgeom`` plus the ``carry``
+    columns: bounds, cell cover and the ancestor chain down to
+    ``anc_down_to`` are computed in-kernel from the decoded geometry
+    (vectorized bbox_cover over flat offsets).
 
-    Returns a DataFrame (__xlid, __xrid[, __lgeom]) of matched pairs —
-    ``emit_geom`` rides the probe WKB along only when the caller will
-    consume it directly (the narrow assembly fast path); every other
-    consumer re-joins attributes by id, so shipping WKB per match
-    through Arrow would be pure serialization waste.
+    Returns a DataFrame of matched pairs: the probe row's ``carry``
+    columns and the build id ``__xrid``. Carried columns are gathered
+    from the probe's Arrow batch, so every type passes through unchanged
+    (a pandas round trip would turn a NaN double into NULL). sjoin
+    carries only the probe id (plus ``__lgeom`` on the narrow assembly
+    path); the stream join carries every stream-side column.
     """
+    import pyarrow as pa
+    from pyspark.sql.types import StructField, StructType
+
     # Arrow collect + vectorized CSR build: the row-wise collect() plus a
     # per-row Python loop here was the dominant SERIAL cost of the whole
     # join (Amdahl fit on the 1M x 100k scaling input put ~18 s of the
     # local[2] 59 s outside the parallel fraction). toArrow() lands the
     # cell lists as one flat int64 buffer + offsets, so the cell->row
     # index is pure numpy.
-    cache_key, bc, nb, rid_vals = _collect_build_index(rcov, rid)
+    cache_key, bc, nb, rids = _collect_build_index(rcov, rid)
 
-    lid_t = dict(lraw.dtypes)[lid]
-    rid_t = dict(rcov.dtypes)[rid]
-    probe = lraw.select(F.col(lid).alias("__xlid"), "__lgeom")
+    schema = StructType([lraw.schema[c] for c in carry]
+                        + [StructField("__xrid", rcov.schema[rid].dataType)])
     pad = float(lpad or 0.0)
 
     def fn(it):
@@ -382,12 +333,14 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
         from ..geom.ragged import _expand_ranges
         from ..geom.wkb import from_wkb
         from ..index import cells as C
+        from ._cellstream import BUFFER_ROWS as _CAP
 
         rb_all, rbb, uc, off_, ridx, _ = _load_build(cache_key, bc)
-        for pdf in it:
-            if len(pdf) == 0 or len(uc) == 0:
+        for batch in it:
+            n = batch.num_rows
+            if n == 0 or len(uc) == 0:
                 continue
-            lb = from_wkb(pdf["__lgeom"])
+            lb = from_wkb(batch.column("__lgeom").to_pandas())
             lbb = _bounds(lb)
             miss = np.isnan(lbb[:, 0])
             lbb = np.nan_to_num(lbb)
@@ -399,7 +352,7 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
                                        lbb[:, 2], lbb[:, 3],
                                        resolution, domain=domain)
             ncell = np.diff(coff)
-            prow = np.repeat(np.arange(len(pdf)), ncell)
+            prow = np.repeat(np.arange(n), ncell)
             if miss.any():
                 keep = ~miss[prow]
                 cflat = cflat[keep]
@@ -420,20 +373,14 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
             li = np.repeat(prow[sel], cnt[sel])
             ri = ridx[_expand_ranges(off_[pos[sel]], off_[pos[sel]] + cnt[sel])]
             # multi-cell probes can produce the same pair via several
-            # cells: dedup on the (probe, build) key (in-kernel — the
-            # round-1 plan needed a canonical-cell rule for this)
+            # cells: dedup on the (probe, build) key
             if multi:
                 key = li * np.int64(nb) + ri
                 ukey = np.unique(key)
                 li = (ukey // nb).astype(np.int64)
                 ri = (ukey % nb).astype(np.int64)
-            lids = pdf["__xlid"].to_numpy()
-            lws = pdf["__lgeom"].to_numpy(dtype=object) if emit_geom else None
-            o_lid = []
-            o_rid = []
-            o_lw = []
-            from ._cellstream import BUFFER_ROWS as _CAP
-
+            o_l = []
+            o_r = []
             for lo in range(0, len(li), _CAP):
                 ls = li[lo:lo + _CAP]
                 rs = ri[lo:lo + _CAP]
@@ -450,31 +397,54 @@ def _broadcast_probe_refined(lraw, rcov, lid: str, rid: str, predicate: str,
                     continue
                 ok = pairwise_predicate(predicate, lb.take(ls),
                                         rb_all.take(rs), distance)
-                ls = ls[ok]
-                rs = rs[ok]
-                if not len(ls):
-                    continue
-                o_lid.append(lids[ls])
-                o_rid.append(rid_vals[rs])
-                if emit_geom:
-                    o_lw.append(lws[ls])
-            if o_lid:
-                d = {"__xlid": np.concatenate(o_lid),
-                     "__xrid": np.concatenate(o_rid)}
-                if emit_geom:
-                    d["__lgeom"] = np.concatenate(o_lw)
-                yield pd.DataFrame(d)
+                o_l.append(ls[ok])
+                o_r.append(rs[ok])
+            if o_l:
+                ls = np.concatenate(o_l)
+                if len(ls):
+                    rs = np.concatenate(o_r)
+                    cols = batch.select(carry).take(ls).columns
+                    yield pa.RecordBatch.from_arrays(
+                        [*cols, rids.take(rs)], names=[*carry, "__xrid"])
 
-    schema = f"__xlid {lid_t}, __xrid {rid_t}"
-    if emit_geom:
-        schema += ", __lgeom binary"
-    return probe.mapInPandas(fn, schema=schema)
+    return lraw.mapInArrow(fn, schema=schema)
+
+
+def _canonical_cells(lbb: np.ndarray, rbb: np.ndarray, lres: np.ndarray,
+                     rres: np.ndarray, domain) -> np.ndarray:
+    """Reference-point rule: the one cell that owns a candidate pair.
+
+    A pair sharing k cover cells is kept only in the cell, at the pair's
+    coarser per-row cover res, that contains (max(minx), max(miny)) of
+    the two bboxes. That point lies in both bboxes and both sides emit
+    ancestors down to the other's coarsest res, so the cell is always
+    among the pair's joined cells. Replaces a dropDuplicates shuffle with
+    map-side math."""
+    from ..index import cells as C
+
+    rc = np.minimum(lres, rres)
+    rx = np.maximum(lbb[:, 0], rbb[:, 0])
+    ry = np.maximum(lbb[:, 1], rbb[:, 1])
+    canon = np.empty(len(rc), dtype=np.int64)
+    for r in np.unique(rc):
+        m = rc == r
+        canon[m] = C.point_cell(rx[m], ry[m], int(r), domain)
+    return canon
+
+
+def _values_equal(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Elementwise Spark SQL ``=`` on non-NULL atomic values (NaN = NaN)."""
+    eq = np.asarray(a == b, dtype=bool)
+    if a.dtype.kind == "f":
+        eq |= np.isnan(a) & np.isnan(b)
+    return eq
 
 
 def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
                      distance, lpad: float, resolution: int, domain,
                      salt_hot_cells: bool, hot_cell_threshold: int,
-                     salt_factor: int, emit_geom: bool = False):
+                     salt_factor: int, emit_geom: bool = False,
+                     on_attribute: list[str] = ()):
     """Shuffle spatial join as a union-cogroup-by-cell streaming pass.
 
     Round-2 scale fix for the big×big path: instead of a hash join whose
@@ -488,17 +458,31 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
     into one bucket; the kernel groups on (cell, salt) so each pair is
     still generated exactly once.
 
-    Returns a DataFrame (__xlid, __xrid, __lgeom) of matched pairs.
+    ``on_attribute`` adds the xxhash64 of the attribute values to the
+    partition/sort key and the in-kernel group split, and every candidate
+    pair's values are compared exactly, so a hash collision cannot make a
+    false pair. Spark SQL ``=`` semantics: rows with a NULL attribute
+    never pair (outer joins re-attach them at assembly), NaN equals NaN
+    and -0.0 equals 0.0 (xxhash64 hashes both alike).
+
+    Returns a DataFrame (__xlid, __xrid[, __lgeom]) of matched pairs.
     """
     spark = lcov.sparkSession
-    lx = lcov.select(F.col(lid).alias("__lid"),
-                     F.col("__lgeom").alias("__geom"),
-                     F.explode("__cells").alias("__cell"),
-                     ).withColumn("__side", F.lit(1))
-    rx = rcov.select(F.col(rid).alias("__rid"),
-                     F.col("__rgeom").alias("__geom"),
-                     F.explode("__cells").alias("__cell"),
-                     ).withColumn("__side", F.lit(0))
+    acols = [f"__a{i}" for i in range(len(on_attribute))]
+
+    def tag(cov, id_col, id_alias, geom_col, side):
+        if on_attribute:
+            cov = cov.filter(reduce(operator.and_, [
+                F.col(c).isNotNull() for c in on_attribute]))
+        return cov.select(F.col(id_col).alias(id_alias),
+                          F.col(geom_col).alias("__geom"),
+                          *[F.col(c).alias(a)
+                            for c, a in zip(on_attribute, acols)],
+                          F.explode("__cells").alias("__cell"),
+                          ).withColumn("__side", F.lit(side))
+
+    lx = tag(lcov, lid, "__lid", "__lgeom", 1)
+    rx = tag(rcov, rid, "__rid", "__rgeom", 0)
     salted = False
     if salt_hot_cells:
         hot = (
@@ -533,11 +517,13 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
     # the pass is compute-bound — see operators/nearest.py)
     n_parts = max(spark.sparkContext.defaultParallelism * 2,
                   int(spark.conf.get("spark.sql.shuffle.partitions")))
-    tagged = (
-        lx.unionByName(rx, allowMissingColumns=True)
-        .repartition(n_parts, "__cell", "__salt")
-        .sortWithinPartitions("__cell", "__salt")
-    )
+    tagged = lx.unionByName(rx, allowMissingColumns=True)
+    keys = ["__cell", "__salt"]
+    if acols:
+        # hashed after the union, so both sides hash the same coerced type
+        tagged = tagged.withColumn("__akey", F.xxhash64(*acols))
+        keys.append("__akey")
+    tagged = tagged.repartition(n_parts, *keys).sortWithinPartitions(*keys)
 
     pad = float(lpad or 0.0)
 
@@ -550,11 +536,13 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
 
         n = len(pdf)
         cell = pdf["__cell"].to_numpy(dtype=np.int64)
-        salt = pdf["__salt"].to_numpy(dtype=np.int64)
         side = pdf["__side"].to_numpy()
         chg = np.empty(n, dtype=bool)
         chg[0] = True
-        chg[1:] = (cell[1:] != cell[:-1]) | (salt[1:] != salt[:-1])
+        chg[1:] = cell[1:] != cell[:-1]
+        for k in keys[1:]:
+            kv = pdf[k].to_numpy(dtype=np.int64)
+            chg[1:] |= kv[1:] != kv[:-1]
         gid = np.cumsum(chg) - 1
         lmask = side == 1
         if not lmask.any() or lmask.all():
@@ -581,6 +569,8 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
                            resolution, domain=domain)
         lid_arr = pdf["__lid"].to_numpy()[lsub]
         rid_arr = pdf["__rid"].to_numpy()[rsub]
+        lattr = [pdf[a].to_numpy()[lsub] for a in acols]
+        rattr = [pdf[a].to_numpy()[rsub] for a in acols]
         lcell = cell[lsub]
         o_lid = []
         o_rid = []
@@ -605,22 +595,14 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
             # bbox prefilter (lbb already dwithin-padded)
             pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
                    & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
+            for la, ra in zip(lattr, rattr):
+                pre &= _values_equal(la[li], ra[ri])
             li = li[pre]
             ri = ri[pre]
             if not len(li):
                 continue
-            # canonical-cell dedup: a pair sharing k cover cells is kept
-            # only in the cell (at the pair's coarser per-row cover res)
-            # containing (max(minx), max(miny)) of the two bboxes —
-            # exactly the _refine_rp_udf rule, computed in-kernel
-            rc = np.minimum(lres[li], rres[ri])
-            rxm = np.maximum(lbb[li, 0], rbb[ri, 0])
-            rym = np.maximum(lbb[li, 1], rbb[ri, 1])
-            canon = np.empty(len(rc), dtype=np.int64)
-            for r in np.unique(rc):
-                m = rc == r
-                canon[m] = C.point_cell(rxm[m], rym[m], int(r), domain)
-            keep = canon == lcell[li]
+            keep = _canonical_cells(lbb[li], rbb[ri], lres[li], rres[ri],
+                                    domain) == lcell[li]
             li = li[keep]
             ri = ri[keep]
             if not len(li):
@@ -646,7 +628,7 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
     def fn(it):
         from ._cellstream import stream_groups
 
-        yield from stream_groups(it, ["__cell", "__salt"], _process)
+        yield from stream_groups(it, keys, _process)
 
     schema = f"__xlid {lid_t}, __xrid {rid_t}"
     if emit_geom:
@@ -702,6 +684,13 @@ def sjoin(
     Matches geopandas.sjoin semantics row-for-row (tools/sjoin.py:11-97):
     returns left columns + right columns (collisions suffixed) + the
     retained side's geometry + ``index_right`` (or ``index_left``).
+
+    ``on_attribute`` names columns (atomic types) that must also be equal
+    for a pair to match, with Spark SQL ``=`` semantics: NULL never
+    matches, NaN matches NaN, -0.0 matches 0.0. It always runs the
+    cogroup pass (``broadcast_right`` is then ignored, as with
+    ``salt_hot_cells``): the attribute hash joins the cell key and each
+    pair's values are compared exactly in-kernel.
     """
     if how not in VALID_HOW:
         raise ValueError(f"`how` was {how!r} but is expected to be in {VALID_HOW}")
@@ -728,6 +717,11 @@ def sjoin(
             raise ValueError(f"on_attribute column {col!r} missing from a side")
         if col in (left_geom, right_geom):
             raise ValueError("on_attribute cannot be the geometry column")
+        for df in (left, right):
+            if isinstance(df.schema[col].dataType,
+                          (ArrayType, MapType, StructType)):
+                raise ValueError(
+                    f"on_attribute column {col!r} must be an atomic type")
 
     left, lid = _prep_side(left, left_geom, left_id, "l")
     right, rid = _prep_side(right, right_geom, right_id, "r")
@@ -787,60 +781,74 @@ def sjoin(
             and _est_exploded(stats[1], resolution, domain) <= BROADCAST_EXPLODED_ROWS
         )
 
-    # ---- output shape (decided BEFORE refine: it steers emit_geom) -------
-    # Internal unambiguous keys __LID/__RID; user id columns (when supplied)
-    # also remain as ordinary data columns, like the pandas index does.
-    lclean = left.drop("__bb")
-    rclean = right.drop("__bb")
-    auto_l = left_id is None  # auto ids are internal -> dropped from output
-    auto_r = right_id is None
-    ldata = [c for c in lclean.columns if not (auto_l and c == lid)]
-    rdata = [c for c in rclean.columns if not (auto_r and c == rid)]
-    # the non-retained geometry is dropped BEFORE suffixing — the retained
-    # geometry keeps its original name (reference _frame_join behavior)
-    if how in ("inner", "left"):
-        rdata = [c for c in rdata if c != right_geom]
-    else:
-        ldata = [c for c in ldata if c != left_geom]
-    # Narrow-assembly fast path precondition: both sides carry nothing
-    # beyond (id, geometry) — every output column can flow through the
-    # refine stage directly, skipping BOTH assembly joins (the dominant
-    # shuffles at scale: matched is |result| rows, the joins re-shuffle
-    # it twice against the base tables). Only THEN do the kernels emit
-    # the probe WKB per match; every other shape re-joins by id, where
-    # per-match WKB through Arrow is pure serialization waste.
-    narrow = (how == "inner" and not on_attribute
-              and set(ldata) <= {lid, left_geom}
-              and set(rdata) <= {rid})
-    emit_geom = narrow and left_geom in ldata
-
-    if not on_attribute and broadcast_right and not salt_hot_cells:
+    ldata, rdata, narrow = _output_columns(
+        left, right, lid, rid, left_id is None, right_id is None, left_geom,
+        right_geom, how)
+    if broadcast_right and not (on_attribute or salt_hot_cells):
         # small build side: single probe-side pass, no join, no explode
         # (an explicit salting request signals a shuffle-scale build side
-        # — it always routes to the cogroup pass). The probe ships ONLY
-        # (id, wkb); bounds/cover/ancestors happen in-kernel.
-        lraw = left.select(lid, F.col(left_geom).alias("__lgeom"))
+        # and on_attribute needs the attribute key — both always route to
+        # the cogroup pass). The probe ships ONLY (id, wkb); bounds/cover/
+        # ancestors happen in-kernel.
+        lraw = left.select(F.col(lid).alias("__xlid"),
+                           F.col(left_geom).alias("__lgeom"))
         refined = _broadcast_probe_refined(
-            lraw, rcov, lid, rid, predicate, distance, pad, resolution,
-            domain, rmin if rmin < resolution else None,
-            emit_geom=emit_geom)
-    elif not on_attribute:
+            lraw, rcov, rid, predicate, distance, pad, resolution, domain,
+            rmin if rmin < resolution else None,
+            carry=["__xlid", "__lgeom"] if narrow else ["__xlid"])
+    else:
         # big×big: union-cogroup by cell — geometry crosses the wire once
         # per cover cell, pairs leave as ids
         refined = _cogroup_refined(lcov, rcov, lid, rid, predicate,
                                    distance, pad, resolution, domain,
                                    salt_hot_cells, hot_cell_threshold,
-                                   salt_factor, emit_geom=emit_geom)
-    else:
-        refined = _join_refine_path(
-            lcov, rcov, lid, rid, on_attribute, predicate, distance, pad,
-            resolution, domain, broadcast_right, salt_hot_cells,
-            hot_cell_threshold, salt_factor)
-        if narrow:
-            narrow = False  # legacy path emits no geometry column
-            emit_geom = False
-    matched = refined.select("__xlid", "__xrid")
+                                   salt_factor, emit_geom=narrow,
+                                   on_attribute=on_attribute)
+    return _assemble(refined, left, right, lid, rid, ldata, rdata, narrow,
+                     how, left_geom, lsuffix, rsuffix)
 
+
+def _output_columns(left: DataFrame, right: DataFrame, lid: str, rid: str,
+                    auto_l: bool, auto_r: bool, left_geom: str,
+                    right_geom: str, how: str):
+    """Data columns each side contributes to a join's output, and whether
+    the narrow fast path applies (shared by sjoin and sjoin_nearest).
+
+    Auto ids are internal and dropped; user id columns stay as ordinary
+    data columns, like the pandas index does. The non-retained geometry
+    is dropped BEFORE suffixing — the retained geometry keeps its
+    original name (reference _frame_join behavior).
+
+    Narrow: how='inner' and both sides carry nothing beyond (id,
+    geometry). Every output column then flows through the pair pass
+    directly (the pass emits the probe WKB per match), skipping BOTH
+    assembly joins — the dominant shuffles at scale. Every other shape
+    re-joins by id, where per-match WKB through Arrow would be pure
+    serialization waste. Decided before the pass: it steers what the
+    pass emits."""
+    ldata = [c for c in left.columns
+             if c != "__bb" and not (auto_l and c == lid)]
+    rdata = [c for c in right.columns
+             if c != "__bb" and not (auto_r and c == rid)]
+    if how == "right":
+        ldata = [c for c in ldata if c != left_geom]
+    else:
+        rdata = [c for c in rdata if c != right_geom]
+    narrow = (how == "inner" and set(ldata) <= {lid, left_geom}
+              and set(rdata) <= {rid})
+    return ldata, rdata, narrow
+
+
+def _assemble(matched: DataFrame, left: DataFrame, right: DataFrame,
+              lid: str, rid: str, ldata: list[str], rdata: list[str],
+              narrow: bool, how: str, left_geom: str, lsuffix: str,
+              rsuffix: str, distance_col: str | None = None) -> DataFrame:
+    """Join output from matched (__xlid, __xrid[, __lgeom][, __d]) pairs.
+
+    Narrow: select straight from the pass. Otherwise re-join both sides'
+    data columns by id (suffixing collisions), attach ``index_right``
+    (``index_left`` for how='right'; outer rows null-padded) and, for
+    sjoin_nearest, the ``__d`` distance as ``distance_col``."""
     if narrow:
         # collision naming must mirror _suffix_columns (ADVICE fix): when
         # the two user id columns share a name, BOTH get suffixed, so the
@@ -850,27 +858,24 @@ def sjoin(
         if lid in ldata:
             cols.append(F.col("__xlid").alias(
                 f"{lid}_{lsuffix}" if collide else lid))
-        if emit_geom:
-            cols.append(F.col("__lgeom").alias(left_geom))
+        cols.append(F.col("__lgeom").alias(left_geom))
         if rid in rdata:
             cols.append(F.col("__xrid").alias(
                 f"{rid}_{rsuffix}" if collide else rid))
         cols.append(F.col("__xrid").alias("index_right"))
-        return refined.select(*cols)
+        if distance_col is not None:
+            cols.append(F.col("__d").alias(distance_col))
+        return matched.select(*cols)
 
-    lmap, rmap = _suffix_columns(
-        lclean.select(ldata), rclean.select(rdata), lsuffix, rsuffix, exclude=set()
-    )
-    lfull = lclean.select(
-        *[F.col(c).alias(lmap.get(c, c)) for c in ldata],
-        F.col(lid).alias("__LID"),
-    )
-    rfull = rclean.select(
-        *[F.col(c).alias(rmap.get(c, c)) for c in rdata],
-        F.col(rid).alias("__RID"),
-    )
+    lmap, rmap = _suffix_columns(left.select(ldata), right.select(rdata),
+                                 lsuffix, rsuffix, exclude=set())
+    lfull = left.select(*[F.col(c).alias(lmap.get(c, c)) for c in ldata],
+                        F.col(lid).alias("__LID"))
+    rfull = right.select(*[F.col(c).alias(rmap.get(c, c)) for c in rdata],
+                         F.col(rid).alias("__RID"))
     pairs = matched.select(F.col("__xlid").alias("__LID"),
-                           F.col("__xrid").alias("__RID"))
+                           F.col("__xrid").alias("__RID"),
+                           *(["__d"] if distance_col is not None else []))
 
     if how in ("inner", "left"):
         joined = (
@@ -878,72 +883,12 @@ def sjoin(
             .join(rfull, on="__RID", how="left")
             .withColumn("index_right", F.col("__RID"))
         )
+        if distance_col is not None:
+            joined = joined.withColumn(distance_col, F.col("__d"))
     else:
         joined = (
             rfull.join(pairs, on="__RID", how="left")
             .join(lfull, on="__LID", how="left")
             .withColumn("index_left", F.col("__LID"))
         )
-    return joined.drop("__LID", "__RID")
-
-
-def _join_refine_path(lcov, rcov, lid, rid, on_attribute, predicate,
-                      distance, pad, resolution, domain, broadcast_right,
-                      salt_hot_cells, hot_cell_threshold, salt_factor):
-    """Legacy coarse-join + per-pair-refine plan, kept for the
-    ``on_attribute`` conjunct (the cogroup/broadcast passes group on
-    cell only).  Returns (__xlid, __xrid, __lgeom, ...) matched pairs."""
-    lx = lcov.select(F.col(lid).alias("__xlid"), "__lgeom",
-                     F.col("__bb").alias("__lbb"), *on_attribute,
-                     F.explode("__cells").alias("__cell"))
-    rx = rcov.select(F.col(rid).alias("__xrid"), "__rgeom",
-                     F.col("__bb").alias("__rbb"),
-                     *[F.col(c).alias(f"__r_{c}") for c in on_attribute],
-                     F.explode("__cells").alias("__cell"))
-
-    join_keys = [lx["__cell"] == rx["__cell"]] + [
-        lx[c] == rx[f"__r_{c}"] for c in on_attribute
-    ]
-
-    if salt_hot_cells:
-        hot = (
-            rx.groupBy("__cell").count()
-            .filter(F.col("count") >= hot_cell_threshold)
-            .select(F.col("__cell").alias("__hot_cell"))
-        )
-        hot_list = [r["__hot_cell"] for r in hot.collect()]
-        if hot_list:
-            S = int(salt_factor)
-            lx = lx.withColumn(
-                "__salt",
-                F.when(F.col("__cell").isin(hot_list),
-                       F.pmod(F.xxhash64(F.col("__xlid")), F.lit(S)))
-                .otherwise(F.lit(0)),
-            )
-            rx = rx.withColumn(
-                "__salt_arr",
-                F.when(F.col("__cell").isin(hot_list),
-                       F.sequence(F.lit(0), F.lit(S - 1)))
-                .otherwise(F.array(F.lit(0))),
-            ).withColumn("__salt", F.explode("__salt_arr")).drop("__salt_arr")
-            join_keys.append(lx["__salt"] == rx["__salt"].cast("long"))
-
-    rj = F.broadcast(rx) if broadcast_right else rx
-
-    # Refine runs map-side in the same stage as the coarse join; the only
-    # shuffled payload afterwards is (lid, rid) id pairs. Duplicate
-    # candidate pairs (a pair can share several cells) are eliminated
-    # WITHOUT a shuffle by the reference-point rule: the pair only counts
-    # in the canonical cell containing the top-left corner of its bbox
-    # intersection, at the pair's coarser cover res.
-    cand = lx.join(rj, on=join_keys, how="inner").select(
-        lx["__xlid"], rx["__xrid"], lx["__lgeom"], rx["__rgeom"],
-        lx["__cell"].alias("__jcell"), lx["__lbb"], rx["__rbb"],
-    )
-    return cand.filter(
-        _refine_rp_udf(predicate, resolution, domain, distance, pad)(
-            F.col("__lgeom"), F.col("__rgeom"), F.col("__jcell"),
-            F.col("__lbb.minx"), F.col("__lbb.miny"),
-            F.col("__lbb.maxx"), F.col("__lbb.maxy"),
-            F.col("__rbb.minx"), F.col("__rbb.miny"),
-            F.col("__rbb.maxx"), F.col("__rbb.maxy")))
+    return joined.drop("__LID", "__RID", "__d")

@@ -5,14 +5,14 @@ dataset that is spatially joined repeatedly — a canonical parcel table,
 a geofence dimension — pays the cell-cover explode + hash shuffle on
 EVERY join. Writing it once as a bucketed table keyed by its exploded
 quadtree cover cell moves that cost to write time: two tables bucketed
-by ``cell`` with the same bucket count plan their cell equi-join as a
-SortMergeJoin with NO Exchange on either side (Spark's bucketing spec
-satisfies the join's required distribution), so each incremental join
-is a map-side merge + the Arrow refine.
+by ``cell`` with the same bucket count cogroup by cell with NO Exchange
+on either side (Spark's bucketing spec satisfies the cogroup's required
+distribution), so each incremental join is one map-side Arrow pass.
 
-The refine reuses the stateless reference-point rule (streaming/join.py)
+Each cell group's pairs are generated, deduped by the reference-point
+rule (operators/sjoin.py's ``_canonical_cells``) and refined in-kernel,
 so multi-cell geometries still yield each pair exactly once without a
-dropDuplicates shuffle.
+dropDuplicates shuffle, and no candidate pair's WKB crosses Arrow.
 """
 
 from __future__ import annotations
@@ -77,11 +77,12 @@ def sjoin_bucketed(
     ownership and the join is exact). Both sides must have been written
     at the same resolution.
 
-    The cell equi-join consumes the tables' bucketing (no Exchange);
-    the pairwise predicate + reference-point dedup refine runs in one
-    Arrow pass on the merged rows. Returns left columns + right columns
+    The cell cogroup consumes the tables' bucketing (no Exchange); pair
+    generation, reference-point dedup and the exact predicate run in one
+    Arrow pass per cell group. Returns left columns + right columns
     (right geometry dropped, collisions suffixed ``_right``)."""
-    from ..streaming.join import _refine_keep
+    import numpy as np
+    from pyspark.sql.types import StructType
 
     l = spark.table(left_table)
     r = spark.table(right_table)
@@ -109,8 +110,53 @@ def sjoin_bucketed(
         r = r.withColumnRenamed(c, f"{c}_right")
     rgeom_out = (f"{right_geom}_right" if right_geom in shared
                  else right_geom)
-    joined = l.join(r, "cell", "inner")
-    keep = _refine_keep(predicate, resolution, domain)
-    out = joined.filter(keep(F.col(left_geom), F.col(rgeom_out),
-                             F.col("cell")))
-    return out.drop("cell", rgeom_out)
+    lcols = [c for c in l.columns if c != "cell"]
+    rcols = [c for c in r.columns if c not in ("cell", rgeom_out)]
+    schema = StructType([l.schema[c] for c in lcols]
+                        + [r.schema[c] for c in rcols])
+
+    def pairs(key, lt, rt):
+        import pyarrow as pa
+
+        nl, nr = lt.num_rows, rt.num_rows
+        o_l = [np.empty(0, dtype=np.int64)]
+        o_r = [np.empty(0, dtype=np.int64)]
+        if nl and nr:
+            from ..geom.kernels import bounds
+            from ..geom.predicates import pairwise_predicate
+            from ..geom.wkb import from_wkb
+            from ..operators._cellstream import BUFFER_ROWS
+            from ..operators.sjoin import _canonical_cells
+
+            lb = from_wkb(lt.column(left_geom).to_pandas())
+            rb = from_wkb(rt.column(rgeom_out).to_pandas())
+            lbb = np.nan_to_num(bounds(lb))
+            rbb = np.nan_to_num(bounds(rb))
+            # left rows in blocks: a hot cell's nl x nr candidate grid
+            # stays bounded in memory
+            step = max(1, BUFFER_ROWS // nr)
+            for l0 in range(0, nl, step):
+                m = min(step, nl - l0)
+                li = np.repeat(np.arange(l0, l0 + m), nr)
+                ri = np.tile(np.arange(nr), m)
+                keep = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
+                        & (lbb[li, 1] <= rbb[ri, 3])
+                        & (rbb[ri, 1] <= lbb[li, 3]))
+                li, ri = li[keep], ri[keep]
+                # every row's cover sits at `resolution` (validated at
+                # write), so each pair's canonical cell is at that res
+                res = np.full(len(li), resolution)
+                keep = (_canonical_cells(lbb[li], rbb[ri], res, res, domain)
+                        == key[0].as_py())
+                li, ri = li[keep], ri[keep]
+                ok = np.asarray(pairwise_predicate(
+                    predicate, lb.take(li), rb.take(ri)), dtype=bool)
+                o_l.append(li[ok])
+                o_r.append(ri[ok])
+        li, ri = np.concatenate(o_l), np.concatenate(o_r)
+        return pa.Table.from_arrays(
+            [*lt.select(lcols).take(li).columns,
+             *rt.select(rcols).take(ri).columns], names=lcols + rcols)
+
+    return l.groupBy("cell").cogroup(r.groupBy("cell")).applyInArrow(
+        pairs, schema)

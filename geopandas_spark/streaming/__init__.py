@@ -4,10 +4,10 @@ The reference (GeoPandas) is batch-only, so nothing here mirrors a
 reference API. These are the graft-native stream jobs a continuous
 ingest pipeline needs, built so batch and stream share semantics:
 
-* ``sjoin_stream``      — stream-static spatial join (broadcast cell
-                          cover + stateless reference-point dedup).
-* ``sjoin_nearest_stream`` — stream-static nearest join (broadcast cell
-                          directory + certified expanding-disk probe).
+* ``sjoin_stream``      — stream-static spatial join (the batch sjoin
+                          broadcast probe against a plan-time index).
+* ``sjoin_nearest_stream`` — stream-static nearest join (the batch
+                          sjoin_nearest broadcast kNN kernel).
 * ``tile_counts_stream``— watermarked event-time windowed counts per
                           quadtree tile.
 * ``dedup_stream``      — exact dedup within a watermark, same

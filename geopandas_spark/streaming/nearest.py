@@ -2,14 +2,16 @@
 
 Stateless kNN (k=1, exact ties kept — same contract as the batch
 sjoin_nearest, tools/sjoin.py:428) of a streaming left side against a
-STATIC right side:
+STATIC right side. A thin caller of the batch broadcast kNN kernel
+(operators/nearest.py):
 
-* the right side's cell→row CSR index + WKB are broadcast once and
-  decoded once per worker (same shape as streaming/join.py),
-* each microbatch runs ONE mapInPandas pass: every left row probes an
-  expanding Chebyshev disk of cells around its own cell and stops when
-  its best exact distance is CERTIFIED — d* <= m * min(cell_w, cell_h)
-  proves nothing outside the probed disk can be closer,
+* ``_collect_knn_build`` collects the static side ONCE at plan time into
+  a broadcast row-major (cellkey -> build row) index; build rows whose
+  cover exceeds ``max_cells`` fine cells become candidates of every
+  probe,
+* ``_broadcast_knn`` runs ONE ``mapInPandas`` pass per microbatch: each
+  left row probes a Chebyshev disk around its cell, certifies, escalates
+  and finishes with an exact-radius probe, all vectorized in-kernel,
 * no state store, no watermark, no shuffle of the stream.
 
 This is the per-event "nearest geofence / nearest facility" lookup shape:
@@ -18,15 +20,10 @@ the dimension fits in a broadcast, the stream side stays narrow.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..index.cells import DOMAIN_UNIT
-
-_CACHE: dict = {}
-_CACHE_MAX = 8
 
 
 def sjoin_nearest_stream(
@@ -44,185 +41,20 @@ def sjoin_nearest_stream(
     """Nearest right row (ties kept) for every (possibly streaming) left
     row. Works identically on batch frames — the pytest oracle pins it
     to the batch sjoin_nearest."""
-    import uuid
+    from ..index.cells import cell_size
+    from ..operators.nearest import _broadcast_knn
+    from ..operators.sjoin import _prep_side
 
-    from ..functions.st import st_cells
-
-    spark = right.sparkSession
-    tbl = (right.withColumn("__cells",
-                            st_cells(right_geom, resolution, domain=domain,
-                                     max_cells=max_cells))
-           .select(F.col(right_id).alias("i"),
-                   F.col(right_geom).alias("g"), F.col("__cells").alias("c"))
-           .toArrow().combine_chunks())
-    nb = tbl.num_rows
-    rid_vals = np.asarray(tbl["i"].to_pandas(), dtype=object)
-    rwkb = tbl["g"].to_pylist()
-    ccol = tbl["c"].combine_chunks()
-    flat = ccol.values.to_numpy(zero_copy_only=False).astype(np.int64,
-                                                             copy=False)
-    lens = np.diff(ccol.offsets.to_numpy(zero_copy_only=False))
-    fi = np.repeat(np.arange(nb, dtype=np.int64), lens)
-    if ccol.null_count:
-        # drop flat entries spanned by null list rows (offsets may still
-        # span them) — mirrors operators/sjoin.py's CSR build
-        keep = ~np.repeat(ccol.is_null().to_numpy(zero_copy_only=False), lens)
-        flat, fi = flat[keep], fi[keep]
-    o = np.argsort(flat, kind="stable")
-    fc, fi = flat[o], fi[o]
-    ucells, starts = np.unique(fc, return_index=True)
-    off = np.append(starts, len(fc)).astype(np.int64)
-    bc = spark.sparkContext.broadcast(
-        {"wkb": rwkb, "ucells": ucells, "off": off, "ridx": fi})
-    cache_key = uuid.uuid4().hex
-
-    lid_t = dict(left.dtypes)[left_id]
-    rid_t = dict(right.dtypes)[right_id]
-    probe = left.select(F.col(left_id).alias("__nlid"),
-                        F.col(left_geom).alias("__ng"))
-
-    def fn(it):
-        from ..geom.kernels import bounds as _bounds
-        from ..geom.predicates import pairwise_distance
-        from ..geom.wkb import from_wkb
-        from ..index import cells as C
-
-        got = _CACHE.get(cache_key)
-        if got is None:
-            v = bc.value
-            rb_all = from_wkb(pd.Series(v["wkb"]))
-            got = (rb_all, v["ucells"], v["off"], v["ridx"])
-            if len(_CACHE) >= _CACHE_MAX:
-                _CACHE.pop(next(iter(_CACHE)))
-            _CACHE[cache_key] = got
-        rb_all, uc, off_, ridx = got
-        cw, ch = C.cell_size(resolution, domain)
-        cell_min = min(cw, ch)
-        grid_n = 1 << resolution
-        # bbox_cover coarsens right rows whose cover would exceed
-        # max_cells; their directory cells live at coarser resolutions
-        # and would be invisible to a res-level probe (ADVICE r2). A
-        # coarse cell overlaps the probed disk iff it is an ancestor of
-        # some disk cell, so probe the disk's ancestor set at every
-        # coarser res actually present in the directory.
-        res_list = np.unique(C.cell_res(uc)).tolist() if len(uc) else []
-        coarse = [int(r) for r in res_list if r < resolution]
-        # directory cells split by res with their (i, j): the large-m
-        # probe path scans the (bounded, broadcast) directory instead of
-        # materializing a (2m+1)^2 disk — at res 12 an uncertified row
-        # would otherwise allocate gigabytes per doubling (round-4
-        # review fix)
-        dir_res = C.cell_res(uc) if len(uc) else np.empty(0, np.int8)
-        by_res = {}
-        for r in res_list:
-            selr = np.nonzero(dir_res == r)[0]
-            _, ui, uj = C.cell_ij(uc[selr])
-            by_res[int(r)] = (selr, ui, uj)
-
-        def lookup(cells_flat):
-            pos = np.minimum(np.searchsorted(uc, cells_flat), len(uc) - 1)
-            okc = uc[pos] == cells_flat
-            cnt = np.where(okc, off_[pos + 1] - off_[pos], 0)
-            return pos, cnt
-
-        for pdf in it:
-            if len(pdf) == 0 or len(uc) == 0:
-                continue
-            lb = from_wkb(pdf["__ng"])
-            lbb = _bounds(lb)
-            ok_rows = ~np.isnan(lbb[:, 0])
-            cx = (lbb[:, 0] + lbb[:, 2]) / 2
-            cy = (lbb[:, 1] + lbb[:, 3]) / 2
-            # half-extent of the left bbox: the disk guarantee is measured
-            # from the midpoint cell, so non-point left geometries widen
-            # the radius (same lrad term as operators/nearest.py:508)
-            lrad = np.nan_to_num(np.maximum(lbb[:, 2] - lbb[:, 0],
-                                            lbb[:, 3] - lbb[:, 1]) / 2)
-            cells0 = C.point_cell(np.nan_to_num(cx), np.nan_to_num(cy),
-                                  resolution, domain=domain)
-            n = len(pdf)
-            best = np.full(n, np.inf)
-            # per-row tie lists resolved at the end: store candidate
-            # arrays per row lazily
-            best_rows: list = [None] * n
-            active = np.nonzero(ok_rows)[0]
-            _, lis, ljs = C.cell_ij(cells0)
-            m = 1
-            while len(active) and m <= 2 * grid_n:
-                # materialize the disk only while it is smaller than a
-                # directory scan; past that, select directory cells by
-                # index range per res (identical cell set: a res-r cell
-                # qualifies iff it is the ancestor of some disk cell,
-                # i.e. its (i, j) lies in the disk's shifted index box)
-                small_disk = (2 * m + 1) ** 2 <= max(4 * len(uc), 4096)
-                disk = C.grid_disk(cells0[active], m) if small_disk else None
-                newly = []
-                for ai, row in enumerate(active):
-                    from ..geom.ragged import _expand_ranges
-
-                    if small_disk:
-                        dcells = np.unique(disk[ai])
-                        if coarse:
-                            dcells = np.unique(np.concatenate(
-                                [dcells] + [C.parent(dcells, resolution - r)
-                                            for r in coarse]))
-                        pos, cnt = lookup(dcells)
-                        if not cnt.sum():
-                            continue
-                        sel = cnt > 0
-                        pos_sel = pos[sel]
-                    else:
-                        li, lj = int(lis[row]), int(ljs[row])
-                        parts = []
-                        for r, (posr, ui, uj) in by_res.items():
-                            s = resolution - r
-                            loi = max(li - m, 0) >> s
-                            hii = (li + m) >> s
-                            loj = max(lj - m, 0) >> s
-                            hij = (lj + m) >> s
-                            msk = ((ui >= loi) & (ui <= hii)
-                                   & (uj >= loj) & (uj <= hij))
-                            if msk.any():
-                                parts.append(posr[msk])
-                        if not parts:
-                            continue
-                        pos_sel = np.concatenate(parts)
-                    cand = np.unique(
-                        ridx[_expand_ranges(off_[pos_sel],
-                                            off_[pos_sel + 1])])
-                    d = pairwise_distance(
-                        lb.take(np.full(len(cand), row)), rb_all.take(cand))
-                    mn = float(np.min(d))
-                    # cand is the FULL disk's candidate set (a superset of
-                    # earlier rings), so replacing keeps every tie found
-                    if best_rows[row] is None or mn <= best[row]:
-                        best[row] = mn
-                        best_rows[row] = cand[d == mn]
-                    # certified: any point outside the probed disk is at
-                    # least m*cell_min from the midpoint cell, hence at
-                    # least m*cell_min - lrad from the geometry itself;
-                    # strict < so an exact tie just outside the disk can't
-                    # be dropped (batch parity: operators/nearest.py:265)
-                    if best[row] + lrad[row] < m * cell_min:
-                        newly.append(row)
-                if newly:
-                    active = active[~np.isin(active, newly)]
-                m = m * 2
-            out_l, out_r, out_d = [], [], []
-            lids = pdf["__nlid"].to_numpy()
-            for row in range(n):
-                if best_rows[row] is None:
-                    continue
-                for r_i in best_rows[row]:
-                    out_l.append(lids[row])
-                    out_r.append(rid_vals[r_i])
-                    out_d.append(best[row])
-            if out_l:
-                yield pd.DataFrame({"__nlid": out_l, "__nrid": out_r,
-                                    "__nd": np.asarray(out_d)})
-
-    out = probe.mapInPandas(
-        fn, schema=f"__nlid {lid_t}, __nrid {rid_t}, __nd double")
-    return out.select(F.col("__nlid").alias(left_id),
-                      F.col("__nrid").alias(right_id),
-                      F.col("__nd").alias(distance_col))
+    right, rid = _prep_side(right, right_geom, right_id, "r")
+    probe = left.select(F.col(left_id).alias("__xlid"),
+                        F.col(left_geom).alias("__lgeom"))
+    out = _broadcast_knn(
+        probe, right, rid, right_geom, resolution, domain,
+        min_cell=min(cell_size(resolution, domain)),
+        k_cap=1 << resolution,  # full-grid disk == brute force
+        max_distance=None, exclusive=False, emit_geom=False,
+        lid_t=dict(left.dtypes)[left_id], rid_t=dict(right.dtypes)[rid],
+        max_cells=max_cells)
+    return out.select(F.col("__xlid").alias(left_id),
+                      F.col("__xrid").alias(right_id),
+                      F.col("__d").alias(distance_col))

@@ -683,3 +683,5 @@ def test_hash_split_properties(spark):
     assert (a != c).any()  # salt moves assignments
     with pytest.raises(ValueError, match="sum to 1"):
         hash_split(df, "doc_id", {"train": 0.5, "val": 0.1})
+    with pytest.raises(ValueError, match="must not be empty"):
+        hash_split(df, "doc_id", {})

@@ -202,6 +202,9 @@ def test_validation_errors(data, spark):
         sjoin(pdf, tdf, predicate="nope")
     with pytest.raises(ValueError, match="distance"):
         sjoin(pdf, tdf, predicate="dwithin")
+    with pytest.raises(ValueError, match="atomic"):
+        sjoin(pdf.withColumn("arr", F.array("pid")),
+              tdf.withColumn("arr", F.array("tid")), on_attribute="arr")
 
 
 def test_mixed_resolution_giant_polygons(spark):

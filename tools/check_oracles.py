@@ -11,10 +11,6 @@ import hashlib
 import os
 import sys
 
-os.environ.setdefault("MALLOC_MMAP_MAX_", "0")
-os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
-os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
-
 import duckdb
 
 sys.path.insert(0, ".")
@@ -50,15 +46,10 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     import __spark_entry__ as E
-    from pyspark.sql import SparkSession
+    from geopandas_spark.conf import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    spark = get_spark("check-oracles", cpus=cpus, shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

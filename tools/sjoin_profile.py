@@ -85,16 +85,17 @@ def main():
         if lmin < resolution:
             rcov = rcov.withColumn("__cells", SJ._ancestors_udf(lmin)(F.col("__cells")))
         # time the build-side collect + CSR + broadcast separately: grab the
-        # internals of _broadcast_probe_refined up to the mapInPandas
+        # internals of _broadcast_probe_refined up to the mapInArrow
         t2 = time.time()
         tbl = (rcov.select(F.col("rid").alias("i"), F.col("__rgeom").alias("g"),
                            F.col("__cells").alias("c")).toArrow().combine_chunks())
         t3 = time.time()
-        lraw = left.select("pid", F.col("geometry").alias("__lgeom"))
+        lraw = left.select(F.col("pid").alias("__xlid"),
+                           F.col("geometry").alias("__lgeom"))
         refined = SJ._broadcast_probe_refined(
-            lraw, rcov, "pid", "rid", "intersects", None, 0.0,
+            lraw, rcov, "rid", "intersects", None, 0.0,
             resolution, DOMAIN_UNIT,
-            rmin if rmin < resolution else None)
+            rmin if rmin < resolution else None, carry=["__xlid"])
         t4 = time.time()
         n = refined.select("__xlid", "__xrid").count()
         t5 = time.time()
