@@ -95,3 +95,33 @@ def test_pick_resolution():
     assert C.pick_resolution(1 / 16, 1 / 16) == 4
     assert C.pick_resolution(1.0, 1.0) == 0
     assert C.pick_resolution(1e-30, 1e-30) == C.MAX_RES
+
+
+def test_bbox_cover_matches_per_row_reference():
+    """bbox_cover equals a per-row reference cover on mixed-resolution
+    input (max_cells=16 coarsens the larger boxes), cells in the same
+    order."""
+    rng = np.random.default_rng(6)
+    n = 300
+    minx = rng.random(n) * 0.9
+    miny = rng.random(n) * 0.9
+    ext = np.where(rng.random(n) < 0.3, 0.5, 0.02) * rng.random((2, n))
+    maxx, maxy = minx + ext[0], miny + ext[1]
+    minx[:3] = [-0.2, 0.0, 0.5]  # out of domain / zero-width rows
+    maxx[:3] = [1.3, 0.0, 0.5]
+    flat, off = C.bbox_cover(minx, miny, maxx, maxy, 8, max_cells=16)
+
+    res = C.cover_res(minx, miny, maxx, maxy, 8, max_cells=16)
+    assert len(np.unique(res)) > 2
+    want = []
+    for k in range(n):
+        r = int(res[k])
+        (i0,), (j0,) = C._grid_ij([minx[k]], [miny[k]], r, C.DOMAIN_UNIT)
+        (i1,), (j1,) = C._grid_ij([maxx[k]], [maxy[k]], r, C.DOMAIN_UNIT)
+        ii = np.repeat(np.arange(i0, i1 + 1), j1 - j0 + 1)
+        jj = np.tile(np.arange(j0, j1 + 1), i1 - i0 + 1)
+        want.append(C.pack(r, C.morton_encode(ii, jj)))
+    assert off[-1] == sum(len(w) for w in want)
+    for k in range(n):
+        assert np.array_equal(flat[off[k]:off[k + 1]], want[k])
+        assert len(want[k]) <= 16

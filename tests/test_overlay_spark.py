@@ -148,3 +148,49 @@ def test_overlay_pair_on(spark):
     assert got == want and len(got) == 8  # 2 keys x (2x2) pairs
     with pytest.raises(ValueError, match="pair_on"):
         overlay(df1, df2.drop("k"), id1="i", id2="j", pair_on="k")
+
+
+def _star_wkt(cx, cy, r):
+    """12-spoke star polygon (alternating radius r and r/2)."""
+    pts = []
+    for k in range(13):
+        a = 2 * np.pi * (k % 12) / 12
+        rad = r if k % 2 == 0 else r / 2
+        pts.append(f"{cx + rad * np.cos(a)} {cy + rad * np.sin(a)}")
+    return "POLYGON ((" + ", ".join(pts) + "))"
+
+
+@pytest.mark.parametrize("giant_in", ["df1", "df2"])
+def test_overlay_broadcast_vs_shuffle(spark, giant_in):
+    """The broadcast intersection probe and the shuffle cell join give
+    the same pairs and intersection areas on stars plus one giant polygon
+    (its cover overflows max_cells at resolution 8). A constant
+    ``pair_on`` column on both sides forces the shuffle plan with the
+    same semantics."""
+    rng = np.random.default_rng(9)
+
+    def layer(n, giant):
+        wkt = [_star_wkt(*(rng.random(2) * 0.8 + 0.1), 0.02 + 0.04 * rng.random())
+               for _ in range(n)]
+        if giant:
+            wkt.append("POLYGON ((0.05 0.1, 0.9 0.05, 0.95 0.9, 0.1 0.95, "
+                       "0.05 0.1))")
+        return pd.DataFrame({"k": 0, "geometry": list(B.to_wkb(W.from_wkt(wkt)))})
+
+    p1 = layer(50, giant_in == "df1")
+    p2 = layer(50, giant_in == "df2")
+    df1 = spark.createDataFrame(p1.assign(i=range(len(p1))))
+    df2 = spark.createDataFrame(p2.assign(j=range(len(p2))))
+
+    def run(**kw):
+        out = overlay(df1, df2, how="intersection", id1="i", id2="j",
+                      resolution=8, make_valid=False, **kw)
+        return {(r["i"], r["j"]): r["a"] for r in
+                out.withColumn("a", st_area("geometry")).collect()}
+
+    bcast = run()
+    shuffle = run(pair_on="k")
+    assert bcast.keys() == shuffle.keys()
+    assert len(bcast) > 60
+    for key, a in bcast.items():
+        assert abs(a - shuffle[key]) <= 1e-9, key

@@ -253,6 +253,73 @@ def test_mixed_resolution_giant_polygons(spark):
     assert len(out) == len(exp)
 
 
+def _rect_wkb(x0, y0, x1, y1):
+    from geopandas_spark.geom import wkt as W
+
+    return B.to_wkb(W.from_wkt([
+        f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))"
+    ]))[0]
+
+
+def _giant_side(rng, n_pts, n_small, giant: bool):
+    """Points + small squares [+ one giant polygon] + a NULL geometry row
+    + an EMPTY polygon row."""
+    from geopandas_spark.geom import wkt as W
+    from geopandas_spark.geom.ragged import points_batch
+
+    px, py = rng.random(n_pts), rng.random(n_pts)
+    out = list(B.to_wkb(points_batch(px, py)))
+    for x0, y0 in rng.random((n_small, 2)) * 0.9:
+        out.append(_rect_wkb(x0, y0, x0 + 0.03, y0 + 0.03))
+    if giant:
+        out.append(_rect_wkb(0.02, 0.03, 0.97, 0.98))
+    out.append(None)
+    out.append(B.to_wkb(W.from_wkt(["POLYGON EMPTY"]))[0])
+    return out
+
+
+@pytest.mark.parametrize("pred", ["intersects", "dwithin"])
+@pytest.mark.parametrize("giant", ["left", "right", "both"])
+@pytest.mark.parametrize("bcast", [True, False])
+def test_giant_polygons_across_plans(spark, bcast, giant, pred):
+    """A giant polygon on either side (its cover falls back to a coarse
+    res at resolution=8) plus NULL and EMPTY geometry rows: both plans
+    return exactly the brute-force pair set, one row per pair."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    lw = _giant_side(rng, 200, 8, giant in ("left", "both"))
+    rw = _giant_side(rng, 30, 8, giant in ("right", "both"))
+    ldf = spark.createDataFrame(
+        pd.DataFrame({"lid": np.arange(len(lw)), "geometry": lw}))
+    rdf = spark.createDataFrame(
+        pd.DataFrame({"rid": np.arange(len(rw)), "geometry": rw}))
+    dist = 0.02 if pred == "dwithin" else None
+    out = sjoin(ldf, rdf, predicate=pred, distance=dist, left_id="lid",
+                right_id="rid", resolution=8, broadcast_right=bcast)
+    got = [(r.lid, r.index_right)
+           for r in out.select("lid", "index_right").collect()]
+
+    lv = [i for i, w in enumerate(lw) if w is not None]
+    rv = [i for i, w in enumerate(rw) if w is not None]
+    lb = B.from_wkb(np.repeat(np.array([lw[i] for i in lv], dtype=object),
+                              len(rv)))
+    rb = B.from_wkb(np.tile(np.array([rw[i] for i in rv], dtype=object),
+                            len(lv)))
+    truth = pairwise_predicate(pred, lb, rb, dist).reshape(len(lv), len(rv))
+    exp = {(lv[a], rv[b]) for a, b in zip(*np.nonzero(truth))}
+    assert set(got) == exp
+    assert len(got) == len(exp)
+    giant_ids = {"left": (len(lw) - 3, None), "right": (None, len(rw) - 3),
+                 "both": (len(lw) - 3, len(rw) - 3)}[giant]
+    # the giant row really joins (many partners), so the coarse / always
+    # path is exercised
+    if giant_ids[0] is not None:
+        assert sum(1 for a, _ in exp if a == giant_ids[0]) > 20
+    if giant_ids[1] is not None:
+        assert sum(1 for _, b in exp if b == giant_ids[1]) > 100
+
+
 def test_cogroup_same_result(data, spark):
     # broadcast_right=False forces the union-cogroup-by-cell pass
     pdf, tdf, lb, rb = data
