@@ -181,6 +181,21 @@ def cover_res(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
     return res_row
 
 
+def expand_rects(i0, j0, i1, j1) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Every grid cell of each rectangle [i0..i1] x [j0..j1] as flat
+    (row, i, j) arrays, i-major within a rectangle — one repeat/arange
+    expand, no per-row loop. Shared by ``bbox_cover`` and the broadcast
+    build index (operators/_buildindex.py)."""
+    i0, j0 = np.asarray(i0, dtype=np.int64), np.asarray(j0, dtype=np.int64)
+    nj = np.asarray(j1, dtype=np.int64) - j0 + 1
+    cnt = (np.asarray(i1, dtype=np.int64) - i0 + 1) * nj
+    rows = np.repeat(np.arange(len(cnt), dtype=np.int64), cnt)
+    within = (np.arange(int(cnt.sum()), dtype=np.int64)
+              - np.repeat(np.cumsum(cnt) - cnt, cnt))
+    di = within // nj[rows]
+    return rows, i0[rows] + di, j0[rows] + (within - di * nj[rows])
+
+
 def bbox_cover(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
                max_cells: int = 4096) -> tuple[np.ndarray, np.ndarray]:
     """Full (non-compact) cover at res of each bbox.
@@ -188,38 +203,26 @@ def bbox_cover(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
     Returns (flat_ids int64[T], offsets int64[n+1]) ragged output. Rows
     whose cover would exceed ``max_cells`` fall back to progressively
     coarser resolutions for *that row only* — those rows' cells have a
-    smaller res in the id, so join planners must route them through the
-    ancestor/large-geometry path (operators/sjoin.py).
+    smaller res in the id, so the cogroup join emits ancestor cells for
+    the other side (operators/sjoin.py).
     """
     minx = np.asarray(minx, dtype=np.float64)
     n_rows = len(minx)
     res_row = cover_res(minx, miny, maxx, maxy, res, domain, max_cells)
-    # recompute grid coords at each row's final res
+    # grid coords at each row's final res, one pass per distinct res
     i0 = np.empty(n_rows, dtype=np.int64)
     j0 = np.empty(n_rows, dtype=np.int64)
     i1 = np.empty(n_rows, dtype=np.int64)
     j1 = np.empty(n_rows, dtype=np.int64)
     for r in np.unique(res_row):
         m = res_row == r
-        a, b = _grid_ij(np.asarray(minx)[m], np.asarray(miny)[m], int(r), domain)
+        a, b = _grid_ij(minx[m], np.asarray(miny)[m], int(r), domain)
         c, d = _grid_ij(np.asarray(maxx)[m], np.asarray(maxy)[m], int(r), domain)
         i0[m], j0[m], i1[m], j1[m] = a, b, c, d
-    counts = (i1 - i0 + 1) * (j1 - j0 + 1)
+    rows, ii, jj = expand_rects(i0, j0, i1, j1)
+    flat = (res_row[rows] << np.int64(_RES_SHIFT)) | morton_encode(ii, jj)
     offsets = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(counts, out=offsets[1:])
-    total = int(offsets[-1])
-    flat = np.empty(total, dtype=np.int64)
-    # vectorized per unique (ni, nj) shape would be possible; covers are tiny
-    # (few cells/row by construction) so a per-row fill is fine here — this
-    # runs inside an Arrow batch, the per-cell work is numpy.
-    pos = 0
-    for rix in range(n_rows):
-        ni = i1[rix] - i0[rix] + 1
-        nj = j1[rix] - j0[rix] + 1
-        ii = np.repeat(np.arange(i0[rix], i1[rix] + 1), nj)
-        jj = np.tile(np.arange(j0[rix], j1[rix] + 1), ni)
-        flat[pos : pos + ni * nj] = pack(int(res_row[rix]), morton_encode(ii, jj))
-        pos += ni * nj
+    np.cumsum((i1 - i0 + 1) * (j1 - j0 + 1), out=offsets[1:])
     return flat, offsets
 
 

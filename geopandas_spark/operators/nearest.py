@@ -15,18 +15,19 @@ agg, mirroring sjoin — UDF-derived sizes defeat AQE's own estimation):
 
 **Broadcast path** (right side's exploded cover under
 BROADCAST_EXPLODED_ROWS — the common case; round-4 north-rule
-restructure): the right side is Arrow-collected once, the driver builds
-a row-major (cellkey -> build row) flat index with vectorized
-bbox_cover, and the WHOLE join is ONE ``mapInPandas`` over the left.
-Per probe batch, a Chebyshev-k disk is (2k+1) contiguous searchsorted
-column ranges over the sorted keys; certified rows (best d + lrad <
-cell) emit ties immediately, the uncertified tail escalates its disk
-geometrically IN-KERNEL and finishes with one exhaustive probe at
-ceil((d+lrad)/cell)+1 — no union, no shuffle, no tail joins. Giant
-build rows whose cover overflows max_cells ride along as unconditional
-candidates of every probe ("always-rows"). 3 Spark jobs total; the
-probe stage is embarrassingly parallel (measured 2->8 scaling moved
-from 0.22 to the sjoin-class regime, tools/knn_profile.py).
+restructure): the right side is Arrow-collected once into the grid-row
+build index shared with sjoin, overlay and both stream joins
+(operators/_buildindex.py), and the WHOLE join is ONE ``mapInPandas``
+over the left. Per probe batch, a Chebyshev-k disk is one contiguous
+searchsorted range per grid row over the sorted keys; certified rows
+(best d + lrad < cell) emit ties immediately, the uncertified tail
+escalates its disk geometrically IN-KERNEL and finishes with one
+exhaustive probe at ceil((d+lrad)/cell)+1 — no union, no shuffle, no
+tail joins. Giant build rows whose bbox overflows max_cells ride along
+as unconditional candidates of every probe ("always-rows"). 3 Spark
+jobs total; the probe stage is embarrassingly parallel (measured 2->8
+scaling moved from 0.22 to the sjoin-class regime,
+tools/knn_profile.py).
 
 **Shuffle path** (huge right side): right covers its bbox cells at
 resolution R and replicates each row to the Chebyshev disk(1) of its
@@ -50,11 +51,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_bounds, st_cells_from_bbox
+from ..functions.st import st_cells_from_bbox
 from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
-from .sjoin import (BROADCAST_EXPLODED_ROWS, _BUILD_CACHE_MAX, _assemble,
-                    _est_exploded, _min_cover_res, _output_columns,
-                    _prep_side)
+from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _est_exploded,
+                    _min_cover_res, _output_columns, _prep_side)
 
 
 def _disk_cells_udf(k: int):
@@ -459,26 +459,14 @@ def _nocand_probes(nanrows, rxp, _disk_probe, resolution, min_cell,
 
 
 # ---------------------------------------------------------------------------
-# broadcast kNN path (round 4, north-rule restructure)
-#
-# The shuffle plan below unions BOTH sides into one exchange (95 MB /
-# 3.8 M rows on the 2M x 200k scaling input), sorts within partitions,
-# and needs a barrier agg + two tail joins — per-stage attribution
-# (tools/knn_profile.py) showed the exchange/sort stage's executor time
-# blowing up 20x from local[2] to local[8] on this memory-bandwidth-
-# starved substrate (GC 0.2s -> 44.5s, shuffle-write time 0.2s -> 45s for
-# the same bytes), flattening 2->8 scaling to ~0.22 while sjoin's
-# broadcast-CSR probe path scaled at 0.83-0.93 on the same host. When
-# the right side is broadcastable (same stats-job decision as sjoin),
-# the whole join is ONE mapInPandas over the left: the right cover ships
-# once per worker as a row-major (cellkey -> build row) flat index, and
-# every left row — including the uncertified tail — resolves in-kernel
-# via block-range scans and bounded disk escalation. No union, no
-# repartition+sort, no localCheckpoints, no tail joins: 11 Spark jobs
-# become 3, and the probe stage is embarrassingly parallel.
+# broadcast kNN path (see the module docstring): ONE mapInPandas over the
+# left against the shared grid-row build index (operators/_buildindex.py).
+# It replaced the shuffle plan below for broadcastable right sides because
+# that plan's union exchange + sort stopped scaling on a memory-bandwidth-
+# starved host (tools/knn_profile.py: exchange/sort executor time up 20x
+# from local[2] to local[8], 2->8 scaling ~0.22), while the broadcast
+# probe scaled at 0.83-0.93 on the same host: 11 Spark jobs become 3.
 # ---------------------------------------------------------------------------
-
-_KNN_BUILD_CACHE: dict = {}
 
 
 def _all_lineal_headers(prefixes: list[str]) -> bool:
@@ -497,138 +485,6 @@ def _all_lineal_headers(prefixes: list[str]) -> bool:
     return True
 
 
-def _collect_knn_build(right: DataFrame, rid: str, right_geom: str,
-                       resolution: int, domain, max_cells: int = 4096):
-    """Arrow-collect the build side as (rid, wkb, bbox) and build the
-    row-major (cellkey -> build row) flat index ON THE DRIVER with
-    vectorized bbox_cover. The first cut computed the cover with the
-    st_cells_from_bbox pandas UDF inside the collect job — per-row
-    Python list building that cost ~15 core-seconds for 200k rows
-    (knn_profile stage attribution), i.e. 3x the whole probe stage.
-    Bounds stay Spark-side (__bb is already computed for the stats agg);
-    the driver only runs numpy over the collected numeric columns.
-    Returns (cache_key, broadcast, nb, rid_vals)."""
-    import uuid
-
-    from ..index import cells as C
-
-    spark = right.sparkSession
-    tbl = (right.select(F.col(rid).alias("i"),
-                        F.col(right_geom).alias("g"),
-                        F.col("__bb.minx").alias("x0"),
-                        F.col("__bb.miny").alias("y0"),
-                        F.col("__bb.maxx").alias("x1"),
-                        F.col("__bb.maxy").alias("y1"))
-           .toArrow().combine_chunks())
-    nb = tbl.num_rows
-    rid_vals = np.asarray(tbl["i"].to_pandas(), dtype=object)
-    # NULL geometries ship as zero-length ranges in the packed buffer
-    # (len(None) crashed here); the worker restores them to None
-    rwkb: list = [w if w is not None else b""
-                  for w in tbl["g"].to_pylist()]
-    bb = np.column_stack([
-        np.nan_to_num(tbl[c].to_numpy(zero_copy_only=False)
-                      .astype(np.float64, copy=False))
-        for c in ("x0", "y0", "x1", "y1")])
-    # flat (rowmajor cellkey, build row) pairs, FULLY vectorized — the
-    # first cut called bbox_cover here, whose per-row Python fill loop
-    # cost ~12 s of driver-serial time for 200k rows (knn_profile gap
-    # attribution); this is the same cover, built with one expand.
-    g = np.int64(1 << resolution)
-    i0b, j0b = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
-    i1b, j1b = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
-    ni = i1b - i0b + 1
-    nj = j1b - j0b + 1
-    cnt = ni * nj
-    # rows spanning more than max_cells fine cells don't fit the fine-res
-    # key space (bbox_cover's coarse fallback); such (rare, giant) build
-    # rows become unconditional candidates of every probe — exact
-    # distance still decides, and the disk bounds stay valid because
-    # always-rows are searched in every probe. (The shuffle path instead
-    # clamps the grid to the max bbox's cover res.)
-    giant = cnt > max_cells
-    if giant.any():
-        always = np.nonzero(giant)[0].astype(np.int64)
-        cnt = np.where(giant, 0, cnt)
-    else:
-        always = np.empty(0, dtype=np.int64)
-    total = int(cnt.sum())
-    rows = np.repeat(np.arange(nb, dtype=np.int64), cnt)
-    within = (np.arange(total, dtype=np.int64)
-              - np.repeat(np.cumsum(cnt) - cnt, cnt))
-    di = within // nj[rows]
-    dj = within - di * nj[rows]
-    keys = (i0b[rows] + di) * g + (j0b[rows] + dj)
-    order = np.argsort(keys, kind="stable")
-    # ship WKB as ONE buffer + offsets: pickling 200k separate bytes
-    # objects is driver-serial time the workers re-pay on unpickle
-    lens_w = np.fromiter((len(w) for w in rwkb), dtype=np.int64,
-                         count=nb)
-    woff = np.zeros(nb + 1, dtype=np.int64)
-    np.cumsum(lens_w, out=woff[1:])
-    wbuf = b"".join(rwkb)
-    cache_key = uuid.uuid4().hex
-    bc = spark.sparkContext.broadcast(
-        {"wbuf": wbuf, "woff": woff, "ks": keys[order], "rs": rows[order],
-         "al": always})
-    return cache_key, bc, nb, rid_vals
-
-
-def _load_knn_build(cache_key: str, bc):
-    """Worker-side: decoded build batch + the row-major flat index from
-    the broadcast, cached per worker process (mirrors sjoin's
-    _BUILD_CACHE). The i-major key order makes a Chebyshev-k disk
-    (2k+1) contiguous searchsorted ranges instead of (2k+1)^2 cell
-    probes.
-
-    All-lineal builds additionally get a flat SEGMENT SOUP
-    (per-geometry CSR over one (ax, ay, dx, dy, L2) array set): the
-    point-probe distance then runs as one vectorized point-to-segment
-    pass instead of the general ragged pairwise kernel, which pays a
-    batch ``take`` + per-group Python per candidate block (measured 4x
-    slower end-to-end on the nearest_line shape). The formula is
-    point_segment_dist2's, so distances stay bit-identical to
-    pairwise_distance for lineal rights (0-on-the-line included)."""
-    got = _KNN_BUILD_CACHE.get(cache_key)
-    if got is None:
-        from ..geom.predicates import _pair_edges
-        from ..geom.ragged import LINESTRING as _LS
-        from ..geom.ragged import MULTILINESTRING as _MLS
-        from ..geom.ragged import POINT as _PT
-        from ..geom.wkb import from_wkb
-
-        v = bc.value
-        wbuf, woff = v["wbuf"], v["woff"]
-        rwkb = [wbuf[woff[i]:woff[i + 1]] or None
-                for i in range(len(woff) - 1)]
-        rb_all = from_wkb(pd.Series(rwkb))
-        rpuntal = bool(len(rb_all.types) and (rb_all.types == _PT).all()
-                       and (rb_all.n_coords_per_geom() == 1).all())
-        rsegs = None
-        # missing (type 0) and EMPTY lineal rows carry zero rings, so
-        # they contribute zero segments and price as inf — exactly what
-        # pairwise_distance's nan -> inf wrap yields; a stray null/empty
-        # row must not knock the whole build onto the general kernel
-        if (len(rb_all.types)
-                and (np.isin(rb_all.types, (_LS, _MLS))
-                     | rb_all.is_missing()).all()):
-            nb = len(rb_all.types)
-            x0, y0, x1, y1, e_geom = _pair_edges(
-                rb_all, np.arange(nb, dtype=np.int64))
-            segoff = np.zeros(nb + 1, dtype=np.int64)
-            np.cumsum(np.bincount(e_geom, minlength=nb), out=segoff[1:])
-            sdx = x1 - x0
-            sdy = y1 - y0
-            rsegs = (np.ascontiguousarray(x0), np.ascontiguousarray(y0),
-                     sdx, sdy, sdx * sdx + sdy * sdy, segoff)
-        got = (rb_all, v["ks"], v["rs"], rpuntal,
-               np.array(rwkb, dtype=object), v["al"], rsegs)
-        if len(_KNN_BUILD_CACHE) >= _BUILD_CACHE_MAX:
-            _KNN_BUILD_CACHE.pop(next(iter(_KNN_BUILD_CACHE)))
-        _KNN_BUILD_CACHE[cache_key] = got
-    return got
-
-
 def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
                    right_geom: str, resolution: int, domain,
                    min_cell: float, k_cap: int,
@@ -641,8 +497,9 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
     exhaustive re-probe at ceil((d+lrad)/cell)+1), so results are
     bit-identical — only the execution plan changes. Build rows covering
     more than ``max_cells`` fine cells are candidates of every probe."""
-    cache_key, bc, nb, rid_vals = _collect_knn_build(
-        right, rid, right_geom, resolution, domain, max_cells)
+    from ._buildindex import BuildIndex
+
+    build = BuildIndex(right, rid, right_geom, resolution, domain, max_cells)
     g = 1 << resolution
     COMBO_CAP = 262_144  # keep per-block temporaries L2/L3-resident
     mdist = max_distance
@@ -654,12 +511,10 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
         from ..geom.ragged import POINT as _PT
         from ..geom.ragged import _expand_ranges
         from ..geom.wkb import from_wkb
-        from ..index.cells import _grid_ij
 
-        rb_all, ks, rs, rpuntal, rwkb_arr, al, rsegs = _load_knn_build(
-            cache_key, bc)
-        rc = rb_all.coords if rpuntal else None
-        nal = len(al)
+        b = build.load()
+        rsegs = b.segs
+        rc = b.batch.coords if b.puntal else None
 
         for pdf in it:
             n = len(pdf)
@@ -678,174 +533,117 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
             lpuntal = bool(len(lb.types) and (lb.types == _PT).all()
                            and (lb.n_coords_per_geom() == 1).all())
             lc = lb.coords if lpuntal else None
-            i0, j0 = _grid_ij(mx, my, resolution, domain)
+            i0, j0 = b.grid_ij(mx, my)
 
             o_l: list = []
             o_r: list = []
             o_d: list = []
 
+            def _dist(gpos, bi):
+                if lpuntal and rc is not None:
+                    dx = lc[gpos, 0] - rc[bi, 0]
+                    dy = lc[gpos, 1] - rc[bi, 1]
+                    # sqrt(dx^2+dy^2), NOT hypot — bit parity with
+                    # pairwise_distance and the SQL oracles
+                    d = np.sqrt(dx * dx + dy * dy)
+                elif lpuntal and rsegs is not None:
+                    # point probe vs lineal build: one vectorized
+                    # point-to-segment pass over the segment soup —
+                    # point_segment_dist2's exact formula, then
+                    # sqrt(min), matching pairwise_distance bit for
+                    # bit (a point ON the line yields d2 == 0.0).
+                    # Work is sub-chunked by CUMULATIVE SEGMENT
+                    # count, not pair count — COMBO_CAP bounds pairs
+                    # but a vertex-heavy build (10k-point polylines)
+                    # would otherwise expand pairs x segments into
+                    # multi-GB temporaries in one shot.
+                    sax, say, sdx, sdy, sL2, segoff = rsegs
+                    cnt = segoff[bi + 1] - segoff[bi]
+                    best = np.full(len(bi), np.inf)
+                    csum = np.cumsum(cnt)
+                    sc = 0
+                    while sc < len(bi):
+                        prev = csum[sc - 1] if sc else 0
+                        ec = int(np.searchsorted(
+                            csum, prev + 4_194_304, side="left")) + 1
+                        ec = min(max(ec, sc + 1), len(bi))
+                        bs = bi[sc:ec]
+                        cs = cnt[sc:ec]
+                        slots = _expand_ranges(segoff[bs],
+                                               segoff[bs] + cs)
+                        pr = np.repeat(
+                            np.arange(ec - sc, dtype=np.int64), cs)
+                        gl = gpos[sc:ec][pr]
+                        L2 = sL2[slots]
+                        wx = lc[gl, 0] - sax[slots]
+                        wy = lc[gl, 1] - say[slots]
+                        dx = sdx[slots]
+                        dy = sdy[slots]
+                        with np.errstate(divide="ignore",
+                                         invalid="ignore"):
+                            t = (wx * dx + wy * dy) / np.where(
+                                L2 == 0, 1.0, L2)
+                        t = np.clip(
+                            np.where(L2 == 0, 0.0, t), 0.0, 1.0)
+                        ex = wx - t * dx
+                        ey = wy - t * dy
+                        d2 = ex * ex + ey * ey
+                        nzc = cs > 0
+                        if d2.size:
+                            st = np.zeros(ec - sc, dtype=np.int64)
+                            np.cumsum(cs[:-1], out=st[1:])
+                            best[sc:ec][nzc] = np.minimum.reduceat(
+                                d2, st[nzc])
+                        sc = ec
+                    d = np.sqrt(best)
+                else:
+                    d = pairwise_distance(lb.take(gpos), b.batch.take(bi))
+                if excl:
+                    eq = np.fromiter(
+                        (a == w for a, w in zip(lgv[gpos], b.wkb[bi])),
+                        dtype=bool, count=len(gpos))
+                    d = np.where(eq, np.inf, d)
+                if mdist is not None:
+                    d = np.where(d > mdist, np.inf, d)
+                return np.where(np.isnan(d), np.inf, d)
+
             def _probe(rows, kk, want_ties, cert_only):
-                """Exact distances of every (row, build) combo whose build
-                cover touches the (2kk+1)^2 block around the row's cell.
-                Returns per-row best distance; when ``want_ties``, emits
-                all tie rows (d == dmin, deduped) for rows passing the
-                certification filter. Fully vectorized; rows never span
-                chunks so per-chunk minima are final."""
+                """Exact distances of every (row, build) candidate of the
+                (2kk+1)^2 disk around the row's cell (plus the always-
+                rows). Returns per-row best distance; when ``want_ties``,
+                emits all tie rows (d == dmin) for rows passing the
+                certification filter. Fully vectorized; the index never
+                splits one row's candidates across blocks, so per-block
+                minima are final."""
                 kk = int(kk)
                 dmin = np.full(len(rows), np.inf)
-                if (len(ks) == 0 and nal == 0) or len(rows) == 0:
+                if b.empty or len(rows) == 0:
                     return dmin
-
-                def _dist(gpos, bi):
-                    if lpuntal and rpuntal:
-                        dx = lc[gpos, 0] - rc[bi, 0]
-                        dy = lc[gpos, 1] - rc[bi, 1]
-                        # sqrt(dx^2+dy^2), NOT hypot — bit parity with
-                        # pairwise_distance and the SQL oracles
-                        d = np.sqrt(dx * dx + dy * dy)
-                    elif lpuntal and rsegs is not None:
-                        # point probe vs lineal build: one vectorized
-                        # point-to-segment pass over the segment soup —
-                        # point_segment_dist2's exact formula, then
-                        # sqrt(min), matching pairwise_distance bit for
-                        # bit (a point ON the line yields d2 == 0.0).
-                        # Work is sub-chunked by CUMULATIVE SEGMENT
-                        # count, not pair count — COMBO_CAP bounds pairs
-                        # but a vertex-heavy build (10k-point polylines)
-                        # would otherwise expand pairs x segments into
-                        # multi-GB temporaries in one shot.
-                        sax, say, sdx, sdy, sL2, segoff = rsegs
-                        cnt = segoff[bi + 1] - segoff[bi]
-                        best = np.full(len(bi), np.inf)
-                        csum = np.cumsum(cnt)
-                        sc = 0
-                        while sc < len(bi):
-                            prev = csum[sc - 1] if sc else 0
-                            ec = int(np.searchsorted(
-                                csum, prev + 4_194_304, side="left")) + 1
-                            ec = min(max(ec, sc + 1), len(bi))
-                            bs = bi[sc:ec]
-                            cs = cnt[sc:ec]
-                            slots = _expand_ranges(segoff[bs],
-                                                   segoff[bs] + cs)
-                            pr = np.repeat(
-                                np.arange(ec - sc, dtype=np.int64), cs)
-                            gl = gpos[sc:ec][pr]
-                            L2 = sL2[slots]
-                            wx = lc[gl, 0] - sax[slots]
-                            wy = lc[gl, 1] - say[slots]
-                            dx = sdx[slots]
-                            dy = sdy[slots]
-                            with np.errstate(divide="ignore",
-                                             invalid="ignore"):
-                                t = (wx * dx + wy * dy) / np.where(
-                                    L2 == 0, 1.0, L2)
-                            t = np.clip(
-                                np.where(L2 == 0, 0.0, t), 0.0, 1.0)
-                            ex = wx - t * dx
-                            ey = wy - t * dy
-                            d2 = ex * ex + ey * ey
-                            nzc = cs > 0
-                            if d2.size:
-                                st = np.zeros(ec - sc, dtype=np.int64)
-                                np.cumsum(cs[:-1], out=st[1:])
-                                best[sc:ec][nzc] = np.minimum.reduceat(
-                                    d2, st[nzc])
-                            sc = ec
-                        d = np.sqrt(best)
-                    else:
-                        d = pairwise_distance(lb.take(gpos),
-                                              rb_all.take(bi))
-                    if excl:
-                        eq = np.fromiter(
-                            (a == b for a, b in
-                             zip(lgv[gpos], rwkb_arr[bi])),
-                            dtype=bool, count=len(gpos))
-                        d = np.where(eq, np.inf, d)
-                    if mdist is not None:
-                        d = np.where(d > mdist, np.inf, d)
-                    return np.where(np.isnan(d), np.inf, d)
-
-                cols = 2 * kk + 1
-                CCHUNK = max(1, COMBO_CAP // max(cols, nal))
-                for s0 in range(0, len(rows), CCHUNK):
-                    rr = rows[s0:s0 + CCHUNK]
-                    m = len(rr)
-                    ii = i0[rr][:, None] + np.arange(-kk, kk + 1)[None, :]
-                    valid = (ii >= 0) & (ii < g)
-                    jlo = np.clip(j0[rr] - kk, 0, g - 1)[:, None]
-                    jhi = np.clip(j0[rr] + kk, 0, g - 1)[:, None]
-                    klo = (ii * g + jlo).ravel()
-                    khi = (ii * g + jhi + 1).ravel()
-                    lo = np.searchsorted(ks, klo)
-                    hi = np.searchsorted(ks, khi)
-                    vr = valid.ravel()
-                    lo[~vr] = 0
-                    hi[~vr] = 0
-                    lo2d = lo.reshape(m, cols)
-                    hi2d = hi.reshape(m, cols)
-                    rcnt = (hi2d - lo2d).sum(axis=1)
-                    csum = np.cumsum(rcnt)
-                    gb = [0]
-                    while gb[-1] < m:
-                        prev = csum[gb[-1] - 1] if gb[-1] else 0
-                        j = int(np.searchsorted(
-                            csum, prev + COMBO_CAP, side="left")) + 1
-                        gb.append(min(max(j, gb[-1] + 1), m))
-                    for ga, gz in zip(gb[:-1], gb[1:]):
-                        mm = gz - ga
-                        rcc = rcnt[ga:gz]
-                        dloc = np.full(mm, np.inf)
-                        have = bool(rcc.sum())
-                        if have:
-                            slots = _expand_ranges(lo2d[ga:gz].ravel(),
-                                                   hi2d[ga:gz].ravel())
-                            bi = rs[slots]
-                            li = np.repeat(np.arange(mm), rcc)
-                            gpos = rr[ga + li]
-                            d = _dist(gpos, bi)
-                            nz = rcc > 0
-                            nnz = int(nz.sum())
-                            starts = np.zeros(nnz, dtype=np.int64)
-                            np.cumsum(rcc[nz][:-1], out=starts[1:])
-                            dloc[nz] = np.minimum.reduceat(d, starts)
-                        if nal:
-                            # giant-bbox build rows: candidates of EVERY
-                            # probe (their cover overflowed the fine grid)
-                            li_a = np.repeat(np.arange(mm), nal)
-                            bi_a = np.tile(al, mm)
-                            d_a = _dist(rr[ga + li_a], bi_a)
-                            dloc = np.minimum(
-                                dloc, d_a.reshape(mm, nal).min(axis=1))
-                        tgt = s0 + np.arange(ga, gz)
-                        dmin[tgt] = dloc
-                        if want_ties:
-                            ok_r = np.isfinite(dloc)
-                            if cert_only:
-                                ok_r &= (dloc + lrad[rows[tgt]]) < min_cell
-                            if have:
-                                tie = (ok_r[li] & np.isfinite(d)
-                                       & (d == dloc[li]))
-                                if tie.any():
-                                    tl = gpos[tie]
-                                    tb = bi[tie]
-                                    td = d[tie]
-                                    # multi-cell build covers can surface
-                                    # the same pair via several columns —
-                                    # dedup on the (row, build) key
-                                    key = (tl.astype(np.int64)
-                                           * np.int64(nb) + tb)
-                                    _, ui = np.unique(key, return_index=True)
-                                    o_l.append(tl[ui])
-                                    o_r.append(tb[ui])
-                                    o_d.append(td[ui])
-                            if nal:
-                                tie = (ok_r[li_a] & np.isfinite(d_a)
-                                       & (d_a == dloc[li_a]))
-                                if tie.any():
-                                    o_l.append(rr[ga + li_a[tie]])
-                                    o_r.append(bi_a[tie])
-                                    o_d.append(d_a[tie])
+                chunk = max(1, COMBO_CAP // (2 * kk + 1 + len(b.always)))
+                for s0 in range(0, len(rows), chunk):
+                    rr = rows[s0:s0 + chunk]
+                    for li, bi in b.candidates(
+                            np.maximum(i0[rr] - kk, 0),
+                            np.minimum(i0[rr] + kk, g - 1),
+                            np.maximum(j0[rr] - kk, 0),
+                            np.minimum(j0[rr] + kk, g - 1), COMBO_CAP):
+                        gpos = rr[li]
+                        d = _dist(gpos, bi)
+                        starts = np.flatnonzero(np.r_[True, li[1:] != li[:-1]])
+                        dloc = np.minimum.reduceat(d, starts)
+                        dmin[s0 + li[starts]] = dloc
+                        if not want_ties:
+                            continue
+                        ok_r = np.isfinite(dloc)
+                        if cert_only:
+                            ok_r &= (dloc + lrad[gpos[starts]]) < min_cell
+                        seg = np.repeat(np.arange(len(starts)),
+                                        np.diff(np.r_[starts, len(li)]))
+                        tie = ok_r[seg] & (d == dloc[seg])
+                        if tie.any():
+                            o_l.append(gpos[tie])
+                            o_r.append(bi[tie])
+                            o_d.append(d[tie])
                 return dmin
 
             rows_all = np.nonzero(ok_row)[0].astype(np.int64)
@@ -853,7 +651,7 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
                 dmin1 = _probe(rows_all, 1, want_ties=True, cert_only=True)
                 cert = (dmin1 + lrad[rows_all]) < min_cell
                 unc = rows_all[~cert]
-                if len(unc) and (len(ks) or nal):
+                if len(unc) and not b.empty:
                     dk = dmin1[~cert].copy()
                     # sparse neighborhoods: geometric disk escalation until
                     # SOME candidate bounds the search (<2% of rows on
@@ -886,7 +684,7 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
             if o_l:
                 tl = np.concatenate(o_l)
                 tb = np.concatenate(o_r)
-                out = {"__xlid": lids[tl], "__xrid": rid_vals[tb],
+                out = {"__xlid": lids[tl], "__xrid": build.id_values(tb),
                        "__d": np.concatenate(o_d)}
                 if emit_geom:
                     out["__lgeom"] = lgv[tl]

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_bounds, st_cells, st_is_empty, st_predicate
+from ..functions.st import st_cells, st_is_empty
 from ..index.cells import DOMAIN_UNIT
 from .sjoin import (_canonical_cells, _estimate_resolution, _prep_side,
                     _suffix_columns)
@@ -89,106 +89,67 @@ def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
     )
 
 
-def _broadcast_probe_intersection(probe_raw, rcov, i1: str, i2: str,
-                                  resolution: int, domain,
-                                  anc_down_to: int | None):
+def _broadcast_probe_intersection(probe_raw, build, i1: str):
     """Broadcast overlay candidate+intersection as ONE probe-side
     ``mapInPandas`` pass — overlay's analogue of sjoin's
-    ``_broadcast_probe_refined`` (round-3 scale fix).
+    ``_broadcast_probe_refined``, on the same shared build index
+    (operators/_buildindex.py).
 
     The equi-join formulation carried BOTH geometries' WKB through every
     candidate row, so each Arrow batch re-decoded up to batch-size build
     geometries: measured 30 us/row at sf0.1 (2.7M candidate rows -> 91 s)
     with the whole cost in repeated ``from_wkb`` of the same 10k build
-    polygons. Here the build side ships once per worker as the CSR cell
-    index + WKB (decoded once per worker process via the shared
-    ``_BUILD_CACHE``), the probe streams through a single pass computing
-    cover in-kernel, pairs are generated and deduped in-kernel (plain
-    (probe,build) unique — no canonical-cell rule needed), and the
-    pairwise intersection runs only on bbox-overlapping deduped pairs.
-    Wire traffic: O(|probe| + |build|) in, O(|matches|) out.
+    polygons. Here the build side ships once per worker and is decoded
+    once per worker process; each probe bbox is looked up in the
+    grid-row index (plain (probe, build) dedup where a pair can repeat —
+    no canonical-cell rule needed), and the pairwise intersection runs
+    only on bbox-overlapping pairs. Wire traffic: O(|probe| + |build|)
+    in, O(|matches|) out.
 
     Emits (__i1, __i2, __g1, __g2, __inter) — the same schema as the
     fused ``_pairs`` path, so residual stages are unchanged.
     """
-    from .sjoin import _collect_build_index, _flat_ancestors, _load_build
-
-    cache_key, bc, nb, rids = _collect_build_index(rcov, i2)
-    rid_vals = np.asarray(rids.to_pandas(), dtype=object)
     i1_t = dict(probe_raw.dtypes)[i1]
-    i2_t = dict(rcov.dtypes)[i2]
     probe = probe_raw.select(F.col(i1).alias("__xi1"), "__g1")
 
     def fn(it):
         from ..geom.clipping import pairwise_intersection
         from ..geom.kernels import bounds as _bounds
-        from ..geom.ragged import _expand_ranges
         from ..geom.wkb import from_wkb, to_wkb
-        from ..index import cells as C
+        from ._cellstream import BUFFER_ROWS as _CAP
 
-        lb_all = None
-        rb_all, rbb, uc, off_, ridx, rwkb = _load_build(cache_key, bc)
-        rwkb_arr = np.asarray(rwkb, dtype=object)
+        b = build.load()
+        rbb = b.bounds
         for pdf in it:
-            if len(pdf) == 0 or len(uc) == 0:
+            if len(pdf) == 0 or b.empty:
                 continue
             lb = from_wkb(pdf["__g1"])
             lbb = _bounds(lb)
-            miss = np.isnan(lbb[:, 0])
-            lbb = np.nan_to_num(lbb)
-            cflat, coff = C.bbox_cover(lbb[:, 0], lbb[:, 1],
-                                       lbb[:, 2], lbb[:, 3],
-                                       resolution, domain=domain)
-            prow = np.repeat(np.arange(len(pdf)), np.diff(coff))
-            if miss.any():
-                keep = ~miss[prow]
-                cflat = cflat[keep]
-                prow = prow[keep]
-            if anc_down_to is not None:
-                cflat, prow = _flat_ancestors(cflat, prow, anc_down_to)
-            if not len(cflat):
-                continue
-            pos = np.minimum(np.searchsorted(uc, cflat), len(uc) - 1)
-            okc = uc[pos] == cflat
-            cnt = np.where(okc, off_[pos + 1] - off_[pos], 0)
-            sel = cnt > 0
-            if not sel.any():
-                continue
-            li = np.repeat(prow[sel], cnt[sel])
-            ri = ridx[_expand_ranges(off_[pos[sel]], off_[pos[sel]] + cnt[sel])]
-            # dedup multi-cell duplicates of the same pair
-            key = li * np.int64(nb) + ri
-            ukey = np.unique(key)
-            li = (ukey // nb).astype(np.int64)
-            ri = (ukey % nb).astype(np.int64)
-            # bbox prefilter: disjoint bboxes cannot intersect
-            pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
-                   & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
-            li = li[pre]
-            ri = ri[pre]
-            if not len(li):
-                continue
-            res = pairwise_intersection(lb.take(li), rb_all.take(ri))
-            nonempty = res.n_coords_per_geom() > 0
-            if not nonempty.any():
-                continue
-            k = np.nonzero(nonempty)[0]
-            li = li[k]
-            ri = ri[k]
-            w = to_wkb(res.take(k))
             lids = pdf["__xi1"].to_numpy()
             lws = pdf["__g1"].to_numpy(dtype=object)
-            yield pd.DataFrame({
-                "__i1": lids[li],
-                "__i2": rid_vals[ri],
-                "__g1": lws[li],
-                "__g2": rwkb_arr[ri],
-                "__inter": list(w),
-            })
+            for li, ri in b.bbox_candidates(lbb, _CAP):
+                # bbox prefilter: disjoint bboxes cannot intersect
+                pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
+                       & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
+                li = li[pre]
+                ri = ri[pre]
+                if not len(li):
+                    continue
+                res = pairwise_intersection(lb.take(li), b.batch.take(ri))
+                k = np.nonzero(res.n_coords_per_geom() > 0)[0]
+                if not len(k):
+                    continue
+                yield pd.DataFrame({
+                    "__i1": lids[li[k]],
+                    "__i2": build.id_values(ri[k]),
+                    "__g1": lws[li[k]],
+                    "__g2": b.wkb[ri[k]],
+                    "__inter": list(to_wkb(res.take(k))),
+                })
 
     return probe.mapInPandas(
-        fn, schema=(f"__i1 {i1_t}, __i2 {i2_t}, __g1 binary, "
-                    "__g2 binary, __inter binary"))
+        fn, schema=(f"__i1 {i1_t}, __i2 {build.id_type.simpleString()}, "
+                    "__g1 binary, __g2 binary, __inter binary"))
 
 
 def _intersection_udf():
@@ -455,13 +416,12 @@ def overlay(
         df2 = df2.withColumn(geom, st_make_valid(geom))
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2")
-    from .sjoin import _bbox_stats, _min_cover_res
+    from .sjoin import (BROADCAST_EXPLODED_ROWS, _bbox_stats, _est_exploded,
+                        _min_cover_res, _widen)
 
     stats = _bbox_stats(df1p, df2p)
     if resolution is None:
         resolution = _estimate_resolution(stats, domain)
-    min1 = _min_cover_res(stats[0], resolution, domain)
-    min2 = _min_cover_res(stats[1], resolution, domain)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
 
@@ -469,33 +429,20 @@ def overlay(
     # already computed in the same Arrow pass (empty intersections — pure
     # touches — are dropped; subtracting a touching neighbor is a no-op,
     # so the residual stages are unaffected)
-    from .sjoin import BROADCAST_EXPLODED_ROWS, _est_exploded
-
     if pair_on is None and 0 < stats[1]["n"] and _est_exploded(
             stats[1], resolution, domain) <= BROADCAST_EXPLODED_ROWS:
         # small build side: single probe-side pass — no join, no explode,
         # no per-batch build re-decode (see _broadcast_probe_intersection)
-        from .sjoin import _ancestors_udf
-        from ..functions.st import st_cells_from_bbox
-
-        rcov = df2p.select(
-            F.col(i2), F.col(geom).alias("__rgeom"),
-            st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
-                               "__bb.maxy", resolution,
-                               domain=domain).alias("__cells"))
-        if min1 < resolution:  # probe may emit coarse rows -> build chains
-            rcov = rcov.withColumn(
-                "__cells", _ancestors_udf(min1)(F.col("__cells")))
-        from .sjoin import _widen
+        from ._buildindex import BuildIndex
 
         probe_raw = _widen(df1p.select(F.col(i1), F.col(geom).alias("__g1")))
         pairs = _broadcast_probe_intersection(
-            probe_raw, rcov, i1, i2, resolution, domain,
-            min2 if min2 < resolution else None)
+            probe_raw, BuildIndex(df2p, i2, geom, resolution, domain), i1)
     else:
         pairs = _pairs(df1p, df2p, geom, geom, i1, i2, resolution, domain,
-                       min1, min2, with_intersection="__inter",
-                       pair_on=pair_on)
+                       _min_cover_res(stats[0], resolution, domain),
+                       _min_cover_res(stats[1], resolution, domain),
+                       with_intersection="__inter", pair_on=pair_on)
     pairs = pairs.localCheckpoint(eager=False)
 
     auto1, auto2 = id1 is None, id2 is None

@@ -10,10 +10,10 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
 
 1. **Prep + stats**: each side gets a row id (if none supplied) and a
    bbox struct; ONE tiny agg job reads both sides' bbox extents. They
-   fix the quadtree resolution (adaptive if not given), the coarsest
-   per-row cover res each side can fall back to (the other side then
-   emits ancestor cells down to it), and the estimated exploded size of
-   the right side's cell cover.
+   fix the quadtree resolution (adaptive if not given), the estimated
+   exploded size of the right side's cell cover and, on the cogroup
+   pass, the coarsest per-row cover res each side can fall back to (the
+   other side then emits ancestor cells down to it).
 2. **Pair pass**: one of two ``mapInPandas``/``mapInArrow`` kernels.
    Candidate pairs are generated, deduped and refined with the exact
    vectorized predicate (geom/predicates.py) in-kernel, and leave the
@@ -22,10 +22,13 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
    * **Broadcast probe** (``_broadcast_probe_refined``): chosen when the
      right side's exploded cover is under BROADCAST_EXPLODED_ROWS (or
      ``broadcast_right=True``) and neither ``on_attribute`` nor
-     ``salt_hot_cells`` is set. The right side is collected once into a
-     cell->row CSR index and broadcast; the left side streams through
-     one pass that covers each row in-kernel, looks its cells up and
-     dedups on the (probe, build) key. No join, no shuffle.
+     ``salt_hot_cells`` is set. The right side is collected once into
+     the shared grid-row index (``_buildindex.BuildIndex``: one fine
+     grid, one sorted key range per grid row, giant rows as candidates
+     of every probe) and broadcast; the left side streams through one
+     pass that looks each (dwithin-padded) bbox up, dedups on the
+     (probe, build) key where a pair can repeat, and refines. No join,
+     no shuffle.
    * **Cogroup** (``_cogroup_refined``): every other case. Both sides
      are exploded per cover cell, union-tagged and hash-partitioned by
      (cell, salt[, attribute hash]). Each group's pairs are generated
@@ -56,7 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from ..functions.st import st_bounds, st_cells_from_bbox, st_predicate
+from ..functions.st import st_bounds, st_cells_from_bbox
 from ..index.cells import DOMAIN_UNIT, pick_resolution
 
 VALID_HOW = ("inner", "left", "right")
@@ -145,14 +148,17 @@ def _min_cover_res(stats: dict, resolution: int, domain, pad: float = 0.0,
 def _ancestors_udf(down_to: int):
     """array<long> cells -> cells + ancestor chain down to ``down_to``.
 
-    Vectorized over the whole Arrow batch: flat-offset parent math
-    (_flat_ancestors) + one lexsort for the per-row unique — no per-row
-    Python loop (round-2 verdict item; the broadcast-probe path got the
-    same treatment in session 3)."""
+    Vectorized over the whole Arrow batch: each cell's parents down to
+    ``down_to`` appended per resolution step, then one lexsort for the
+    per-row unique — no per-row Python loop. Only the cogroup pass and
+    overlay's shuffle join use cover ancestors; the broadcast index is a
+    single fine grid."""
 
     @pandas_udf("array<long>")
     def _f(cells: pd.Series) -> pd.Series:
         import pyarrow as pa
+
+        from ..index import cells as C
 
         n = len(cells)
         arr = pa.array(cells, type=pa.list_(pa.int64()))
@@ -166,7 +172,14 @@ def _ancestors_udf(down_to: int):
             nulls = arr.is_null().to_numpy(zero_copy_only=False)
             keep = ~np.repeat(nulls, lens)
             flat, prow = flat[keep], prow[keep]
-        cflat, crow = _flat_ancestors(flat, prow, down_to)
+        cflat, crow = [flat], [prow]
+        if len(flat):
+            res = C.cell_res(flat)
+            for step in range(1, int(res.max()) - down_to + 1):
+                m = res - step >= down_to
+                cflat.append(C.parent(flat[m], step))
+                crow.append(prow[m])
+        cflat, crow = np.concatenate(cflat), np.concatenate(crow)
         order = np.lexsort((cflat, crow))
         cs, rs = cflat[order], crow[order]
         first = np.ones(len(cs), dtype=bool)
@@ -187,203 +200,52 @@ def _widen(df: DataFrame) -> DataFrame:
     return widen(df)
 
 
-# worker-process cache of decoded broadcast build sides, keyed by a
-# plan-time UUID (a pyspark Broadcast's .value is re-read per task; the
-# decoded GeometryBatch must survive across tasks of the same worker)
-_BUILD_CACHE: dict = {}
-_BUILD_CACHE_MAX = 4
-
-
-def _flat_ancestors(cflat: np.ndarray, prow: np.ndarray, down_to: int):
-    """Vectorized ancestor chain over a flat (cell, row) cover: append each
-    cell's parents from its res down to ``down_to``. Same cells as
-    _ancestors_udf (without the per-row unique — duplicate lookup cells are
-    deduped later at the pair level)."""
-    from ..index import cells as C
-
-    if not len(cflat):
-        return cflat, prow
-    rs = C.cell_res(cflat)
-    top = int(rs.max())
-    outs_c = [cflat]
-    outs_p = [prow]
-    for s in range(1, top - down_to + 1):
-        m = rs - s >= down_to
-        if not m.any():
-            break
-        outs_c.append(C.parent(cflat[m], s))
-        outs_p.append(prow[m])
-    if len(outs_c) == 1:
-        return cflat, prow
-    return np.concatenate(outs_c), np.concatenate(outs_p)
-
-
-def _collect_build_index(rcov, rid: str):
-    """Arrow-collect a (rid, __rgeom, __cells) build side into a broadcast
-    cell->row CSR index (+ raw WKB). Shared by the sjoin broadcast probe
-    and overlay's broadcast intersection probe. Returns
-    (cache_key, broadcast, n_build_rows, rids) — ``rids`` is the build
-    ids as one Arrow array, gathered with ``take``."""
-    import uuid
-
-    spark = rcov.sparkSession
-    tbl = (rcov.select(F.col(rid).alias("i"), F.col("__rgeom").alias("g"),
-                       F.col("__cells").alias("c"))
-           .toArrow().combine_chunks())
-    nb = tbl.num_rows
-    rwkb: list = tbl["g"].to_pylist()
-    ccol = tbl["c"].combine_chunks()
-    flat = ccol.values.to_numpy(zero_copy_only=False).astype(np.int64,
-                                                             copy=False)
-    offs = ccol.offsets.to_numpy(zero_copy_only=False).astype(np.int64,
-                                                              copy=False)
-    lens = np.diff(offs)
-    if len(flat):
-        fc = flat
-        fi = np.repeat(np.arange(nb, dtype=np.int64), lens)
-        if ccol.null_count:
-            # drop flat entries that belong to null list rows (offsets may
-            # still span them)
-            keep = ~np.repeat(ccol.is_null().to_numpy(zero_copy_only=False),
-                              lens)
-            fc = fc[keep]
-            fi = fi[keep]
-        o = np.argsort(fc, kind="stable")
-        fc = fc[o]
-        fi = fi[o]
-        ucells, starts = np.unique(fc, return_index=True)
-        off = np.append(starts, len(fc)).astype(np.int64)
-    else:
-        ucells = np.empty(0, np.int64)
-        off = np.zeros(1, np.int64)
-        fi = np.empty(0, np.int64)
-    cache_key = uuid.uuid4().hex
-    bc = spark.sparkContext.broadcast(
-        {"wkb": rwkb, "ucells": ucells, "off": off, "ridx": fi})
-    return cache_key, bc, nb, tbl["i"].combine_chunks()
-
-
-def _load_build(cache_key: str, bc):
-    """Worker-side: decoded build batch from the process cache (decode
-    once per worker, reused across tasks). Returns
-    (batch, bounds, ucells, off, ridx, raw_wkb_list)."""
-    got = _BUILD_CACHE.get(cache_key)
-    if got is None:
-        from ..geom.kernels import bounds as _bounds
-        from ..geom.wkb import from_wkb
-
-        v = bc.value
-        rb_all = from_wkb(pd.Series(v["wkb"]))
-        rbb = np.nan_to_num(_bounds(rb_all))
-        got = (rb_all, rbb, v["ucells"], v["off"], v["ridx"], v["wkb"])
-        if len(_BUILD_CACHE) >= _BUILD_CACHE_MAX:
-            _BUILD_CACHE.pop(next(iter(_BUILD_CACHE)))
-        _BUILD_CACHE[cache_key] = got
-    return got
-
-
-def _broadcast_probe_refined(lraw, rcov, rid: str, predicate: str,
-                             distance, lpad: float, resolution: int, domain,
-                             anc_down_to: int | None, carry: list[str]):
+def _broadcast_probe_refined(lraw, build, predicate: str, distance,
+                             lpad: float, carry: list[str]):
     """Broadcast spatial join as a single probe-side ``mapInArrow`` pass.
 
-    Round-2 scale fix: the round-1 plan materialized every candidate
-    pair's full payload (probe WKB + build WKB + two bbox structs +
-    cell ≈ 300 B/pair) through Arrow into a refine UDF — O(pairs) wire
-    traffic, tens of GB at 10^8 candidate pairs, and a per-pair build
-    WKB decode.  Here the build side (already small enough to broadcast
-    by this path's precondition) is shipped ONCE per worker as a cell→
-    row CSR index + WKB list, decoded ONCE per worker process, and the
-    probe side streams through a single Arrow pass with NO join, NO
-    explode and NO pair materialization: candidates are generated
-    in-kernel from the CSR, deduped per probe row, and refined against
-    the cached decoded build batch.  Wire traffic is O(|probe| +
-    |build|) + O(|matches|) rows out.
+    The build side (small enough to broadcast by this path's
+    precondition) ships ONCE per worker as a ``_buildindex.BuildIndex``
+    and is decoded once per worker process; the probe side streams
+    through a single Arrow pass with NO join, NO explode and NO pair
+    materialization: each probe row's (dwithin-padded) bbox is looked up
+    in the grid-row index, the candidates are bbox-prefiltered and
+    refined against the cached decoded build batch. Wire traffic is
+    O(|probe| + |build|) + O(|matches|) rows out.
 
     ``lraw`` carries the probe geometry as ``__lgeom`` plus the ``carry``
-    columns: bounds, cell cover and the ancestor chain down to
-    ``anc_down_to`` are computed in-kernel from the decoded geometry
-    (vectorized bbox_cover over flat offsets).
-
-    Returns a DataFrame of matched pairs: the probe row's ``carry``
-    columns and the build id ``__xrid``. Carried columns are gathered
-    from the probe's Arrow batch, so every type passes through unchanged
-    (a pandas round trip would turn a NaN double into NULL). sjoin
-    carries only the probe id (plus ``__lgeom`` on the narrow assembly
-    path); the stream join carries every stream-side column.
+    columns. Returns a DataFrame of matched pairs: the probe row's
+    ``carry`` columns and the build id ``__xrid``. Carried columns are
+    gathered from the probe's Arrow batch, so every type passes through
+    unchanged (a pandas round trip would turn a NaN double into NULL).
+    sjoin carries only the probe id (plus ``__lgeom`` on the narrow
+    assembly path); the stream join carries every stream-side column.
     """
     import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
-    # Arrow collect + vectorized CSR build: the row-wise collect() plus a
-    # per-row Python loop here was the dominant SERIAL cost of the whole
-    # join (Amdahl fit on the 1M x 100k scaling input put ~18 s of the
-    # local[2] 59 s outside the parallel fraction). toArrow() lands the
-    # cell lists as one flat int64 buffer + offsets, so the cell->row
-    # index is pure numpy.
-    cache_key, bc, nb, rids = _collect_build_index(rcov, rid)
-
     schema = StructType([lraw.schema[c] for c in carry]
-                        + [StructField("__xrid", rcov.schema[rid].dataType)])
+                        + [StructField("__xrid", build.id_type)])
     pad = float(lpad or 0.0)
 
     def fn(it):
         from ..geom.kernels import bounds as _bounds
         from ..geom.predicates import pairwise_predicate
-        from ..geom.ragged import _expand_ranges
         from ..geom.wkb import from_wkb
-        from ..index import cells as C
         from ._cellstream import BUFFER_ROWS as _CAP
 
-        rb_all, rbb, uc, off_, ridx, _ = _load_build(cache_key, bc)
+        b = build.load()
+        rbb = b.bounds
         for batch in it:
-            n = batch.num_rows
-            if n == 0 or len(uc) == 0:
+            if batch.num_rows == 0 or b.empty:
                 continue
             lb = from_wkb(batch.column("__lgeom").to_pandas())
             lbb = _bounds(lb)
-            miss = np.isnan(lbb[:, 0])
-            lbb = np.nan_to_num(lbb)
             if pad:
                 lbb = lbb + np.array([-pad, -pad, pad, pad])
-            # in-kernel cover: flat (cell, row) pairs straight from the
-            # padded bounds — no object lists, no per-row Python
-            cflat, coff = C.bbox_cover(lbb[:, 0], lbb[:, 1],
-                                       lbb[:, 2], lbb[:, 3],
-                                       resolution, domain=domain)
-            ncell = np.diff(coff)
-            prow = np.repeat(np.arange(n), ncell)
-            if miss.any():
-                keep = ~miss[prow]
-                cflat = cflat[keep]
-                prow = prow[keep]
-            multi = bool((ncell > 1).any())
-            if anc_down_to is not None:
-                n0 = len(cflat)
-                cflat, prow = _flat_ancestors(cflat, prow, anc_down_to)
-                multi = multi or len(cflat) > n0
-            if not len(cflat):
-                continue
-            pos = np.minimum(np.searchsorted(uc, cflat), len(uc) - 1)
-            okc = uc[pos] == cflat
-            cnt = np.where(okc, off_[pos + 1] - off_[pos], 0)
-            sel = cnt > 0
-            if not sel.any():
-                continue
-            li = np.repeat(prow[sel], cnt[sel])
-            ri = ridx[_expand_ranges(off_[pos[sel]], off_[pos[sel]] + cnt[sel])]
-            # multi-cell probes can produce the same pair via several
-            # cells: dedup on the (probe, build) key
-            if multi:
-                key = li * np.int64(nb) + ri
-                ukey = np.unique(key)
-                li = (ukey // nb).astype(np.int64)
-                ri = (ukey % nb).astype(np.int64)
             o_l = []
             o_r = []
-            for lo in range(0, len(li), _CAP):
-                ls = li[lo:lo + _CAP]
-                rs = ri[lo:lo + _CAP]
+            for ls, rs in b.bbox_candidates(lbb, _CAP):
                 # bbox prefilter (lbb already dwithin-padded): prunes
                 # exact predicate work; any predicate in VALID_PRED is
                 # false on bbox-disjoint (beyond pad) pairs
@@ -396,7 +258,7 @@ def _broadcast_probe_refined(lraw, rcov, rid: str, predicate: str,
                 if not len(ls):
                     continue
                 ok = pairwise_predicate(predicate, lb.take(ls),
-                                        rb_all.take(rs), distance)
+                                        b.batch.take(rs), distance)
                 o_l.append(ls[ok])
                 o_r.append(rs[ok])
             if o_l:
@@ -405,7 +267,7 @@ def _broadcast_probe_refined(lraw, rcov, rid: str, predicate: str,
                     rs = np.concatenate(o_r)
                     cols = batch.select(carry).take(ls).columns
                     yield pa.RecordBatch.from_arrays(
-                        [*cols, rids.take(rs)], names=[*carry, "__xrid"])
+                        [*cols, build.ids.take(rs)], names=[*carry, "__xrid"])
 
     return lraw.mapInArrow(fn, schema=schema)
 
@@ -731,50 +593,6 @@ def sjoin(
     stats = _bbox_stats(left, right)  # one tiny agg job
     if resolution is None:
         resolution = _estimate_resolution(stats, domain)
-    # coarsest cover res each side can fall back to (giant bboxes):
-    # the other side must emit ancestor cells down to that level so
-    # mixed-resolution pairs still meet on a common cell (SURVEY.md §4)
-    lmin = _min_cover_res(stats[0], resolution, domain, pad)
-    rmin = _min_cover_res(stats[1], resolution, domain, 0.0)
-
-    def cover(df, geom, pad_by):
-        # cover from the __bb struct computed in _prep_side — the geometry
-        # is NOT decoded a second time (round-1 covered via st_cells)
-        c = st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
-                               "__bb.maxy", resolution, domain=domain)
-        if pad_by:
-            # dwithin: expand the probe bbox by the distance — done by
-            # covering a padded rectangle instead of the raw bbox
-            @pandas_udf("array<long>")
-            def _padded(minx: pd.Series, miny: pd.Series, maxx: pd.Series, maxy: pd.Series) -> pd.Series:
-                from ..index import cells as C
-
-                mnx = minx.to_numpy(dtype=np.float64) - pad_by
-                mny = miny.to_numpy(dtype=np.float64) - pad_by
-                mxx = maxx.to_numpy(dtype=np.float64) + pad_by
-                mxy = maxy.to_numpy(dtype=np.float64) + pad_by
-                miss = np.isnan(mnx)
-                flat, off = C.bbox_cover(
-                    np.nan_to_num(mnx), np.nan_to_num(mny),
-                    np.nan_to_num(mxx), np.nan_to_num(mxy),
-                    resolution, domain=domain)
-                return pd.Series([
-                    None if miss[i] else flat[off[i]:off[i+1]].tolist()
-                    for i in range(len(mnx))
-                ])
-
-            c = _padded("__bb.minx", "__bb.miny", "__bb.maxx", "__bb.maxy")
-        return df.withColumn("__cells", c)
-
-    lcov = cover(left.select(lid, F.col(left_geom).alias("__lgeom"), "__bb",
-                             *on_attribute), "__lgeom", pad)
-    rcov = cover(right.select(rid, F.col(right_geom).alias("__rgeom"), "__bb", *on_attribute),
-                 "__rgeom", 0.0)
-    if rmin < resolution:  # right may have coarse rows -> left emits chain
-        lcov = lcov.withColumn("__cells", _ancestors_udf(rmin)(F.col("__cells")))
-    if lmin < resolution:
-        rcov = rcov.withColumn("__cells", _ancestors_udf(lmin)(F.col("__cells")))
-
     if broadcast_right is None:
         broadcast_right = (
             0 < stats[1]["n"]
@@ -788,17 +606,42 @@ def sjoin(
         # small build side: single probe-side pass, no join, no explode
         # (an explicit salting request signals a shuffle-scale build side
         # and on_attribute needs the attribute key — both always route to
-        # the cogroup pass). The probe ships ONLY (id, wkb); bounds/cover/
-        # ancestors happen in-kernel.
+        # the cogroup pass). The probe ships ONLY (id, wkb); bounds and
+        # the index lookup happen in-kernel.
+        from ._buildindex import BuildIndex
+
         lraw = left.select(F.col(lid).alias("__xlid"),
                            F.col(left_geom).alias("__lgeom"))
         refined = _broadcast_probe_refined(
-            lraw, rcov, rid, predicate, distance, pad, resolution, domain,
-            rmin if rmin < resolution else None,
+            lraw, BuildIndex(right, rid, right_geom, resolution, domain),
+            predicate, distance, pad,
             carry=["__xlid", "__lgeom"] if narrow else ["__xlid"])
     else:
         # big×big: union-cogroup by cell — geometry crosses the wire once
-        # per cover cell, pairs leave as ids
+        # per cover cell, pairs leave as ids. Cover from the __bb struct
+        # computed in _prep_side (no second WKB decode); dwithin covers
+        # the probe bbox padded by the distance.
+        def cover(df, p):
+            return df.withColumn("__cells", st_cells_from_bbox(
+                F.col("__bb.minx") - p, F.col("__bb.miny") - p,
+                F.col("__bb.maxx") + p, F.col("__bb.maxy") + p,
+                resolution, domain=domain))
+
+        lcov = cover(left.select(lid, F.col(left_geom).alias("__lgeom"),
+                                 "__bb", *on_attribute), pad)
+        rcov = cover(right.select(rid, F.col(right_geom).alias("__rgeom"),
+                                  "__bb", *on_attribute), 0.0)
+        # coarsest cover res each side can fall back to (giant bboxes):
+        # the other side must emit ancestor cells down to that level so
+        # mixed-resolution pairs still meet on a common cell (SURVEY.md §4)
+        lmin = _min_cover_res(stats[0], resolution, domain, pad)
+        rmin = _min_cover_res(stats[1], resolution, domain, 0.0)
+        if rmin < resolution:  # right may have coarse rows -> left chains
+            lcov = lcov.withColumn("__cells",
+                                   _ancestors_udf(rmin)(F.col("__cells")))
+        if lmin < resolution:
+            rcov = rcov.withColumn("__cells",
+                                   _ancestors_udf(lmin)(F.col("__cells")))
         refined = _cogroup_refined(lcov, rcov, lid, rid, predicate,
                                    distance, pad, resolution, domain,
                                    salt_hot_cells, hot_cell_threshold,

@@ -5,9 +5,9 @@ sjoin_nearest, tools/sjoin.py:428) of a streaming left side against a
 STATIC right side. A thin caller of the batch broadcast kNN kernel
 (operators/nearest.py):
 
-* ``_collect_knn_build`` collects the static side ONCE at plan time into
-  a broadcast row-major (cellkey -> build row) index; build rows whose
-  cover exceeds ``max_cells`` fine cells become candidates of every
+* the static side is collected ONCE at plan time into the shared
+  grid-row build index (operators/_buildindex.py); build rows whose
+  bbox exceeds ``max_cells`` fine cells become candidates of every
   probe,
 * ``_broadcast_knn`` runs ONE ``mapInPandas`` pass per microbatch: each
   left row probes a Chebyshev disk around its cell, certifies, escalates

@@ -207,52 +207,6 @@ def test_validation_errors(data, spark):
               tdf.withColumn("arr", F.array("tid")), on_attribute="arr")
 
 
-def test_mixed_resolution_giant_polygons(spark):
-    """Rows whose cover falls back to a coarser res (giant bboxes) must
-    still join against fine-res rows via the ancestor-cell path."""
-    import pandas as pd
-    from geopandas_spark.geom.ragged import GeometryBatchBuilder, POINT, POLYGON
-
-    rng = np.random.default_rng(3)
-    px, py = rng.random(300), rng.random(300)
-    bld = GeometryBatchBuilder()
-    for x, y in zip(px, py):
-        bld.add(POINT, [(POINT, [np.array([[x, y]])])])
-    pts = B.to_wkb(bld.finish())
-
-    # one polygon covering most of the domain + a few tiny ones
-    polys = []
-    bld2 = GeometryBatchBuilder()
-    ring = np.array([[0.01, 0.01], [0.99, 0.01], [0.99, 0.99],
-                     [0.01, 0.99], [0.01, 0.01]])
-    bld2.add(POLYGON, [(POLYGON, [ring])])
-    for k in range(5):
-        x0, y0 = 0.15 * k + 0.05, 0.1
-        r = np.array([[x0, y0], [x0 + 0.02, y0], [x0 + 0.02, y0 + 0.02],
-                      [x0, y0 + 0.02], [x0, y0]])
-        bld2.add(POLYGON, [(POLYGON, [r])])
-    polys = B.to_wkb(bld2.finish())
-
-    pdf = spark.createDataFrame(
-        pd.DataFrame({"pid": range(300), "geometry": list(pts)}))
-    gdf = spark.createDataFrame(
-        pd.DataFrame({"gid": range(6), "geometry": list(polys)}))
-    # force a fine resolution with a tiny max cover so the giant polygon
-    # falls back several levels
-    from geopandas_spark.functions import st as ST
-    out = sjoin(pdf, gdf, predicate="intersects", left_id="pid",
-                right_id="gid", resolution=8).toPandas()
-    got = set(zip(out.pid.astype(int), out.gid_right.astype(int) if "gid_right" in out else out.index_right.astype(int)))
-
-    lb = B.from_wkb(np.repeat(np.array(list(pts), dtype=object), 6))
-    rb = B.from_wkb(np.tile(np.array(list(polys), dtype=object), 300))
-    truth = pairwise_predicate("intersects", lb, rb).reshape(300, 6)
-    exp = set(zip(*np.nonzero(truth)))
-    assert got == exp
-    # exactly one row per matching pair (reference-point dedup)
-    assert len(out) == len(exp)
-
-
 def _rect_wkb(x0, y0, x1, y1):
     from geopandas_spark.geom import wkt as W
 
@@ -281,7 +235,7 @@ def _giant_side(rng, n_pts, n_small, giant: bool):
 @pytest.mark.parametrize("pred", ["intersects", "dwithin"])
 @pytest.mark.parametrize("giant", ["left", "right", "both"])
 @pytest.mark.parametrize("bcast", [True, False])
-def test_giant_polygons_across_plans(spark, bcast, giant, pred):
+def test_mixed_resolution_giant_polygons(spark, bcast, giant, pred):
     """A giant polygon on either side (its cover falls back to a coarse
     res at resolution=8) plus NULL and EMPTY geometry rows: both plans
     return exactly the brute-force pair set, one row per pair."""
