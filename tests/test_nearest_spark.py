@@ -77,6 +77,39 @@ def test_nearest_exclusive_self(spark):
     assert (out2.pid == out2.index_right).all()
 
 
+@pytest.mark.parametrize("bcast", [True, False])
+def test_nearest_exclusive_duplicates_and_null(spark, bcast):
+    """exclusive=True drops every right row whose WKB equals the left
+    row's, duplicates included; NULL rows never match. Brute force on
+    both plans (the shuffle plan's phase 1 and its tail both compare)."""
+    r = np.random.default_rng(19)
+    rx, ry = r.random(40) * 0.5, r.random(40) * 0.5
+    rx, ry = np.r_[rx, rx[:5]], np.r_[ry, ry[:5]]  # 5 duplicate rows
+    lx, ly = np.r_[r.random(60), rx[:10]], np.r_[r.random(60), ry[:10]]
+    rw = list(B.to_wkb(points_batch(rx, ry))) + [None]
+    lw = list(B.to_wkb(points_batch(lx, ly))) + [None]
+    ldf = spark.createDataFrame(pd.DataFrame(
+        {"pid": np.arange(len(lw)), "geometry": lw}))
+    rdf = spark.createDataFrame(pd.DataFrame(
+        {"tid": np.arange(len(rw)), "geometry": rw}))
+
+    d = np.sqrt((lx[:, None] - rx[None, :]) ** 2
+                + (ly[:, None] - ry[None, :]) ** 2)
+    same = np.array([[a == b for b in rw[:-1]] for a in lw[:-1]])
+    d[same] = np.inf
+    dmin = d.min(axis=1)
+    exp = {(i, int(j), dmin[i]) for i in range(len(lx))
+           for j in np.nonzero(d[i] == dmin[i])[0]}
+    assert same.sum() == 15  # 10 self matches + 5 duplicates
+
+    out = sjoin_nearest(ldf, rdf, exclusive=True, distance_col="dist",
+                        left_id="pid", right_id="tid",
+                        broadcast_right=bcast).toPandas()
+    got = set(zip(out.pid.astype(int), out.index_right.astype(int),
+                  out.dist))
+    assert got == exp
+
+
 def test_nearest_lines_empty_corner_cells(spark):
     """ADVICE scenario: right-side diagonal lines cover bbox-corner cells
     that contain no geometry; the tail's distance bound must stay a valid
