@@ -65,7 +65,13 @@ def widen(df, factor: int = 1):
     """Repartition coarse inputs (e.g. one small parquet file) up to the
     session's parallelism so UDF-bearing map stages parallelize. No-op on
     inputs that already have enough partitions (the normal case at scale).
-    Call BEFORE any monotonically_increasing_id (branch-stable ids)."""
+    Call BEFORE any monotonically_increasing_id (branch-stable ids).
+
+    Widen what feeds a map pass, never what feeds a driver collect: the
+    repartition adds a shuffle stage, and under AQE a query stage is its
+    own job, to an eager collect that parallelism does not speed up.
+    Calling it on a frame that already holds an exchange runs that stage
+    (``df.rdd`` makes AQE execute it) while the plan is being built."""
     target = df.sparkSession.sparkContext.defaultParallelism * factor
     try:
         nparts = df.rdd.getNumPartitions()

@@ -18,7 +18,9 @@ j0..j1 are one contiguous searchsorted range, so a probe rectangle
 per grid row it spans. Soundness: ``_grid_ij`` is monotone (floor, then
 clamp), so two bboxes that overlap (or touch) share at least one cell.
 
-The driver collects the build side once (``BuildIndex``); each worker
+The driver collects the build side once (``collect_build``, one job,
+bounded by the caller's row cap) and keys that table (``BuildIndex``);
+the caller's broadcast decision reads the same table's stats. Each worker
 process decodes it once into a ``_Build`` held in a small bounded cache
 keyed by the index's uuid, and reuses it across tasks.
 """
@@ -28,7 +30,6 @@ from __future__ import annotations
 from functools import cached_property
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
 from ..index import cells as C
@@ -39,27 +40,81 @@ _CACHE: dict = {}
 _CACHE_MAX = 4
 
 
+_BB = ("minx", "miny", "maxx", "maxy")
+
+
+class BuildTable:
+    """Driver-side Arrow copy of one build side: ``tbl`` holds (i = id,
+    g = WKB, minx..maxy = its ``__bb``) of a ``_prep_side`` frame, row
+    order = build row index. Everything the driver decides about a
+    broadcast build (its stats, its geometry-type headers, its index) is
+    derived from this one table, so the build crosses the JVM<->Python
+    boundary once per operator call."""
+
+    def __init__(self, tbl, id_type, sc):
+        self.tbl = tbl
+        self.id_type = id_type
+        self.sc = sc
+        self.n = tbl.num_rows
+        # NULL __bb fields (null or empty geometries) come back as NaN
+        self.bb = np.column_stack([
+            tbl[c].to_numpy(zero_copy_only=False).astype(np.float64)
+            for c in _BB]).reshape(self.n, 4)
+
+    def stats(self) -> dict:
+        """n and avg/max bbox width and height — ``sjoin._bbox_stats``'s
+        dict for this side. NaN extents are skipped, as Spark's avg/max
+        skip NULLs; no extent at all gives 0.0."""
+        out = {"n": self.n}
+        for k, lo, hi in (("w", 0, 2), ("h", 1, 3)):
+            e = self.bb[:, hi] - self.bb[:, lo]
+            e = e[~np.isnan(e)]
+            out[f"a{k}"] = float(e.mean()) if len(e) else 0.0
+            out[f"m{k}"] = float(e.max()) if len(e) else 0.0
+        return out
+
+    def headers(self) -> list[str]:
+        """Distinct 5-byte WKB headers (endian + type code) of the
+        non-null rows as upper-case hex: the set SQL's
+        ``collect_set(hex(substring(g, 1, 5)))`` returns."""
+        import pyarrow.compute as pc
+
+        pre = pc.unique(pc.binary_slice(self.tbl["g"], 0, 5)).drop_null()
+        return [h.hex().upper() for h in pre.to_pylist()]
+
+
+def collect_build(df, id_col: str, geom_col: str,
+                  limit: int | None = None) -> BuildTable | None:
+    """Arrow-collect (id, wkb, __bb) of ``df`` (a ``_prep_side`` frame)
+    in one job. With ``limit``, at most ``limit + 1`` rows are collected
+    and an overflowing build returns None."""
+    sel = df.select(F.col(id_col).alias("i"), F.col(geom_col).alias("g"),
+                    *[F.col(f"__bb.{c}").alias(c) for c in _BB])
+    if limit is not None:
+        sel = sel.limit(limit + 1)
+    tbl = sel.toArrow().combine_chunks()
+    if limit is not None and tbl.num_rows > limit:
+        return None
+    return BuildTable(tbl, df.schema[id_col].dataType,
+                      df.sparkSession.sparkContext)
+
+
 class BuildIndex:
     """Driver-side handle of one broadcast build side; pickled into the
     probe closure. ``ids`` is the build id column as one Arrow array (row
     order = build row index), ``id_type`` its Spark type."""
 
-    def __init__(self, df, id_col: str, geom_col: str, resolution: int,
-                 domain, max_cells: int = 4096):
-        """Arrow-collect (id, wkb, __bb) of ``df`` (a ``_prep_side``
-        frame) and key it in numpy on the driver — no UDF in the collect
-        job."""
+    def __init__(self, build: BuildTable, resolution: int, domain,
+                 max_cells: int = 4096):
+        """Key the collected ``build`` at ``resolution`` in numpy on the
+        driver and broadcast it — no Spark job."""
         import uuid
 
+        import pyarrow as pa
         import pyarrow.compute as pc
 
-        tbl = (df.select(F.col(id_col).alias("i"), F.col(geom_col).alias("g"),
-                         *[F.col(f"__bb.{c}").alias(c)
-                           for c in ("minx", "miny", "maxx", "maxy")])
-               .toArrow().combine_chunks())
-        bb = np.column_stack([
-            tbl[c].to_numpy(zero_copy_only=False).astype(np.float64)
-            for c in ("minx", "miny", "maxx", "maxy")])
+        tbl = build.tbl
+        bb = build.bb
         live = ~np.isnan(bb).any(axis=1)
         bb = np.nan_to_num(bb)
         i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
@@ -73,19 +128,26 @@ class BuildIndex:
         order = np.argsort(keys, kind="stable")
         # WKB ships as ONE buffer + offsets: pickling many small bytes
         # objects is driver-serial time the workers re-pay on unpickle.
-        # NULL geometries ship as empty ranges and come back as None.
-        wkb = tbl["g"]
-        woff = np.zeros(tbl.num_rows + 1, dtype=np.int64)
-        np.cumsum(pc.fill_null(pc.binary_length(wkb), 0)
-                  .to_numpy(zero_copy_only=False), out=woff[1:])
+        # NULL geometries ship as empty ranges and come back as NULL. The
+        # buffer is the Arrow column's own data, NULLs filled with b"".
+        wkb = pc.fill_null(tbl["g"].combine_chunks(), b"")
+        woff = np.zeros(len(wkb) + 1, dtype=np.int64)
+        wbuf = b""
+        if len(wkb):
+            _, offs, data = wkb.buffers()
+            odt = np.int64 if pa.types.is_large_binary(wkb.type) else np.int32
+            woff = np.frombuffer(offs, dtype=odt)[
+                wkb.offset:wkb.offset + len(wkb) + 1].astype(np.int64)
+            if data is not None:
+                wbuf = np.frombuffer(data, dtype=np.uint8)[
+                    woff[0]:woff[-1]].tobytes()
         self.key = uuid.uuid4().hex
-        self.bc = df.sparkSession.sparkContext.broadcast({
-            "wbuf": b"".join(w for w in wkb.to_pylist() if w),
-            "woff": woff, "keys": keys[order], "rows": keyed[rows][order],
-            "always": np.flatnonzero(giant),
+        self.bc = build.sc.broadcast({
+            "wbuf": wbuf, "woff": woff - woff[0], "keys": keys[order],
+            "rows": keyed[rows][order], "always": np.flatnonzero(giant),
             "multi": bool(len(keyed) and cnt[keyed].max() > 1)})
         self.ids = tbl["i"].combine_chunks()
-        self.id_type = df.schema[id_col].dataType
+        self.id_type = build.id_type
         self.resolution = resolution
         self.domain = domain
 
@@ -106,19 +168,28 @@ class BuildIndex:
 
 class _Build:
     """Decoded build side on a worker: geometry batch, nan-zeroed bounds,
-    WKB per row, the sorted (key, row) index and the always-rows."""
+    WKB per row (one Arrow array), the sorted (key, row) index and the
+    always-rows."""
 
     def __init__(self, v: dict, resolution: int, domain):
+        import pyarrow as pa
+
         from ..geom.kernels import bounds
         from ..geom.wkb import from_wkb
 
-        wbuf, woff = v["wbuf"], v["woff"]
-        self.wkb = np.empty(len(woff) - 1, dtype=object)
-        self.wkb[:] = [wbuf[woff[i]:woff[i + 1]] or None
-                       for i in range(len(woff) - 1)]
-        self.batch = from_wkb(pd.Series(self.wkb))
+        # one Arrow binary array over the shipped buffer; an empty range
+        # is a NULL geometry
+        woff = v["woff"]
+        nb = len(woff) - 1
+        valid = np.diff(woff) > 0
+        self.wkb = pa.Array.from_buffers(
+            pa.large_binary(), nb,
+            [pa.py_buffer(np.packbits(valid, bitorder="little")),
+             pa.py_buffer(woff), pa.py_buffer(v["wbuf"])],
+            null_count=int(nb - valid.sum()))
+        self.batch = from_wkb(self.wkb.to_numpy(zero_copy_only=False))
         self.bounds = np.nan_to_num(bounds(self.batch))
-        self.nb = len(self.wkb)
+        self.nb = nb
         self.keys, self.rows = v["keys"], v["rows"]
         self.always, self.multi = v["always"], v["multi"]
         self.empty = not (len(self.keys) or len(self.always))

@@ -10,8 +10,11 @@ sindex.nearest, sindex.py:220-311):
 * ``distance_col`` optionally emits the exact distance;
 * ``exclusive=True`` drops matches whose geometry equals the left geometry.
 
-Two physical plans behind one operator (decided by a right-side stats
-agg, mirroring sjoin — UDF-derived sizes defeat AQE's own estimation):
+Two physical plans behind one operator, decided from the right side's
+stats (mirroring sjoin — UDF-derived sizes defeat AQE's own estimation):
+one bounded Arrow collect of the right side gives them and, on the
+broadcast path, the build index too; only an overflowing right side
+runs a stats agg instead.
 
 **Broadcast path** (right side's exploded cover under
 BROADCAST_EXPLODED_ROWS — the common case; round-4 north-rule
@@ -24,10 +27,10 @@ searchsorted range per grid row over the sorted keys; certified rows
 escalates its disk geometrically IN-KERNEL and finishes with one
 exhaustive probe at ceil((d+lrad)/cell)+1 — no union, no shuffle, no
 tail joins. Giant build rows whose bbox overflows max_cells ride along
-as unconditional candidates of every probe ("always-rows"). 3 Spark
-jobs total; the probe stage is embarrassingly parallel (measured 2->8
-scaling moved from 0.22 to the sjoin-class regime,
-tools/knn_profile.py).
+as unconditional candidates of every probe ("always-rows"). The build
+collect is the one eager Spark job; the probe stage is embarrassingly
+parallel (measured 2->8 scaling moved from 0.22 to the sjoin-class
+regime, tools/knn_profile.py).
 
 **Shuffle path** (huge right side): right covers its bbox cells at
 resolution R and replicates each row to the Chebyshev disk(1) of its
@@ -53,22 +56,24 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.st import st_cells_from_bbox
 from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
-from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _est_exploded,
-                    _min_cover_res, _output_columns, _prep_side)
+from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _collect_build,
+                    _est_exploded, _frame_stats, _min_cover_res,
+                    _output_columns, _prep_side, _widen)
 
 
-def _disk_cells_udf(k: int):
-    """Fixed-radius Chebyshev disk cells of each row's cell."""
+def _wkb_equal(a, b) -> np.ndarray:
+    """Elementwise WKB byte equality of two Arrow binary arrays (the
+    ``exclusive=True`` test); NULL on either side is not equal."""
+    import pyarrow.compute as pc
 
-    @pandas_udf("array<long>")
-    def _f(cell: pd.Series) -> pd.Series:
-        from ..index import cells as C
+    return pc.fill_null(pc.equal(a, b), False).to_numpy(zero_copy_only=False)
 
-        ids = cell.to_numpy(dtype=np.int64)
-        disk = C.grid_disk(ids, k)
-        return pd.Series([np.unique(row).tolist() for row in disk])
 
-    return _f
+def _wkb_array(vals):
+    """Arrow binary array of a WKB object array/Series (None = NULL)."""
+    import pyarrow as pa
+
+    return pa.array(np.asarray(vals, dtype=object), type=pa.large_binary())
 
 
 def _cover_disk_udf():
@@ -221,6 +226,8 @@ def _knn_cell_pass(min_cell: float, max_distance: float | None,
             if puntal:
                 lc = lb_all.coords
                 rc = rb_all.coords
+            if exclusive:
+                lwa, rwa = _wkb_array(lgeom), _wkb_array(rgeom)
             # Combo-bounded group loop (round-2 scaling fix): one shot over
             # the whole flush materializes O(flush_rows x cands_per_cell)
             # int64/float64 temporaries — ~20 MB x half a dozen arrays per
@@ -258,8 +265,7 @@ def _knn_cell_pass(min_cell: float, max_distance: float | None,
                 else:
                     d = pairwise_distance(lb_all.take(li), rb_all.take(ri))
                 if exclusive:
-                    eq = np.array([lgeom[a] == rgeom[b]
-                                   for a, b in zip(li, ri)])
+                    eq = _wkb_equal(lwa.take(li), rwa.take(ri))
                     d = np.where(eq, np.inf, d)
                 if max_distance is not None:
                     d = np.where(d > max_distance, np.inf, d)
@@ -485,21 +491,21 @@ def _all_lineal_headers(prefixes: list[str]) -> bool:
     return True
 
 
-def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
-                   right_geom: str, resolution: int, domain,
+def _broadcast_knn(probe: DataFrame, table, resolution: int, domain,
                    min_cell: float, k_cap: int,
                    max_distance: float | None, exclusive: bool,
                    emit_geom: bool, lid_t: str, rid_t: str,
                    max_cells: int = 4096) -> DataFrame:
     """k=1 nearest (ties kept) as a single probe-side mapInPandas pass
-    against a broadcast right side. Same certify/escalate/exact-probe
+    against a broadcast right side, ``table`` (its collected
+    ``_buildindex.BuildTable``). Same certify/escalate/exact-probe
     maths as the shuffle path (disk(1) certify at d + lrad < cell;
     exhaustive re-probe at ceil((d+lrad)/cell)+1), so results are
     bit-identical — only the execution plan changes. Build rows covering
     more than ``max_cells`` fine cells are candidates of every probe."""
     from ._buildindex import BuildIndex
 
-    build = BuildIndex(right, rid, right_geom, resolution, domain, max_cells)
+    build = BuildIndex(table, resolution, domain, max_cells)
     g = 1 << resolution
     COMBO_CAP = 262_144  # keep per-block temporaries L2/L3-resident
     mdist = max_distance
@@ -522,6 +528,7 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
                 continue
             lids = pdf["__xlid"].to_numpy()
             lgv = pdf["__lgeom"].to_numpy(dtype=object)
+            lwa = _wkb_array(lgv) if excl else None
             lb = from_wkb(pdf["__lgeom"])
             lbb = _bounds(lb)
             ok_row = np.isfinite(lbb[:, 0])
@@ -599,9 +606,7 @@ def _broadcast_knn(probe: DataFrame, right: DataFrame, rid: str,
                 else:
                     d = pairwise_distance(lb.take(gpos), b.batch.take(bi))
                 if excl:
-                    eq = np.fromiter(
-                        (a == w for a, w in zip(lgv[gpos], b.wkb[bi])),
-                        dtype=bool, count=len(gpos))
+                    eq = _wkb_equal(lwa.take(gpos), b.wkb.take(bi))
                     d = np.where(eq, np.inf, d)
                 if mdist is not None:
                     d = np.where(d > mdist, np.inf, d)
@@ -876,10 +881,7 @@ def _shuffle_knn_matched(left, right, lid, rid, left_geom, right_geom,
                 else:
                     d = pairwise_distance(lb, rb)
                 if excl:
-                    lgv = lg.to_numpy(dtype=object)
-                    rgv = rg.to_numpy(dtype=object)
-                    eq = np.fromiter((a == b for a, b in zip(lgv, rgv)),
-                                     dtype=bool, count=len(lgv))
+                    eq = _wkb_equal(_wkb_array(lg), _wkb_array(rg))
                     d = np.where(eq, np.inf, d)
                 if mdist is not None:
                     d = np.where(d > mdist, np.inf, d)
@@ -966,31 +968,26 @@ def sjoin_nearest(
             "sjoin_nearest supports how in ('inner','left','right')")
 
     left, lid = _prep_side(left, left_geom, left_id, "l")
-    right, rid = _prep_side(right, right_geom, right_id, "r")
+    right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
 
-    # ONE tiny agg job sizes the grid AND decides the broadcast path
+    # ONE eager job sizes the grid AND decides the broadcast path
     # (UDF-derived sizes defeat AQE's auto-broadcast estimation, so the
-    # operator decides from stats, mirroring sjoin). Skipped only when
-    # the caller pinned both decisions.
-    n_right = -1
-    rstats = None
-    if resolution is None or broadcast_right is None:
-        r = right.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.avg(F.col("__bb.maxx") - F.col("__bb.minx")).alias("aw"),
-            F.avg(F.col("__bb.maxy") - F.col("__bb.miny")).alias("ah"),
-            F.max(F.col("__bb.maxx") - F.col("__bb.minx")).alias("mw"),
-            F.max(F.col("__bb.maxy") - F.col("__bb.miny")).alias("mh"),
-            # JVM-only geometry-type sniff: the 5-byte WKB header
-            # (endian + type code) distinct set — no UDF, no extra job
-            F.collect_set(
-                F.hex(F.substring(F.col(right_geom), 1, 5))).alias("tp"),
-        ).collect()[0]
-        n_right = int(r["n"] or 0)
-        rstats = {"n": n_right, "aw": float(r["aw"] or 0.0),
-                  "ah": float(r["ah"] or 0.0),
-                  "mw": float(r["mw"] or 0.0), "mh": float(r["mh"] or 0.0),
-                  "tp": list(r["tp"] or [])}
+    # operator decides from stats, mirroring sjoin): unless the caller
+    # forced the shuffle plan, the right side is Arrow-collected once,
+    # bounded at BROADCAST_MAX_ROWS rows (unbounded when the broadcast is
+    # forced); its count, extents and WKB header set come from that
+    # table in numpy, and a broadcast build is keyed from the same table.
+    # A right side over the bound could never pass the exploded-size
+    # test, so it takes the shuffle plan, sized by one stats agg.
+    table = None
+    if broadcast_right is not False:
+        table = _collect_build(right, rid, right_geom, broadcast_right)
+    if table is not None:
+        rstats = table.stats()
+    else:
+        broadcast_right = False
+        rstats = _frame_stats(right)
+    n_right = rstats["n"]
     if resolution is None:
         if max_distance is not None:
             resolution = pick_resolution(max_distance, max_distance,
@@ -1011,11 +1008,11 @@ def sjoin_nearest(
         # (sf0.1: 28.8 s vs 7.6 s) — keep those on the shuffle plan.
         # Puntal == zero bbox extents; lineal == every distinct 5-byte
         # WKB header is a (Multi)LineString code. Both come out of the
-        # one stats agg — no extra job.
+        # collected build — no extra job.
         rpuntal = rstats["mw"] == 0.0 and rstats["mh"] == 0.0
         broadcast_right = (
             n_right > 0
-            and (rpuntal or _all_lineal_headers(rstats["tp"]))
+            and (rpuntal or _all_lineal_headers(table.headers()))
             and _est_exploded(rstats, resolution, domain)
             <= BROADCAST_EXPLODED_ROWS)
     if not broadcast_right:
@@ -1025,18 +1022,15 @@ def sjoin_nearest(
         # LARGEST bbox still covers at full res. (The broadcast path
         # keeps the fine grid and treats giants as always-candidates.)
         # Correctness must not depend on the caller's resolution hint, so
-        # the max-extent stats run even when both hints were explicit.
-        if rstats is None:
-            r = right.agg(
-                F.max(F.col("__bb.maxx") - F.col("__bb.minx")).alias("mw"),
-                F.max(F.col("__bb.maxy") - F.col("__bb.miny")).alias("mh"),
-            ).collect()[0]
-            rstats = {"mw": float(r["mw"] or 0.0),
-                      "mh": float(r["mh"] or 0.0)}
+        # the max-extent stats are taken even when both hints were
+        # explicit.
         rres_min = _min_cover_res(rstats, resolution, domain)
         if rres_min < resolution:
             resolution = rres_min
             min_cell = min(cell_size(resolution, domain))
+    # later passes over the right side (shuffle kNN, assembly re-join)
+    # are map passes: widen it now (ids already fixed)
+    right = _widen(right)
 
     rcells = st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
                                 "__bb.maxy", resolution, domain=domain)
@@ -1055,9 +1049,9 @@ def sjoin_nearest(
     if broadcast_right:
         probe = left.select(F.col(lid).alias("__xlid"),
                             F.col(left_geom).alias("__lgeom"))
-        matched = _broadcast_knn(probe, right, rid, right_geom, resolution,
-                                 domain, min_cell, k_cap, max_distance,
-                                 exclusive, narrow, lid_t, rid_t)
+        matched = _broadcast_knn(probe, table, resolution, domain, min_cell,
+                                 k_cap, max_distance, exclusive, narrow,
+                                 lid_t, rid_t)
     else:
         matched = _shuffle_knn_matched(
             left, right, lid, rid, left_geom, right_geom, rcells,

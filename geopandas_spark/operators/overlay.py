@@ -143,25 +143,13 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str):
                     "__i1": lids[li[k]],
                     "__i2": build.id_values(ri[k]),
                     "__g1": lws[li[k]],
-                    "__g2": b.wkb[ri[k]],
+                    "__g2": b.wkb.take(ri[k]).to_numpy(zero_copy_only=False),
                     "__inter": list(to_wkb(res.take(k))),
                 })
 
     return probe.mapInPandas(
         fn, schema=(f"__i1 {i1_t}, __i2 {build.id_type.simpleString()}, "
                     "__g1 binary, __g2 binary, __inter binary"))
-
-
-def _intersection_udf():
-    @pandas_udf("binary")
-    def _f(a: pd.Series, b: pd.Series) -> pd.Series:
-        from ..geom import wkb as B
-        from ..geom.clipping import pairwise_intersection
-
-        return pd.Series(list(B.to_wkb(
-            pairwise_intersection(B.from_wkb(a), B.from_wkb(b)))))
-
-    return _f
 
 
 def _intersection_rp_udf(resolution: int, domain):
@@ -415,13 +403,30 @@ def overlay(
         df1 = df1.withColumn(geom, st_make_valid(geom))
         df2 = df2.withColumn(geom, st_make_valid(geom))
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
-    df2p, i2 = _prep_side(df2, geom, id2, "o2")
-    from .sjoin import (BROADCAST_EXPLODED_ROWS, _bbox_stats, _est_exploded,
-                        _min_cover_res, _widen)
+    df2p, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
+    from .sjoin import (BROADCAST_EXPLODED_ROWS, _bbox_stats, _collect_build,
+                        _est_exploded, _min_cover_res, _side_stats, _widen)
 
-    stats = _bbox_stats(df1p, df2p)
-    if resolution is None:
-        resolution = _estimate_resolution(stats, domain)
+    # broadcast candidate (as in sjoin): ONE bounded Arrow collect of df2
+    # gives its stats and, if it fits, its index; df1's stats (one global
+    # agg on the un-widened frame) only when the resolution is not given.
+    # pair_on always rides the shuffle plan.
+    build = stats = None
+    if pair_on is None:
+        table = _collect_build(df2p, i2, geom, None)
+        if table is not None:
+            stats = [None, table.stats()]
+            res = resolution
+            if res is None:
+                stats[0] = _side_stats(df1, geom)
+                res = _estimate_resolution(stats, domain)
+            if 0 < stats[1]["n"] and _est_exploded(
+                    stats[1], res, domain) <= BROADCAST_EXPLODED_ROWS:
+                from ._buildindex import BuildIndex
+
+                resolution = res
+                build = BuildIndex(table, resolution, domain)
+    df2p = _widen(df2p)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
 
@@ -429,21 +434,27 @@ def overlay(
     # already computed in the same Arrow pass (empty intersections — pure
     # touches — are dropped; subtracting a touching neighbor is a no-op,
     # so the residual stages are unaffected)
-    if pair_on is None and 0 < stats[1]["n"] and _est_exploded(
-            stats[1], resolution, domain) <= BROADCAST_EXPLODED_ROWS:
+    if build is not None:
         # small build side: single probe-side pass — no join, no explode,
-        # no per-batch build re-decode (see _broadcast_probe_intersection)
-        from ._buildindex import BuildIndex
-
-        probe_raw = _widen(df1p.select(F.col(i1), F.col(geom).alias("__g1")))
-        pairs = _broadcast_probe_intersection(
-            probe_raw, BuildIndex(df2p, i2, geom, resolution, domain), i1)
+        # no per-batch build re-decode (see _broadcast_probe_intersection).
+        # df1p is already widened by _prep_side.
+        probe_raw = df1p.select(F.col(i1), F.col(geom).alias("__g1"))
+        pairs = _broadcast_probe_intersection(probe_raw, build, i1)
     else:
+        if stats is None or stats[0] is None:
+            stats = _bbox_stats(df1p, df2p)
+        if resolution is None:
+            resolution = _estimate_resolution(stats, domain)
         pairs = _pairs(df1p, df2p, geom, geom, i1, i2, resolution, domain,
                        _min_cover_res(stats[0], resolution, domain),
                        _min_cover_res(stats[1], resolution, domain),
                        with_intersection="__inter", pair_on=pair_on)
-    pairs = pairs.localCheckpoint(eager=False)
+    if how in ("union", "identity", "symmetric_difference"):
+        # pairs feed two or three output pieces: compute them once. Not
+        # for a single consumer: checkpointing a plan with an exchange
+        # (the widened probe) makes AQE run that stage while the plan
+        # is being built — an eager job that saves nothing.
+        pairs = pairs.localCheckpoint(eager=False)
 
     auto1, auto2 = id1 is None, id2 is None
     d1cols = [c for c in df1c.columns if not (auto1 and c == i1)]

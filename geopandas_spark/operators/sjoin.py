@@ -8,12 +8,20 @@ column collisions suffixed (sjoin.py:193-224); outer rows null-padded
 
 Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
 
-1. **Prep + stats**: each side gets a row id (if none supplied) and a
-   bbox struct; ONE tiny agg job reads both sides' bbox extents. They
-   fix the quadtree resolution (adaptive if not given), the estimated
-   exploded size of the right side's cell cover and, on the cogroup
-   pass, the coarsest per-row cover res each side can fall back to (the
-   other side then emits ancestor cells down to it).
+1. **Prep + decide**: each side gets a row id (if none supplied) and a
+   bbox struct. Unless the plan is forced to the cogroup pass, the right
+   side is Arrow-collected ONCE with ``LIMIT BROADCAST_MAX_ROWS + 1``
+   (``_buildindex.collect_build``, no ``widen`` in front of it); its
+   count and bbox extents come from that table in numpy. Only when
+   ``resolution`` is not given does one global agg job read the left
+   side's extents. The stats fix the grid resolution and the estimated
+   exploded size of the right side's cell cover; a build that fits is
+   keyed from the same table, with no second collect. Every other case
+   (overflowing or over-estimate build, ``on_attribute``,
+   ``salt_hot_cells``, ``broadcast_right=False``) runs ONE agg job over
+   both sides, which also gives the cogroup pass the coarsest per-row
+   cover res each side can fall back to (the other side then emits
+   ancestor cells down to it).
 2. **Pair pass**: one of two ``mapInPandas``/``mapInArrow`` kernels.
    Candidate pairs are generated, deduped and refined with the exact
    vectorized predicate (geom/predicates.py) in-kernel, and leave the
@@ -81,15 +89,24 @@ def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
     return lmap, rmap
 
 
-def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
-    """ONE tiny agg job: avg + max bbox extents of both sides."""
-    aggs = [
+_STAT_KEYS = ("aw", "ah", "mw", "mh", "n")
+
+
+def _stat_aggs() -> list:
+    """avg + max bbox extents and the row count of a frame with ``__bb``
+    (NULL extents of null/empty geometries are skipped)."""
+    return [
         F.avg(F.col("__bb.maxx") - F.col("__bb.minx")).alias("aw"),
         F.avg(F.col("__bb.maxy") - F.col("__bb.miny")).alias("ah"),
         F.max(F.col("__bb.maxx") - F.col("__bb.minx")).alias("mw"),
         F.max(F.col("__bb.maxy") - F.col("__bb.miny")).alias("mh"),
         F.count(F.lit(1)).alias("n"),
     ]
+
+
+def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
+    """ONE tiny agg job: avg + max bbox extents of both sides."""
+    aggs = _stat_aggs()
     rows = (
         left.select(F.lit(0).alias("side"), "__bb").groupBy("side").agg(*aggs)
         .unionAll(right.select(F.lit(1).alias("side"), "__bb").groupBy("side").agg(*aggs))
@@ -98,14 +115,31 @@ def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
     out = [dict(aw=0.0, ah=0.0, mw=0.0, mh=0.0, n=0),
            dict(aw=0.0, ah=0.0, mw=0.0, mh=0.0, n=0)]
     for r in rows:
-        out[r["side"]] = {k: (r[k] or 0) for k in ("aw", "ah", "mw", "mh", "n")}
+        out[r["side"]] = {k: (r[k] or 0) for k in _STAT_KEYS}
     return out
+
+
+def _frame_stats(df: DataFrame) -> dict:
+    """``_bbox_stats`` of one frame with ``__bb``, as ONE global agg."""
+    r = df.agg(*_stat_aggs()).collect()[0]
+    return {k: (r[k] or 0) for k in _STAT_KEYS}
+
+
+def _side_stats(df: DataFrame, geom: str) -> dict:
+    """``_frame_stats`` of one raw (un-prepped, un-widened) side: the
+    probe-side stats of a broadcast join, needed only to pick the
+    resolution."""
+    return _frame_stats(df.select(st_bounds(geom).alias("__bb")))
 
 
 # exploded build-side rows below this -> broadcast the exploded cell cover
 # instead of shuffling both sides (UDF-derived sizes defeat AQE's own
-# auto-broadcast estimation, so the operators decide from the stats job)
+# auto-broadcast estimation, so the operators decide from the stats)
 BROADCAST_EXPLODED_ROWS = 2_000_000
+# _est_exploded counts every row at >= 1.5 x 1.5 cells, so a build with
+# more rows than this never passes the test above: the bounded build
+# collect (_collect_build) stops one row past it. Derived, not a knob.
+BROADCAST_MAX_ROWS = BROADCAST_EXPLODED_ROWS * 4 // 9
 
 
 def _est_exploded(stats: dict, resolution: int, domain, pad: float = 0.0) -> float:
@@ -198,6 +232,18 @@ def _widen(df: DataFrame) -> DataFrame:
     from ..conf import widen
 
     return widen(df)
+
+
+def _collect_build(right: DataFrame, rid: str, right_geom: str,
+                   broadcast_right: bool | None):
+    """The one Arrow collect of a broadcast candidate build side (a
+    ``_prep_side(widen=False)`` frame): bounded at BROADCAST_MAX_ROWS
+    unless the caller forced the broadcast. None = the build overflows
+    the bound (the caller falls back to the stats job + shuffle pass)."""
+    from ._buildindex import collect_build
+
+    return collect_build(right, rid, right_geom,
+                         None if broadcast_right else BROADCAST_MAX_ROWS)
 
 
 def _broadcast_probe_refined(lraw, build, predicate: str, distance,
@@ -498,8 +544,16 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
     return tagged.mapInPandas(fn, schema=schema)
 
 
-def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str):
+def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str,
+               widen: bool = True):
     """Attach a row id (if none supplied) and bbox struct.
+
+    ``widen`` repartitions a coarse input first (conf.widen) so the
+    UDF-bearing map passes that read this frame parallelize. A broadcast
+    build side is prepped with ``widen=False``: its first consumer is a
+    driver collect, where the repartition only adds a shuffle stage to
+    the eager job; a build that falls back to a shuffle pass is widened
+    there (``_widen``; the checkpointed ids are already fixed).
 
     Auto ids come from monotonically_increasing_id, which Spark defines as
     NONDETERMINISTIC across plan branches — the join assembles results by
@@ -512,7 +566,8 @@ def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str):
     cached frame per auto-id join call in long sessions — and checkpoint
     blocks cannot be silently evicted-and-recomputed (which would reroll
     the ids)."""
-    df = _widen(df)
+    if widen:
+        df = _widen(df)
     if id_col is None:
         id_col = f"__{tag}_id"
         df = df.withColumn(id_col, F.monotonically_increasing_id())
@@ -585,38 +640,54 @@ def sjoin(
                 raise ValueError(
                     f"on_attribute column {col!r} must be an atomic type")
 
+    raw_left = left
     left, lid = _prep_side(left, left_geom, left_id, "l")
-    right, rid = _prep_side(right, right_geom, right_id, "r")
+    right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
 
     pad = float(distance) if (predicate == "dwithin" and distance) else 0.0
 
-    stats = _bbox_stats(left, right)  # one tiny agg job
-    if resolution is None:
-        resolution = _estimate_resolution(stats, domain)
-    if broadcast_right is None:
-        broadcast_right = (
-            0 < stats[1]["n"]
-            and _est_exploded(stats[1], resolution, domain) <= BROADCAST_EXPLODED_ROWS
-        )
+    # broadcast candidate: ONE bounded Arrow collect of the build side
+    # gives its stats and, if it fits, its index. An explicit salting
+    # request signals a shuffle-scale build side and on_attribute needs
+    # the attribute key — both always route to the cogroup pass.
+    build = stats = None
+    if broadcast_right is not False and not (on_attribute or salt_hot_cells):
+        table = _collect_build(right, rid, right_geom, broadcast_right)
+        if table is not None:
+            stats = [None, table.stats()]
+            res = resolution
+            if res is None:
+                stats[0] = _side_stats(raw_left, left_geom)
+                res = _estimate_resolution(stats, domain)
+            if broadcast_right or (
+                    0 < stats[1]["n"]
+                    and _est_exploded(stats[1], res, domain)
+                    <= BROADCAST_EXPLODED_ROWS):
+                from ._buildindex import BuildIndex
+
+                resolution = res
+                build = BuildIndex(table, resolution, domain)
+    # every later pass that reads the build side (cogroup, assembly
+    # re-join) is a map pass: widen it now (ids already fixed)
+    right = _widen(right)
 
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
         right_geom, how)
-    if broadcast_right and not (on_attribute or salt_hot_cells):
-        # small build side: single probe-side pass, no join, no explode
-        # (an explicit salting request signals a shuffle-scale build side
-        # and on_attribute needs the attribute key — both always route to
-        # the cogroup pass). The probe ships ONLY (id, wkb); bounds and
-        # the index lookup happen in-kernel.
-        from ._buildindex import BuildIndex
-
+    if build is not None:
+        # small build side: single probe-side pass, no join, no explode.
+        # The probe ships ONLY (id, wkb); bounds and the index lookup
+        # happen in-kernel.
         lraw = left.select(F.col(lid).alias("__xlid"),
                            F.col(left_geom).alias("__lgeom"))
         refined = _broadcast_probe_refined(
-            lraw, BuildIndex(right, rid, right_geom, resolution, domain),
-            predicate, distance, pad,
+            lraw, build, predicate, distance, pad,
             carry=["__xlid", "__lgeom"] if narrow else ["__xlid"])
     else:
+        if stats is None or stats[0] is None:
+            stats = _bbox_stats(left, right)  # one tiny agg job
+        if resolution is None:
+            resolution = _estimate_resolution(stats, domain)
         # big×big: union-cogroup by cell — geometry crosses the wire once
         # per cover cell, pairs leave as ids. Cover from the __bb struct
         # computed in _prep_side (no second WKB decode); dwithin covers

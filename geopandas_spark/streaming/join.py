@@ -48,7 +48,7 @@ def sjoin_stream(
     feature size via index.cells.pick_resolution. ``max_cells`` is the
     static side's giant-row threshold (see operators/_buildindex.py).
     """
-    from ..operators._buildindex import BuildIndex
+    from ..operators._buildindex import BuildIndex, collect_build
     from ..operators.sjoin import (VALID_PRED, _broadcast_probe_refined,
                                    _prep_side)
 
@@ -57,11 +57,12 @@ def sjoin_stream(
             f"sjoin_stream supports {[p for p in VALID_PRED if p != 'dwithin']};"
             f" got {predicate!r} (dwithin needs a distance; use batch sjoin)")
 
-    right, rid = _prep_side(right, right_geom, right_id, "r")
+    # the static side's only consumer is the driver collect: no widen
+    right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
     lraw = left.withColumnRenamed(left_geom, "__lgeom")
     out = _broadcast_probe_refined(
-        lraw, BuildIndex(right, rid, right_geom, resolution, domain,
-                         max_cells),
+        lraw, BuildIndex(collect_build(right, rid, right_geom), resolution,
+                         domain, max_cells),
         predicate, None, 0.0, carry=lraw.columns)
     return (out.withColumnRenamed("__lgeom", left_geom)
             .withColumnRenamed("__xrid", right_id))

@@ -42,14 +42,16 @@ def sjoin_nearest_stream(
     row. Works identically on batch frames — the pytest oracle pins it
     to the batch sjoin_nearest."""
     from ..index.cells import cell_size
+    from ..operators._buildindex import collect_build
     from ..operators.nearest import _broadcast_knn
     from ..operators.sjoin import _prep_side
 
-    right, rid = _prep_side(right, right_geom, right_id, "r")
+    # the static side's only consumer is the driver collect: no widen
+    right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
     probe = left.select(F.col(left_id).alias("__xlid"),
                         F.col(left_geom).alias("__lgeom"))
     out = _broadcast_knn(
-        probe, right, rid, right_geom, resolution, domain,
+        probe, collect_build(right, rid, right_geom), resolution, domain,
         min_cell=min(cell_size(resolution, domain)),
         k_cap=1 << resolution,  # full-grid disk == brute force
         max_distance=None, exclusive=False, emit_geom=False,
