@@ -41,6 +41,33 @@ _CACHE_MAX = 4
 
 
 _BB = ("minx", "miny", "maxx", "maxy")
+# Spark schema of one bbox_partial row
+PARTIAL_SCHEMA = ("n long, sw double, cw long, mw double,"
+                  " sh double, ch long, mh double")
+
+
+def bbox_partial(bb: np.ndarray) -> list:
+    """[n, then sum, count and max of the widths, then of the heights] of
+    bboxes ``bb`` (n, 4). NaN extents (null or empty geometries) are
+    skipped, as Spark's avg/max skip NULL ``__bb`` fields."""
+    out = [len(bb)]
+    for lo, hi in ((0, 2), (1, 3)):
+        e = bb[:, hi] - bb[:, lo]
+        e = e[~np.isnan(e)]
+        out += [float(e.sum()), len(e), float(e.max()) if len(e) else -np.inf]
+    return out
+
+
+def combine_partials(rows) -> dict:
+    """``sjoin._bbox_stats``'s dict (n, avg/max width and height) of one
+    side from its ``bbox_partial`` rows; no extent at all gives 0.0."""
+    p = np.asarray(rows, dtype=np.float64).reshape(-1, 7)
+    out = {"n": int(p[:, 0].sum())}
+    for k, c in (("w", 1), ("h", 4)):
+        cnt = p[:, c + 1].sum()
+        out["a" + k] = float(p[:, c].sum() / cnt) if cnt else 0.0
+        out["m" + k] = float(p[:, c + 2].max()) if cnt else 0.0
+    return out
 
 
 class BuildTable:
@@ -62,16 +89,9 @@ class BuildTable:
             for c in _BB]).reshape(self.n, 4)
 
     def stats(self) -> dict:
-        """n and avg/max bbox width and height — ``sjoin._bbox_stats``'s
-        dict for this side. NaN extents are skipped, as Spark's avg/max
-        skip NULLs; no extent at all gives 0.0."""
-        out = {"n": self.n}
-        for k, lo, hi in (("w", 0, 2), ("h", 1, 3)):
-            e = self.bb[:, hi] - self.bb[:, lo]
-            e = e[~np.isnan(e)]
-            out[f"a{k}"] = float(e.mean()) if len(e) else 0.0
-            out[f"m{k}"] = float(e.max()) if len(e) else 0.0
-        return out
+        """``sjoin._bbox_stats``'s dict for this side, from the
+        collected bboxes."""
+        return combine_partials([bbox_partial(self.bb)])
 
     def headers(self) -> list[str]:
         """Distinct 5-byte WKB headers (endian + type code) of the

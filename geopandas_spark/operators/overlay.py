@@ -404,28 +404,15 @@ def overlay(
         df2 = df2.withColumn(geom, st_make_valid(geom))
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
-    from .sjoin import (BROADCAST_EXPLODED_ROWS, _bbox_stats, _collect_build,
-                        _est_exploded, _min_cover_res, _side_stats, _widen)
+    from .sjoin import _bbox_stats, _min_cover_res, _plan_broadcast, _widen
 
     # broadcast candidate (as in sjoin): ONE bounded Arrow collect of df2
-    # gives its stats and, if it fits, its index; df1's stats (one global
-    # agg on the un-widened frame) only when the resolution is not given.
-    # pair_on always rides the shuffle plan.
+    # gives its stats and, if it fits, its index. pair_on always rides
+    # the shuffle plan.
     build = stats = None
     if pair_on is None:
-        table = _collect_build(df2p, i2, geom, None)
-        if table is not None:
-            stats = [None, table.stats()]
-            res = resolution
-            if res is None:
-                stats[0] = _side_stats(df1, geom)
-                res = _estimate_resolution(stats, domain)
-            if 0 < stats[1]["n"] and _est_exploded(
-                    stats[1], res, domain) <= BROADCAST_EXPLODED_ROWS:
-                from ._buildindex import BuildIndex
-
-                resolution = res
-                build = BuildIndex(table, resolution, domain)
+        build, stats, resolution = _plan_broadcast(
+            df1, geom, df2p, i2, geom, resolution, domain, None)
     df2p = _widen(df2p)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
@@ -449,12 +436,7 @@ def overlay(
                        _min_cover_res(stats[0], resolution, domain),
                        _min_cover_res(stats[1], resolution, domain),
                        with_intersection="__inter", pair_on=pair_on)
-    if how in ("union", "identity", "symmetric_difference"):
-        # pairs feed two or three output pieces: compute them once. Not
-        # for a single consumer: checkpointing a plan with an exchange
-        # (the widened probe) makes AQE run that stage while the plan
-        # is being built — an eager job that saves nothing.
-        pairs = pairs.localCheckpoint(eager=False)
+    pairs = pairs.localCheckpoint(eager=False)
 
     auto1, auto2 = id1 is None, id2 is None
     d1cols = [c for c in df1c.columns if not (auto1 and c == i1)]

@@ -13,10 +13,11 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
    side is Arrow-collected ONCE with ``LIMIT BROADCAST_MAX_ROWS + 1``
    (``_buildindex.collect_build``, no ``widen`` in front of it); its
    count and bbox extents come from that table in numpy. Only when
-   ``resolution`` is not given does one global agg job read the left
-   side's extents. The stats fix the grid resolution and the estimated
-   exploded size of the right side's cell cover; a build that fits is
-   keyed from the same table, with no second collect. Every other case
+   ``resolution`` is not given does one map-only job read the left
+   side's extents (``_side_stats``). The stats fix the grid resolution
+   and the estimated exploded size of the right side's cell cover; a
+   build that fits is keyed from the same table, with no second
+   collect. Every other case
    (overflowing or over-estimate build, ``on_attribute``,
    ``salt_hot_cells``, ``broadcast_right=False``) runs ONE agg job over
    both sides, which also gives the cogroup pass the coarsest per-row
@@ -126,10 +127,29 @@ def _frame_stats(df: DataFrame) -> dict:
 
 
 def _side_stats(df: DataFrame, geom: str) -> dict:
-    """``_frame_stats`` of one raw (un-prepped, un-widened) side: the
-    probe-side stats of a broadcast join, needed only to pick the
-    resolution."""
-    return _frame_stats(df.select(st_bounds(geom).alias("__bb")))
+    """``_bbox_stats`` of one raw (un-prepped, un-widened) side in ONE
+    map-only job: the probe-side stats of a broadcast join, needed only
+    to pick the resolution. Each task decodes its WKB and reduces each
+    Arrow batch's bboxes to one partial row; the driver combines the
+    rows. (A Spark global agg is two jobs under AQE: its exchange is a
+    query stage.)"""
+    from ._buildindex import PARTIAL_SCHEMA, bbox_partial, combine_partials
+
+    def fn(it):
+        import pyarrow as pa
+
+        from ..geom.kernels import bounds
+        from ..geom.wkb import from_wkb
+
+        for batch in it:
+            row = bbox_partial(bounds(from_wkb(
+                batch.column(0).to_numpy(zero_copy_only=False))))
+            yield pa.RecordBatch.from_pylist(
+                [dict(zip(("n", "sw", "cw", "mw", "sh", "ch", "mh"), row))])
+
+    parts = df.select(geom).mapInArrow(fn, PARTIAL_SCHEMA).toArrow()
+    return combine_partials(np.column_stack(
+        [c.to_numpy() for c in parts.columns]))
 
 
 # exploded build-side rows below this -> broadcast the exploded cell cover
@@ -244,6 +264,33 @@ def _collect_build(right: DataFrame, rid: str, right_geom: str,
 
     return collect_build(right, rid, right_geom,
                          None if broadcast_right else BROADCAST_MAX_ROWS)
+
+
+def _plan_broadcast(raw_left: DataFrame, left_geom: str, right: DataFrame,
+                    rid: str, right_geom: str, resolution: int | None,
+                    domain, broadcast_right: bool | None):
+    """sjoin's and overlay's broadcast decision from ONE bounded collect
+    of the build side ``right``. Its stats come from the collected
+    table; the probe's (``_side_stats``, one job over the raw,
+    un-widened ``raw_left``) only when ``resolution`` is not given.
+    Returns (BuildIndex or None, stats or None, resolution): None = fall
+    back to the shuffle pass, reusing ``stats`` ([probe or None, build])
+    when the build was collected."""
+    table = _collect_build(right, rid, right_geom, broadcast_right)
+    if table is None:
+        return None, None, resolution
+    stats = [None, table.stats()]
+    res = resolution
+    if res is None:
+        stats[0] = _side_stats(raw_left, left_geom)
+        res = _estimate_resolution(stats, domain)
+    if not (broadcast_right
+            or (0 < stats[1]["n"] and _est_exploded(stats[1], res, domain)
+                <= BROADCAST_EXPLODED_ROWS)):
+        return None, stats, resolution
+    from ._buildindex import BuildIndex
+
+    return BuildIndex(table, res, domain), stats, res
 
 
 def _broadcast_probe_refined(lraw, build, predicate: str, distance,
@@ -652,21 +699,9 @@ def sjoin(
     # the attribute key — both always route to the cogroup pass.
     build = stats = None
     if broadcast_right is not False and not (on_attribute or salt_hot_cells):
-        table = _collect_build(right, rid, right_geom, broadcast_right)
-        if table is not None:
-            stats = [None, table.stats()]
-            res = resolution
-            if res is None:
-                stats[0] = _side_stats(raw_left, left_geom)
-                res = _estimate_resolution(stats, domain)
-            if broadcast_right or (
-                    0 < stats[1]["n"]
-                    and _est_exploded(stats[1], res, domain)
-                    <= BROADCAST_EXPLODED_ROWS):
-                from ._buildindex import BuildIndex
-
-                resolution = res
-                build = BuildIndex(table, resolution, domain)
+        build, stats, resolution = _plan_broadcast(
+            raw_left, left_geom, right, rid, right_geom, resolution, domain,
+            broadcast_right)
     # every later pass that reads the build side (cogroup, assembly
     # re-join) is a map pass: widen it now (ids already fixed)
     right = _widen(right)
