@@ -57,8 +57,8 @@ from pyspark.sql.functions import pandas_udf
 from ..functions.st import st_cells_from_bbox
 from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
 from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _collect_build,
-                    _est_exploded, _frame_stats, _min_cover_res,
-                    _output_columns, _prep_side, _widen)
+                    _est_exploded, _min_cover_res, _output_columns,
+                    _prep_side, _side_stats, _widen)
 
 
 def _wkb_equal(a, b) -> np.ndarray:
@@ -967,6 +967,7 @@ def sjoin_nearest(
         raise ValueError(
             "sjoin_nearest supports how in ('inner','left','right')")
 
+    raw_right = right
     left, lid = _prep_side(left, left_geom, left_id, "l")
     right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
 
@@ -978,7 +979,7 @@ def sjoin_nearest(
     # forced); its count, extents and WKB header set come from that
     # table in numpy, and a broadcast build is keyed from the same table.
     # A right side over the bound could never pass the exploded-size
-    # test, so it takes the shuffle plan, sized by one stats agg.
+    # test, so it takes the shuffle plan, sized by one stats job.
     table = None
     if broadcast_right is not False:
         table = _collect_build(right, rid, right_geom, broadcast_right)
@@ -986,7 +987,7 @@ def sjoin_nearest(
         rstats = table.stats()
     else:
         broadcast_right = False
-        rstats = _frame_stats(right)
+        rstats = _side_stats(raw_right, right_geom)
     n_right = rstats["n"]
     if resolution is None:
         if max_distance is not None:

@@ -17,12 +17,11 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
    side's extents (``_side_stats``). The stats fix the grid resolution
    and the estimated exploded size of the right side's cell cover; a
    build that fits is keyed from the same table, with no second
-   collect. Every other case
-   (overflowing or over-estimate build, ``on_attribute``,
-   ``salt_hot_cells``, ``broadcast_right=False``) runs ONE agg job over
-   both sides, which also gives the cogroup pass the coarsest per-row
-   cover res each side can fall back to (the other side then emits
-   ancestor cells down to it).
+   collect. Every other case (overflowing or over-estimate build,
+   ``on_attribute``, ``salt_hot_cells``, ``broadcast_right=False``)
+   runs ONE agg job over both sides, which also gives the cogroup pass
+   the coarsest per-row cover res each side can fall back to (the
+   other side then emits ancestor cells down to it).
 2. **Pair pass**: one of two ``mapInPandas``/``mapInArrow`` kernels.
    Candidate pairs are generated, deduped and refined with the exact
    vectorized predicate (geom/predicates.py) in-kernel, and leave the
@@ -90,24 +89,15 @@ def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
     return lmap, rmap
 
 
-_STAT_KEYS = ("aw", "ah", "mw", "mh", "n")
-
-
-def _stat_aggs() -> list:
-    """avg + max bbox extents and the row count of a frame with ``__bb``
-    (NULL extents of null/empty geometries are skipped)."""
-    return [
+def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
+    """ONE tiny agg job: avg + max bbox extents of both sides."""
+    aggs = [
         F.avg(F.col("__bb.maxx") - F.col("__bb.minx")).alias("aw"),
         F.avg(F.col("__bb.maxy") - F.col("__bb.miny")).alias("ah"),
         F.max(F.col("__bb.maxx") - F.col("__bb.minx")).alias("mw"),
         F.max(F.col("__bb.maxy") - F.col("__bb.miny")).alias("mh"),
         F.count(F.lit(1)).alias("n"),
     ]
-
-
-def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
-    """ONE tiny agg job: avg + max bbox extents of both sides."""
-    aggs = _stat_aggs()
     rows = (
         left.select(F.lit(0).alias("side"), "__bb").groupBy("side").agg(*aggs)
         .unionAll(right.select(F.lit(1).alias("side"), "__bb").groupBy("side").agg(*aggs))
@@ -116,20 +106,15 @@ def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
     out = [dict(aw=0.0, ah=0.0, mw=0.0, mh=0.0, n=0),
            dict(aw=0.0, ah=0.0, mw=0.0, mh=0.0, n=0)]
     for r in rows:
-        out[r["side"]] = {k: (r[k] or 0) for k in _STAT_KEYS}
+        out[r["side"]] = {k: (r[k] or 0) for k in ("aw", "ah", "mw", "mh", "n")}
     return out
-
-
-def _frame_stats(df: DataFrame) -> dict:
-    """``_bbox_stats`` of one frame with ``__bb``, as ONE global agg."""
-    r = df.agg(*_stat_aggs()).collect()[0]
-    return {k: (r[k] or 0) for k in _STAT_KEYS}
 
 
 def _side_stats(df: DataFrame, geom: str) -> dict:
     """``_bbox_stats`` of one raw (un-prepped, un-widened) side in ONE
     map-only job: the probe-side stats of a broadcast join, needed only
-    to pick the resolution. Each task decodes its WKB and reduces each
+    to pick the resolution, and the stats of a kNN right side that takes
+    the shuffle plan. Each task decodes its WKB and reduces each
     Arrow batch's bboxes to one partial row; the driver combines the
     rows. (A Spark global agg is two jobs under AQE: its exchange is a
     query stage.)"""
