@@ -14,7 +14,7 @@ Two physical plans behind one operator, decided from the right side's
 stats (mirroring sjoin — UDF-derived sizes defeat AQE's own estimation):
 one bounded Arrow collect of the right side gives them and, on the
 broadcast path, the build index too; only an overflowing right side
-runs a stats agg instead.
+runs a one-job stats pass instead.
 
 **Broadcast path** (right side's exploded cover under
 BROADCAST_EXPLODED_ROWS — the common case; round-4 north-rule
