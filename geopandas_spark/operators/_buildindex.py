@@ -59,7 +59,7 @@ def bbox_partial(bb: np.ndarray) -> list:
 
 
 def combine_partials(rows) -> dict:
-    """``sjoin._bbox_stats``'s dict (n, avg/max width and height) of one
+    """``sjoin._side_stats``'s dict (n, avg/max width and height) of one
     side from its ``bbox_partial`` rows; no extent at all gives 0.0."""
     p = np.asarray(rows, dtype=np.float64).reshape(-1, 7)
     out = {"n": int(p[:, 0].sum())}
@@ -89,7 +89,7 @@ class BuildTable:
             for c in _BB]).reshape(self.n, 4)
 
     def stats(self) -> dict:
-        """``sjoin._bbox_stats``'s dict for this side, from the
+        """``sjoin._side_stats``'s dict for this side, from the
         collected bboxes."""
         return combine_partials([bbox_partial(self.bb)])
 

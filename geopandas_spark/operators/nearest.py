@@ -56,9 +56,10 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.st import st_cells_from_bbox
 from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
-from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _collect_build,
-                    _est_exploded, _min_cover_res, _output_columns,
-                    _prep_side, _side_stats, _widen)
+from ._buildindex import collect_build
+from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _est_exploded,
+                    _min_cover_res, _output_columns, _prep_side,
+                    _side_stats, _widen)
 
 
 def _wkb_equal(a, b) -> np.ndarray:
@@ -967,27 +968,32 @@ def sjoin_nearest(
         raise ValueError(
             "sjoin_nearest supports how in ('inner','left','right')")
 
-    raw_right = right
     left, lid = _prep_side(left, left_geom, left_id, "l")
     right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
 
     # ONE eager job sizes the grid AND decides the broadcast path
     # (UDF-derived sizes defeat AQE's auto-broadcast estimation, so the
     # operator decides from stats, mirroring sjoin): unless the caller
-    # forced the shuffle plan, the right side is Arrow-collected once,
-    # bounded at BROADCAST_MAX_ROWS rows (unbounded when the broadcast is
-    # forced); its count, extents and WKB header set come from that
-    # table in numpy, and a broadcast build is keyed from the same table.
-    # A right side over the bound could never pass the exploded-size
-    # test, so it takes the shuffle plan, sized by one stats job.
+    # forced the shuffle plan, a right side whose plan is small
+    # (``_collect_first``) is Arrow-collected once, bounded at
+    # BROADCAST_MAX_ROWS rows (unbounded when the broadcast is forced);
+    # its count, extents and WKB header set come from that table in
+    # numpy, and a broadcast build is keyed from the same table. A right
+    # side over the bound could never pass the exploded-size test, so it
+    # takes the shuffle plan. A larger plan, or the shuffle plan, is
+    # sized by one stats job; a larger build is collected only if it
+    # fits.
+    from .sjoin import BROADCAST_MAX_ROWS, _collect_first
+
     table = None
-    if broadcast_right is not False:
-        table = _collect_build(right, rid, right_geom, broadcast_right)
-    if table is not None:
-        rstats = table.stats()
-    else:
-        broadcast_right = False
-        rstats = _side_stats(raw_right, right_geom)
+    if broadcast_right or (broadcast_right is None and _collect_first(right)):
+        table = collect_build(
+            right, rid, right_geom,
+            None if broadcast_right else BROADCAST_MAX_ROWS)
+        if table is None:
+            broadcast_right = False
+    rstats = table.stats() if table is not None else _side_stats(
+        right, right_geom)
     n_right = rstats["n"]
     if resolution is None:
         if max_distance is not None:
@@ -1009,13 +1015,17 @@ def sjoin_nearest(
         # (sf0.1: 28.8 s vs 7.6 s) — keep those on the shuffle plan.
         # Puntal == zero bbox extents; lineal == every distinct 5-byte
         # WKB header is a (Multi)LineString code. Both come out of the
-        # collected build — no extra job.
+        # collected build — no extra job; a large build that fits is
+        # collected here for its headers.
         rpuntal = rstats["mw"] == 0.0 and rstats["mh"] == 0.0
         broadcast_right = (
             n_right > 0
-            and (rpuntal or _all_lineal_headers(table.headers()))
             and _est_exploded(rstats, resolution, domain)
             <= BROADCAST_EXPLODED_ROWS)
+        if broadcast_right and not rpuntal:
+            if table is None:
+                table = collect_build(right, rid, right_geom)
+            broadcast_right = _all_lineal_headers(table.headers())
     if not broadcast_right:
         # shuffle path joins on exact fine-res cell equality, so a build
         # row whose cover fell back to coarser cells (bbox > max_cells
@@ -1048,6 +1058,8 @@ def sjoin_nearest(
     rid_t = dict(right.dtypes)[rid]
 
     if broadcast_right:
+        if table is None:  # fits, so n <= BROADCAST_MAX_ROWS
+            table = collect_build(right, rid, right_geom)
         probe = left.select(F.col(lid).alias("__xlid"),
                             F.col(left_geom).alias("__lgeom"))
         matched = _broadcast_knn(probe, table, resolution, domain, min_cell,

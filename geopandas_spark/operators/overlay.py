@@ -304,7 +304,7 @@ def overlay_candidates(
 
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2")
-    stats = _bbox_stats(df1p, df2p)
+    stats = _bbox_stats(df1p, df2p, geom, geom)
     if resolution is None:
         resolution = _estimate_resolution(stats, domain)
     min1 = _min_cover_res(stats[0], resolution, domain)
@@ -404,7 +404,8 @@ def overlay(
         df2 = df2.withColumn(geom, st_make_valid(geom))
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
-    from .sjoin import _bbox_stats, _min_cover_res, _plan_broadcast, _widen
+    from .sjoin import (_bbox_stats, _min_cover_res, _plan_broadcast,
+                        _side_stats, _widen)
 
     # broadcast candidate (as in sjoin): ONE bounded Arrow collect of df2
     # gives its stats and, if it fits, its index. pair_on always rides
@@ -428,8 +429,10 @@ def overlay(
         probe_raw = df1p.select(F.col(i1), F.col(geom).alias("__g1"))
         pairs = _broadcast_probe_intersection(probe_raw, build, i1)
     else:
-        if stats is None or stats[0] is None:
-            stats = _bbox_stats(df1p, df2p)
+        if stats is None:
+            stats = _bbox_stats(df1p, df2p, geom, geom)
+        elif stats[0] is None:  # build stats came with its collect
+            stats[0] = _side_stats(df1p, geom)
         if resolution is None:
             resolution = _estimate_resolution(stats, domain)
         pairs = _pairs(df1p, df2p, geom, geom, i1, i2, resolution, domain,

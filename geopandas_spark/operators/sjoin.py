@@ -9,17 +9,20 @@ column collisions suffixed (sjoin.py:193-224); outer rows null-padded
 Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
 
 1. **Prep + decide**: each side gets a row id (if none supplied) and a
-   bbox struct. Unless the plan is forced to the cogroup pass, the right
-   side is Arrow-collected ONCE with ``LIMIT BROADCAST_MAX_ROWS + 1``
+   bbox struct. Unless the plan is forced to the cogroup pass, a right
+   side whose plan size estimate is small (``_collect_first``) is
+   Arrow-collected ONCE with ``LIMIT BROADCAST_MAX_ROWS + 1``
    (``_buildindex.collect_build``, no ``widen`` in front of it); its
-   count and bbox extents come from that table in numpy. Only when
-   ``resolution`` is not given does one map-only job read the left
-   side's extents (``_side_stats``). The stats fix the grid resolution
-   and the estimated exploded size of the right side's cell cover; a
-   build that fits is keyed from the same table, with no second
-   collect. Every other case (overflowing or over-estimate build,
+   count and bbox extents come from that table in numpy. A larger right
+   side is sized first by one map-only job (``_side_stats``) and
+   collected only if it fits. Only when ``resolution`` is not given
+   does one map-only job read the left side's extents. The stats fix
+   the grid resolution and the estimated exploded size of the right
+   side's cell cover; a build that fits is keyed from its one collect.
+   Every other case (overflowing or over-estimate build,
    ``on_attribute``, ``salt_hot_cells``, ``broadcast_right=False``)
-   runs ONE agg job over both sides, which also gives the cogroup pass
+   takes the cogroup pass, sized by one map-only stats job per side
+   whose stats are not known yet. The stats also give the cogroup pass
    the coarsest per-row cover res each side can fall back to (the
    other side then emits ancestor cells down to it).
 2. **Pair pass**: one of two ``mapInPandas``/``mapInArrow`` kernels.
@@ -89,35 +92,13 @@ def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
     return lmap, rmap
 
 
-def _bbox_stats(left: DataFrame, right: DataFrame) -> list[dict]:
-    """ONE tiny agg job: avg + max bbox extents of both sides."""
-    aggs = [
-        F.avg(F.col("__bb.maxx") - F.col("__bb.minx")).alias("aw"),
-        F.avg(F.col("__bb.maxy") - F.col("__bb.miny")).alias("ah"),
-        F.max(F.col("__bb.maxx") - F.col("__bb.minx")).alias("mw"),
-        F.max(F.col("__bb.maxy") - F.col("__bb.miny")).alias("mh"),
-        F.count(F.lit(1)).alias("n"),
-    ]
-    rows = (
-        left.select(F.lit(0).alias("side"), "__bb").groupBy("side").agg(*aggs)
-        .unionAll(right.select(F.lit(1).alias("side"), "__bb").groupBy("side").agg(*aggs))
-        .collect()
-    )
-    out = [dict(aw=0.0, ah=0.0, mw=0.0, mh=0.0, n=0),
-           dict(aw=0.0, ah=0.0, mw=0.0, mh=0.0, n=0)]
-    for r in rows:
-        out[r["side"]] = {k: (r[k] or 0) for k in ("aw", "ah", "mw", "mh", "n")}
-    return out
-
-
 def _side_stats(df: DataFrame, geom: str) -> dict:
-    """``_bbox_stats`` of one raw (un-prepped, un-widened) side in ONE
-    map-only job: the probe-side stats of a broadcast join, needed only
-    to pick the resolution, and the stats of a kNN right side that takes
-    the shuffle plan. Each task decodes its WKB and reduces each
-    Arrow batch's bboxes to one partial row; the driver combines the
-    rows. (A Spark global agg is two jobs under AQE: its exchange is a
-    query stage.)"""
+    """n and avg + max bbox extents of one side in ONE map-only job. Each
+    task decodes its WKB and reduces each Arrow batch's bboxes to one
+    partial row; the driver combines the rows. (A Spark global agg is
+    two jobs under AQE: its exchange is a query stage.) Only ``geom`` is
+    read, so a raw frame and a ``_prep_side`` frame give the same
+    stats."""
     from ._buildindex import PARTIAL_SCHEMA, bbox_partial, combine_partials
 
     def fn(it):
@@ -137,13 +118,20 @@ def _side_stats(df: DataFrame, geom: str) -> dict:
         [c.to_numpy() for c in parts.columns]))
 
 
+def _bbox_stats(left: DataFrame, right: DataFrame, left_geom: str,
+                right_geom: str) -> list[dict]:
+    """``_side_stats`` of both sides: the shuffle plans' sizing."""
+    return [_side_stats(left, left_geom), _side_stats(right, right_geom)]
+
+
 # exploded build-side rows below this -> broadcast the exploded cell cover
 # instead of shuffling both sides (UDF-derived sizes defeat AQE's own
 # auto-broadcast estimation, so the operators decide from the stats)
 BROADCAST_EXPLODED_ROWS = 2_000_000
 # _est_exploded counts every row at >= 1.5 x 1.5 cells, so a build with
 # more rows than this never passes the test above: the bounded build
-# collect (_collect_build) stops one row past it. Derived, not a knob.
+# collect (_buildindex.collect_build) stops one row past it. Derived,
+# not a knob.
 BROADCAST_MAX_ROWS = BROADCAST_EXPLODED_ROWS * 4 // 9
 
 
@@ -239,32 +227,50 @@ def _widen(df: DataFrame) -> DataFrame:
     return widen(df)
 
 
-def _collect_build(right: DataFrame, rid: str, right_geom: str,
-                   broadcast_right: bool | None):
-    """The one Arrow collect of a broadcast candidate build side (a
-    ``_prep_side(widen=False)`` frame): bounded at BROADCAST_MAX_ROWS
-    unless the caller forced the broadcast. None = the build overflows
-    the bound (the caller falls back to the stats job + shuffle pass)."""
-    from ._buildindex import collect_build
-
-    return collect_build(right, rid, right_geom,
-                         None if broadcast_right else BROADCAST_MAX_ROWS)
+def _collect_first(build: DataFrame) -> bool:
+    """Whether a broadcast-candidate build side is collected before it
+    is sized. Collecting first sizes and builds from one job, but a
+    build that then takes the shuffle pass has moved its WKB to the
+    driver for nothing. So only a build whose plan size estimate is
+    within Spark's own no-look broadcast bound
+    (``spark.sql.autoBroadcastJoinThreshold``) is collected first; a
+    larger one is sized by ``_side_stats`` and collected only if it
+    fits. The estimate is Spark's (file sizes scaled through the plan);
+    where it is unavailable the build is collected first."""
+    try:
+        limit = build.sparkSession._jsparkSession.sessionState().conf() \
+            .autoBroadcastJoinThreshold()
+        size = build._jdf.queryExecution().optimizedPlan().stats() \
+            .sizeInBytes()
+        return 0 <= int(size) <= int(limit)
+    except Exception:
+        return True
 
 
 def _plan_broadcast(raw_left: DataFrame, left_geom: str, right: DataFrame,
                     rid: str, right_geom: str, resolution: int | None,
                     domain, broadcast_right: bool | None):
-    """sjoin's and overlay's broadcast decision from ONE bounded collect
-    of the build side ``right``. Its stats come from the collected
-    table; the probe's (``_side_stats``, one job over the raw,
-    un-widened ``raw_left``) only when ``resolution`` is not given.
-    Returns (BuildIndex or None, stats or None, resolution): None = fall
-    back to the shuffle pass, reusing ``stats`` ([probe or None, build])
-    when the build was collected."""
-    table = _collect_build(right, rid, right_geom, broadcast_right)
-    if table is None:
-        return None, None, resolution
-    stats = [None, table.stats()]
+    """sjoin's and overlay's broadcast decision. A build side ``right``
+    whose broadcast is forced or whose plan is small
+    (``_collect_first``) is Arrow-collected ONCE, bounded at
+    BROADCAST_MAX_ROWS unless forced, and its stats come from that
+    table; a larger one is sized by ``_side_stats`` and collected only
+    when it fits. The probe's stats (``_side_stats``, one job over the
+    raw, un-widened ``raw_left``) run only when ``resolution`` is not
+    given. Returns (BuildIndex or None, stats or None, resolution): None
+    = fall back to the shuffle pass, reusing ``stats`` ([probe or None,
+    build]) when the build was sized."""
+    from ._buildindex import BuildIndex, collect_build
+
+    table = None
+    if broadcast_right or _collect_first(right):
+        table = collect_build(right, rid, right_geom,
+                              None if broadcast_right else BROADCAST_MAX_ROWS)
+        if table is None:
+            return None, None, resolution
+        stats = [None, table.stats()]
+    else:
+        stats = [None, _side_stats(right, right_geom)]
     res = resolution
     if res is None:
         stats[0] = _side_stats(raw_left, left_geom)
@@ -273,8 +279,8 @@ def _plan_broadcast(raw_left: DataFrame, left_geom: str, right: DataFrame,
             or (0 < stats[1]["n"] and _est_exploded(stats[1], res, domain)
                 <= BROADCAST_EXPLODED_ROWS)):
         return None, stats, resolution
-    from ._buildindex import BuildIndex
-
+    if table is None:  # fits, so n <= BROADCAST_MAX_ROWS: no bound needed
+        table = collect_build(right, rid, right_geom)
     return BuildIndex(table, res, domain), stats, res
 
 
@@ -704,8 +710,10 @@ def sjoin(
             lraw, build, predicate, distance, pad,
             carry=["__xlid", "__lgeom"] if narrow else ["__xlid"])
     else:
-        if stats is None or stats[0] is None:
-            stats = _bbox_stats(left, right)  # one tiny agg job
+        if stats is None:
+            stats = _bbox_stats(left, right, left_geom, right_geom)
+        elif stats[0] is None:  # build stats came with its collect
+            stats[0] = _side_stats(left, left_geom)
         if resolution is None:
             resolution = _estimate_resolution(stats, domain)
         # big×big: union-cogroup by cell — geometry crosses the wire once

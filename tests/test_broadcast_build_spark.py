@@ -2,9 +2,9 @@
 comes from that collect.
 
 * decision parity: the numpy stats and WKB header set of the collected
-  build equal the SQL aggregates they replace (``_bbox_stats`` and
-  sjoin_nearest's ``collect_set`` header sniff), and give the same plan
-  and resolution;
+  build equal the SQL aggregates they replace (an avg/max agg over
+  ``__bb`` and sjoin_nearest's ``collect_set`` header sniff), and give
+  the same plan and resolution;
 * a build over the row cap falls back to the stats job + shuffle pass
   and still returns the brute-force pairs;
 * the eager (construct-phase) Spark job budget of sjoin, sjoin_nearest
@@ -71,6 +71,17 @@ def _build_rows(kind, seed):
     return rows
 
 
+def _sql_stats(prepped):
+    """Reference stats of a ``_prep_side`` frame: Spark SQL's avg/max over
+    its ``__bb`` struct (NULL fields skipped) and the row count."""
+    ext = {"w": F.col("__bb.maxx") - F.col("__bb.minx"),
+           "h": F.col("__bb.maxy") - F.col("__bb.miny")}
+    r = prepped.agg(*[f(ext[k]).alias(p + k) for k in ("w", "h")
+                      for p, f in (("a", F.avg), ("m", F.max))],
+                    F.count(F.lit(1)).alias("n")).collect()[0]
+    return {k: (r[k] or 0) for k in ("aw", "ah", "mw", "mh", "n")}
+
+
 def _frame(spark, rows, id_name="rid"):
     return spark.createDataFrame(pd.DataFrame(
         {id_name: np.arange(len(rows)), "geometry": rows}))
@@ -88,11 +99,14 @@ def test_build_stats_match_sql(spark, kind):
 
     table = _buildindex.collect_build(rp, rid, "geometry")
     got = table.stats()
-    sql = S._bbox_stats(lp, rp)
+    sql = [_sql_stats(lp), _sql_stats(rp)]
     assert got["n"] == sql[1]["n"] == build.count()
     for k in ("aw", "ah", "mw", "mh"):
         assert got[k] == pytest.approx(sql[1][k], rel=1e-12, abs=1e-15), k
     assert S._side_stats(probe, "geometry") == pytest.approx(sql[0], rel=1e-12)
+    # the shuffle plans' stats (both sides, prepped frames) agree too
+    for a, b in zip(S._bbox_stats(lp, rp, "geometry", "geometry"), sql):
+        assert a == pytest.approx(b, rel=1e-12, abs=1e-15)
 
     sniff = rp.agg(F.collect_set(
         F.hex(F.substring(F.col("geometry"), 1, 5))).alias("tp")).collect()[0]
@@ -161,7 +175,10 @@ def _rects(r, n, w=0.08):
 
 def test_row_cap_fallback_matches_brute(spark, monkeypatch, count_builds):
     """Builds over the row cap take the stats job + shuffle pass (no
-    BuildIndex) and still return the brute-force pairs."""
+    BuildIndex) and still return the brute-force pairs. A build whose
+    plan is over the collect-first size bound is sized before it is
+    collected: it still broadcasts when it fits, and is never collected
+    when it does not."""
     r = np.random.default_rng(5)
     px, py = r.random(120), r.random(120)
     pw = list(B.to_wkb(points_batch(px, py))) + [None]
@@ -205,8 +222,30 @@ def test_row_cap_fallback_matches_brute(spark, monkeypatch, count_builds):
     assert run() == (exp_sjoin, exp_knn, exp_ov)
     assert len(count_builds) == 3  # control: all three broadcast
     monkeypatch.setattr(S, "BROADCAST_MAX_ROWS", 10, raising=False)
+    monkeypatch.setattr(S, "_collect_first", lambda df: True)
     assert run() == (exp_sjoin, exp_knn, exp_ov)
     assert len(count_builds) == 3  # capped: all three fell back
+
+    # large plans: stats first, then one unbounded collect if it fits
+    from geopandas_spark.operators import nearest as N
+
+    collects = []
+
+    def spy_collect(df, id_col, geom_col, limit=None):
+        collects.append(limit)
+        return orig_collect(df, id_col, geom_col, limit)
+
+    orig_collect = _buildindex.collect_build
+    monkeypatch.setattr(_buildindex, "collect_build", spy_collect)
+    monkeypatch.setattr(N, "collect_build", spy_collect)
+    monkeypatch.setattr(S, "_collect_first", lambda df: False)
+    assert run() == (exp_sjoin, exp_knn, exp_ov)
+    assert len(count_builds) == 6 and collects == [None] * 3
+    monkeypatch.setattr(S, "BROADCAST_EXPLODED_ROWS", 1)
+    monkeypatch.setattr(N, "BROADCAST_EXPLODED_ROWS", 1)
+    collects.clear()
+    assert run() == (exp_sjoin, exp_knn, exp_ov)
+    assert len(count_builds) == 6 and collects == []
 
 
 def _single_file(tmp_path, name, pdf):
