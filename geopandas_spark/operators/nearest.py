@@ -971,18 +971,18 @@ def sjoin_nearest(
     left, lid = _prep_side(left, left_geom, left_id, "l")
     right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
 
-    # ONE eager job sizes the grid AND decides the broadcast path
+    # The right side's stats size the grid AND decide the broadcast path
     # (UDF-derived sizes defeat AQE's auto-broadcast estimation, so the
-    # operator decides from stats, mirroring sjoin): unless the caller
+    # operator decides from stats, mirroring sjoin). Unless the caller
     # forced the shuffle plan, a right side whose plan is small
     # (``_collect_first``) is Arrow-collected once, bounded at
-    # BROADCAST_MAX_ROWS rows (unbounded when the broadcast is forced);
+    # BROADCAST_MAX_ROWS rows (unbounded when the broadcast is forced):
     # its count, extents and WKB header set come from that table in
-    # numpy, and a broadcast build is keyed from the same table. A right
-    # side over the bound could never pass the exploded-size test, so it
-    # takes the shuffle plan. A larger plan, or the shuffle plan, is
-    # sized by one stats job; a larger build is collected only if it
-    # fits.
+    # numpy, and a broadcast build is keyed from the same table, all in
+    # one job. A right side over the bound could never pass the
+    # exploded-size test, so it takes the shuffle plan. A larger plan,
+    # and the shuffle plan, are sized by one stats job; a larger build
+    # is collected only if it fits.
     from .sjoin import BROADCAST_MAX_ROWS, _collect_first
 
     table = None

@@ -242,7 +242,7 @@ def _collect_first(build: DataFrame) -> bool:
             .autoBroadcastJoinThreshold()
         size = build._jdf.queryExecution().optimizedPlan().stats() \
             .sizeInBytes()
-        return 0 <= int(size) <= int(limit)
+        return int(size) <= int(limit)
     except Exception:
         return True
 
