@@ -59,7 +59,7 @@ from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
 from ._buildindex import collect_build
 from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _est_exploded,
                     _min_cover_res, _output_columns, _prep_side,
-                    _side_stats, _widen)
+                    _side_stats, _widen_build)
 
 
 def _wkb_equal(a, b) -> np.ndarray:
@@ -1041,7 +1041,7 @@ def sjoin_nearest(
             min_cell = min(cell_size(resolution, domain))
     # later passes over the right side (shuffle kNN, assembly re-join)
     # are map passes: widen it now (ids already fixed)
-    right = _widen(right)
+    right = _widen_build(right, right_geom)
 
     rcells = st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
                                 "__bb.maxy", resolution, domain=domain)

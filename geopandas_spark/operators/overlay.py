@@ -405,7 +405,7 @@ def overlay(
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
     from .sjoin import (_bbox_stats, _min_cover_res, _plan_broadcast,
-                        _side_stats, _widen)
+                        _side_stats, _widen_build)
 
     # broadcast candidate (as in sjoin): ONE bounded Arrow collect of df2
     # gives its stats and, if it fits, its index. pair_on always rides
@@ -414,7 +414,7 @@ def overlay(
     if pair_on is None:
         build, stats, resolution = _plan_broadcast(
             df1, geom, df2p, i2, geom, resolution, domain, None)
-    df2p = _widen(df2p)
+    df2p = _widen_build(df2p, geom)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
 

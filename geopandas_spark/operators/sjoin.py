@@ -227,6 +227,14 @@ def _widen(df: DataFrame) -> DataFrame:
     return widen(df)
 
 
+def _widen_build(df: DataFrame, geom: str) -> DataFrame:
+    """``_widen`` a ``_prep_side(widen=False)`` build side for the map
+    passes that read it after the broadcast decision. Its bbox is
+    recomputed after the repartition, so the bounds UDF runs in the
+    widened tasks, as on a side prepped with ``widen``."""
+    return _widen(df.drop("__bb")).withColumn("__bb", st_bounds(geom))
+
+
 def _collect_first(build: DataFrame) -> bool:
     """Whether a broadcast-candidate build side is collected before it
     is sized. Collecting first sizes and builds from one job, but a
@@ -591,7 +599,7 @@ def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str,
     build side is prepped with ``widen=False``: its first consumer is a
     driver collect, where the repartition only adds a shuffle stage to
     the eager job; a build that falls back to a shuffle pass is widened
-    there (``_widen``; the checkpointed ids are already fixed).
+    there (``_widen_build``; the checkpointed ids are already fixed).
 
     Auto ids come from monotonically_increasing_id, which Spark defines as
     NONDETERMINISTIC across plan branches — the join assembles results by
@@ -695,7 +703,7 @@ def sjoin(
             broadcast_right)
     # every later pass that reads the build side (cogroup, assembly
     # re-join) is a map pass: widen it now (ids already fixed)
-    right = _widen(right)
+    right = _widen_build(right, right_geom)
 
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
