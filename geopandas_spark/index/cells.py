@@ -121,20 +121,6 @@ def parent(ids: np.ndarray, steps: int = 1) -> np.ndarray:
     return ((r - steps) << np.int64(_RES_SHIFT)) | m
 
 
-def ancestors(ids: np.ndarray, min_res: int = 0) -> np.ndarray:
-    """(n, r-min_res+1) ancestor chain including self down to min_res.
-
-    Used by the hierarchical join strategy: probe-side rows join against
-    compact (mixed-res) build covers by matching any ancestor.
-    """
-    ids = np.asarray(ids, dtype=np.int64)
-    r = int(cell_res(ids[:1])[0]) if len(ids) else 0
-    cols = [ids]
-    for s in range(1, r - min_res + 1):
-        cols.append(parent(ids, s))
-    return np.column_stack(cols)
-
-
 def grid_disk(ids: np.ndarray, k: int = 1) -> np.ndarray:
     """(n, (2k+1)^2) neighbor cells within Chebyshev distance k (clamped at
     the domain edge -> duplicates possible; callers dedupe). Same role as

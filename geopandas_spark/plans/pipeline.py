@@ -10,10 +10,19 @@ output file/partition with row counts and wall time — append to
 ``workdir/_lineage`` so every byte of output traces to (stage, fingerprint,
 partition).
 
+Committing a stage starts no Spark job beyond its own write. Once the
+write has committed, each output file's row count is in its parquet
+footer, so the driver reads the footers and appends the stage's lineage
+rows as one parquet file itself. The workdir must therefore be visible
+to the driver as a local path, as ``meta.json`` already requires.
+``_lineage`` files written by Spark in older workdirs have the same
+columns and read back in the same table.
+
 This is the parquet-backed analogue of the Iceberg snapshot + metadata
 design in SURVEY.md §3 EP3 (no Iceberg runtime in this environment; the
 layout keeps the same idempotence contract: content-addressed stage
-outputs keyed by input fingerprints).
+outputs keyed by input fingerprints, and per-file record counts taken
+from the committed files' metadata rather than a rescan).
 """
 
 from __future__ import annotations
@@ -22,9 +31,53 @@ import hashlib
 import json
 import os
 import time
+import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+# the columns and types the Spark-written lineage files of older workdirs
+# carry (``ts`` there is Spark's INT96 timestamp; both read back as
+# TimestampType), so one ``_lineage`` directory reads as one table
+_LINEAGE_SCHEMA = pa.schema([
+    ("file", pa.string()), ("count", pa.int64()), ("stage", pa.string()),
+    ("pipeline", pa.string()), ("fingerprint", pa.string()),
+    ("wall_sec", pa.float64()), ("ts", pa.timestamp("us", tz="UTC")),
+])
+
+
+def _file_counts(uris: list[str]) -> list[tuple[str, int]]:
+    """(file, rows) per non-empty parquet file, from its footer. ``uris``
+    come from ``DataFrame.inputFiles()``, which spells each file exactly
+    as ``input_file_name()`` does; zero-row files hold no rows a
+    ``groupBy(input_file_name())`` would count, so they are left out."""
+    out = []
+    for uri in sorted(uris):
+        fs, path = pafs.FileSystem.from_uri(uri)
+        with fs.open_input_file(path) as f:
+            n = pq.read_metadata(f).num_rows
+        if n:
+            out.append((uri, n))
+    return out
+
+
+def _append_lineage(lineage_dir: str, rows: list[tuple[str, int]],
+                    const: dict) -> None:
+    """Append one parquet file of lineage rows. It is written under a
+    ``.``-prefixed name, which Spark's reader skips, and renamed into
+    place, so a crash never leaves a partial file for ``lineage()``."""
+    n = len(rows)
+    ts = datetime.now(timezone.utc)
+    cols = {"file": [f for f, _n in rows], "count": [c for _f, c in rows],
+            **{k: [v] * n for k, v in const.items()}, "ts": [ts] * n}
+    os.makedirs(lineage_dir, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(lineage_dir, "." + name)
+    pq.write_table(pa.table(cols, schema=_LINEAGE_SCHEMA), tmp)
+    os.replace(tmp, os.path.join(lineage_dir, name))
 
 
 def _fingerprint(*parts: str) -> str:
@@ -100,28 +153,22 @@ class Pipeline:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
         wall = time.time() - t0
-        # lineage: per-output-file row counts (the parquet file is the
-        # partition unit a resume would re-read)
         out = self.spark.read.parquet(data_dir)
-        lineage = (
-            out.groupBy(F.input_file_name().alias("file"))
-            .count()
-            .withColumn("stage", F.lit(stage))
-            .withColumn("pipeline", F.lit(self.name))
-            .withColumn("fingerprint", F.lit(fp))
-            .withColumn("wall_sec", F.lit(float(wall)))
-            .withColumn("ts", F.current_timestamp())
-        )
-        lin_rows = lineage.collect()
-        self.spark.createDataFrame(lin_rows, lineage.schema).write.mode(
-            "append").parquet(os.path.join(self.workdir, "_lineage"))
-        # row total from the already-collected lineage rows: out.count()
-        # here would re-scan the full stage output a second time
+        # lineage: per-output-file row counts (the parquet file is the
+        # partition unit a resume would re-read), read from the committed
+        # files' footers and appended by the driver, so no Spark job reads
+        # the output rows
+        lin_rows = _file_counts(out.inputFiles())
+        _append_lineage(os.path.join(self.workdir, "_lineage"), lin_rows, {
+            "stage": stage, "pipeline": self.name, "fingerprint": fp,
+            "wall_sec": wall})
+        # row total from the lineage counts: out.count() here would
+        # re-scan the full stage output
         with open(meta_path, "w") as f:
             json.dump(
                 {"fingerprint": fp, "stage": stage, "inputs": inputs,
                  "params": params, "wall_sec": wall,
-                 "rows": int(sum(r["count"] for r in lin_rows))},
+                 "rows": sum(n for _f, n in lin_rows)},
                 f, indent=2,
             )
         self._fps[stage] = fp

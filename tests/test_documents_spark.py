@@ -210,3 +210,111 @@ def test_pipeline_meta_invalidation_and_partition_by(spark, tmp_path_factory):
     assert any(d.startswith("k=") for d in
                os.listdir(os.path.join(wd, "s", "data")))
     assert meta3["rows"] == 10  # row total from lineage, not a rescan
+
+
+def _stage_frames():
+    return {
+        "multi_file": (lambda sp, _i: sp.range(0, 700, numPartitions=7), None),
+        "partition_by": (lambda sp, _i: sp.range(0, 90, numPartitions=3)
+                         .withColumn("k", F.col("id") % 3), ["k"]),
+        "empty": (lambda sp, _i: sp.range(0, 40, numPartitions=2)
+                  .filter(F.col("id") < 0), None),
+    }
+
+
+@pytest.mark.parametrize("case", ["multi_file", "partition_by", "empty",
+                                  "special_chars"])
+def test_pipeline_lineage_matches_input_file_counts(spark, tmp_path, case):
+    """Differential: a stage's lineage rows are the (file, count) rows a
+    ``groupBy(input_file_name()).count()`` over its output gives, also
+    when the workdir path needs URI escaping."""
+    import json
+    import os
+
+    wd = str(tmp_path / ("a b%c+d" if case == "special_chars" else "wd"))
+    fn, part = _stage_frames()["multi_file" if case == "special_chars" else case]
+    pipe = Pipeline(spark, wd, "diff")
+    pipe.stage("s", fn, partition_by=part)
+    data_dir = os.path.join(wd, "s", "data")
+    ref = sorted(tuple(r) for r in spark.read.parquet(data_dir)
+                 .groupBy(F.input_file_name().alias("file")).count().collect())
+    got = sorted(tuple(r) for r in pipe.lineage().filter(F.col("stage") == "s")
+                 .select("file", "count").collect())
+    assert got == ref
+    if case == "empty":
+        assert got == []
+    else:
+        assert len(got) >= 3
+    meta = json.load(open(os.path.join(wd, "s", "meta.json")))
+    assert meta["rows"] == sum(c for _f, c in ref)
+
+
+def test_pipeline_lineage_schema_and_legacy_files(spark, tmp_path):
+    """``lineage()`` keeps its columns and types, and a ``_lineage``
+    directory that already holds a Spark-written file (a workdir from
+    before lineage was written by the driver) reads back with the rows of
+    both files."""
+    import datetime
+    import os
+
+    wd = str(tmp_path / "wd")
+    legacy_ts = datetime.datetime(2026, 1, 2, 3, 4, 5)
+    spark.createDataFrame(
+        [("file:/old/part-00000.parquet", 5, "old", "mix", "fp0", 0.5, legacy_ts)],
+        "file string, count bigint, stage string, pipeline string, "
+        "fingerprint string, wall_sec double, ts timestamp",
+    ).write.mode("append").parquet(os.path.join(wd, "_lineage"))
+    pipe = Pipeline(spark, wd, "mix")
+    before = datetime.datetime.now()
+    pipe.stage("new", _stage_frames()["multi_file"][0])
+    lin = pipe.lineage()
+    assert [(f.name, f.dataType.simpleString()) for f in lin.schema] == [
+        ("file", "string"), ("count", "bigint"), ("stage", "string"),
+        ("pipeline", "string"), ("fingerprint", "string"),
+        ("wall_sec", "double"), ("ts", "timestamp")]
+    rows = lin.collect()
+    old = [r for r in rows if r["stage"] == "old"]
+    new = [r for r in rows if r["stage"] == "new"]
+    assert [(r["count"], r["ts"]) for r in old] == [(5, legacy_ts)]
+    assert len(new) == 7 and sum(r["count"] for r in new) == 700
+    assert all(r["pipeline"] == "mix" and r["wall_sec"] > 0 for r in new)
+    assert all(abs(r["ts"] - before) < datetime.timedelta(minutes=10)
+               for r in new)
+    assert len({r["fingerprint"] for r in new}) == 1
+
+
+def test_pipeline_stage_job_budget(spark, tmp_path):
+    """A stage run starts one Spark job beyond its own write (the schema
+    read behind the returned frame); a resume starts one job per stage."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def jobs(call):
+        group = f"pipe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    wd = str(tmp_path / "wd")
+    frames = _stage_frames()
+    for case in ("multi_file", "partition_by"):
+        fn, part = frames[case]
+        writer = fn(spark, {}).write
+        if part:
+            writer = writer.partitionBy(*part)
+        write_jobs = jobs(lambda: writer.parquet(str(tmp_path / case)))
+        stage_jobs = jobs(lambda: Pipeline(spark, wd, "jobs").stage(
+            case, fn, partition_by=part))
+        assert stage_jobs == write_jobs + 1, (case, write_jobs, stage_jobs)
+
+    def resume():
+        p = Pipeline(spark, wd, "jobs")
+        for case in ("multi_file", "partition_by"):
+            fn, part = frames[case]
+            p.stage(case, fn, partition_by=part)
+
+    assert jobs(resume) == 2

@@ -32,19 +32,12 @@ def main():
     cpus = int(sys.argv[sys.argv.index("--cpus") + 1]) if "--cpus" in sys.argv else 32
     reps = int(sys.argv[sys.argv.index("--reps") + 1]) if "--reps" in sys.argv else 3
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ab-dedup")
-        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from geopandas_spark.conf import get_spark
+
+    os.environ.setdefault("SPARK_DRIVER_MEM", "16g")
+    spark = get_spark("ab-dedup", cpus, shuffle_partitions=max(2 * cpus, 16))
     spark.sparkContext.setLogLevel("ERROR")
 
     from geopandas_spark.operators.dedup import minhash_lsh, ngram_jaccard

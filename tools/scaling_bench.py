@@ -128,20 +128,13 @@ def calibrate(cpus: int) -> float:
 
 
 def run_level(cpus: int, job: str | None = None) -> dict:
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"scaling-bench-{cpus}")
-        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 16)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from geopandas_spark.conf import get_spark
+
+    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+    spark = get_spark(f"scaling-bench-{cpus}", cpus,
+                      shuffle_partitions=max(2 * cpus, 16))
     spark.sparkContext.setLogLevel("ERROR")
     from geopandas_spark.functions.st import st_geomfromtext, st_point
     from geopandas_spark.operators.nearest import sjoin_nearest
