@@ -194,3 +194,46 @@ def test_overlay_broadcast_vs_shuffle(spark, giant_in):
     assert len(bcast) > 60
     for key, a in bcast.items():
         assert abs(a - shuffle[key]) <= 1e-9, key
+
+
+def _square(x, y, s):
+    return f"POLYGON (({x} {y}, {x+s} {y}, {x+s} {y+s}, {x} {y+s}, {x} {y}))"
+
+
+@pytest.fixture(scope="module")
+def touching_frames(spark):
+    """Three df1/df2 square pairs whose intersections are a Polygon
+    (overlap), a LineString (shared edge) and a Point (shared corner)."""
+    w1 = [_square(0.1, 0.1, 0.2), _square(0.5, 0.1, 0.1), _square(0.8, 0.1, 0.1)]
+    w2 = [_square(0.2, 0.2, 0.2), _square(0.6, 0.1, 0.1), _square(0.9, 0.2, 0.1)]
+    df1 = spark.createDataFrame(pd.DataFrame({
+        "i": range(3), "k": 0, "geometry": list(B.to_wkb(W.from_wkt(w1)))}))
+    df2 = spark.createDataFrame(pd.DataFrame({
+        "j": range(3), "k": 0, "geometry": list(B.to_wkb(W.from_wkt(w2)))}))
+    return df1, df2
+
+
+@pytest.mark.parametrize("path", ["broadcast", "pair_on"])
+def test_overlay_keep_geom_type(spark, touching_frames, path):
+    """keep_geom_type=True returns the keep_geom_type=False rows whose
+    geometry type is Polygon or MultiPolygon, on the broadcast probe and
+    on the pair_on shuffle path."""
+    from geopandas_spark.functions.st import st_geometry_type
+
+    df1, df2 = touching_frames
+    kw = {"pair_on": "k"} if path == "pair_on" else {}
+
+    def run(keep):
+        return overlay(df1, df2, how="intersection", id1="i", id2="j",
+                       make_valid=False, keep_geom_type=keep, **kw)
+
+    def rows(df):
+        return sorted((r["i"], r["j"], bytes(r["geometry"]))
+                      for r in df.select("i", "j", "geometry").collect())
+
+    loose = run(False).withColumn("t", st_geometry_type("geometry"))
+    assert sorted(r["t"] for r in loose.collect()) == [
+        "LineString", "Point", "Polygon"]
+    want = rows(loose.filter(F.col("t").isin("Polygon", "MultiPolygon")))
+    got = rows(run(True))
+    assert got == want and [(i, j) for i, j, _g in got] == [(0, 0)]
