@@ -34,24 +34,38 @@ from pyspark.sql.functions import pandas_udf
 
 from ..functions.st import st_cells, st_is_empty
 from ..index.cells import DOMAIN_UNIT
-from .sjoin import (_canonical_cells, _estimate_resolution, _prep_side,
-                    _suffix_columns)
+from .sjoin import (_canonical_cells, _estimate_resolution,
+                    _output_columns, _prep_side, _suffix_columns)
 
 VALID_HOW = ("intersection", "union", "identity", "symmetric_difference", "difference")
 
 
+def _kept(res, polygonal: bool) -> np.ndarray:
+    """Indices of the non-empty results of a pair kernel; with
+    ``polygonal`` (overlay's ``keep_geom_type`` for how='intersection'),
+    of the Polygon/MultiPolygon ones only."""
+    from ..geom.ragged import MULTIPOLYGON, POLYGON
+
+    keep = res.n_coords_per_geom() > 0
+    if polygonal:
+        keep &= np.isin(res.types, (POLYGON, MULTIPOLYGON))
+    return np.nonzero(keep)[0]
+
+
 def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
            min1: int | None = None, min2: int | None = None,
-           with_intersection: str = "__inter",
-           pair_on: str | None = None):
-    """Candidate (id1, id2, g1, g2, intersection) pairs via the shuffle
-    cell equi-join — the big x big path (small build sides route through
-    ``_broadcast_probe_intersection`` instead).
+           pair_on: str | None = None, polygonal: bool = False,
+           geoms: bool = True):
+    """Candidate (__i1, __i2[, __g1, __g2], __inter) pairs via the
+    shuffle cell equi-join — the big x big path (small build sides route
+    through ``_broadcast_probe_intersection`` instead).
 
     Shuffle-free dedup via the reference-point rule (see sjoin): the SAME
     Arrow pass computes the pairwise intersection geometry into
-    ``with_intersection`` (empty -> row dropped), so each pair's WKB is
-    parsed exactly once."""
+    ``__inter`` (empty, or non-polygonal with ``polygonal`` -> row
+    dropped), so each pair's WKB is parsed exactly once. ``geoms=False``
+    leaves out both input geometries (only the residual stages read
+    them)."""
     from .sjoin import _ancestors_udf
 
     from ..functions.st import st_cells_from_bbox
@@ -79,17 +93,18 @@ def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
         l1.join(l2, on=on_keys, how="inner")
         .select("__i1", "__i2", "__g1", "__g2", "__cell")
     )
-    return (
-        cand.withColumn(
-            with_intersection,
-            _intersection_rp_udf(resolution, domain)(
-                F.col("__g1"), F.col("__g2"), F.col("__cell")))
-        .filter(F.col(with_intersection).isNotNull())
-        .drop("__cell")
-    )
+    # explode drops the pairs the kernel returns no geometry for. A
+    # ``filter(isNotNull)`` on the UDF's output would be pushed below its
+    # projection and run the kernel twice
+    inter = F.explode(_intersection_rp_udf(resolution, domain, polygonal)(
+        F.col("__g1"), F.col("__g2"), F.col("__cell"))).alias("__inter")
+    return cand.select("__i1", "__i2",
+                       *(["__g1", "__g2"] if geoms else []), inter)
 
 
-def _broadcast_probe_intersection(probe_raw, build, i1: str):
+def _broadcast_probe_intersection(probe_raw, build, i1: str,
+                                  polygonal: bool = False,
+                                  geoms: bool = True):
     """Broadcast overlay candidate+intersection as ONE probe-side
     ``mapInPandas`` pass — overlay's analogue of sjoin's
     ``_broadcast_probe_refined``, on the same shared build index
@@ -106,8 +121,8 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str):
     only on bbox-overlapping pairs. Wire traffic: O(|probe| + |build|)
     in, O(|matches|) out.
 
-    Emits (__i1, __i2, __g1, __g2, __inter) — the same schema as the
-    fused ``_pairs`` path, so residual stages are unchanged.
+    Emits (__i1, __i2[, __g1, __g2], __inter) — the same schema as the
+    fused ``_pairs`` path given the same ``polygonal`` and ``geoms``.
     """
     i1_t = dict(probe_raw.dtypes)[i1]
     probe = probe_raw.select(F.col(i1).alias("__xi1"), "__g1")
@@ -136,31 +151,33 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str):
                 if not len(li):
                     continue
                 res = pairwise_intersection(lb.take(li), b.batch.take(ri))
-                k = np.nonzero(res.n_coords_per_geom() > 0)[0]
+                k = _kept(res, polygonal)
                 if not len(k):
                     continue
-                yield pd.DataFrame({
-                    "__i1": lids[li[k]],
-                    "__i2": build.id_values(ri[k]),
-                    "__g1": lws[li[k]],
-                    "__g2": b.wkb.take(ri[k]).to_numpy(zero_copy_only=False),
-                    "__inter": list(to_wkb(res.take(k))),
-                })
+                out = {"__i1": lids[li[k]], "__i2": build.id_values(ri[k])}
+                if geoms:
+                    out["__g1"] = lws[li[k]]
+                    out["__g2"] = b.wkb.take(ri[k]).to_numpy(
+                        zero_copy_only=False)
+                out["__inter"] = list(to_wkb(res.take(k)))
+                yield pd.DataFrame(out)
 
+    g = "__g1 binary, __g2 binary, " if geoms else ""
     return probe.mapInPandas(
         fn, schema=(f"__i1 {i1_t}, __i2 {build.id_type.simpleString()}, "
-                    "__g1 binary, __g2 binary, __inter binary"))
+                    f"{g}__inter binary"))
 
 
-def _intersection_rp_udf(resolution: int, domain):
-    """Fused reference-point dedup + pairwise intersection + empty->NULL.
+def _intersection_rp_udf(resolution: int, domain, polygonal: bool = False):
+    """Fused reference-point dedup + pairwise intersection + empty drop.
 
     One Arrow pass over the raw cell-join candidates replaces three
     (predicate refine, intersection, is_empty filter) — the WKB of each
-    pair is parsed exactly once. NULL result = duplicate candidate OR
-    empty intersection; callers filter isNotNull."""
+    pair is parsed exactly once. Each candidate gets a 0- or 1-element
+    array: empty = duplicate candidate, empty intersection or, with
+    ``polygonal``, a non-polygonal one; callers explode it."""
 
-    @pandas_udf("binary")
+    @pandas_udf("array<binary>")
     def _f(g1: pd.Series, g2: pd.Series, cell: pd.Series) -> pd.Series:
         from ..geom import wkb as B
         from ..geom.clipping import pairwise_intersection
@@ -190,14 +207,16 @@ def _intersection_rp_udf(resolution: int, domain):
             (lbb[:, 0] <= rbb[:, 2]) & (rbb[:, 0] <= lbb[:, 2])
             & (lbb[:, 1] <= rbb[:, 3]) & (rbb[:, 1] <= lbb[:, 3])
         )
-        out = np.full(len(g1), None, dtype=object)
+        hit = np.zeros(len(g1), dtype=bool)
+        wkb = []
         idx = np.nonzero(keep)[0]
         if len(idx):
             res = pairwise_intersection(lb.take(idx), rb.take(idx))
-            nonempty = res.n_coords_per_geom() > 0
-            w = B.to_wkb(res.take(np.nonzero(nonempty)[0]))
-            out[idx[nonempty]] = w
-        return pd.Series(out)
+            k = _kept(res, polygonal)
+            hit[idx[k]] = True
+            wkb = B.to_wkb(res.take(k))
+        w = iter(wkb)
+        return pd.Series([[next(w)] if h else [] for h in hit])
 
     return _f
 
@@ -374,7 +393,27 @@ def overlay(
     make_valid: bool = True,
     pair_on: str | None = None,
 ) -> DataFrame:
-    """pair_on (scale extension, no reference analogue — the sjoin
+    """Overlay two polygon frames (reference tools/overlay.py:89-208).
+
+    how='intersection' returns one row per intersecting pair: the
+    intersection geometry, then df1's data columns, then df2's. Names
+    both sides carry get ``_{lsuffix}`` / ``_{rsuffix}``; auto ids are
+    dropped.
+
+    ``keep_geom_type`` keeps Polygon and MultiPolygon results only. For
+    how='intersection' the pair kernels apply it, so a line or point
+    intersection (an edge or corner touch) never leaves the kernel. The
+    other modes filter their assembled rows with ``st_geometry_type``:
+    their residual stages subtract every intersecting neighbor, so their
+    pairs keep every result type.
+
+    Narrow path: for how='intersection' with both sides carrying nothing
+    beyond their id and geometry (sjoin's ``_output_columns`` rule), the
+    output is selected straight from the checkpointed pairs, with no
+    Python node and no join after the checkpoint. Every other shape
+    re-joins both sides' data columns by id.
+
+    pair_on (scale extension, no reference analogue — the sjoin
     counterpart is ``on_attribute``, ref tools/sjoin.py:62): restrict
     candidate pairs to rows whose ``pair_on`` column values are EQUAL,
     pushed into the cell equi-join as an extra join key. Use when the
@@ -421,13 +460,18 @@ def overlay(
     # pairs rows = intersecting pairs, with the intersection geometry
     # already computed in the same Arrow pass (empty intersections — pure
     # touches — are dropped; subtracting a touching neighbor is a no-op,
-    # so the residual stages are unaffected)
+    # so the residual stages are unaffected). how='intersection' needs
+    # neither input geometry after the kernel, and keeps only polygonal
+    # results there when keep_geom_type.
+    inter_only = how == "intersection"
+    kernel = {"polygonal": inter_only and keep_geom_type,
+              "geoms": not inter_only}
     if build is not None:
         # small build side: single probe-side pass — no join, no explode,
         # no per-batch build re-decode (see _broadcast_probe_intersection).
         # df1p is already widened by _prep_side.
         probe_raw = df1p.select(F.col(i1), F.col(geom).alias("__g1"))
-        pairs = _broadcast_probe_intersection(probe_raw, build, i1)
+        pairs = _broadcast_probe_intersection(probe_raw, build, i1, **kernel)
     else:
         if stats is None:
             stats = _bbox_stats(df1p, df2p, geom, geom)
@@ -438,14 +482,27 @@ def overlay(
         pairs = _pairs(df1p, df2p, geom, geom, i1, i2, resolution, domain,
                        _min_cover_res(stats[0], resolution, domain),
                        _min_cover_res(stats[1], resolution, domain),
-                       with_intersection="__inter", pair_on=pair_on)
+                       pair_on=pair_on, **kernel)
+    # Keep the checkpoint: it stores each partition of pairs whole before
+    # anything reads it, so a task's kernel worker is idle before a
+    # Python UDF on the output (a caller's st_area) starts. Without it
+    # the kernel and that UDF chain in one task, each task holds two
+    # Python workers, and the join_broadcast benchmark (4 cores) read 13
+    # instead of 9 Python processes and +20% peak PSS. It also computes
+    # the pairs once for the modes that read them twice (intersection
+    # piece and residuals).
     pairs = pairs.localCheckpoint(eager=False)
 
-    auto1, auto2 = id1 is None, id2 is None
-    d1cols = [c for c in df1c.columns if not (auto1 and c == i1)]
-    d2cols = [c for c in df2c.columns if not (auto2 and c == i2) and c != geom]
+    d1cols, d2cols, narrow = _output_columns(
+        df1c, df2c, i1, i2, id1 is None, id2 is None, geom, geom, "inner")
     m1, m2 = _suffix_columns(df1c.select(d1cols), df2c.select(d2cols),
                              lsuffix, rsuffix, exclude={geom})
+    if inter_only and narrow:
+        # every output column is in pairs, in the order the re-join gives
+        return pairs.select(
+            F.col("__inter").alias(geom),
+            *([F.col("__i1").alias(m1[i1])] if i1 in d1cols else []),
+            *([F.col("__i2").alias(m2[i2])] if i2 in d2cols else []))
     f1 = df1c.select(*[F.col(c).alias(m1.get(c, c)) for c in d1cols],
                      F.col(i1).alias("__I1"))
     f2 = df2c.select(*[F.col(c).alias(m2.get(c, c)) for c in d2cols],
@@ -486,7 +543,7 @@ def overlay(
     for p in pieces[1:]:
         base = base.unionByName(p.select(base.columns), allowMissingColumns=True)
     out = base.drop("__I1", "__I2")
-    if keep_geom_type:
+    if keep_geom_type and not inter_only:  # intersection: in the kernel
         from ..functions.st import st_geometry_type
 
         out = out.filter(st_geometry_type(geom).isin("Polygon", "MultiPolygon"))

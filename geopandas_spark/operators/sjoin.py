@@ -762,7 +762,8 @@ def _output_columns(left: DataFrame, right: DataFrame, lid: str, rid: str,
                     auto_l: bool, auto_r: bool, left_geom: str,
                     right_geom: str, how: str):
     """Data columns each side contributes to a join's output, and whether
-    the narrow fast path applies (shared by sjoin and sjoin_nearest).
+    the narrow fast path applies (shared by sjoin, sjoin_nearest and
+    overlay's how='intersection', which passes how='inner').
 
     Auto ids are internal and dropped; user id columns stay as ordinary
     data columns, like the pandas index does. The non-retained geometry

@@ -213,14 +213,17 @@ def touching_frames(spark):
     return df1, df2
 
 
-@pytest.mark.parametrize("path", ["broadcast", "pair_on"])
+@pytest.mark.parametrize("path", ["broadcast", "narrow", "pair_on"])
 def test_overlay_keep_geom_type(spark, touching_frames, path):
     """keep_geom_type=True returns the keep_geom_type=False rows whose
-    geometry type is Polygon or MultiPolygon, on the broadcast probe and
-    on the pair_on shuffle path."""
+    geometry type is Polygon or MultiPolygon, on the broadcast probe (with
+    the join assembly, and narrow: id-only frames) and on the pair_on
+    shuffle path."""
     from geopandas_spark.functions.st import st_geometry_type
 
     df1, df2 = touching_frames
+    if path == "narrow":
+        df1, df2 = df1.drop("k"), df2.drop("k")
     kw = {"pair_on": "k"} if path == "pair_on" else {}
 
     def run(keep):
@@ -237,3 +240,66 @@ def test_overlay_keep_geom_type(spark, touching_frames, path):
     want = rows(loose.filter(F.col("t").isin("Polygon", "MultiPolygon")))
     got = rows(run(True))
     assert got == want and [(i, j) for i, j, _g in got] == [(0, 0)]
+
+
+@pytest.fixture(scope="module")
+def star_frames():
+    """Two pandas star layers; a few shapes per layer touch or overlap
+    each other exactly, so pairs of every result type occur."""
+    rng = np.random.default_rng(17)
+
+    def layer(n, squares):
+        wkt = [_star_wkt(*(rng.random(2) * 0.8 + 0.1),
+                         0.02 + 0.04 * rng.random()) for _ in range(n)]
+        return pd.DataFrame({"geometry": list(B.to_wkb(W.from_wkt(
+            wkt + squares)))})
+
+    return (layer(60, [_square(0.1, 0.1, 0.2), _square(0.5, 0.1, 0.1)]),
+            layer(60, [_square(0.2, 0.2, 0.2), _square(0.6, 0.1, 0.1)]))
+
+
+@pytest.mark.parametrize("path", ["broadcast", "shuffle"])
+@pytest.mark.parametrize("ids", ["distinct", "same_name", "auto"])
+def test_overlay_narrow_matches_join(spark, star_frames, monkeypatch, path,
+                                     ids):
+    """how='intersection' on frames that carry only (id, geometry) selects
+    its output straight from the checkpointed pairs: the same rows, WKB
+    bytes and column order as the join assembly (forced here by an extra
+    df1 column, dropped afterwards), and an executed plan with no Python
+    node and no join. Frames with an attribute, auto ids included, take
+    the join."""
+    from geopandas_spark.operators import sjoin as S
+
+    if path == "shuffle":  # no build side fits: the cell-join pass
+        monkeypatch.setattr(S, "BROADCAST_EXPLODED_ROWS", 0)
+    p1, p2 = star_frames
+    name1, name2 = {"distinct": ("i", "j"), "same_name": ("id", "id"),
+                    "auto": (None, None)}[ids]
+    df1 = spark.createDataFrame(p1 if name1 is None
+                                else p1.assign(**{name1: range(len(p1))}))
+    df2 = spark.createDataFrame(p2 if name2 is None
+                                else p2.assign(**{name2: range(len(p2))}))
+
+    def run(a):
+        return overlay(a, df2, how="intersection", id1=name1, id2=name2,
+                       make_valid=False)
+
+    def rows(d):
+        return sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+                            else v for v in r) for r in d.collect())
+
+    def plan(d):
+        return d._jdf.queryExecution().executedPlan().toString()
+
+    narrow = run(df1)
+    joined = run(df1.withColumn("x", F.lit(1))).drop("x")
+    want_cols = {"distinct": ["geometry", "i", "j"],
+                 "same_name": ["geometry", "id_1", "id_2"],
+                 "auto": ["geometry"]}[ids]
+    assert narrow.columns == joined.columns == want_cols
+    got = rows(narrow)
+    assert got == rows(joined) and len(got) > 40
+    p = plan(narrow)
+    assert "EvalPython" not in p and "Join" not in p, p
+    assert "Join" in plan(joined)
+
