@@ -30,8 +30,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_clip_by_rect, st_is_empty
-
 
 def _bounds_predicate(df: DataFrame, bounds, rect) -> Column | None:
     """Pure-SQL bbox-intersects predicate from cheap columns, or None.
@@ -90,41 +88,54 @@ def clip(
     df = widen(df)
     if isinstance(mask, (tuple, list)) and len(mask) == 4:
         rect = tuple(float(v) for v in mask)
-        pre = _bounds_predicate(df, bounds, rect)
-        if pre is not None:
-            df = df.filter(pre)
-        minx, miny, maxx, maxy = rect
-        out = df.withColumn(geom, st_clip_by_rect(geom, minx, miny, maxx, maxy))
-        out = out.filter(~st_is_empty(geom) & F.col(geom).isNotNull())
+
+        def cut(b):
+            from ..geom.transforms import clip_by_rect
+
+            return clip_by_rect(b, *rect)
     else:
         mask_wkb = bytes(mask)
         rect = _mask_rect(mask_wkb)
-        if rect is not None:
-            pre = _bounds_predicate(df, bounds, rect)
-            if pre is not None:
-                df = df.filter(pre)
 
-        @pandas_udf("binary")
-        def _clip_mask(s: pd.Series) -> pd.Series:
+        def cut(b):
             from ..geom import wkb as B
             from ..geom.clipping import pairwise_intersection
 
-            lb = B.from_wkb(s)
-            rb = B.from_wkb([mask_wkb] * len(s))
-            return pd.Series(list(B.to_wkb(pairwise_intersection(lb, rb))))
+            return pairwise_intersection(b, B.from_wkb([mask_wkb] * len(b)))
+    if rect is not None:
+        pre = _bounds_predicate(df, bounds, rect)
+        if pre is not None:
+            df = df.filter(pre)
+    # explode drops the rows the kernel returns no geometry for. A
+    # ``filter(isNotNull)`` on the UDF's output would be pushed below its
+    # projection and run the kernel twice
+    kept = F.explode(_clip_udf(cut, keep_geom_type)(F.col(geom))).alias(geom)
+    return df.select(*[kept if c == geom else F.col(c) for c in df.columns])
 
-        out = df.withColumn(geom, _clip_mask(F.col(geom)))
-        out = out.filter(~st_is_empty(geom) & F.col(geom).isNotNull())
-    if keep_geom_type:
-        from ..functions.st import st_geometry_type
 
-        # keep rows whose result dimension matches the input dimension: the
-        # rect/convex clip of a polygon is polygonal and of a line lineal,
-        # so type filtering reduces to dropping lower-dim collection parts;
-        # rows that clipped into a GeometryCollection are dropped (rare,
-        # mirrors keep_geom_type warnings in test_overlay.py:587-706)
-        out = out.filter(~st_geometry_type(geom).isin("GeometryCollection"))
-    return out
+def _clip_udf(cut, keep_geom_type: bool):
+    """The clip kernel ``cut`` (GeometryBatch -> GeometryBatch) as one
+    pandas UDF returning each row's result as a 0- or 1-element array:
+    empty for the rows clip drops, i.e. missing and empty results and,
+    with ``keep_geom_type``, GeometryCollections (the rect/convex clip
+    of a polygon is polygonal and of a line lineal, so type filtering
+    reduces to dropping mixed results; mirrors the keep_geom_type
+    warnings in test_overlay.py:587-706). One Python node per clip
+    call."""
+
+    @pandas_udf("array<binary>")
+    def _f(s: pd.Series) -> pd.Series:
+        from ..geom.ragged import GEOMETRYCOLLECTION
+        from ..geom.wkb import from_wkb, to_wkb
+
+        res = cut(from_wkb(s))
+        keep = res.n_coords_per_geom() > 0
+        if keep_geom_type:
+            keep &= res.types != GEOMETRYCOLLECTION
+        w = iter(to_wkb(res.take(np.nonzero(keep)[0])))
+        return pd.Series([[next(w)] if k else [] for k in keep])
+
+    return _f
 
 
 def cx_filter(df: DataFrame, rect, geom: str = "geometry",

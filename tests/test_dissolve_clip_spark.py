@@ -218,3 +218,58 @@ def test_partitioned_geoparquet_straddlers_not_dropped(spark,
     got = sorted(r2.pid for r2 in pruned.select("pid").collect())
     exp = sorted(r2.pid for r2 in full.select("pid").collect())
     assert got == exp and len(exp) > 0
+
+
+_CLIP_WKT = [
+    "POLYGON ((0.1 0.1, 0.4 0.1, 0.4 0.4, 0.1 0.4, 0.1 0.1))",
+    "LINESTRING (0 0.3, 0.9 0.3)",
+    "POINT (0.3 0.3)",
+    "POINT (0.9 0.9)",  # outside: empty result
+    "POLYGON ((0.6 0.6, 0.9 0.6, 0.9 0.9, 0.6 0.9, 0.6 0.6))",  # outside
+    "GEOMETRYCOLLECTION (POINT (0.3 0.35), "
+    "POLYGON ((0.2 0.2, 0.3 0.2, 0.3 0.3, 0.2 0.3, 0.2 0.2)))",
+    "POLYGON ((0.5 0.1, 0.7 0.1, 0.7 0.2, 0.5 0.2, 0.5 0.1))",  # corner
+    None,
+]
+_CLIP_RECT = (0.2, 0.2, 0.5, 0.5)
+
+
+@pytest.mark.parametrize("mask", ["rect", "polygon"])
+@pytest.mark.parametrize("keep_geom_type", [False, True])
+def test_clip_one_python_node(spark, mask, keep_geom_type):
+    """clip runs its kernel, the empty/NULL drop and the keep_geom_type
+    GeometryCollection drop in ONE pandas UDF, and returns the rows the
+    separate st_is_empty / st_geometry_type filters give."""
+    from geopandas_spark.functions.st import (st_clip_by_rect,
+                                              st_geometry_type,
+                                              st_intersection, st_is_empty)
+
+    pdf = pd.DataFrame({"i": range(len(_CLIP_WKT)),
+                        "geometry": list(B.to_wkb(W.from_wkt(_CLIP_WKT)))})
+    df = spark.createDataFrame(pdf, "i long, geometry binary")
+    if mask == "rect":
+        m = _CLIP_RECT
+        ref = df.withColumn("geometry", st_clip_by_rect("geometry", *m))
+    else:
+        minx, miny, maxx, maxy = _CLIP_RECT
+        m = bytes(B.to_wkb(W.from_wkt([
+            f"POLYGON (({minx} {miny}, {maxx} {miny}, {maxx} {maxy}, "
+            f"{minx} {maxy}, {minx} {miny}))"]))[0])
+        ref = df.withColumn("geometry",
+                            st_intersection("geometry", F.lit(m)))
+    ref = ref.filter(~st_is_empty("geometry") & F.col("geometry").isNotNull())
+    if keep_geom_type:
+        ref = ref.filter(~st_geometry_type("geometry").isin("GeometryCollection"))
+    out = clip(df, m, keep_geom_type=keep_geom_type)
+
+    def rows(d):
+        return sorted((r["i"], bytes(r["geometry"])) for r in d.collect())
+
+    got = rows(out)
+    assert got == rows(ref)
+    kept = {i for i, _g in got}
+    assert {0, 1, 2}.issubset(kept) and not kept & {3, 4, 7}
+    assert (5 in kept) != keep_geom_type
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan
