@@ -18,6 +18,11 @@ to the driver as a local path, as ``meta.json`` already requires.
 ``_lineage`` files written by Spark in older workdirs have the same
 columns and read back in the same table.
 
+``meta.json`` also keeps the schema the committed output reads back
+with, so a resume, and a later stage reading this one as an input, read
+the data without a schema-inference job: a resumed stage starts no
+Spark job.
+
 This is the parquet-backed analogue of the Iceberg snapshot + metadata
 design in SURVEY.md §3 EP3 (no Iceberg runtime in this environment; the
 layout keeps the same idempotence contract: content-addressed stage
@@ -38,6 +43,7 @@ import pyarrow as pa
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # the columns and types the Spark-written lineage files of older workdirs
 # carry (``ts`` there is Spark's INT96 timestamp; both read back as
@@ -103,6 +109,23 @@ class Pipeline:
     def _meta_path(self, stage: str) -> str:
         return os.path.join(self._stage_dir(stage), "meta.json")
 
+    def _meta(self, stage: str) -> dict:
+        try:
+            with open(self._meta_path(stage)) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
+
+    def _read(self, data_dir: str, meta: dict) -> DataFrame:
+        """A stage's data, read with the schema its run stored in
+        ``meta.json``: a parquet read that must infer the schema starts a
+        Spark job to read the footers. A ``meta.json`` without one (older
+        workdirs) falls back to inference."""
+        reader = self.spark.read
+        if "schema" in meta:
+            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        return reader.parquet(data_dir)
+
     def stage(
         self,
         stage: str,
@@ -129,14 +152,12 @@ class Pipeline:
         sdir = self._stage_dir(stage)
         data_dir = os.path.join(sdir, "data")
         meta_path = self._meta_path(stage)
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                meta = json.load(f)
-            if meta.get("fingerprint") == fp and os.path.exists(
-                os.path.join(data_dir, "_SUCCESS")
-            ):
-                self._fps[stage] = fp
-                return self.spark.read.parquet(data_dir)
+        meta = self._meta(stage)
+        if meta.get("fingerprint") == fp and os.path.exists(
+            os.path.join(data_dir, "_SUCCESS")
+        ):
+            self._fps[stage] = fp
+            return self._read(data_dir, meta)
         # (re)run. Invalidate the old meta FIRST: the data write below
         # overwrites data_dir, and a crash between that write and the
         # new meta write must not leave the previous fingerprint paired
@@ -145,8 +166,8 @@ class Pipeline:
         if os.path.exists(meta_path):
             os.remove(meta_path)
         t0 = time.time()
-        in_dfs = {i: self.spark.read.parquet(os.path.join(self._stage_dir(i), "data"))
-                  for i in inputs}
+        in_dfs = {i: self._read(os.path.join(self._stage_dir(i), "data"),
+                                self._meta(i)) for i in inputs}
         df = fn(self.spark, in_dfs)
         writer = df.write.mode("overwrite")
         if partition_by:
@@ -168,7 +189,8 @@ class Pipeline:
             json.dump(
                 {"fingerprint": fp, "stage": stage, "inputs": inputs,
                  "params": params, "wall_sec": wall,
-                 "rows": sum(n for _f, n in lin_rows)},
+                 "rows": sum(n for _f, n in lin_rows),
+                 "schema": json.loads(out.schema.json())},
                 f, indent=2,
             )
         self._fps[stage] = fp

@@ -285,7 +285,13 @@ def test_pipeline_lineage_schema_and_legacy_files(spark, tmp_path):
 
 def test_pipeline_stage_job_budget(spark, tmp_path):
     """A stage run starts one Spark job beyond its own write (the schema
-    read behind the returned frame); a resume starts one job per stage."""
+    read behind the returned frame); a resume reads with the schema kept
+    in meta.json and starts none, and returns the schema the inferring
+    read gives (names, types, order, nullability, partition columns
+    included); a stage reads its input stages the same way. A meta.json
+    without a schema falls back to inference."""
+    import json
+    import os
     import uuid
 
     sc = spark.sparkContext
@@ -311,10 +317,42 @@ def test_pipeline_stage_job_budget(spark, tmp_path):
             case, fn, partition_by=part))
         assert stage_jobs == write_jobs + 1, (case, write_jobs, stage_jobs)
 
+    resumed = {}
+
     def resume():
         p = Pipeline(spark, wd, "jobs")
         for case in ("multi_file", "partition_by"):
             fn, part = frames[case]
-            p.stage(case, fn, partition_by=part)
+            resumed[case] = p.stage(case, fn, partition_by=part)
 
-    assert jobs(resume) == 2
+    assert jobs(resume) == 0
+
+    def fields(df):
+        return [(f.name, f.dataType, f.nullable) for f in df.schema]
+
+    for case, df in resumed.items():
+        inferred = spark.read.parquet(os.path.join(wd, case, "data"))
+        assert fields(df) == fields(inferred), case
+        assert sorted(df.collect()) == sorted(inferred.collect())
+    assert [f.name for f in resumed["partition_by"].schema] == ["id", "k"]
+
+    # a stage reading a stored stage as its input adds no schema job
+    src = resumed["multi_file"]
+    copy_jobs = jobs(lambda: spark.read.schema(src.schema).parquet(
+        os.path.join(wd, "multi_file", "data")).write.parquet(
+            str(tmp_path / "copy")))
+
+    def child():
+        p = Pipeline(spark, wd, "jobs")
+        p.stage("multi_file", frames["multi_file"][0])
+        p.stage("child", lambda _sp, i: i["multi_file"], inputs=["multi_file"])
+
+    assert jobs(child) == copy_jobs + 1
+
+    meta_path = os.path.join(wd, "partition_by", "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    del meta["schema"]
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    assert jobs(resume) == 1
