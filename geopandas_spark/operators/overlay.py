@@ -54,8 +54,7 @@ def _kept(res, polygonal: bool) -> np.ndarray:
 
 def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
            min1: int | None = None, min2: int | None = None,
-           pair_on: str | None = None, polygonal: bool = False,
-           geoms: bool = True):
+           pair_on: str | None = None, *, polygonal: bool, geoms: bool):
     """Candidate (__i1, __i2[, __g1, __g2], __inter) pairs via the
     shuffle cell equi-join — the big x big path (small build sides route
     through ``_broadcast_probe_intersection`` instead).
@@ -102,9 +101,8 @@ def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
                        *(["__g1", "__g2"] if geoms else []), inter)
 
 
-def _broadcast_probe_intersection(probe_raw, build, i1: str,
-                                  polygonal: bool = False,
-                                  geoms: bool = True):
+def _broadcast_probe_intersection(probe_raw, build, i1: str, *,
+                                  polygonal: bool, geoms: bool):
     """Broadcast overlay candidate+intersection as ONE probe-side
     ``mapInPandas`` pass — overlay's analogue of sjoin's
     ``_broadcast_probe_refined``, on the same shared build index
@@ -168,7 +166,7 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str,
                     f"{g}__inter binary"))
 
 
-def _intersection_rp_udf(resolution: int, domain, polygonal: bool = False):
+def _intersection_rp_udf(resolution: int, domain, polygonal: bool):
     """Fused reference-point dedup + pairwise intersection + empty drop.
 
     One Arrow pass over the raw cell-join candidates replaces three
