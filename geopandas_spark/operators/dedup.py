@@ -290,27 +290,6 @@ def minhash_lsh(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                                     max_bucket, "minhash_lsh",
                                     return_stats=True)
 
-    @pandas_udf("double")
-    def _jac(sa: pd.Series, sb: pd.Series) -> pd.Series:
-        # per-pair sorted-array intersection over PREcomputed shingle
-        # sets (round-2: the verify used to re-shingle text per pair —
-        # O(pairs x textlen) hashing; now it is O(pairs x set size))
-        out = np.empty(len(sa))
-        for i, (x, y) in enumerate(zip(sa, sb)):
-            x = np.asarray(x, dtype=np.int64)
-            y = np.asarray(y, dtype=np.int64)
-            if len(x) == 0 and len(y) == 0:
-                out[i] = 1.0
-                continue
-            if len(x) > len(y):
-                x, y = y, x
-            idx = np.searchsorted(y, x)
-            idx[idx == len(y)] = 0
-            inter = int((y[idx] == x).sum())
-            u = len(x) + len(y) - inter
-            out[i] = inter / u if u else 0.0
-        return pd.Series(out)
-
     # Round-4 scale fix: shingle ONLY candidate-pair members
     # (verify_scope='candidates', the default). The verify used to
     # materialize shingle_sets for the WHOLE corpus and shuffle that
@@ -356,11 +335,55 @@ def minhash_lsh(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         .join(sh.select(F.col(id_col).alias("id_b"),
                         F.col("__sh").alias("sb")), on="id_b")
     )
-    return (
-        cand.withColumn("jaccard", _jac("sa", "sb"))
-        .filter(F.col("jaccard") >= float(threshold))
-        .select("id_a", "id_b", "jaccard")
-    )
+    return _verify_pairs(cand, float(threshold))
+
+
+def _pair_jaccard(sa, sb) -> np.ndarray:
+    """Exact Jaccard of each row's two sorted unique shingle sets (Arrow
+    ``list<long>`` arrays of one length), vectorized over the batch: both
+    sides' (row, value) keys are lexsorted together, so a value the two
+    sets share is an adjacent duplicate. Two empty sets give 1.0."""
+    import pyarrow.compute as pc
+
+    n = len(sa)
+    rows = np.concatenate([pc.list_parent_indices(sa).to_numpy(),
+                           pc.list_parent_indices(sb).to_numpy()])
+    vals = np.concatenate([pc.list_flatten(sa).to_numpy(),
+                           pc.list_flatten(sb).to_numpy()])
+    order = np.lexsort((vals, rows))
+    rows = rows[order]
+    vals = vals[order]
+    dup = (rows[1:] == rows[:-1]) & (vals[1:] == vals[:-1])
+    inter = np.bincount(rows[1:][dup], minlength=n)
+    union = (pc.list_value_length(sa).fill_null(0).to_numpy()
+             + pc.list_value_length(sb).fill_null(0).to_numpy() - inter)
+    out = np.ones(n)
+    np.divide(inter, union, out=out, where=union > 0)
+    return out
+
+
+def _verify_pairs(cand: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of the candidate pairs whose shingle sets
+    ``sa``/``sb`` have Jaccard >= threshold, in ONE Arrow pass. A
+    ``withColumn(udf).filter(...)`` on the UDF's output would be pushed
+    below its projection and run the kernel twice."""
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType([cand.schema["id_a"], cand.schema["id_b"],
+                         StructField("jaccard", DoubleType())])
+
+    def fn(it):
+        for batch in it:
+            jac = _pair_jaccard(batch.column("sa"), batch.column("sb"))
+            keep = np.nonzero(jac >= threshold)[0]
+            if len(keep):
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column("id_a").take(keep),
+                     batch.column("id_b").take(keep), pa.array(jac[keep])],
+                    names=["id_a", "id_b", "jaccard"])
+
+    return cand.select("id_a", "id_b", "sa", "sb").mapInArrow(fn, schema)
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",

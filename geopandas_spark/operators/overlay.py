@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_cells, st_is_empty
+from ..functions.st import st_cells
 from ..index.cells import DOMAIN_UNIT
 from .sjoin import (_canonical_cells, _estimate_resolution,
                     _output_columns, _prep_side, _suffix_columns)
@@ -219,70 +219,83 @@ def _intersection_rp_udf(resolution: int, domain, polygonal: bool):
     return _f
 
 
-def _difference_vs_union_udf():
-    """geom minus union(neighbors): binary, array<binary> -> binary."""
+def _difference_vs_union(g, others) -> list:
+    """geom minus union(neighbors), one WKB per row: None for a NULL
+    geom, the geometry itself for a row with no neighbors (NULL
+    ``others``)."""
+    from ..geom import wkb as B
+    from ..geom.clipping import (
+        polygons_rectilinear, rectilinear_boolean,
+    )
+    from ..geom.ragged import GeometryBatchBuilder, POLYGON, MULTIPOLYGON
 
-    @pandas_udf("binary")
-    def _f(g: pd.Series, others: pd.Series) -> pd.Series:
-        from ..geom import wkb as B
-        from ..geom.clipping import (
-            polygons_rectilinear, rectilinear_boolean,
-        )
-        from ..geom.ragged import GeometryBatchBuilder, POLYGON, MULTIPOLYGON
+    out = []
+    for wkb_g, arr in zip(g, others):
+        if wkb_g is None or arr is None:
+            out.append(wkb_g)
+            continue
+        batch = B.from_wkb([wkb_g] + [a for a in arr if a is not None])
+        base = polygons_rectilinear(batch, 0)
+        general = base is None or any(
+            polygons_rectilinear(batch, k) is None
+            for k in range(1, len(batch)))
+        if general:
+            # arbitrary polygons: Martinez-Rueda difference vs each
+            # intersecting neighbor in turn
+            from ..geom.boolean import boolean_rings, group_rings
+            from ..geom.clipping import _all_poly_rings
 
-        out = []
-        for wkb_g, arr in zip(g, others):
-            if wkb_g is None:
-                out.append(None)
-                continue
-            batch = B.from_wkb([wkb_g] + [a for a in arr if a is not None])
-            base = polygons_rectilinear(batch, 0)
-            general = base is None or any(
-                polygons_rectilinear(batch, k) is None
-                for k in range(1, len(batch)))
-            if general:
-                # arbitrary polygons: Martinez-Rueda difference vs each
-                # intersecting neighbor in turn
-                from ..geom.boolean import boolean_rings, group_rings
-                from ..geom.clipping import _all_poly_rings
+            cur = _all_poly_rings(batch, 0)[0]
+            for k in range(1, len(batch)):
+                cur = boolean_rings(cur, _all_poly_rings(batch, k)[0],
+                                    "difference")
+                if not cur:
+                    break
+        else:
+            cur = base
+            for k in range(1, len(batch)):
+                sub = polygons_rectilinear(batch, k)
+                polys = rectilinear_boolean(cur, sub, "difference")
+                cur = [ring for rings in polys for ring in rings]
+                if not cur:
+                    break
+        bld = GeometryBatchBuilder()
+        if not cur:
+            bld.add(POLYGON, [(POLYGON, [])])
+        elif general:
+            from ..geom.boolean import group_rings
 
-                cur = _all_poly_rings(batch, 0)[0]
-                for k in range(1, len(batch)):
-                    cur = boolean_rings(cur, _all_poly_rings(batch, k)[0],
-                                        "difference")
-                    if not cur:
-                        break
-            else:
-                cur = base
-                for k in range(1, len(batch)):
-                    sub = polygons_rectilinear(batch, k)
-                    polys = rectilinear_boolean(cur, sub, "difference")
-                    cur = [ring for rings in polys for ring in rings]
-                    if not cur:
-                        break
-            bld = GeometryBatchBuilder()
-            if not cur:
+            polys = group_rings(cur)
+            if not polys:
                 bld.add(POLYGON, [(POLYGON, [])])
-            elif general:
-                from ..geom.boolean import group_rings
-
-                polys = group_rings(cur)
-                if not polys:
-                    bld.add(POLYGON, [(POLYGON, [])])
-                elif len(polys) == 1:
-                    bld.add(POLYGON, [(POLYGON, polys[0])])
-                else:
-                    bld.add(MULTIPOLYGON, [(POLYGON, r) for r in polys])
+            elif len(polys) == 1:
+                bld.add(POLYGON, [(POLYGON, polys[0])])
             else:
-                polys = rectilinear_boolean(cur, cur, "intersection")
-                if not polys:
-                    bld.add(POLYGON, [(POLYGON, [])])
-                elif len(polys) == 1:
-                    bld.add(POLYGON, [(POLYGON, polys[0])])
-                else:
-                    bld.add(MULTIPOLYGON, [(POLYGON, r) for r in polys])
-            out.append(B.to_wkb(bld.finish())[0])
-        return pd.Series(out)
+                bld.add(MULTIPOLYGON, [(POLYGON, r) for r in polys])
+        else:
+            polys = rectilinear_boolean(cur, cur, "intersection")
+            if not polys:
+                bld.add(POLYGON, [(POLYGON, [])])
+            elif len(polys) == 1:
+                bld.add(POLYGON, [(POLYGON, polys[0])])
+            else:
+                bld.add(MULTIPOLYGON, [(POLYGON, r) for r in polys])
+        out.append(B.to_wkb(bld.finish())[0])
+    return out
+
+
+def _difference_vs_union_udf():
+    """``_difference_vs_union`` as a 0- or 1-element array<binary>: a
+    NULL or empty result gives the empty array, so callers explode it."""
+
+    @pandas_udf("array<binary>")
+    def _f(g: pd.Series, others: pd.Series) -> pd.Series:
+        from ..geom.wkb import from_wkb
+
+        out = _difference_vs_union(g, others)
+        empty = from_wkb(pd.Series(out, dtype=object)).is_empty()
+        return pd.Series([[w] if w is not None and not e else []
+                          for w, e in zip(out, empty)])
 
     return _f
 
@@ -360,20 +373,20 @@ def overlay_candidates(
 def _residuals(src: DataFrame, pairs: DataFrame, src_id: str, other_geom_col: str,
                own_id_col: str, geom: str) -> DataFrame:
     """src rows minus the union of their intersecting counterparts; rows
-    with no counterpart pass through unchanged."""
+    with no counterpart pass through unchanged. Rows whose result is NULL
+    or empty are dropped. One Python node."""
     nb = (
         pairs.groupBy(own_id_col)
         .agg(F.collect_list(other_geom_col).alias("__others"))
         .withColumnRenamed(own_id_col, src_id)
     )
     joined = src.join(nb, on=src_id, how="left")
-    diffed = joined.withColumn(
-        geom,
-        F.when(F.col("__others").isNull(), F.col(geom)).otherwise(
-            _difference_vs_union_udf()(F.col(geom), F.col("__others"))
-        ),
-    ).drop("__others")
-    return diffed.filter(~st_is_empty(geom) & F.col(geom).isNotNull())
+    # explode drops NULL and empty results. A filter on the UDF's output
+    # would be pushed below its projection and run the kernel twice
+    diff = F.explode(_difference_vs_union_udf()(
+        F.col(geom), F.col("__others"))).alias(geom)
+    return joined.select(*[diff if c == geom else F.col(c)
+                           for c in joined.columns if c != "__others"])
 
 
 def overlay(

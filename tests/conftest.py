@@ -9,6 +9,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import SparkSession
 
+from geopandas_spark.conf import DAEMON_MODULE
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -19,6 +21,7 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

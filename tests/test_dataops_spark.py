@@ -1,5 +1,7 @@
 """Training-data operators: dedup, text stats, similarity, multimodal."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -51,6 +53,109 @@ def test_simhash_near_dups(corpus):
     assert (0, 1) in got  # identical -> hamming 0
     h = pairs.set_index(["id_a", "id_b"]).hamming
     assert h[(0, 1)] == 0
+
+
+_PYTHON_NODE = re.compile(r"EvalPython|MapInArrow|MapInPandas")
+
+
+def test_minhash_lsh_one_verify_node(corpus):
+    """The exact-Jaccard verify is one Python node above the two verify
+    joins (a filter on a UDF column is pushed below the projection and
+    ran the UDF twice)."""
+    out = minhash_lsh(corpus, "text", "doc_id", num_perm=64, bands=16,
+                      shingle=4, threshold=0.5)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    above = plan[:plan.index("Join")]
+    assert len(_PYTHON_NODE.findall(above)) == 1, plan
+
+
+def _old_jac():
+    """The verify's per-pair pandas UDF body before it became one
+    vectorized Arrow pass (nested, so workers get it by value)."""
+
+    def _jac(sa: pd.Series, sb: pd.Series) -> pd.Series:
+        out = np.empty(len(sa))
+        for i, (x, y) in enumerate(zip(sa, sb)):
+            x = np.asarray(x, dtype=np.int64)
+            y = np.asarray(y, dtype=np.int64)
+            if len(x) == 0 and len(y) == 0:
+                out[i] = 1.0
+                continue
+            if len(x) > len(y):
+                x, y = y, x
+            idx = np.searchsorted(y, x)
+            idx[idx == len(y)] = 0
+            inter = int((y[idx] == x).sum())
+            u = len(x) + len(y) - inter
+            out[i] = inter / u if u else 0.0
+        return pd.Series(out)
+
+    return _jac
+
+
+def _verify_pairs_frame(spark):
+    rng = np.random.default_rng(5)
+    sets = [[], [], [5], [5], [7], [1, 2, 3], [2, 3, 4]]
+    sets += [np.unique(rng.integers(-40, 40, rng.integers(0, 30))).tolist()
+             for _ in range(40)]
+    pairs = [(0, 1), (0, 2), (2, 3), (3, 4), (5, 6)]  # 1.0, 0, 1.0, 0, 0.5
+    pairs += [(a, b) for a in range(7, 47) for b in range(a + 1, 47)
+              if (a * 7 + b) % 5 == 0]
+    return spark.createDataFrame(pd.DataFrame({
+        "id_a": [a for a, _b in pairs], "id_b": [b for _a, b in pairs],
+        "sa": [sets[a] for a, _b in pairs],
+        "sb": [sets[b] for _a, b in pairs]}),
+        "id_a long, id_b long, sa array<long>, sb array<long>")
+
+
+def test_pair_jaccard_matches_reference_loop():
+    import pyarrow as pa
+
+    from geopandas_spark.operators.dedup import _pair_jaccard
+
+    rng = np.random.default_rng(3)
+    sa, sb = [], []
+    for _ in range(300):
+        x = np.unique(rng.integers(0, 50, rng.integers(0, 12)))
+        y = np.unique(rng.integers(0, 50, rng.integers(0, 12)))
+        sa.append(x.tolist())
+        sb.append(y.tolist())
+    sa += [[], [], [9]]
+    sb += [[], [9], [9]]
+    t = pa.list_(pa.int64())
+    got = _pair_jaccard(pa.array(sa, t), pa.array(sb, t))
+    want = _old_jac()(pd.Series(sa), pd.Series(sb)).to_numpy()
+    assert np.array_equal(got, want)
+    assert list(got[-3:]) == [1.0, 0.0, 1.0]
+    # a slice keeps its own rows
+    sl = _pair_jaccard(pa.array(sa, t).slice(100, 50),
+                       pa.array(sb, t).slice(100, 50))
+    assert np.array_equal(sl, want[100:150])
+
+
+def test_verify_pairs_matches_udf_and_filter(spark):
+    from pyspark.sql.functions import pandas_udf
+
+    from geopandas_spark.operators.dedup import _verify_pairs
+
+    cand = _verify_pairs_frame(spark)
+    jac = pandas_udf(_old_jac(), "double")
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.collect())
+
+    for threshold in (0.0, 0.5, 0.7):
+        old = (cand.withColumn("jaccard", jac("sa", "sb"))
+               .filter(F.col("jaccard") >= threshold)
+               .select("id_a", "id_b", "jaccard"))
+        new = _verify_pairs(cand, threshold)
+        assert new.columns == ["id_a", "id_b", "jaccard"]
+        got = rows(new)
+        assert got == rows(old)
+        if threshold == 0.5:
+            assert (5, 6, 0.5) in got and (0, 1, 1.0) in got
+            assert (2, 3, 1.0) in got and not {(0, 2), (3, 4)} & {
+                r[:2] for r in got}
 
 
 def test_ngram_jaccard(corpus):

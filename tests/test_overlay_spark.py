@@ -2,6 +2,8 @@
 (tools/overlay.py:124-165 docstring literals; tests/test_overlay.py goldens
 are the same two offset 2x2 square grids)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -303,3 +305,99 @@ def test_overlay_narrow_matches_join(spark, star_frames, monkeypatch, path,
     assert "EvalPython" not in p and "Join" not in p, p
     assert "Join" in plan(joined)
 
+
+
+@pytest.fixture(scope="module")
+def residual_frames(spark):
+    """df1 rows whose residual is partial (0), empty (1: covered by a df2
+    row), kept whole (2: no counterpart), or dropped without a
+    counterpart (3: empty geometry, 4: NULL geometry)."""
+    w1 = B.to_wkb(W.from_wkt([_square(0.1, 0.1, 0.2),
+                              _square(0.5, 0.5, 0.1),
+                              _square(0.8, 0.8, 0.1), "POLYGON EMPTY"]))
+    w2 = B.to_wkb(W.from_wkt([_square(0.2, 0.2, 0.2),
+                              _square(0.45, 0.45, 0.2)]))
+    df1 = spark.createDataFrame(pd.DataFrame({
+        "i": range(5), "geometry": [*w1, None], "a": list("abcde")}),
+        "i long, geometry binary, a string")
+    df2 = spark.createDataFrame(pd.DataFrame({
+        "j": range(2), "geometry": list(w2)}))
+    return df1, df2
+
+
+def _python_nodes(d):
+    plan = d._jdf.queryExecution().executedPlan().toString()
+    return re.findall(r"(?:EvalPython|MapInArrow|MapInPandas) \[[^\]]*\]",
+                      plan)
+
+
+@pytest.mark.parametrize("how", ["difference", "symmetric_difference",
+                                 "identity", "union"])
+def test_overlay_residuals_one_python_node(residual_frames, how):
+    """Each residual side is one Python node: the difference kernel drops
+    NULL and empty results itself (a filter on its output ran it twice,
+    plus an st_is_empty node)."""
+    df1, df2 = residual_frames
+    out = overlay(df1, df2, how=how, id1="i", id2="j", make_valid=False)
+    nodes = _python_nodes(out)
+    sides = 2 if how in ("symmetric_difference", "union") else 1
+    assert sum("__others" in n for n in nodes) == sides, nodes
+    # the rest is keep_geom_type's st_geometry_type filter, pushed into
+    # each unioned piece (difference skips it): no st_is_empty node
+    pieces = {"difference": 0, "identity": 2, "symmetric_difference": 2,
+              "union": 3}[how]
+    assert len(nodes) == sides + pieces, nodes
+    if how == "difference":
+        rows = out.collect()
+        assert out.columns == ["i", "geometry", "a"]
+        assert sorted(r["i"] for r in rows) == [0, 2]
+
+
+def test_residuals_match_old_filters(spark, residual_frames, star_frames):
+    """The exploded kernel gives the rows of the former form: the
+    difference UDF under ``when(others is NULL)`` and a filter dropping
+    empty and NULL results."""
+    from pyspark.sql.functions import pandas_udf
+
+    from geopandas_spark.functions.st import st_is_empty
+    from geopandas_spark.operators.overlay import (
+        _difference_vs_union, _residuals, overlay_candidates)
+
+    def _diff(g: pd.Series, others: pd.Series) -> pd.Series:
+        return pd.Series(_difference_vs_union(g, others))
+
+    diff = pandas_udf(_diff, "binary")
+
+    def old(src, pairs):
+        nb = (pairs.groupBy("__i1")
+              .agg(F.collect_list("__g2").alias("__others"))
+              .withColumnRenamed("__i1", "i"))
+        return (src.join(nb, on="i", how="left")
+                .withColumn("geometry", F.when(
+                    F.col("__others").isNull(), F.col("geometry")).otherwise(
+                    diff(F.col("geometry"), F.col("__others"))))
+                .drop("__others")
+                .filter(~st_is_empty("geometry")
+                        & F.col("geometry").isNotNull()))
+
+    def rows(d):
+        return sorted(tuple(bytes(v) if isinstance(v, (bytes, bytearray))
+                            else v for v in r) for r in d.collect())
+
+    df1, df2 = residual_frames
+    pairs = spark.createDataFrame(
+        pd.DataFrame({"__i1": [0, 1], "__g2": [r["geometry"] for r in
+                                                df2.orderBy("j").collect()]}))
+    p1, p2 = star_frames
+    s1 = spark.createDataFrame(p1.assign(i=range(len(p1))))
+    s2 = spark.createDataFrame(p2.assign(j=range(len(p2))))
+    # every bbox-overlapping neighbor (a disjoint one subtracts nothing)
+    star_pairs = (overlay_candidates(s1, s2, id1="i", id2="j")
+                  .join(s2.withColumnRenamed("geometry", "__g2"), on="j")
+                  .select(F.col("i").alias("__i1"), "__g2"))
+    for src, prs, n in ((df1, pairs, 2), (s1, star_pairs, 30)):
+        new = _residuals(src, prs, "i", "__g2", "__i1", "geometry")
+        want = old(src, prs)
+        assert new.columns == want.columns
+        got = rows(new)
+        assert got == rows(want) and len(got) >= n

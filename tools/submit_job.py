@@ -9,7 +9,12 @@ Build the dependency zip, then:
         --docs 10000 --workdir /tmp/gs_job
 
 On a real cluster the same command targets yarn/k8s; nothing below is
-local-mode specific. The job is the north-star pipeline spine: synthesize
+local-mode specific. There, also pass
+``--conf spark.python.daemon.module=geopandas_spark._pydaemon`` (what
+``conf.get_spark`` sets): the engine's daemon entry point stops every
+task from re-reading ``pyspark.zip``'s directory. The daemon imports it
+at start, so ``geopandas_spark`` must be on the executors' Python path
+then (an installed package or ``PYTHONPATH``). The job is the north-star pipeline spine: synthesize
 (or read) interleaved documents -> extract geometry from text spans ->
 cell-index -> points-in-tiles spatial join -> checkpointed, lineage-
 tracked outputs that resume idempotently (plans/pipeline.py).
