@@ -127,6 +127,19 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     return df.withColumn(out_col, _sig(F.col(text_col)))
 
 
+def _id_signatures(df: DataFrame, text_col: str, id_col: str,
+                   num_perm: int, shingle: int, seed: int) -> DataFrame:
+    """(__id, minhash) for every document whose text is not NULL, the
+    rows ``minhash_lsh`` bands. The NULL filter sits on ``text`` BELOW the
+    signature UDF: ``_sig`` returns NULL only for NULL text, so the rows
+    are those of a filter on the UDF's output, but a filter on
+    ``minhash`` would be pushed below the projection and run ``_sig``
+    twice (two ``ArrowEvalPython`` nodes)."""
+    return minhash_signatures(
+        df.filter(F.col(text_col).isNotNull()), text_col, num_perm, shingle,
+        seed).select(F.col(id_col).alias("__id"), "minhash")
+
+
 def shingle_sets(df: DataFrame, text_col: str, id_col: str,
                  k: int, out_col: str = "__sh") -> DataFrame:
     """(id, sorted unique k-byte-shingle hashes) — computed ONCE per doc
@@ -268,9 +281,10 @@ def minhash_lsh(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
 
     df = widen(df)
     r = num_perm // bands
-    sigs = minhash_signatures(df, text_col, num_perm, shingle, seed).select(
-        F.col(id_col).alias("__id"), "minhash"
-    ).filter(F.col("minhash").isNotNull())
+    # NULL-text documents are filtered on the text, below the signature
+    # UDF, so _sig runs once per document (_id_signatures); the verify
+    # below still shingles the unfiltered frame
+    sigs = _id_signatures(df, text_col, id_col, num_perm, shingle, seed)
     banded = sigs.select(
         "__id",
         F.posexplode(
@@ -476,22 +490,37 @@ def simhash_near_dups(df: DataFrame, text_col: str = "text",
 
 
 def _word_ngrams(text_col: str, n: int):
-    """Distinct word-n-gram array, pure Catalyst: lowercase, whitespace
-    tokenize, sliding join of n tokens. Documents shorter than n tokens
-    contribute their whole text as one gram (so they still participate
-    in overlap checks). Shared by ngram_jaccard and decontaminate; the
-    SQL oracles mirror this expression exactly."""
-    # regex-strip the ends (F.trim removes only ASCII spaces: a trailing
-    # newline/tab would otherwise leave a phantom '' token in every gram)
-    toks = F.split(
+    """Distinct word-n-gram array, in first-occurrence order: lowercase,
+    regex-strip the ends (``F.trim`` removes only ASCII spaces: a trailing
+    newline/tab would otherwise leave a phantom '' token), collapse every
+    ``\\s+`` run to one space, then take all grams in one regex pass::
+
+        regexp_extract_all(norm, '(?:^| )(?=([^ ]+ [^ ]+ ...))', 1)
+
+    with ``n`` copies of ``[^ ]+``. Each match is the text start or the
+    one space before a token; the lookahead captures the next ``n`` tokens
+    without consuming them, so overlapping grams all come out. (A
+    zero-width ``(?<![^ ])`` anchor would also match between the two
+    halves of a surrogate pair, since the scan steps one UTF-16 unit past
+    an empty match, and emit a gram starting mid-character.) Every step
+    is a codegen'd expression: a ``transform``/``slice`` lambda would be
+    evaluated in the interpreter once per gram.
+
+    Documents shorter than ``n`` tokens contribute their whole normalised
+    text as one gram (so they still take part in overlap checks); so do
+    empty and whitespace-only texts (``['']``, also for ``n=1``) and NULL
+    text (``['']``: ``concat_ws`` skips the NULL). Shared by
+    ``ngram_jaccard`` and ``decontaminate``; the SQL oracles mirror the
+    split + sliding-join form, which gives the same arrays."""
+    norm = F.regexp_replace(
         F.regexp_replace(F.lower(F.col(text_col)), r"^\s+|\s+$", ""),
-        r"\s+")
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(F.transform(
-            F.sequence(F.lit(0), F.size(toks) - n),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
-        ))).otherwise(F.array(F.concat_ws(" ", toks)))
+        r"\s+", " ")
+    grams = F.regexp_extract_all(
+        norm, F.lit(r"(?:^| )(?=(" + " ".join([r"[^ ]+"] * n) + "))"), 1)
+    # size(NULL) is NULL and an empty norm has no token match: both take
+    # the otherwise branch
+    return F.when(F.size(grams) > 0, F.array_distinct(grams)).otherwise(
+        F.array(F.concat_ws(" ", norm)))
 
 
 def decontaminate(df: DataFrame, benchmark: DataFrame,
@@ -532,8 +561,9 @@ def ngram_jaccard(df: DataFrame, text_col: str = "text",
                   max_df: int | None = 10_000) -> DataFrame:
     """Exact word-n-gram Jaccard similarity pairs (id_a, id_b, jaccard).
 
-    Pure Catalyst (zero Python UDFs — every stage is JVM codegen):
-    tokenize + n-gram via ``transform``/``slice``, explode DISTINCT
+    Pure Catalyst, zero Python UDFs and no lambda functions, so every
+    expression is whole-stage codegen: the grams come from one
+    ``regexp_extract_all`` (``_word_ngrams``), then explode DISTINCT
     n-grams, self-join on the n-gram, and compute
     ``|A ∩ B| / (|A| + |B| - |A ∩ B|)`` from group counts. N-grams whose
     document frequency exceeds ``max_df`` are dropped before the join

@@ -18,10 +18,12 @@ to the driver as a local path, as ``meta.json`` already requires.
 ``_lineage`` files written by Spark in older workdirs have the same
 columns and read back in the same table.
 
-``meta.json`` also keeps the schema the committed output reads back
-with, so a resume, and a later stage reading this one as an input, read
-the data without a schema-inference job: a resumed stage starts no
-Spark job.
+The frame a run returns is read with the schema Spark wrote into the
+output's parquet footers (the ``org.apache.spark.sql.parquet.row.metadata``
+key the inferring read takes it from), read by the driver, so the run
+adds no schema-inference job either. ``meta.json`` keeps that schema, so
+a resume, and a later stage reading this one as an input, read the data
+without one too: a resumed stage starts no Spark job.
 
 This is the parquet-backed analogue of the Iceberg snapshot + metadata
 design in SURVEY.md §3 EP3 (no Iceberg runtime in this environment; the
@@ -55,6 +57,9 @@ _LINEAGE_SCHEMA = pa.schema([
 ])
 
 
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
 def _file_counts(uris: list[str]) -> list[tuple[str, int]]:
     """(file, rows) per non-empty parquet file, from its footer. ``uris``
     come from ``DataFrame.inputFiles()``, which spells each file exactly
@@ -68,6 +73,29 @@ def _file_counts(uris: list[str]) -> list[tuple[str, int]]:
         if n:
             out.append((uri, n))
     return out
+
+
+def _written_schema(data_dir: str) -> StructType | None:
+    """The data columns' schema Spark wrote into the footer of a data
+    file under ``data_dir`` (partition directories included), or
+    None when there is no file or it lacks the key. Given to the reader,
+    it yields the schema the inferring read gives: that read takes the
+    same key from one footer, and partition columns are inferred from the
+    directory names either way."""
+    for root, dirs, files in os.walk(data_dir):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for name in sorted(files):
+            if name.startswith(("_", ".")):
+                continue
+            meta = pq.read_schema(os.path.join(root, name)).metadata or {}
+            key = meta.get(_SPARK_SCHEMA_KEY)
+            return StructType.fromJson(json.loads(key)) if key else None
+    return None
+
+
+def _stored_schema(meta: dict) -> StructType | None:
+    """The output schema a stage's run kept in its ``meta.json``."""
+    return StructType.fromJson(meta["schema"]) if "schema" in meta else None
 
 
 def _append_lineage(lineage_dir: str, rows: list[tuple[str, int]],
@@ -116,14 +144,14 @@ class Pipeline:
         except FileNotFoundError:
             return {}
 
-    def _read(self, data_dir: str, meta: dict) -> DataFrame:
-        """A stage's data, read with the schema its run stored in
-        ``meta.json``: a parquet read that must infer the schema starts a
-        Spark job to read the footers. A ``meta.json`` without one (older
-        workdirs) falls back to inference."""
+    def _read(self, data_dir: str, schema: StructType | None) -> DataFrame:
+        """A stage's data, read with ``schema``: a parquet read that must
+        infer the schema starts a Spark job to read the footers. Without
+        one (a ``meta.json`` of an older workdir, a footer without Spark's
+        key) the read falls back to inference."""
         reader = self.spark.read
-        if "schema" in meta:
-            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(data_dir)
 
     def stage(
@@ -157,7 +185,7 @@ class Pipeline:
             os.path.join(data_dir, "_SUCCESS")
         ):
             self._fps[stage] = fp
-            return self._read(data_dir, meta)
+            return self._read(data_dir, _stored_schema(meta))
         # (re)run. Invalidate the old meta FIRST: the data write below
         # overwrites data_dir, and a crash between that write and the
         # new meta write must not leave the previous fingerprint paired
@@ -167,14 +195,15 @@ class Pipeline:
             os.remove(meta_path)
         t0 = time.time()
         in_dfs = {i: self._read(os.path.join(self._stage_dir(i), "data"),
-                                self._meta(i)) for i in inputs}
+                                _stored_schema(self._meta(i)))
+                  for i in inputs}
         df = fn(self.spark, in_dfs)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(data_dir)
         wall = time.time() - t0
-        out = self.spark.read.parquet(data_dir)
+        out = self._read(data_dir, _written_schema(data_dir))
         # lineage: per-output-file row counts (the parquet file is the
         # partition unit a resume would re-read), read from the committed
         # files' footers and appended by the driver, so no Spark job reads

@@ -181,6 +181,103 @@ def test_word_ngrams_edge_whitespace(spark):
     assert len(pairs) == 1 and pairs.jaccard[0] == 1.0
 
 
+def _lambda_word_ngrams(text_col, n):
+    """The split + ``transform``/``slice`` form ``_word_ngrams`` had before
+    it became one regex extract: the reference its arrays must equal."""
+    toks = F.split(
+        F.regexp_replace(F.lower(F.col(text_col)), r"^\s+|\s+$", ""),
+        r"\s+")
+    return F.when(
+        F.size(toks) >= n,
+        F.array_distinct(F.transform(
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
+        ))).otherwise(F.array(F.concat_ws(" ", toks)))
+
+
+_NGRAM_TEXTS = [
+    None, "", " ", "\n\t", "\r\n \t\r\n",
+    "alpha", "alpha beta", "alpha beta gamma",
+    "one two three four five six seven eight",
+    "one two three four five six seven eight nine",
+    "\t alpha \r\n beta\t\tgamma   delta \r\n",
+    "  lead\tand\r\ntrail  ", "\nx\ty\r\n",
+    "The QUICK Brown fOX", "ÄPFEL Straße ÉCOLE naïve ΣΊΣΥΦΟΣ Ünïcödé",
+    "nbsp\u00a0inside a token", "🙂 smile 🙂 smile 🙂",
+    "line sep\u2028", "a b \u2028", "next line\u0085 ",
+    "a.b c*d (e) [f] g+h ? ^i$ \\j | k{2} $1 \\1 (?=x) [^ ]+",
+    "a b a b a b a b a b",
+    "to be or not to be to be or not to be",
+    "x x x x x x x x x x x x",
+]
+
+
+@pytest.mark.parametrize("n", [1, 2, 3, 8])
+def test_word_ngrams_match_lambda_form(spark, n):
+    """Differential: the regex-extract grams equal the lambda form's
+    arrays exactly, order included, on NULL, empty, whitespace-only,
+    short, mixed-whitespace, non-ASCII, regex-metacharacter and
+    repeated-gram texts."""
+    from geopandas_spark.operators.dedup import _word_ngrams
+
+    df = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": range(len(_NGRAM_TEXTS)), "text": _NGRAM_TEXTS}))
+    got = df.select("doc_id", _word_ngrams("text", n).alias("new"),
+                    _lambda_word_ngrams("text", n).alias("old")
+                    ).orderBy("doc_id").collect()
+    assert len(got) == len(_NGRAM_TEXTS)
+    for r in got:
+        assert r["new"] == r["old"], (_NGRAM_TEXTS[r["doc_id"]], n)
+    # the two rules the regex form routes explicitly
+    assert got[0]["new"] == [""]                     # NULL text
+    assert got[2]["new"] == [""]                     # whitespace only
+
+
+def test_word_ngram_plans_have_no_lambda(corpus, monkeypatch):
+    """ngram_jaccard and decontaminate build their grams without a
+    higher-order-function lambda (evaluated in the interpreter, once per
+    gram). localCheckpoint is made a no-op so the analyzed plan keeps the
+    gram projection instead of a LogicalRDD."""
+    from geopandas_spark.operators.dedup import decontaminate
+
+    monkeypatch.setattr(type(corpus), "localCheckpoint",
+                        lambda self, eager=True, storageLevel=None: self)
+    for q in (ngram_jaccard(corpus, "text", "doc_id", n=3),
+              decontaminate(corpus, corpus.limit(2), n=3)):
+        plan = q._jdf.queryExecution().analyzed().toString().lower()
+        assert "regexp_extract_all" in plan
+        assert "lambdafunction" not in plan
+
+
+def test_minhash_signatures_one_python_pass(spark):
+    """The rows minhash_lsh bands come from ONE signature UDF node (the
+    NULL filter sits on the text, below it) and equal those of the
+    filter on the UDF's output, on NULL, empty and shorter-than-shingle
+    texts."""
+    from geopandas_spark.operators.dedup import (_id_signatures,
+                                                 minhash_signatures)
+
+    texts = [None, "", "abc", "abcd", "abcde", "The quick brown fox",
+             None, "the quick brown fox", "  \n", "hello world again"]
+    df = spark.createDataFrame(pd.DataFrame(
+        {"doc_id": range(len(texts)), "text": texts}))
+    new = _id_signatures(df, "text", "doc_id", 32, 5, 1)
+    old = (minhash_signatures(df, "text", 32, 5, 1)
+           .select(F.col("doc_id").alias("__id"), "minhash")
+           .filter(F.col("minhash").isNotNull()))
+    got = sorted((r["__id"], r["minhash"]) for r in new.collect())
+    assert got == sorted((r["__id"], r["minhash"]) for r in old.collect())
+    assert [i for i, _m in got] == [i for i, t in enumerate(texts)
+                                    if t is not None]
+
+    def python_nodes(q):
+        return q._jdf.queryExecution().executedPlan().toString().count(
+            "ArrowEvalPython")
+
+    assert python_nodes(old) == 2     # the pushed-down filter's own pass
+    assert python_nodes(new) == 1
+
+
 def test_hot_bucket_star_mitigation(spark):
     """10k identical docs: candidate pairs stay O(n), not O(n^2), and the
     duplicates remain transitively linked through the representative."""

@@ -284,12 +284,14 @@ def test_pipeline_lineage_schema_and_legacy_files(spark, tmp_path):
 
 
 def test_pipeline_stage_job_budget(spark, tmp_path):
-    """A stage run starts one Spark job beyond its own write (the schema
-    read behind the returned frame); a resume reads with the schema kept
-    in meta.json and starts none, and returns the schema the inferring
-    read gives (names, types, order, nullability, partition columns
-    included); a stage reads its input stages the same way. A meta.json
-    without a schema falls back to inference."""
+    """A stage run starts no Spark job beyond its own write: the returned
+    frame is read with the schema Spark wrote into the output's footers.
+    A resume reads with the schema kept in meta.json and starts none.
+    Both return the schema the inferring read gives (names, types, order,
+    nullability, partition columns included), also for an empty output
+    and a workdir path that needs URI escaping; a stage reads its input
+    stages the same way. A meta.json without a schema falls back to
+    inference."""
     import json
     import os
     import uuid
@@ -305,36 +307,48 @@ def test_pipeline_stage_job_budget(spark, tmp_path):
             sc._jsc.clearJobGroup()
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
-    wd = str(tmp_path / "wd")
+    wd = str(tmp_path / "a b%c+d")
     frames = _stage_frames()
-    for case in ("multi_file", "partition_by"):
+    cases = ("multi_file", "partition_by", "empty")
+
+    def fields(df):
+        return [(f.name, f.dataType, f.nullable) for f in df.schema]
+
+    def check(case, df):
+        inferred = spark.read.parquet(os.path.join(wd, case, "data"))
+        assert fields(df) == fields(inferred), case
+        assert sorted(df.collect()) == sorted(inferred.collect()), case
+
+    ran = {}
+    for case in cases:
         fn, part = frames[case]
         writer = fn(spark, {}).write
         if part:
             writer = writer.partitionBy(*part)
         write_jobs = jobs(lambda: writer.parquet(str(tmp_path / case)))
-        stage_jobs = jobs(lambda: Pipeline(spark, wd, "jobs").stage(
-            case, fn, partition_by=part))
-        assert stage_jobs == write_jobs + 1, (case, write_jobs, stage_jobs)
+
+        def run():
+            ran[case] = Pipeline(spark, wd, "jobs").stage(
+                case, fn, partition_by=part)
+
+        stage_jobs = jobs(run)
+        assert stage_jobs == write_jobs, (case, write_jobs, stage_jobs)
+        check(case, ran[case])
 
     resumed = {}
 
     def resume():
         p = Pipeline(spark, wd, "jobs")
-        for case in ("multi_file", "partition_by"):
+        for case in cases:
             fn, part = frames[case]
             resumed[case] = p.stage(case, fn, partition_by=part)
 
     assert jobs(resume) == 0
 
-    def fields(df):
-        return [(f.name, f.dataType, f.nullable) for f in df.schema]
-
     for case, df in resumed.items():
-        inferred = spark.read.parquet(os.path.join(wd, case, "data"))
-        assert fields(df) == fields(inferred), case
-        assert sorted(df.collect()) == sorted(inferred.collect())
+        check(case, df)
     assert [f.name for f in resumed["partition_by"].schema] == ["id", "k"]
+    assert resumed["empty"].count() == 0
 
     # a stage reading a stored stage as its input adds no schema job
     src = resumed["multi_file"]
@@ -347,7 +361,7 @@ def test_pipeline_stage_job_budget(spark, tmp_path):
         p.stage("multi_file", frames["multi_file"][0])
         p.stage("child", lambda _sp, i: i["multi_file"], inputs=["multi_file"])
 
-    assert jobs(child) == copy_jobs + 1
+    assert jobs(child) == copy_jobs
 
     meta_path = os.path.join(wd, "partition_by", "meta.json")
     with open(meta_path) as f:
