@@ -29,6 +29,23 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def count_builds(monkeypatch):
+    """Every BuildIndex constructed (= broadcast plans taken), in order;
+    each keeps its ``.resolution``."""
+    from geopandas_spark.operators import _buildindex
+
+    built = []
+    orig = _buildindex.BuildIndex.__init__
+
+    def spy(self, *a, **k):
+        orig(self, *a, **k)
+        built.append(self)
+
+    monkeypatch.setattr(_buildindex.BuildIndex, "__init__", spy)
+    return built
+
+
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)

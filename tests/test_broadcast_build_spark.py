@@ -149,20 +149,6 @@ def test_collect_build_bounded(spark):
     assert _buildindex.collect_build(rp, rid, "geometry").n == 12
 
 
-@pytest.fixture
-def count_builds(monkeypatch):
-    """Counts BuildIndex constructions (= broadcast plans taken)."""
-    calls = []
-    orig = _buildindex.BuildIndex.__init__
-
-    def spy(self, *a, **k):
-        calls.append(1)
-        orig(self, *a, **k)
-
-    monkeypatch.setattr(_buildindex.BuildIndex, "__init__", spy)
-    return calls
-
-
 def _rects(r, n, w=0.08):
     out = []
     for _ in range(n):
