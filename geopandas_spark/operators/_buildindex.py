@@ -19,8 +19,9 @@ per grid row it spans. Soundness: ``_grid_ij`` is monotone (floor, then
 clamp), so two bboxes that overlap (or touch) share at least one cell.
 
 The driver collects the build side once (``collect_build``, one job,
-bounded by the caller's row cap) and keys that table (``BuildIndex``);
-the caller's broadcast decision reads the same table's stats. Each worker
+bounded by the row cap) and keys that table (``BuildIndex``); the join
+planner (operators/_planner.py) sizes the build, decides the broadcast
+from the same table's stats and picks the resolution. Each worker
 process decodes it once into a ``_Build`` held in a small bounded cache
 keyed by the index's uuid, and reuses it across tasks.
 """
@@ -59,7 +60,7 @@ def bbox_partial(bb: np.ndarray) -> list:
 
 
 def combine_partials(rows) -> dict:
-    """``sjoin._side_stats``'s dict (n, avg/max width and height) of one
+    """``_planner._side_stats``'s dict (n, avg/max width and height) of one
     side from its ``bbox_partial`` rows; no extent at all gives 0.0."""
     p = np.asarray(rows, dtype=np.float64).reshape(-1, 7)
     out = {"n": int(p[:, 0].sum())}
@@ -89,7 +90,7 @@ class BuildTable:
             for c in _BB]).reshape(self.n, 4)
 
     def stats(self) -> dict:
-        """``sjoin._side_stats``'s dict for this side, from the
+        """``_planner._side_stats``'s dict for this side, from the
         collected bboxes."""
         return combine_partials([bbox_partial(self.bb)])
 

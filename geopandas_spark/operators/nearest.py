@@ -10,36 +10,32 @@ sindex.nearest, sindex.py:220-311):
 * ``distance_col`` optionally emits the exact distance;
 * ``exclusive=True`` drops matches whose geometry equals the left geometry.
 
-Two physical plans behind one operator, decided from the right side's
-stats (mirroring sjoin — UDF-derived sizes defeat AQE's own estimation):
-one bounded Arrow collect of the right side gives them and, on the
-broadcast path, the build index too; only an overflowing right side
-runs a one-job stats pass instead.
+Two physical plans behind one operator, chosen by the join planner
+(operators/_planner.py, ``plan_nearest``) from the right side's stats.
 
-**Broadcast path** (right side's exploded cover under
-BROADCAST_EXPLODED_ROWS — the common case; round-4 north-rule
-restructure): the right side is Arrow-collected once into the grid-row
-build index shared with sjoin, overlay and both stream joins
-(operators/_buildindex.py), and the WHOLE join is ONE ``mapInPandas``
-over the left. Per probe batch, a Chebyshev-k disk is one contiguous
-searchsorted range per grid row over the sorted keys; certified rows
-(best d + lrad < cell) emit ties immediately, the uncertified tail
-escalates its disk geometrically IN-KERNEL and finishes with one
-exhaustive probe at ceil((d+lrad)/cell)+1 — no union, no shuffle, no
-tail joins. Giant build rows whose bbox overflows max_cells ride along
-as unconditional candidates of every probe ("always-rows"). The build
-collect is the one eager Spark job; the probe stage is embarrassingly
-parallel (measured 2->8 scaling moved from 0.22 to the sjoin-class
-regime, tools/knn_profile.py).
+**Broadcast path** (a small puntal or lineal right side — the common
+case; round-4 north-rule restructure): the right side is Arrow-collected
+once into the grid-row build index shared with sjoin, overlay and both
+stream joins (operators/_buildindex.py), and the WHOLE join is ONE
+``mapInPandas`` over the left. Per probe batch, a Chebyshev-k disk is
+one contiguous searchsorted range per grid row over the sorted keys;
+certified rows (best d + lrad < cell) emit ties immediately, the
+uncertified tail escalates its disk geometrically IN-KERNEL and finishes
+with one exhaustive probe at ceil((d+lrad)/cell)+1 — no union, no
+shuffle, no tail joins. Giant build rows whose bbox overflows max_cells
+ride along as unconditional candidates of every probe ("always-rows").
+The build collect is the one eager Spark job; the probe stage is
+embarrassingly parallel (measured 2->8 scaling moved from 0.22 to the
+sjoin-class regime, tools/knn_profile.py).
 
-**Shuffle path** (huge right side): right covers its bbox cells at
-resolution R and replicates each row to the Chebyshev disk(1) of its
-cover; left rows take their bbox-midpoint cell; both sides union-tag,
-hash-partition by cell, and ONE ``mapInPandas`` pass computes exact
-per-cell distances (segment-vectorized, streaming). Certified rows (d +
-lrad < cell) finish there; the tail probes a directory-driven exact
-radius. The grid clamps to the largest bbox's full-res cover so no
-build row hides behind the coarse-cover fallback.
+**Shuffle path** (a huge, areal or mixed right side): right covers its
+bbox cells at resolution R and replicates each row to the Chebyshev
+disk(1) of its cover; left rows take their bbox-midpoint cell; both
+sides union-tag, hash-partition by cell, and ONE ``mapInPandas`` pass
+computes exact per-cell distances (segment-vectorized, streaming).
+Certified rows (d + lrad < cell) finish there; the tail probes a
+directory-driven exact radius. The grid clamps to the largest bbox's
+full-res cover so no build row hides behind the coarse-cover fallback.
 
 Both plans share the same certify/probe maths, so results are
 bit-identical (pinned by test_broadcast_vs_shuffle_parity).
@@ -54,12 +50,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_cells_from_bbox
-from ..index.cells import DOMAIN_UNIT, MAX_RES, cell_size, pick_resolution
-from ._buildindex import collect_build
-from .sjoin import (BROADCAST_EXPLODED_ROWS, _assemble, _est_exploded,
-                    _min_cover_res, _output_columns, _prep_side,
-                    _side_stats, _widen_build)
+from ..index.cells import DOMAIN_UNIT, cell_size
+from ._planner import plan_nearest
+from .sjoin import _assemble, _output_columns, _prep_side, _widen_build
 
 
 def _wkb_equal(a, b) -> np.ndarray:
@@ -474,22 +467,6 @@ def _nocand_probes(nanrows, rxp, _disk_probe, resolution, min_cell,
 # from local[2] to local[8], 2->8 scaling ~0.22), while the broadcast
 # probe scaled at 0.83-0.93 on the same host: 11 Spark jobs become 3.
 # ---------------------------------------------------------------------------
-
-
-def _all_lineal_headers(prefixes: list[str]) -> bool:
-    """True iff every distinct 5-byte WKB header (hex) in the build side
-    decodes to a (Multi)LineString type code — ISO Z/M offsets and EWKB
-    flags stripped. Empty set (no non-null geometries) -> False."""
-    if not prefixes:
-        return False
-    for h in prefixes:
-        if len(h) < 10:
-            return False
-        b = bytes.fromhex(h)
-        raw = int.from_bytes(b[1:5], "little" if b[0] == 1 else "big")
-        if (raw & 0x0FFFFFFF) % 1000 not in (2, 5):
-            return False
-    return True
 
 
 def _broadcast_knn(probe: DataFrame, table, resolution: int, domain,
@@ -970,81 +947,13 @@ def sjoin_nearest(
 
     left, lid = _prep_side(left, left_geom, left_id, "l")
     right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
-
-    # The right side's stats size the grid AND decide the broadcast path
-    # (UDF-derived sizes defeat AQE's auto-broadcast estimation, so the
-    # operator decides from stats, mirroring sjoin). Unless the caller
-    # forced the shuffle plan, a right side whose plan is small
-    # (``_collect_first``) is Arrow-collected once, bounded at
-    # BROADCAST_MAX_ROWS rows (unbounded when the broadcast is forced):
-    # its count, extents and WKB header set come from that table in
-    # numpy, and a broadcast build is keyed from the same table, all in
-    # one job. A right side over the bound could never pass the
-    # exploded-size test, so it takes the shuffle plan. A larger plan,
-    # and the shuffle plan, are sized by one stats job; a larger build
-    # is collected only if it fits.
-    from .sjoin import BROADCAST_MAX_ROWS, _collect_first
-
-    table = None
-    if broadcast_right or (broadcast_right is None and _collect_first(right)):
-        table = collect_build(
-            right, rid, right_geom,
-            None if broadcast_right else BROADCAST_MAX_ROWS)
-        if table is None:
-            broadcast_right = False
-    rstats = table.stats() if table is not None else _side_stats(
-        right, right_geom)
-    n_right = rstats["n"]
-    if resolution is None:
-        if max_distance is not None:
-            resolution = pick_resolution(max_distance, max_distance,
-                                         domain=domain, target_cells=1.0)
-        else:
-            # ~8 right geometries per cell: dense enough that the k=1 disk
-            # usually holds the true nearest neighbor AND certifies it
-            resolution = int(np.clip(
-                int(np.ceil(np.log2(max(n_right / 8.0, 1)) / 2)), 1, MAX_RES))
+    plan = plan_nearest(right, rid, right_geom, resolution, domain,
+                        broadcast=broadcast_right, max_distance=max_distance)
+    resolution = plan.resolution
     min_cell = min(cell_size(resolution, domain))
-    if broadcast_right is None:
-        # plan choice, not correctness (plans are pinned bit-identical):
-        # the broadcast kernel's per-candidate distance is vectorized
-        # only for puntal (sqrt math) and lineal (segment-soup) builds;
-        # an areal/mixed build pays the general ragged pairwise kernel
-        # per (2k+1)^2-cell candidate block, measured 4-5x slower than
-        # the shuffle plan's one-cell phase-1 on the nearest_line shape
-        # (sf0.1: 28.8 s vs 7.6 s) — keep those on the shuffle plan.
-        # Puntal == zero bbox extents; lineal == every distinct 5-byte
-        # WKB header is a (Multi)LineString code. Both come out of the
-        # collected build — no extra job; a large build that fits is
-        # collected here for its headers.
-        rpuntal = rstats["mw"] == 0.0 and rstats["mh"] == 0.0
-        broadcast_right = (
-            n_right > 0
-            and _est_exploded(rstats, resolution, domain)
-            <= BROADCAST_EXPLODED_ROWS)
-        if broadcast_right and not rpuntal:
-            if table is None:
-                table = collect_build(right, rid, right_geom)
-            broadcast_right = _all_lineal_headers(table.headers())
-    if not broadcast_right:
-        # shuffle path joins on exact fine-res cell equality, so a build
-        # row whose cover fell back to coarser cells (bbox > max_cells
-        # fine cells) would be invisible — clamp the grid to the res the
-        # LARGEST bbox still covers at full res. (The broadcast path
-        # keeps the fine grid and treats giants as always-candidates.)
-        # Correctness must not depend on the caller's resolution hint, so
-        # the max-extent stats are taken even when both hints were
-        # explicit.
-        rres_min = _min_cover_res(rstats, resolution, domain)
-        if rres_min < resolution:
-            resolution = rres_min
-            min_cell = min(cell_size(resolution, domain))
     # later passes over the right side (shuffle kNN, assembly re-join)
     # are map passes: widen it now (ids already fixed)
     right = _widen_build(right, right_geom)
-
-    rcells = st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
-                                "__bb.maxy", resolution, domain=domain)
 
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
@@ -1057,17 +966,16 @@ def sjoin_nearest(
     lid_t = dict(left.dtypes)[lid]
     rid_t = dict(right.dtypes)[rid]
 
-    if broadcast_right:
-        if table is None:  # fits, so n <= BROADCAST_MAX_ROWS
-            table = collect_build(right, rid, right_geom)
+    if plan.table is not None:
         probe = left.select(F.col(lid).alias("__xlid"),
                             F.col(left_geom).alias("__lgeom"))
-        matched = _broadcast_knn(probe, table, resolution, domain, min_cell,
-                                 k_cap, max_distance, exclusive, narrow,
-                                 lid_t, rid_t)
+        matched = _broadcast_knn(probe, plan.table, resolution, domain,
+                                 min_cell, k_cap, max_distance, exclusive,
+                                 narrow, lid_t, rid_t)
     else:
         matched = _shuffle_knn_matched(
-            left, right, lid, rid, left_geom, right_geom, rcells,
+            left, right, lid, rid, left_geom, right_geom,
+            plan.cover("build"),
             resolution, domain, min_cell, k_cap, grid_n, max_distance,
             exclusive, narrow, lid_t, rid_t)
 

@@ -32,10 +32,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_cells
 from ..index.cells import DOMAIN_UNIT
-from .sjoin import (_canonical_cells, _estimate_resolution,
-                    _output_columns, _prep_side, _suffix_columns)
+from ._buildindex import BuildIndex
+from ._planner import JoinPlan, plan_join
+from .sjoin import (_canonical_cells, _output_columns, _prep_side,
+                    _suffix_columns, _widen_build)
 
 VALID_HOW = ("intersection", "union", "identity", "symmetric_difference", "difference")
 
@@ -52,12 +53,12 @@ def _kept(res, polygonal: bool) -> np.ndarray:
     return np.nonzero(keep)[0]
 
 
-def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
-           min1: int | None = None, min2: int | None = None,
+def _pairs(df1, df2, geom1, geom2, id1, id2, plan: JoinPlan,
            pair_on: str | None = None, *, polygonal: bool, geoms: bool):
     """Candidate (__i1, __i2[, __g1, __g2], __inter) pairs via the
-    shuffle cell equi-join — the big x big path (small build sides route
-    through ``_broadcast_probe_intersection`` instead).
+    shuffle cell equi-join on ``plan``'s covers — the big x big path
+    (small build sides route through ``_broadcast_probe_intersection``
+    instead).
 
     Shuffle-free dedup via the reference-point rule (see sjoin): the SAME
     Arrow pass computes the pairwise intersection geometry into
@@ -65,28 +66,11 @@ def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
     dropped), so each pair's WKB is parsed exactly once. ``geoms=False``
     leaves out both input geometries (only the residual stages read
     them)."""
-    from .sjoin import _ancestors_udf
-
-    from ..functions.st import st_cells_from_bbox
-
-    def _cover(df, geom):
-        # reuse the __bb struct when present (no second WKB decode)
-        if "__bb" in df.columns:
-            return st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
-                                      "__bb.maxy", resolution, domain=domain)
-        return st_cells(geom, resolution, domain=domain)
-
-    c1 = _cover(df1, geom1)
-    c2 = _cover(df2, geom2)
-    if min2 is not None and min2 < resolution:
-        c1 = _ancestors_udf(min2)(c1)
-    if min1 is not None and min1 < resolution:
-        c2 = _ancestors_udf(min1)(c2)
     extra1 = [F.col(pair_on)] if pair_on else []
     l1 = df1.select(F.col(id1).alias("__i1"), F.col(geom1).alias("__g1"),
-                    F.explode(c1).alias("__cell"), *extra1)
+                    F.explode(plan.cover("probe")).alias("__cell"), *extra1)
     l2 = df2.select(F.col(id2).alias("__i2"), F.col(geom2).alias("__g2"),
-                    F.explode(c2).alias("__cell"), *extra1)
+                    F.explode(plan.cover("build")).alias("__cell"), *extra1)
     on_keys = ["__cell"] + ([pair_on] if pair_on else [])
     cand = (
         l1.join(l2, on=on_keys, how="inner")
@@ -95,7 +79,8 @@ def _pairs(df1, df2, geom1, geom2, id1, id2, resolution, domain,
     # explode drops the pairs the kernel returns no geometry for. A
     # ``filter(isNotNull)`` on the UDF's output would be pushed below its
     # projection and run the kernel twice
-    inter = F.explode(_intersection_rp_udf(resolution, domain, polygonal)(
+    inter = F.explode(_intersection_rp_udf(
+        plan.resolution, plan.domain, polygonal)(
         F.col("__g1"), F.col("__g2"), F.col("__cell"))).alias("__inter")
     return cand.select("__i1", "__i2",
                        *(["__g1", "__g2"] if geoms else []), inter)
@@ -329,30 +314,14 @@ def overlay_candidates(
     pair (the candidate multiplicity per pair is bounded by the
     ancestor-chain depth, a small constant).
     """
-    from ..functions.st import st_cells_from_bbox
-    from .sjoin import _ancestors_udf, _bbox_stats, _min_cover_res
-
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2")
-    stats = _bbox_stats(df1p, df2p, geom, geom)
-    if resolution is None:
-        resolution = _estimate_resolution(stats, domain)
-    min1 = _min_cover_res(stats[0], resolution, domain)
-    min2 = _min_cover_res(stats[1], resolution, domain)
-
-    def _cov(df):
-        return st_cells_from_bbox("__bb.minx", "__bb.miny", "__bb.maxx",
-                                  "__bb.maxy", resolution, domain=domain)
-
-    c1, c2 = _cov(df1p), _cov(df2p)
-    if min2 < resolution:
-        c1 = _ancestors_udf(min2)(c1)
-    if min1 < resolution:
-        c2 = _ancestors_udf(min1)(c2)
+    plan = plan_join(df1p, df2p, i2, (geom, geom), resolution, domain,
+                     broadcast=False)
     l1 = df1p.select(F.col(i1), F.col("__bb").alias("__bb1"),
-                     F.explode(c1).alias("__cell"))
+                     F.explode(plan.cover("probe")).alias("__cell"))
     l2 = df2p.select(F.col(i2), F.col("__bb").alias("__bb2"),
-                     F.explode(c2).alias("__cell"))
+                     F.explode(plan.cover("build")).alias("__cell"))
     pairs = (
         l1.join(l2, on="__cell", how="inner")
         .filter((F.col("__bb1.minx") <= F.col("__bb2.maxx"))
@@ -453,18 +422,13 @@ def overlay(
         df1 = df1.withColumn(geom, st_make_valid(geom))
         df2 = df2.withColumn(geom, st_make_valid(geom))
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
-    df2p, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
-    from .sjoin import (_bbox_stats, _min_cover_res, _plan_broadcast,
-                        _side_stats, _widen_build)
-
-    # broadcast candidate (as in sjoin): ONE bounded Arrow collect of df2
-    # gives its stats and, if it fits, its index. pair_on always rides
-    # the shuffle plan.
-    build = stats = None
-    if pair_on is None:
-        build, stats, resolution = _plan_broadcast(
-            df1, geom, df2p, i2, geom, resolution, domain, None)
-    df2p = _widen_build(df2p, geom)
+    raw2, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
+    df2p = _widen_build(raw2, geom)
+    # as in sjoin; pair_on always rides the shuffle plan
+    plan = plan_join(df1p, df2p, i2, (geom, geom), resolution, domain,
+                     broadcast=None if pair_on is None else False,
+                     raw_probe=df1,
+                     raw_build=raw2)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
 
@@ -477,22 +441,16 @@ def overlay(
     inter_only = how == "intersection"
     kernel = {"polygonal": inter_only and keep_geom_type,
               "geoms": not inter_only}
-    if build is not None:
+    if plan.table is not None:
         # small build side: single probe-side pass — no join, no explode,
         # no per-batch build re-decode (see _broadcast_probe_intersection).
         # df1p is already widened by _prep_side.
         probe_raw = df1p.select(F.col(i1), F.col(geom).alias("__g1"))
-        pairs = _broadcast_probe_intersection(probe_raw, build, i1, **kernel)
+        pairs = _broadcast_probe_intersection(
+            probe_raw, BuildIndex(plan.table, plan.resolution, domain), i1,
+            **kernel)
     else:
-        if stats is None:
-            stats = _bbox_stats(df1p, df2p, geom, geom)
-        elif stats[0] is None:  # build stats came with its collect
-            stats[0] = _side_stats(df1p, geom)
-        if resolution is None:
-            resolution = _estimate_resolution(stats, domain)
-        pairs = _pairs(df1p, df2p, geom, geom, i1, i2, resolution, domain,
-                       _min_cover_res(stats[0], resolution, domain),
-                       _min_cover_res(stats[1], resolution, domain),
+        pairs = _pairs(df1p, df2p, geom, geom, i1, i2, plan,
                        pair_on=pair_on, **kernel)
     # Keep the checkpoint: it stores each partition of pairs whole before
     # anything reads it, so a task's kernel worker is idle before a

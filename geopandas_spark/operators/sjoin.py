@@ -8,30 +8,16 @@ column collisions suffixed (sjoin.py:193-224); outer rows null-padded
 
 Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
 
-1. **Prep + decide**: each side gets a row id (if none supplied) and a
-   bbox struct. Unless the plan is forced to the cogroup pass, a right
-   side whose plan size estimate is small (``_collect_first``) is
-   Arrow-collected ONCE with ``LIMIT BROADCAST_MAX_ROWS + 1``
-   (``_buildindex.collect_build``, no ``widen`` in front of it); its
-   count and bbox extents come from that table in numpy. A larger right
-   side is sized first by one map-only job (``_side_stats``) and
-   collected only if it fits. Only when ``resolution`` is not given
-   does one map-only job read the left side's extents. The stats fix
-   the grid resolution and the estimated exploded size of the right
-   side's cell cover; a build that fits is keyed from its one collect.
-   Every other case (overflowing or over-estimate build,
-   ``on_attribute``, ``salt_hot_cells``, ``broadcast_right=False``)
-   takes the cogroup pass, sized by one map-only stats job per side
-   whose stats are not known yet. The stats also give the cogroup pass
-   the coarsest per-row cover res each side can fall back to (the
-   other side then emits ancestor cells down to it).
+1. **Prep + plan**: each side gets a row id (if none supplied) and a
+   bbox struct; the join planner (operators/_planner.py) sizes the right
+   (build) side, picks the grid resolution and chooses the pass below.
 2. **Pair pass**: one of two ``mapInPandas``/``mapInArrow`` kernels.
    Candidate pairs are generated, deduped and refined with the exact
    vectorized predicate (geom/predicates.py) in-kernel, and leave the
    pass as id pairs — no per-pair WKB crosses an Arrow boundary.
 
    * **Broadcast probe** (``_broadcast_probe_refined``): chosen when the
-     right side's exploded cover is under BROADCAST_EXPLODED_ROWS (or
+     planner finds the right side's exploded cover small enough (or
      ``broadcast_right=True``) and neither ``on_attribute`` nor
      ``salt_hot_cells`` is set. The right side is collected once into
      the shared grid-row index (``_buildindex.BuildIndex``: one fine
@@ -67,11 +53,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, MapType, StructType
 
-from ..functions.st import st_bounds, st_cells_from_bbox
-from ..index.cells import DOMAIN_UNIT, pick_resolution
+from .. import conf
+from ..functions.st import st_bounds
+from ..index.cells import DOMAIN_UNIT
+from ._buildindex import BuildIndex
+from ._planner import plan_join
 
 VALID_HOW = ("inner", "left", "right")
 VALID_PRED = (
@@ -92,204 +80,12 @@ def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
     return lmap, rmap
 
 
-def _side_stats(df: DataFrame, geom: str) -> dict:
-    """n and avg + max bbox extents of one side in ONE map-only job. Each
-    task decodes its WKB and reduces each Arrow batch's bboxes to one
-    partial row; the driver combines the rows. (A Spark global agg is
-    two jobs under AQE: its exchange is a query stage.) Only ``geom`` is
-    read, so a raw frame and a ``_prep_side`` frame give the same
-    stats."""
-    from ._buildindex import PARTIAL_SCHEMA, bbox_partial, combine_partials
-
-    def fn(it):
-        import pyarrow as pa
-
-        from ..geom.kernels import bounds
-        from ..geom.wkb import from_wkb
-
-        for batch in it:
-            row = bbox_partial(bounds(from_wkb(
-                batch.column(0).to_numpy(zero_copy_only=False))))
-            yield pa.RecordBatch.from_pylist(
-                [dict(zip(("n", "sw", "cw", "mw", "sh", "ch", "mh"), row))])
-
-    parts = df.select(geom).mapInArrow(fn, PARTIAL_SCHEMA).toArrow()
-    return combine_partials(np.column_stack(
-        [c.to_numpy() for c in parts.columns]))
-
-
-def _bbox_stats(left: DataFrame, right: DataFrame, left_geom: str,
-                right_geom: str) -> list[dict]:
-    """``_side_stats`` of both sides: the shuffle plans' sizing."""
-    return [_side_stats(left, left_geom), _side_stats(right, right_geom)]
-
-
-# exploded build-side rows below this -> broadcast the exploded cell cover
-# instead of shuffling both sides (UDF-derived sizes defeat AQE's own
-# auto-broadcast estimation, so the operators decide from the stats)
-BROADCAST_EXPLODED_ROWS = 2_000_000
-# _est_exploded counts every row at >= 1.5 x 1.5 cells, so a build with
-# more rows than this never passes the test above: the bounded build
-# collect (_buildindex.collect_build) stops one row past it. Derived,
-# not a knob.
-BROADCAST_MAX_ROWS = BROADCAST_EXPLODED_ROWS * 4 // 9
-
-
-def _est_exploded(stats: dict, resolution: int, domain, pad: float = 0.0) -> float:
-    """Estimated exploded cell-cover rows for a side (n x avg cells)."""
-    from ..index.cells import cell_size
-
-    cw, ch = cell_size(resolution, domain)
-    cells = (stats["aw"] + 2 * pad) / cw + 1.5
-    cells *= (stats["ah"] + 2 * pad) / ch + 1.5
-    return stats["n"] * max(cells, 1.0)
-
-
-def _estimate_resolution(stats: list[dict], domain) -> int:
-    avg_w = max(stats[0]["aw"], stats[1]["aw"])
-    avg_h = max(stats[0]["ah"], stats[1]["ah"])
-    if avg_w == 0.0 and avg_h == 0.0:
-        # pure point data both sides: fine grid, capped
-        return 12
-    return pick_resolution(avg_w, avg_h, domain=domain, target_cells=1.0)
-
-
-def _min_cover_res(stats: dict, resolution: int, domain, pad: float = 0.0,
-                   max_cells: int = 4096) -> int:
-    """Lower bound on the per-row cover res this side can produce
-    (bbox_cover's max_cells fallback on the largest bbox, worst grid
-    alignment). Never higher than any actual row's res."""
-    from ..index.cells import cell_size
-
-    w = stats["mw"] + 2 * pad
-    h = stats["mh"] + 2 * pad
-    for r in range(resolution, 0, -1):
-        cw, ch = cell_size(r, domain)
-        nx = int(np.floor(w / cw)) + 2
-        ny = int(np.floor(h / ch)) + 2
-        if nx * ny <= max_cells:
-            return r
-    return 0
-
-
-def _ancestors_udf(down_to: int):
-    """array<long> cells -> cells + ancestor chain down to ``down_to``.
-
-    Vectorized over the whole Arrow batch: each cell's parents down to
-    ``down_to`` appended per resolution step, then one lexsort for the
-    per-row unique — no per-row Python loop. Only the cogroup pass and
-    overlay's shuffle join use cover ancestors; the broadcast index is a
-    single fine grid."""
-
-    @pandas_udf("array<long>")
-    def _f(cells: pd.Series) -> pd.Series:
-        import pyarrow as pa
-
-        from ..index import cells as C
-
-        n = len(cells)
-        arr = pa.array(cells, type=pa.list_(pa.int64()))
-        offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        flat = arr.values.to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        lens = np.diff(offs)
-        prow = np.repeat(np.arange(n, dtype=np.int64), lens)
-        nulls = None
-        if arr.null_count:
-            nulls = arr.is_null().to_numpy(zero_copy_only=False)
-            keep = ~np.repeat(nulls, lens)
-            flat, prow = flat[keep], prow[keep]
-        cflat, crow = [flat], [prow]
-        if len(flat):
-            res = C.cell_res(flat)
-            for step in range(1, int(res.max()) - down_to + 1):
-                m = res - step >= down_to
-                cflat.append(C.parent(flat[m], step))
-                crow.append(prow[m])
-        cflat, crow = np.concatenate(cflat), np.concatenate(crow)
-        order = np.lexsort((cflat, crow))
-        cs, rs = cflat[order], crow[order]
-        first = np.ones(len(cs), dtype=bool)
-        first[1:] = (cs[1:] != cs[:-1]) | (rs[1:] != rs[:-1])
-        cs, rs = cs[first], rs[first]
-        bounds_ = np.append(0, np.cumsum(np.bincount(rs, minlength=n)))
-        out = [None if (nulls is not None and nulls[i])
-               else cs[bounds_[i]:bounds_[i + 1]]
-               for i in range(n)]
-        return pd.Series(out, dtype=object)
-
-    return _f
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    from ..conf import widen
-
-    return widen(df)
-
-
 def _widen_build(df: DataFrame, geom: str) -> DataFrame:
-    """``_widen`` a ``_prep_side(widen=False)`` build side for the map
-    passes that read it after the broadcast decision. Its bbox is
+    """``conf.widen`` a ``_prep_side(widen=False)`` build side for the
+    map passes that read it after the broadcast decision. Its bbox is
     recomputed after the repartition, so the bounds UDF runs in the
     widened tasks, as on a side prepped with ``widen``."""
-    return _widen(df.drop("__bb")).withColumn("__bb", st_bounds(geom))
-
-
-def _collect_first(build: DataFrame) -> bool:
-    """Whether a broadcast-candidate build side is collected before it
-    is sized. Collecting first sizes and builds from one job, but a
-    build that then takes the shuffle pass has moved its WKB to the
-    driver for nothing. So only a build whose plan size estimate is
-    within Spark's own no-look broadcast bound
-    (``spark.sql.autoBroadcastJoinThreshold``) is collected first; a
-    larger one is sized by ``_side_stats`` and collected only if it
-    fits. The estimate is Spark's (file sizes scaled through the plan);
-    where it is unavailable the build is collected first."""
-    try:
-        limit = build.sparkSession._jsparkSession.sessionState().conf() \
-            .autoBroadcastJoinThreshold()
-        size = build._jdf.queryExecution().optimizedPlan().stats() \
-            .sizeInBytes()
-        return int(size) <= int(limit)
-    except Exception:
-        return True
-
-
-def _plan_broadcast(raw_left: DataFrame, left_geom: str, right: DataFrame,
-                    rid: str, right_geom: str, resolution: int | None,
-                    domain, broadcast_right: bool | None):
-    """sjoin's and overlay's broadcast decision. A build side ``right``
-    whose broadcast is forced or whose plan is small
-    (``_collect_first``) is Arrow-collected ONCE, bounded at
-    BROADCAST_MAX_ROWS unless forced, and its stats come from that
-    table; a larger one is sized by ``_side_stats`` and collected only
-    when it fits. The probe's stats (``_side_stats``, one job over the
-    raw, un-widened ``raw_left``) run only when ``resolution`` is not
-    given. Returns (BuildIndex or None, stats or None, resolution): None
-    = fall back to the shuffle pass, reusing ``stats`` ([probe or None,
-    build]) when the build was sized."""
-    from ._buildindex import BuildIndex, collect_build
-
-    table = None
-    if broadcast_right or _collect_first(right):
-        table = collect_build(right, rid, right_geom,
-                              None if broadcast_right else BROADCAST_MAX_ROWS)
-        if table is None:
-            return None, None, resolution
-        stats = [None, table.stats()]
-    else:
-        stats = [None, _side_stats(right, right_geom)]
-    res = resolution
-    if res is None:
-        stats[0] = _side_stats(raw_left, left_geom)
-        res = _estimate_resolution(stats, domain)
-    if not (broadcast_right
-            or (0 < stats[1]["n"] and _est_exploded(stats[1], res, domain)
-                <= BROADCAST_EXPLODED_ROWS)):
-        return None, stats, resolution
-    if table is None:  # fits, so n <= BROADCAST_MAX_ROWS: no bound needed
-        table = collect_build(right, rid, right_geom)
-    return BuildIndex(table, res, domain), stats, res
+    return conf.widen(df.drop("__bb")).withColumn("__bb", st_bounds(geom))
 
 
 def _broadcast_probe_refined(lraw, build, predicate: str, distance,
@@ -598,8 +394,8 @@ def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str,
     UDF-bearing map passes that read this frame parallelize. A broadcast
     build side is prepped with ``widen=False``: its first consumer is a
     driver collect, where the repartition only adds a shuffle stage to
-    the eager job; a build that falls back to a shuffle pass is widened
-    there (``_widen_build``; the checkpointed ids are already fixed).
+    the eager job; the map passes read it through ``_widen_build`` (the
+    checkpointed ids are already fixed).
 
     Auto ids come from monotonically_increasing_id, which Spark defines as
     NONDETERMINISTIC across plan branches — the join assembles results by
@@ -613,7 +409,7 @@ def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str,
     blocks cannot be silently evicted-and-recomputed (which would reroll
     the ids)."""
     if widen:
-        df = _widen(df)
+        df = conf.widen(df)
     if id_col is None:
         id_col = f"__{tag}_id"
         df = df.withColumn(id_col, F.monotonically_increasing_id())
@@ -688,69 +484,46 @@ def sjoin(
 
     raw_left = left
     left, lid = _prep_side(left, left_geom, left_id, "l")
-    right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
+    raw_right, rid = _prep_side(right, right_geom, right_id, "r",
+                                widen=False)
+    # every pass that reads the build side after the decision (cogroup,
+    # assembly re-join) is a map pass: widen it (ids already fixed)
+    right = _widen_build(raw_right, right_geom)
 
     pad = float(distance) if (predicate == "dwithin" and distance) else 0.0
-
-    # broadcast candidate: ONE bounded Arrow collect of the build side
-    # gives its stats and, if it fits, its index. An explicit salting
-    # request signals a shuffle-scale build side and on_attribute needs
-    # the attribute key — both always route to the cogroup pass.
-    build = stats = None
-    if broadcast_right is not False and not (on_attribute or salt_hot_cells):
-        build, stats, resolution = _plan_broadcast(
-            raw_left, left_geom, right, rid, right_geom, resolution, domain,
-            broadcast_right)
-    # every later pass that reads the build side (cogroup, assembly
-    # re-join) is a map pass: widen it now (ids already fixed)
-    right = _widen_build(right, right_geom)
+    # an explicit salting request signals a shuffle-scale build side and
+    # on_attribute needs the attribute key: both take the cogroup pass
+    plan = plan_join(
+        left, right, rid, (left_geom, right_geom), resolution, domain,
+        broadcast=(False if on_attribute or salt_hot_cells
+                   else broadcast_right),
+        pad=pad, raw_probe=raw_left, raw_build=raw_right)
 
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
         right_geom, how)
-    if build is not None:
+    if plan.table is not None:
         # small build side: single probe-side pass, no join, no explode.
         # The probe ships ONLY (id, wkb); bounds and the index lookup
         # happen in-kernel.
         lraw = left.select(F.col(lid).alias("__xlid"),
                            F.col(left_geom).alias("__lgeom"))
         refined = _broadcast_probe_refined(
-            lraw, build, predicate, distance, pad,
+            lraw, BuildIndex(plan.table, plan.resolution, domain), predicate,
+            distance, pad,
             carry=["__xlid", "__lgeom"] if narrow else ["__xlid"])
     else:
-        if stats is None:
-            stats = _bbox_stats(left, right, left_geom, right_geom)
-        elif stats[0] is None:  # build stats came with its collect
-            stats[0] = _side_stats(left, left_geom)
-        if resolution is None:
-            resolution = _estimate_resolution(stats, domain)
         # big×big: union-cogroup by cell — geometry crosses the wire once
-        # per cover cell, pairs leave as ids. Cover from the __bb struct
-        # computed in _prep_side (no second WKB decode); dwithin covers
-        # the probe bbox padded by the distance.
-        def cover(df, p):
-            return df.withColumn("__cells", st_cells_from_bbox(
-                F.col("__bb.minx") - p, F.col("__bb.miny") - p,
-                F.col("__bb.maxx") + p, F.col("__bb.maxy") + p,
-                resolution, domain=domain))
-
-        lcov = cover(left.select(lid, F.col(left_geom).alias("__lgeom"),
-                                 "__bb", *on_attribute), pad)
-        rcov = cover(right.select(rid, F.col(right_geom).alias("__rgeom"),
-                                  "__bb", *on_attribute), 0.0)
-        # coarsest cover res each side can fall back to (giant bboxes):
-        # the other side must emit ancestor cells down to that level so
-        # mixed-resolution pairs still meet on a common cell (SURVEY.md §4)
-        lmin = _min_cover_res(stats[0], resolution, domain, pad)
-        rmin = _min_cover_res(stats[1], resolution, domain, 0.0)
-        if rmin < resolution:  # right may have coarse rows -> left chains
-            lcov = lcov.withColumn("__cells",
-                                   _ancestors_udf(rmin)(F.col("__cells")))
-        if lmin < resolution:
-            rcov = rcov.withColumn("__cells",
-                                   _ancestors_udf(lmin)(F.col("__cells")))
+        # per cover cell, pairs leave as ids; dwithin covers the probe
+        # bbox padded by the distance
+        lcov = left.select(lid, F.col(left_geom).alias("__lgeom"), "__bb",
+                           *on_attribute).withColumn(
+            "__cells", plan.cover("probe", pad))
+        rcov = right.select(rid, F.col(right_geom).alias("__rgeom"), "__bb",
+                            *on_attribute).withColumn(
+            "__cells", plan.cover("build"))
         refined = _cogroup_refined(lcov, rcov, lid, rid, predicate,
-                                   distance, pad, resolution, domain,
+                                   distance, pad, plan.resolution, domain,
                                    salt_hot_cells, hot_cell_threshold,
                                    salt_factor, emit_geom=narrow,
                                    on_attribute=on_attribute)

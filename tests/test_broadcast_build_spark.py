@@ -25,8 +25,9 @@ from geopandas_spark.geom.predicates import pairwise_predicate
 from geopandas_spark.geom.ragged import points_batch
 from geopandas_spark.index.cells import DOMAIN_UNIT
 from geopandas_spark.operators import _buildindex
+from geopandas_spark.operators import _planner as P
 from geopandas_spark.operators import sjoin as S
-from geopandas_spark.operators.nearest import _all_lineal_headers, sjoin_nearest
+from geopandas_spark.operators.nearest import sjoin_nearest
 from geopandas_spark.operators.overlay import overlay
 
 
@@ -103,28 +104,28 @@ def test_build_stats_match_sql(spark, kind):
     assert got["n"] == sql[1]["n"] == build.count()
     for k in ("aw", "ah", "mw", "mh"):
         assert got[k] == pytest.approx(sql[1][k], rel=1e-12, abs=1e-15), k
-    assert S._side_stats(probe, "geometry") == pytest.approx(sql[0], rel=1e-12)
+    assert P._side_stats(probe, "geometry") == pytest.approx(sql[0], rel=1e-12)
     # the shuffle plans' stats (both sides, prepped frames) agree too
-    for a, b in zip(S._bbox_stats(lp, rp, "geometry", "geometry"), sql):
+    for a, b in zip([P._side_stats(f, "geometry") for f in (lp, rp)], sql):
         assert a == pytest.approx(b, rel=1e-12, abs=1e-15)
 
     sniff = rp.agg(F.collect_set(
         F.hex(F.substring(F.col("geometry"), 1, 5))).alias("tp")).collect()[0]
     assert sorted(table.headers()) == sorted(sniff["tp"])
-    assert (_all_lineal_headers(table.headers())
-            == _all_lineal_headers(list(sniff["tp"]))
+    assert (P._all_lineal_headers(table.headers())
+            == P._all_lineal_headers(list(sniff["tp"]))
             == (kind == "lineal"))
 
     # same sjoin/overlay plan and resolution from either source
-    res_np = S._estimate_resolution([sql[0], got], DOMAIN_UNIT)
-    assert res_np == S._estimate_resolution(sql, DOMAIN_UNIT)
+    res_np = P._estimate_resolution([sql[0], got], DOMAIN_UNIT)
+    assert res_np == P._estimate_resolution(sql, DOMAIN_UNIT)
     for res in (res_np, 3, 9):
-        assert ((S._est_exploded(got, res, DOMAIN_UNIT)
-                 <= S.BROADCAST_EXPLODED_ROWS)
-                == (S._est_exploded(sql[1], res, DOMAIN_UNIT)
-                    <= S.BROADCAST_EXPLODED_ROWS))
-        assert (S._min_cover_res(got, res, DOMAIN_UNIT)
-                == S._min_cover_res(sql[1], res, DOMAIN_UNIT))
+        assert ((P._est_exploded(got, res, DOMAIN_UNIT)
+                 <= P.BROADCAST_EXPLODED_ROWS)
+                == (P._est_exploded(sql[1], res, DOMAIN_UNIT)
+                    <= P.BROADCAST_EXPLODED_ROWS))
+        assert (P._min_cover_res(got, res, DOMAIN_UNIT)
+                == P._min_cover_res(sql[1], res, DOMAIN_UNIT))
     # same kNN puntal flag
     assert ((got["mw"] == 0.0 and got["mh"] == 0.0)
             == (sql[1]["mw"] == 0.0 and sql[1]["mh"] == 0.0)
@@ -133,12 +134,12 @@ def test_build_stats_match_sql(spark, kind):
 
 def test_row_cap_derived_from_exploded_bound():
     # every row counts >= 1.5 x 1.5 cells in _est_exploded
-    cap = S.BROADCAST_MAX_ROWS
-    assert cap * 2.25 <= S.BROADCAST_EXPLODED_ROWS < (cap + 1) * 2.25
+    cap = P.BROADCAST_MAX_ROWS
+    assert cap * 2.25 <= P.BROADCAST_EXPLODED_ROWS < (cap + 1) * 2.25
     fits = dict(n=cap, aw=0.0, ah=0.0, mw=0.0, mh=0.0)
-    assert S._est_exploded(fits, 12, DOMAIN_UNIT) <= S.BROADCAST_EXPLODED_ROWS
+    assert P._est_exploded(fits, 12, DOMAIN_UNIT) <= P.BROADCAST_EXPLODED_ROWS
     over = dict(fits, n=cap + 1)
-    assert S._est_exploded(over, 12, DOMAIN_UNIT) > S.BROADCAST_EXPLODED_ROWS
+    assert P._est_exploded(over, 12, DOMAIN_UNIT) > P.BROADCAST_EXPLODED_ROWS
 
 
 def test_collect_build_bounded(spark):
@@ -207,28 +208,24 @@ def test_row_cap_fallback_matches_brute(spark, monkeypatch, count_builds):
 
     assert run() == (exp_sjoin, exp_knn, exp_ov)
     assert len(count_builds) == 3  # control: all three broadcast
-    monkeypatch.setattr(S, "BROADCAST_MAX_ROWS", 10, raising=False)
-    monkeypatch.setattr(S, "_collect_first", lambda df: True)
+    monkeypatch.setattr(P, "BROADCAST_MAX_ROWS", 10)
+    monkeypatch.setattr(P, "_collect_first", lambda df: True)
     assert run() == (exp_sjoin, exp_knn, exp_ov)
     assert len(count_builds) == 3  # capped: all three fell back
 
     # large plans: stats first, then one unbounded collect if it fits
-    from geopandas_spark.operators import nearest as N
-
     collects = []
 
     def spy_collect(df, id_col, geom_col, limit=None):
         collects.append(limit)
         return orig_collect(df, id_col, geom_col, limit)
 
-    orig_collect = _buildindex.collect_build
-    monkeypatch.setattr(_buildindex, "collect_build", spy_collect)
-    monkeypatch.setattr(N, "collect_build", spy_collect)
-    monkeypatch.setattr(S, "_collect_first", lambda df: False)
+    orig_collect = P.collect_build
+    monkeypatch.setattr(P, "collect_build", spy_collect)
+    monkeypatch.setattr(P, "_collect_first", lambda df: False)
     assert run() == (exp_sjoin, exp_knn, exp_ov)
     assert len(count_builds) == 6 and collects == [None] * 3
-    monkeypatch.setattr(S, "BROADCAST_EXPLODED_ROWS", 1)
-    monkeypatch.setattr(N, "BROADCAST_EXPLODED_ROWS", 1)
+    monkeypatch.setattr(P, "BROADCAST_EXPLODED_ROWS", 1)
     collects.clear()
     assert run() == (exp_sjoin, exp_knn, exp_ov)
     assert len(count_builds) == 6 and collects == []
@@ -244,8 +241,8 @@ def test_eager_job_budget(spark, tmp_path, monkeypatch):
     """Spark jobs an operator runs before it returns its DataFrame, on
     single-file parquet inputs (one partition each): sjoin with a pinned
     resolution and sjoin_nearest run only the build collect; overlay
-    with auto resolution adds one global probe agg. No ``_bbox_stats``
-    runs on the broadcast path."""
+    with auto resolution adds one global probe agg. No shuffle-plan
+    sizing (``_min_cover_res``) runs on the broadcast path."""
     from geopandas_spark.operators.sjoin import sjoin
 
     r = np.random.default_rng(3)
@@ -268,9 +265,9 @@ def test_eager_job_budget(spark, tmp_path, monkeypatch):
                                           centers=centers, sa=sa, sb=sb).items()}
 
     def boom(*a, **k):
-        raise AssertionError("_bbox_stats on the broadcast path")
+        raise AssertionError("shuffle-plan sizing on the broadcast path")
 
-    monkeypatch.setattr(S, "_bbox_stats", boom)
+    monkeypatch.setattr(P, "_min_cover_res", boom)
     sc = spark.sparkContext
     calls = {
         "sjoin": lambda: sjoin(frames["pts"], frames["rects"],

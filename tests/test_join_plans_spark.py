@@ -141,8 +141,10 @@ CASES = {
        }.items()},
     "nearest/centers/row_cap": (_nearest("centers", None), {"cap": ROW_CAP},
                                 ((), (ROW_CAP,), 7)),
+    # the late collect of a build sized first reads the un-widened
+    # build, as every other build collect does: one job, no shuffle stage
     "nearest/centers/stats_first": (_nearest("centers", None),
-                                    {"stats_first": True}, ((2,), (None,), 3)),
+                                    {"stats_first": True}, ((2,), (None,), 2)),
     "nearest/rects/stats_first": (_nearest("rects", None),
                                   {"stats_first": True}, ((), (None,), 7)),
     "overlay": (lambda f: overlay(f["sa"], f["sb"], id1="i1", id2="i2",
@@ -190,3 +192,29 @@ def test_plan_decisions(spark, frames, monkeypatch, count_builds, case):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     got = (tuple(b.resolution for b in count_builds), tuple(limits), jobs)
     assert got == want, got
+
+
+@pytest.mark.parametrize("case", [
+    "sjoin/inner", "sjoin/left", "nearest/inner", "nearest/left",
+    "overlay/intersection", "overlay/difference"])
+def test_empty_build_broadcasts(spark, frames, count_builds, case):
+    """An empty build side takes the broadcast kernel, with no shuffle
+    plan, and gives the rows of a join against nothing."""
+    op, how = case.split("/")
+    empty = spark.createDataFrame([], "rid long, geometry binary")
+    if op == "overlay":
+        df1 = frames["sa"]
+        out = overlay(df1, empty.withColumnRenamed("rid", "i2"), how=how,
+                      id1="i1", id2="i2", make_valid=False)
+        want = ([] if how == "intersection" else sorted(
+            (r.i1, bytes(r.geometry)) for r in df1.collect()))
+        got = sorted((r.i1, bytes(r.geometry)) for r in out.collect())
+    else:
+        call = sjoin if op == "sjoin" else sjoin_nearest
+        out = call(frames["pts"], empty, how=how, left_id="lid",
+                   right_id="rid")
+        want = ([] if how == "inner" else sorted(
+            (r.lid, None) for r in frames["pts"].collect()))
+        got = sorted((r.lid, r.index_right) for r in out.collect())
+    assert got == want
+    assert len(count_builds) == 1

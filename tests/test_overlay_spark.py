@@ -270,10 +270,10 @@ def test_overlay_narrow_matches_join(spark, star_frames, monkeypatch, path,
     df1 column, dropped afterwards), and an executed plan with no Python
     node and no join. Frames with an attribute, auto ids included, take
     the join."""
-    from geopandas_spark.operators import sjoin as S
+    from geopandas_spark.operators import _planner as P
 
     if path == "shuffle":  # no build side fits: the cell-join pass
-        monkeypatch.setattr(S, "BROADCAST_EXPLODED_ROWS", 0)
+        monkeypatch.setattr(P, "BROADCAST_EXPLODED_ROWS", 0)
     p1, p2 = star_frames
     name1, name2 = {"distinct": ("i", "j"), "same_name": ("id", "id"),
                     "auto": (None, None)}[ids]
