@@ -82,9 +82,9 @@ def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
 
 def _widen_build(df: DataFrame, geom: str) -> DataFrame:
     """``conf.widen`` a ``_prep_side(widen=False)`` build side for the
-    map passes that read it after the broadcast decision. Its bbox is
-    recomputed after the repartition, so the bounds UDF runs in the
-    widened tasks, as on a side prepped with ``widen``."""
+    map passes that read it; its driver collect reads the un-widened
+    frame. Its bbox is recomputed after the repartition, so the bounds
+    UDF runs in the widened tasks, as on a side prepped with ``widen``."""
     return conf.widen(df.drop("__bb")).withColumn("__bb", st_bounds(geom))
 
 
