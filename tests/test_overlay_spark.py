@@ -122,32 +122,46 @@ def test_overlay_candidates_matches_brute_force(spark):
 
 
 def test_overlay_pair_on(spark):
-    """pair_on restricts candidates to equal-key pairs, pushed into the
-    cell join as an extra equi-join key; results equal the post-filtered
-    unkeyed overlay."""
+    """pair_on restricts candidates to equal-key pairs; results equal the
+    post-filtered unkeyed overlay. Keys follow Spark SQL ``=``: NULL never
+    pairs, NaN pairs with NaN and -0.0 pairs with 0.0."""
     from geopandas_spark.operators.overlay import overlay
 
     def rect(x, y, w, h):
         return (f"POLYGON (({x} {y}, {x+w} {y}, {x+w} {y+h}, "
                 f"{x} {y+h}, {x} {y}))")
 
-    # two overlapping groups of rects: every geometry overlaps every
-    # other spatially, but keys split them into two disjoint pairs each
-    wkt = [rect(0.1 * i, 0.0, 0.5, 0.5) for i in range(4)]
-    df1 = spark.createDataFrame(pd.DataFrame({
-        "i": range(4), "k": [0, 0, 1, 1],
-        "geometry": list(B.to_wkb(W.from_wkt(wkt)))}))
-    df2 = spark.createDataFrame(pd.DataFrame({
-        "j": range(4), "k": [0, 1, 0, 1],
-        "geometry": list(B.to_wkb(W.from_wkt(wkt)))}))
-    keyed = overlay(df1, df2, how="intersection", id1="i", id2="j",
-                    make_valid=False, pair_on="k")
-    got = {(r["i"], r["j"]) for r in keyed.collect()}
-    full = overlay(df1, df2, how="intersection", id1="i", id2="j",
-                   make_valid=False)
-    want = {(r["i"], r["j"]) for r in full.collect()
-            if [0, 0, 1, 1][r["i"]] == [0, 1, 0, 1][r["j"]]}
-    assert got == want and len(got) == 8  # 2 keys x (2x2) pairs
+    def frames(k1, k2, ktype):
+        # every geometry overlaps every other spatially; only the keys
+        # split the pairs
+        wkt = [rect(0.05 * i, 0.0, 0.5, 0.5) for i in range(len(k1))]
+        geoms = list(B.to_wkb(W.from_wkt(wkt)))
+        return (spark.createDataFrame(list(zip(range(len(k1)), k1, geoms)),
+                                      f"i long, k {ktype}, geometry binary"),
+                spark.createDataFrame(list(zip(range(len(k2)), k2, geoms)),
+                                      f"j long, k {ktype}, geometry binary"))
+
+    def sql_eq(a, b):
+        if a is None or b is None:
+            return False
+        if a != a:
+            return b != b
+        return a == b
+
+    nan = float("nan")
+    for k1, k2, ktype, n in (
+            ([0, 0, 1, 1], [0, 1, 0, 1], "long", 8),  # 2 keys x (2x2)
+            ([0.0, 0.0, 1.0, 1.0, None, nan, -0.0, nan],
+             [0.0, 1.0, 0.0, 1.0, None, nan, 0.0, None], "double", 15)):
+        df1, df2 = frames(k1, k2, ktype)
+        keyed = overlay(df1, df2, how="intersection", id1="i", id2="j",
+                        make_valid=False, pair_on="k")
+        got = {(r["i"], r["j"]) for r in keyed.collect()}
+        full = overlay(df1, df2, how="intersection", id1="i", id2="j",
+                       make_valid=False)
+        want = {(r["i"], r["j"]) for r in full.collect()
+                if sql_eq(k1[r["i"]], k2[r["j"]])}
+        assert got == want and len(got) == n, (ktype, sorted(got))
     with pytest.raises(ValueError, match="pair_on"):
         overlay(df1, df2.drop("k"), id1="i", id2="j", pair_on="k")
 
@@ -163,12 +177,15 @@ def _star_wkt(cx, cy, r):
 
 
 @pytest.mark.parametrize("giant_in", ["df1", "df2"])
-def test_overlay_broadcast_vs_shuffle(spark, giant_in):
-    """The broadcast intersection probe and the shuffle cell join give
-    the same pairs and intersection areas on stars plus one giant polygon
-    (its cover overflows max_cells at resolution 8). A constant
-    ``pair_on`` column on both sides forces the shuffle plan with the
-    same semantics."""
+def test_overlay_broadcast_vs_shuffle(spark, monkeypatch, giant_in):
+    """The broadcast intersection probe and the shuffle plan give the same
+    rows in all five modes on stars plus one giant polygon (its cover
+    overflows max_cells at resolution 8): the same areas per (i, j) pair
+    for intersection rows and per residual row. The shuffle plan runs
+    forced (no build side fits) with auto ids, and under a constant
+    ``pair_on`` column on both sides, which has the same semantics."""
+    from geopandas_spark.operators import _planner as P
+
     rng = np.random.default_rng(9)
 
     def layer(n, giant):
@@ -184,18 +201,30 @@ def test_overlay_broadcast_vs_shuffle(spark, giant_in):
     df1 = spark.createDataFrame(p1.assign(i=range(len(p1))))
     df2 = spark.createDataFrame(p2.assign(j=range(len(p2))))
 
-    def run(**kw):
-        out = overlay(df1, df2, how="intersection", id1="i", id2="j",
-                      resolution=8, make_valid=False, **kw)
-        return {(r["i"], r["j"]): r["a"] for r in
-                out.withColumn("a", st_area("geometry")).collect()}
+    def run(how, ids=("i", "j"), forced=False, **kw):
+        # i and j stay data columns with auto ids; a residual row has
+        # None for the other side's id (difference drops df2's columns)
+        with monkeypatch.context() as m:
+            if forced:
+                m.setattr(P, "BROADCAST_EXPLODED_ROWS", 0)
+            out = overlay(df1, df2, how=how, id1=ids[0], id2=ids[1],
+                          resolution=8, make_valid=False, **kw)
+        j = F.col("j") if "j" in out.columns else F.lit(None)
+        rows = (out.select("i", j.alias("j"), st_area("geometry").alias("a"))
+                .collect())
+        got = {(r["i"], r["j"]): r["a"] for r in rows}
+        assert len(got) == len(rows)
+        return got
 
-    bcast = run()
-    shuffle = run(pair_on="k")
-    assert bcast.keys() == shuffle.keys()
-    assert len(bcast) > 60
-    for key, a in bcast.items():
-        assert abs(a - shuffle[key]) <= 1e-9, key
+    for how, n in (("intersection", 60), ("union", 100), ("identity", 100),
+                   ("symmetric_difference", 40), ("difference", 3)):
+        bcast = run(how)
+        assert len(bcast) > n, how
+        for shuffle in (run(how, ids=(None, None), forced=True),
+                        run(how, pair_on="k")):
+            assert bcast.keys() == shuffle.keys(), how
+            for key, a in bcast.items():
+                assert abs(a - shuffle[key]) <= 1e-9, (how, key)
 
 
 def _square(x, y, s):
