@@ -1112,10 +1112,11 @@ def q_overlay_star_candidates(spark, sf_dir) -> DataFrame:
     inputs as ``overlay_star_intersection`` IS closed-form (the star
     radius pattern is fixed, so each bbox is the rect center plus fixed
     multiples of the half-width), and ``overlay_candidates`` runs the
-    same cover/resolution/ancestor-chain/cell-join plan as ``overlay``
-    but stops at the envelope test. Emits per pair the envelope
-    intersection area — fully SQL-reproducible; the non-closed-form GH
-    intersection areas stay pinned by the GH-vs-sweep pytest parity."""
+    same cover/resolution/ancestor-chain/cell-cogroup plan as
+    ``overlay``'s shuffle plan but stops at the envelope test. Emits per
+    pair the envelope intersection area — fully SQL-reproducible; the
+    non-closed-form GH intersection areas stay pinned by the
+    GH-vs-sweep pytest parity."""
     from geopandas_spark.operators.overlay import overlay_candidates
 
     stars = _star_polys(spark, sf_dir)

@@ -4,7 +4,7 @@ A cogroup pass partitions a union-tagged frame by cell key and sorts
 within the partition, so each (key) group is contiguous.  The pass
 must not materialize whole partitions in pandas (a partition can be
 arbitrarily large); instead Arrow chunks are buffered only up to
-``buffer_rows`` and flushed at group boundaries — the trailing
+``BUFFER_ROWS`` and flushed at group boundaries — the trailing
 (possibly chunk-spanning) group is carried into the next flush.
 
 The buffer size doubles as the *vectorization unit*: large enough to
@@ -16,17 +16,13 @@ across many workers, multi-MB temporaries stop scaling with cores).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 
-# env-tunable so the scaling harness can probe the buffer-size vs
-# lane-count tradeoff without code edits (default unchanged)
-BUFFER_ROWS = int(os.environ.get("SPARK_GRAFT_BUFFER_ROWS", "262144"))
+BUFFER_ROWS = 262144
 
 
-def stream_groups(it, key_cols: list[str], process, buffer_rows: int = BUFFER_ROWS):
+def stream_groups(it, key_cols: list[str], process):
     """Yield ``process(pdf)`` results over group-complete row blocks.
 
     ``it`` yields pandas chunks sorted by ``key_cols`` within the
@@ -40,7 +36,7 @@ def stream_groups(it, key_cols: list[str], process, buffer_rows: int = BUFFER_RO
             continue
         buf.append(chunk)
         buffered += len(chunk)
-        if buffered < buffer_rows:
+        if buffered < BUFFER_ROWS:
             continue
         pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
         n = len(pdf)

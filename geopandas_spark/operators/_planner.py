@@ -18,9 +18,8 @@ outcome as one ``JoinPlan``:
    pass the fit test below, so it takes the shuffle plan.
 2. **Pick the resolution and the plan.**
    * sjoin and overlay (``plan_join``): a given ``resolution`` is kept.
-     Otherwise one map-only job reads the probe's extents (on the raw,
-     un-widened probe while the broadcast is open) and the grid is sized
-     so an average geometry covers ~1-2 cells. The build broadcasts when
+     Otherwise one map-only job reads the probe's extents and the grid
+     is sized so an average geometry covers ~1-2 cells. The build broadcasts when
      its estimated exploded cell cover is at most
      ``BROADCAST_EXPLODED_ROWS`` (``_fits``), or when forced.
      ``on_attribute``, ``salt_hot_cells``, ``pair_on``,
@@ -40,8 +39,9 @@ outcome as one ``JoinPlan``:
      both kNN plans are bit-identical.
 3. **Cover scheme of the shuffle plan** (``JoinPlan.cover``). A row whose
    bbox spans more than ``max_cells`` fine cells is covered at a coarser
-   resolution. The cell join of sjoin and overlay therefore has the
-   other side emit ancestor cells (``_ancestors_udf``) down to each
+   resolution. The cell cogroup of sjoin, overlay and overlay_candidates
+   (``sjoin._cogroup_pairs``) therefore has the other side emit ancestor
+   cells (``_ancestors_udf``) down to each
    side's floor, the coarsest cover res its largest bbox can fall back
    to (``_min_cover_res``), so mixed-resolution pairs still meet on a
    common cell. kNN's shuffle plan joins on exact fine-cell equality, so
@@ -53,9 +53,10 @@ outcome as one ``JoinPlan``:
    always-candidates (``_buildindex``) and needs no floors.
 
 Every job the planner starts is one of: the build collect, the build's
-or the probe's ``_side_stats``. The stats of a frame read only its
-geometry column, so a raw frame and its prepped frame give the same
-stats.
+or the probe's ``_side_stats``. Each reads the caller's raw probe or the
+un-widened build, never a widened frame, whose repartition would add a
+shuffle stage to the job. The stats of a frame read only its geometry
+column, so a raw frame and its prepped frame give the same stats.
 """
 
 from __future__ import annotations
@@ -116,32 +117,27 @@ class JoinPlan:
 
 def plan_join(probe: DataFrame, build: DataFrame, bid: str,
               geoms: tuple[str, str], resolution: int | None, domain, *,
-              broadcast: bool | None, pad: float = 0.0,
-              raw_probe: DataFrame | None = None,
-              raw_build: DataFrame | None = None) -> JoinPlan:
+              broadcast: bool | None, pad: float = 0.0) -> JoinPlan:
     """Plan of sjoin, overlay and overlay_candidates.
 
-    ``probe`` and ``build`` are the frames the shuffle pass reads (both
-    prepped, the build widened); stats the shuffle plan still lacks are
-    taken from them. ``raw_probe`` and ``raw_build`` (default: the same
-    frames) are what the broadcast decision reads: the caller's raw probe
-    and the un-widened build, whose first consumer is a driver collect.
+    ``probe`` is the caller's raw probe and ``build`` the un-widened
+    build side (prepped, so it carries ``bid`` for the collect): every
+    planner job reads them, never the widened frames the passes read,
+    whose repartition would add a shuffle stage to each job.
     ``broadcast`` False skips the decision; ``pad`` widens the probe's
     bboxes (dwithin)."""
-    raw_probe = probe if raw_probe is None else raw_probe
-    raw_build = build if raw_build is None else raw_build
     pgeom, bgeom = geoms
     stats = [None, None]
     if broadcast is not False:
-        table, stats[1] = _size_build(raw_build, bid, bgeom, broadcast)
+        table, stats[1] = _size_build(build, bid, bgeom, broadcast)
         if stats[1] is not None:
             res = resolution
             if res is None:
-                stats[0] = _side_stats(raw_probe, pgeom)
+                stats[0] = _side_stats(probe, pgeom)
                 res = _estimate_resolution(stats, domain)
             if broadcast or _fits(stats[1], res, domain):
                 if table is None:  # fits, so n <= BROADCAST_MAX_ROWS
-                    table = collect_build(raw_build, bid, bgeom)
+                    table = collect_build(build, bid, bgeom)
                 return JoinPlan(res, table, res, res, domain)
     stats = [s if s is not None else _side_stats(df, g)
              for s, df, g in zip(stats, (probe, build), geoms)]
@@ -311,8 +307,9 @@ def _ancestors_udf(down_to: int):
 
     Vectorized over the whole Arrow batch: each cell's parents down to
     ``down_to`` appended per resolution step, then one lexsort for the
-    per-row unique — no per-row Python loop. Only the shuffle cell joins
-    use cover ancestors; the broadcast index is a single fine grid."""
+    per-row unique — no per-row Python loop. Only the shuffle cell
+    cogroup uses cover ancestors; the broadcast index is a single fine
+    grid."""
 
     @pandas_udf("array<long>")
     def _f(cells: pd.Series) -> pd.Series:

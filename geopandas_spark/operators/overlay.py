@@ -12,12 +12,15 @@ mode helpers :23-73; QGIS-golden tests tests/test_overlay.py:69-224):
 * ``union``: intersection rows + both residual sets.
 * ``identity``: intersection rows + df1 residuals.
 
-Physical plan: candidate pairs from the same cell equi-join as sjoin; the
-intersection stage is a pairwise Arrow kernel over candidate rows; the
-residual stage groups candidates by source row and subtracts the union of
-its *neighbors only* (never a global union — that is the distributed trick
-that keeps overlay shuffle-light at scale; SURVEY.md §2.4 overlay row).
-Rows with no candidates at all pass through untouched via anti-join.
+Physical plan: sjoin's two pair passes with an intersection kernel —
+the broadcast probe (``_broadcast_probe_intersection``) or, for a large
+build side or ``pair_on``, sjoin's shuffle cell cogroup
+(``_cogroup_pairs`` with ``_intersection_body``) — so each pair's
+intersection is computed where the pair is found. The residual stage
+groups pairs by source row and subtracts the union of its *neighbors
+only* (never a global union — that is the distributed trick that keeps
+overlay shuffle-light at scale; SURVEY.md §2.4 overlay row). Rows with
+no pairs at all pass through untouched (left join).
 
 Geometry engine: exact rectilinear boolean / convex clipping fast paths
 (geom/clipping.py) with the general Martinez–Rueda sweep
@@ -34,9 +37,9 @@ from pyspark.sql.functions import pandas_udf
 
 from ..index.cells import DOMAIN_UNIT
 from ._buildindex import BuildIndex
-from ._planner import JoinPlan, plan_join
-from .sjoin import (_canonical_cells, _output_columns, _prep_side,
-                    _suffix_columns, _widen_build)
+from ._planner import plan_join
+from .sjoin import (_check_keys, _cogroup_pairs, _output_columns,
+                    _prep_side, _suffix_columns, _widen_build)
 
 VALID_HOW = ("intersection", "union", "identity", "symmetric_difference", "difference")
 
@@ -51,39 +54,6 @@ def _kept(res, polygonal: bool) -> np.ndarray:
     if polygonal:
         keep &= np.isin(res.types, (POLYGON, MULTIPOLYGON))
     return np.nonzero(keep)[0]
-
-
-def _pairs(df1, df2, geom1, geom2, id1, id2, plan: JoinPlan,
-           pair_on: str | None = None, *, polygonal: bool, geoms: bool):
-    """Candidate (__i1, __i2[, __g1, __g2], __inter) pairs via the
-    shuffle cell equi-join on ``plan``'s covers — the big x big path
-    (small build sides route through ``_broadcast_probe_intersection``
-    instead).
-
-    Shuffle-free dedup via the reference-point rule (see sjoin): the SAME
-    Arrow pass computes the pairwise intersection geometry into
-    ``__inter`` (empty, or non-polygonal with ``polygonal`` -> row
-    dropped), so each pair's WKB is parsed exactly once. ``geoms=False``
-    leaves out both input geometries (only the residual stages read
-    them)."""
-    extra1 = [F.col(pair_on)] if pair_on else []
-    l1 = df1.select(F.col(id1).alias("__i1"), F.col(geom1).alias("__g1"),
-                    F.explode(plan.cover("probe")).alias("__cell"), *extra1)
-    l2 = df2.select(F.col(id2).alias("__i2"), F.col(geom2).alias("__g2"),
-                    F.explode(plan.cover("build")).alias("__cell"), *extra1)
-    on_keys = ["__cell"] + ([pair_on] if pair_on else [])
-    cand = (
-        l1.join(l2, on=on_keys, how="inner")
-        .select("__i1", "__i2", "__g1", "__g2", "__cell")
-    )
-    # explode drops the pairs the kernel returns no geometry for. A
-    # ``filter(isNotNull)`` on the UDF's output would be pushed below its
-    # projection and run the kernel twice
-    inter = F.explode(_intersection_rp_udf(
-        plan.resolution, plan.domain, polygonal)(
-        F.col("__g1"), F.col("__g2"), F.col("__cell"))).alias("__inter")
-    return cand.select("__i1", "__i2",
-                       *(["__g1", "__g2"] if geoms else []), inter)
 
 
 def _broadcast_probe_intersection(probe_raw, build, i1: str, *,
@@ -105,7 +75,8 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str, *,
     in, O(|matches|) out.
 
     Emits (__i1, __i2[, __g1, __g2], __inter) — the same schema as the
-    fused ``_pairs`` path given the same ``polygonal`` and ``geoms``.
+    shuffle plan's ``_intersection_body`` given the same ``polygonal``
+    and ``geoms``.
     """
     i1_t = dict(probe_raw.dtypes)[i1]
     probe = probe_raw.select(F.col(i1).alias("__xi1"), "__g1")
@@ -151,57 +122,58 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str, *,
                     f"{g}__inter binary"))
 
 
-def _intersection_rp_udf(resolution: int, domain, polygonal: bool):
-    """Fused reference-point dedup + pairwise intersection + empty drop.
+def _intersection_body(polygonal: bool, geoms: bool):
+    """overlay's ``_cogroup_pairs`` kernel: the pairwise intersection of
+    each candidate pair, as (__i1, __i2[, __g1, __g2], __inter) rows (the
+    schema of ``_broadcast_probe_intersection``). Empty results, and with
+    ``polygonal`` non-polygonal ones, are dropped; ``geoms`` adds both
+    input geometries (only the residual stages read them)."""
 
-    One Arrow pass over the raw cell-join candidates replaces three
-    (predicate refine, intersection, is_empty filter) — the WKB of each
-    pair is parsed exactly once. Each candidate gets a 0- or 1-element
-    array: empty = duplicate candidate, empty intersection or, with
-    ``polygonal``, a non-polygonal one; callers explode it."""
-
-    @pandas_udf("array<binary>")
-    def _f(g1: pd.Series, g2: pd.Series, cell: pd.Series) -> pd.Series:
-        from ..geom import wkb as B
+    def body(l, r, lbb, rbb):
         from ..geom.clipping import pairwise_intersection
-        from ..geom.kernels import bounds
-        from ..index import cells as C
+        from ..geom.wkb import from_wkb, to_wkb
 
-        # decode unique WKB once, gather (candidate batches repeat the
-        # build-side geometry across many pairs — same trick as sjoin)
-        lcod, luniq = pd.factorize(g1, use_na_sentinel=False)
-        rcod, runiq = pd.factorize(g2, use_na_sentinel=False)
-        lb = B.from_wkb(pd.Series(luniq))
-        rb = B.from_wkb(pd.Series(runiq))
-        if len(luniq) != len(g1):
-            lb = lb.take(lcod)
-        if len(runiq) != len(g2):
-            rb = rb.take(rcod)
-        lbb = np.nan_to_num(bounds(lb))
-        rbb = np.nan_to_num(bounds(rb))
-        rl = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                         resolution, domain=domain)
-        rr = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                         resolution, domain=domain)
-        keep = (_canonical_cells(lbb, rbb, rl, rr, domain)
-                == cell.to_numpy(dtype=np.int64))
-        # bbox-overlap prefilter: disjoint bboxes cannot intersect
-        keep &= (
-            (lbb[:, 0] <= rbb[:, 2]) & (rbb[:, 0] <= lbb[:, 2])
-            & (lbb[:, 1] <= rbb[:, 3]) & (rbb[:, 1] <= lbb[:, 3])
-        )
-        hit = np.zeros(len(g1), dtype=bool)
-        wkb = []
-        idx = np.nonzero(keep)[0]
-        if len(idx):
-            res = pairwise_intersection(lb.take(idx), rb.take(idx))
+        lw = l["__geom"].to_numpy(dtype=object)
+        rw = r["__geom"].to_numpy(dtype=object)
+        lb = from_wkb(lw)
+        rb = from_wkb(rw)
+        lid = l["__lid"].to_numpy()
+        rid = r["__rid"].to_numpy()
+
+        def pairs(li, ri):
+            res = pairwise_intersection(lb.take(li), rb.take(ri))
             k = _kept(res, polygonal)
-            hit[idx[k]] = True
-            wkb = B.to_wkb(res.take(k))
-        w = iter(wkb)
-        return pd.Series([[next(w)] if h else [] for h in hit])
+            if not len(k):
+                return None
+            li = li[k]
+            ri = ri[k]
+            out = {"__i1": lid[li], "__i2": rid[ri]}
+            if geoms:
+                out["__g1"] = lw[li]
+                out["__g2"] = rw[ri]
+            out["__inter"] = list(to_wkb(res.take(k)))
+            return pd.DataFrame(out)
 
-    return _f
+        return pairs
+
+    return body
+
+
+def _envelope_body(l, r, lbb, rbb):
+    """overlay_candidates' ``_cogroup_pairs`` kernel: ids and the
+    envelope intersection of each bbox-overlap pair; reads no geometry."""
+    lid = l["__lid"].to_numpy()
+    rid = r["__rid"].to_numpy()
+
+    def pairs(li, ri):
+        return pd.DataFrame({
+            "__i1": lid[li], "__i2": rid[ri],
+            "iminx": np.maximum(lbb[li, 0], rbb[ri, 0]),
+            "iminy": np.maximum(lbb[li, 1], rbb[ri, 1]),
+            "imaxx": np.minimum(lbb[li, 2], rbb[ri, 2]),
+            "imaxy": np.minimum(lbb[li, 3], rbb[ri, 3])})
+
+    return pairs
 
 
 def _difference_vs_union(g, others) -> list:
@@ -297,46 +269,31 @@ def overlay_candidates(
     """Exact bbox-overlap candidate pair set of an overlay — the
     SQL-reproducible stage of the overlay plan.
 
-    Runs the same prep, bbox-stats, resolution pick, cover generation and
-    min-res ancestor chains as ``overlay`` but stops at the envelope
-    test: one row per (df1, df2) pair whose bounding boxes overlap or
-    touch, with the envelope-intersection bounds
-    (``iminx/iminy/imaxx/imaxy``). Every emitted value is closed-form
-    over the input bboxes, so an external SQL engine can reproduce the
-    full result hash — auditing the candidate machinery (cover
-    resolution, ancestor chains, the distributed cell equi-join) that
+    Runs the same prep, bbox-stats, resolution pick, cover generation,
+    min-res ancestor chains and cell cogroup as ``overlay``'s shuffle plan
+    but stops at the envelope test: one row per (df1, df2) pair whose
+    bounding boxes overlap or touch, with the envelope-intersection
+    bounds (``iminx/iminy/imaxx/imaxy``). Every emitted value is
+    closed-form over the input bboxes, so an external SQL engine can
+    reproduce the full result hash — auditing the candidate machinery
+    (cover resolution, ancestor chains, the reference-point rule) that
     the general-polygon intersection kernel rides on; the intersection
     areas themselves have no closed form and stay pinned by the
     GH-vs-sweep parity tests (tests/test_unary_binary.py).
 
-    Scale: the shuffle carries (id, bbox struct, cell) rows only — no
-    geometry WKB moves — and the final pair set is deduped on the id
-    pair (the candidate multiplicity per pair is bounded by the
-    ancestor-chain depth, a small constant).
+    Scale: the shuffle carries (id, bbox, cell) rows only — no geometry
+    WKB moves — and each pair is emitted once, in its canonical cell.
     """
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
     df2p, i2 = _prep_side(df2, geom, id2, "o2")
-    plan = plan_join(df1p, df2p, i2, (geom, geom), resolution, domain,
+    plan = plan_join(df1, df2, i2, (geom, geom), resolution, domain,
                      broadcast=False)
-    l1 = df1p.select(F.col(i1), F.col("__bb").alias("__bb1"),
-                     F.explode(plan.cover("probe")).alias("__cell"))
-    l2 = df2p.select(F.col(i2), F.col("__bb").alias("__bb2"),
-                     F.explode(plan.cover("build")).alias("__cell"))
-    pairs = (
-        l1.join(l2, on="__cell", how="inner")
-        .filter((F.col("__bb1.minx") <= F.col("__bb2.maxx"))
-                & (F.col("__bb2.minx") <= F.col("__bb1.maxx"))
-                & (F.col("__bb1.miny") <= F.col("__bb2.maxy"))
-                & (F.col("__bb2.miny") <= F.col("__bb1.maxy")))
-        .dropDuplicates([i1, i2])
-    )
-    return pairs.select(
-        F.col(i1), F.col(i2),
-        F.greatest("__bb1.minx", "__bb2.minx").alias("iminx"),
-        F.greatest("__bb1.miny", "__bb2.miny").alias("iminy"),
-        F.least("__bb1.maxx", "__bb2.maxx").alias("imaxx"),
-        F.least("__bb1.maxy", "__bb2.maxy").alias("imaxy"),
-    )
+    pairs = _cogroup_pairs(
+        plan, df1p, df2p, i1, i2, _envelope_body,
+        f"__i1 {dict(df1p.dtypes)[i1]}, __i2 {dict(df2p.dtypes)[i2]}, "
+        "iminx double, iminy double, imaxx double, imaxy double")
+    return pairs.select(F.col("__i1").alias(i1), F.col("__i2").alias(i2),
+                        "iminx", "iminy", "imaxx", "imaxy")
 
 
 def _residuals(src: DataFrame, pairs: DataFrame, src_id: str, other_geom_col: str,
@@ -395,21 +352,21 @@ def overlay(
 
     pair_on (scale extension, no reference analogue — the sjoin
     counterpart is ``on_attribute``, ref tools/sjoin.py:62): restrict
-    candidate pairs to rows whose ``pair_on`` column values are EQUAL,
-    pushed into the cell equi-join as an extra join key. Use when the
+    candidate pairs to rows whose ``pair_on`` column values are EQUAL
+    under Spark SQL ``=`` (NULL never pairs, NaN pairs with NaN, -0.0
+    with 0.0). It takes sjoin's ``on_attribute`` path: an atomic column,
+    not the geometry, whose hash joins the cell key of the shuffle
+    cogroup and whose values are compared exactly per pair. Use when the
     overlay is keyed (per-tile, per-region, per-entity): a spatially
     dense workload whose logical pairs are keyed otherwise pays the
     full cross-key candidate cost only to discard it (measured 137x
     candidate inflation on the dart gate query). pair_on always rides
-    the shuffle plan — with a key the equi-join is the efficient
-    physical strategy, and the broadcast kernel's in-kernel pair
-    generation has no attribute channel."""
+    the shuffle plan: the key splits the cell groups, and the broadcast
+    kernel's in-kernel pair generation has no attribute channel."""
     if how not in VALID_HOW:
         raise ValueError(f"`how` was {how!r} but is expected to be in {VALID_HOW}")
-    if pair_on is not None and (pair_on not in df1.columns
-                                or pair_on not in df2.columns):
-        raise ValueError(f"pair_on column {pair_on!r} must exist in both "
-                         "frames")
+    pair_on = [] if pair_on is None else [pair_on]
+    _check_keys(df1, df2, pair_on, (geom, geom), "pair_on")
     if make_valid:
         # reference contract (tools/overlay.py:89-208): repair invalid
         # inputs before overlaying. The kernel passes valid rows through,
@@ -425,10 +382,8 @@ def overlay(
     raw2, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
     df2p = _widen_build(raw2, geom)
     # as in sjoin; pair_on always rides the shuffle plan
-    plan = plan_join(df1p, df2p, i2, (geom, geom), resolution, domain,
-                     broadcast=None if pair_on is None else False,
-                     raw_probe=df1,
-                     raw_build=raw2)
+    plan = plan_join(df1, raw2, i2, (geom, geom), resolution, domain,
+                     broadcast=False if pair_on else None)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
 
@@ -450,8 +405,12 @@ def overlay(
             probe_raw, BuildIndex(plan.table, plan.resolution, domain), i1,
             **kernel)
     else:
-        pairs = _pairs(df1p, df2p, geom, geom, i1, i2, plan,
-                       pair_on=pair_on, **kernel)
+        g = "__g1 binary, __g2 binary, " if kernel["geoms"] else ""
+        pairs = _cogroup_pairs(
+            plan, df1p, df2p, i1, i2, _intersection_body(**kernel),
+            f"__i1 {dict(df1p.dtypes)[i1]}, __i2 {dict(df2p.dtypes)[i2]}, "
+            f"{g}__inter binary",
+            geoms=(geom, geom), on_attribute=pair_on)
     # Keep the checkpoint: it stores each partition of pairs whole before
     # anything reads it, so a task's kernel worker is idle before a
     # Python UDF on the output (a caller's st_area) starts. Without it

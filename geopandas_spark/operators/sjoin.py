@@ -26,13 +26,16 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
      pass that looks each (dwithin-padded) bbox up, dedups on the
      (probe, build) key where a pair can repeat, and refines. No join,
      no shuffle.
-   * **Cogroup** (``_cogroup_refined``): every other case. Both sides
-     are exploded per cover cell, union-tagged and hash-partitioned by
-     (cell, salt[, attribute hash]). Each group's pairs are generated
-     in-kernel and kept only in their canonical cell (reference-point
-     rule, ``_canonical_cells``); ``on_attribute`` equality is checked
-     exactly per pair. Hot cells are salted on request (build rows
-     replicated into salt buckets, probe rows hashed into one).
+   * **Cogroup** (``_cogroup_pairs`` with the ``_refine_body``
+     kernel): every other case. Both sides are exploded per cover cell,
+     union-tagged and hash-partitioned by (cell, salt[, attribute
+     hash]). Each group's pairs are generated in-kernel and kept only in
+     their canonical cell (reference-point rule, ``_canonical_cells``);
+     ``on_attribute`` equality is checked exactly per pair. Hot cells
+     are salted on request (build rows replicated into salt buckets,
+     probe rows hashed into one). The same pass, with another kernel,
+     is overlay's and overlay_candidates' shuffle plan, and its block
+     function ``_cell_candidates`` is ``sjoin_bucketed``'s.
 3. **Assemble** (``_assemble``): suffix collided columns, attach
    ``index_right`` (``index_left`` for how='right'), null-pad outer
    rows. When both sides carry only (id, geometry) and how='inner', the
@@ -78,6 +81,23 @@ def _suffix_columns(left: DataFrame, right: DataFrame, lsuffix: str,
     lmap = {c: (f"{c}_{lsuffix}" if c in shared else c) for c in lcols}
     rmap = {c: (f"{c}_{rsuffix}" if c in shared else c) for c in rcols}
     return lmap, rmap
+
+
+def _check_keys(left: DataFrame, right: DataFrame, cols: list[str],
+                geoms: tuple[str, str], name: str) -> None:
+    """Validate the equality-key columns of a cogroup pass (sjoin's
+    ``on_attribute``, overlay's ``pair_on``): on both sides, not a
+    geometry column, of an atomic type."""
+    for col in cols:
+        if col not in left.columns or col not in right.columns:
+            raise ValueError(f"{name} column {col!r} missing from a side")
+        if col in geoms:
+            raise ValueError(f"{name} cannot be the geometry column")
+        for df in (left, right):
+            if isinstance(df.schema[col].dataType,
+                          (ArrayType, MapType, StructType)):
+                raise ValueError(
+                    f"{name} column {col!r} must be an atomic type")
 
 
 def _widen_build(df: DataFrame, geom: str) -> DataFrame:
@@ -190,23 +210,72 @@ def _values_equal(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return eq
 
 
-def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
-                     distance, lpad: float, resolution: int, domain,
-                     salt_hot_cells: bool, hot_cell_threshold: int,
-                     salt_factor: int, emit_geom: bool = False,
-                     on_attribute: list[str] = ()):
-    """Shuffle spatial join as a union-cogroup-by-cell streaming pass.
+def _cell_candidates(lg, rg, lcell, lbb, rbb, lres, rres, domain,
+                     lattr=(), rattr=()):
+    """Candidate pairs of one block of cell groups, yielded as (li, ri)
+    row-index chunks built from at most ~``BUFFER_ROWS`` cross-product
+    pairs each (cache-resident temporaries; see operators/nearest.py
+    COMBO_CAP).
 
-    Round-2 scale fix for the big×big path: instead of a hash join whose
-    OUTPUT carries both geometries per candidate pair into a refine UDF
-    (O(pairs) shuffle+Arrow payload), both sides are union-tagged and
-    hash-partitioned by (cell, salt) — each geometry crosses the wire
-    once per cover cell, pairs are generated in-kernel per cell group,
-    deduped by the canonical-cell rule, refined, and leave the pass as
-    id pairs.  Explicit hot-cell salting (north rule): build rows of hot
-    cells are replicated into ``salt_factor`` buckets, probe rows hash
-    into one bucket; the kernel groups on (cell, salt) so each pair is
-    still generated exactly once.
+    ``lg`` / ``rg`` are the sorted group numbers of the left / right
+    rows; each left row meets every right row of its group. A pair is
+    kept when the bboxes (the left one already dwithin-padded) overlap,
+    its attribute values are equal (``_values_equal``) and the left
+    row's group cell ``lcell`` is the pair's canonical cell, so a pair
+    that shares several cells comes out once."""
+    from ..geom.ragged import _expand_ranges
+    from ._cellstream import BUFFER_ROWS
+
+    r0 = np.searchsorted(rg, lg, side="left")
+    r1 = np.searchsorted(rg, lg, side="right")
+    hpos = np.nonzero(r1 > r0)[0]
+    csum = np.cumsum(r1[hpos] - r0[hpos])
+    ga = 0
+    while ga < len(hpos):
+        prev = csum[ga - 1] if ga else 0
+        gz = int(np.searchsorted(csum, prev + BUFFER_ROWS, side="left")) + 1
+        gz = min(max(gz, ga + 1), len(hpos))
+        grp = hpos[ga:gz]
+        ga = gz
+        li = np.repeat(grp, r1[grp] - r0[grp])
+        ri = _expand_ranges(r0[grp], r1[grp])
+        pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
+               & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
+        for la, ra in zip(lattr, rattr):
+            pre &= _values_equal(la[li], ra[ri])
+        li = li[pre]
+        ri = ri[pre]
+        if not len(li):
+            continue
+        keep = _canonical_cells(lbb[li], rbb[ri], lres[li], rres[ri],
+                                domain) == lcell[li]
+        if keep.any():
+            yield li[keep], ri[keep]
+
+
+def _cogroup_pairs(plan, left: DataFrame, right: DataFrame, lid: str,
+                   rid: str, body, schema: str, *, geoms=None,
+                   pad: float = 0.0, on_attribute: list[str] = (),
+                   salt: tuple[int, int] | None = None) -> DataFrame:
+    """The shuffle pair pass of sjoin, overlay and overlay_candidates: a
+    union-cogroup by cover cell.
+
+    Instead of a hash join whose OUTPUT carries both geometries per
+    candidate pair into a UDF (O(pairs) shuffle and Arrow payload), both
+    prepped sides are exploded per ``plan`` cover cell (the probe bbox
+    padded by ``pad``), union-tagged and hash-partitioned by (cell, salt):
+    each row crosses the wire once per cover cell, carrying its id, its
+    ``__bb`` bbox and, when ``geoms`` names the two geometry columns, its
+    WKB as ``__geom``. Each block of groups gets its candidate pairs from
+    ``_cell_candidates``; ``body(l, r, lbb, rbb)`` makes the block's pair
+    kernel from its left and right rows (pandas, ids as ``__lid`` /
+    ``__rid``) and bboxes, and that kernel maps each (li, ri) chunk to
+    output rows of ``schema`` (or None).
+
+    ``salt`` = (hot_cell_threshold, salt_factor): build rows of hot cells
+    are replicated into ``salt_factor`` buckets, probe rows hash into one
+    bucket; the kernel groups on (cell, salt) so each pair is still
+    generated exactly once.
 
     ``on_attribute`` adds the xxhash64 of the attribute values to the
     partition/sort key and the in-kernel group split, and every candidate
@@ -214,35 +283,38 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
     false pair. Spark SQL ``=`` semantics: rows with a NULL attribute
     never pair (outer joins re-attach them at assembly), NaN equals NaN
     and -0.0 equals 0.0 (xxhash64 hashes both alike).
-
-    Returns a DataFrame (__xlid, __xrid[, __lgeom]) of matched pairs.
     """
-    spark = lcov.sparkSession
+    spark = left.sparkSession
     acols = [f"__a{i}" for i in range(len(on_attribute))]
+    bcols = ["__bx0", "__by0", "__bx1", "__by1"]
 
-    def tag(cov, id_col, id_alias, geom_col, side):
+    def tag(df, id_col, id_alias, geom, cells, side):
         if on_attribute:
-            cov = cov.filter(reduce(operator.and_, [
+            df = df.filter(reduce(operator.and_, [
                 F.col(c).isNotNull() for c in on_attribute]))
-        return cov.select(F.col(id_col).alias(id_alias),
-                          F.col(geom_col).alias("__geom"),
-                          *[F.col(c).alias(a)
-                            for c, a in zip(on_attribute, acols)],
-                          F.explode("__cells").alias("__cell"),
-                          ).withColumn("__side", F.lit(side))
+        return df.select(
+            F.col(id_col).alias(id_alias),
+            *[F.col(f"__bb.{f}").alias(c)
+              for f, c in zip(("minx", "miny", "maxx", "maxy"), bcols)],
+            *([F.col(geom).alias("__geom")] if geom else []),
+            *[F.col(c).alias(a) for c, a in zip(on_attribute, acols)],
+            F.explode(cells).alias("__cell"),
+        ).withColumn("__side", F.lit(side))
 
-    lx = tag(lcov, lid, "__lid", "__lgeom", 1)
-    rx = tag(rcov, rid, "__rid", "__rgeom", 0)
+    lgeom, rgeom = geoms or (None, None)
+    lx = tag(left, lid, "__lid", lgeom, plan.cover("probe", pad), 1)
+    rx = tag(right, rid, "__rid", rgeom, plan.cover("build"), 0)
     salted = False
-    if salt_hot_cells:
+    if salt is not None:
+        threshold, factor = salt
         hot = (
             rx.groupBy("__cell").count()
-            .filter(F.col("count") >= int(hot_cell_threshold))
+            .filter(F.col("count") >= int(threshold))
             .select(F.col("__cell").alias("__hc"))
         )
         hot_list = [r["__hc"] for r in hot.collect()]
         if hot_list:
-            S = int(salt_factor)
+            S = int(factor)
             lx = lx.withColumn(
                 "__salt",
                 F.when(F.col("__cell").isin(hot_list),
@@ -261,8 +333,6 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
         lx = lx.withColumn("__salt", F.lit(0).cast("long"))
         rx = rx.withColumn("__salt", F.lit(0).cast("long"))
 
-    lid_t = dict(lcov.dtypes)[lid]
-    rid_t = dict(rcov.dtypes)[rid]
     # explicit partition count (AQE would size this exchange by bytes;
     # the pass is compute-bound — see operators/nearest.py)
     n_parts = max(spark.sparkContext.defaultParallelism * 2,
@@ -274,116 +344,84 @@ def _cogroup_refined(lcov, rcov, lid: str, rid: str, predicate: str,
         tagged = tagged.withColumn("__akey", F.xxhash64(*acols))
         keys.append("__akey")
     tagged = tagged.repartition(n_parts, *keys).sortWithinPartitions(*keys)
-
-    pad = float(lpad or 0.0)
+    resolution, domain = plan.resolution, plan.domain
 
     def _process(pdf):
-        from ..geom.kernels import bounds as _bounds
-        from ..geom.predicates import pairwise_predicate
-        from ..geom.ragged import _expand_ranges
-        from ..geom.wkb import from_wkb
         from ..index import cells as C
 
-        n = len(pdf)
+        lmask = pdf["__side"].to_numpy() == 1
+        if not lmask.any() or lmask.all():
+            return None
         cell = pdf["__cell"].to_numpy(dtype=np.int64)
-        side = pdf["__side"].to_numpy()
-        chg = np.empty(n, dtype=bool)
+        chg = np.empty(len(pdf), dtype=bool)
         chg[0] = True
         chg[1:] = cell[1:] != cell[:-1]
         for k in keys[1:]:
             kv = pdf[k].to_numpy(dtype=np.int64)
             chg[1:] |= kv[1:] != kv[:-1]
-        gid = np.cumsum(chg) - 1
-        lmask = side == 1
-        if not lmask.any() or lmask.all():
-            return None
-        lsub = np.nonzero(lmask)[0]
-        rsub = np.nonzero(~lmask)[0]
-        r0 = np.searchsorted(gid[rsub], gid[lsub], side="left")
-        r1 = np.searchsorted(gid[rsub], gid[lsub], side="right")
-        rcnt = r1 - r0
-        has = rcnt > 0
-        if not has.any():
-            return None
-        lw = pdf["__geom"].to_numpy(dtype=object)[lsub]
-        rw = pdf["__geom"].to_numpy(dtype=object)[rsub]
-        lb = from_wkb(pd.Series(lw))
-        rb = from_wkb(pd.Series(rw))
-        lbb = np.nan_to_num(_bounds(lb))
-        rbb = np.nan_to_num(_bounds(rb))
+        gid = np.cumsum(chg)
+        bb = np.nan_to_num(pdf[bcols].to_numpy(dtype=np.float64))
+        lbb = bb[lmask]
         if pad:
             lbb = lbb + np.array([-pad, -pad, pad, pad])
+        rbb = bb[~lmask]
         lres = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
                            resolution, domain=domain)
         rres = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
                            resolution, domain=domain)
-        lid_arr = pdf["__lid"].to_numpy()[lsub]
-        rid_arr = pdf["__rid"].to_numpy()[rsub]
-        lattr = [pdf[a].to_numpy()[lsub] for a in acols]
-        rattr = [pdf[a].to_numpy()[rsub] for a in acols]
-        lcell = cell[lsub]
-        o_lid = []
-        o_rid = []
-        o_lw = []
-        # combo-bounded group loop — cache-resident temporaries (see
-        # operators/nearest.py COMBO_CAP rationale)
-        hpos = np.nonzero(has)[0]
-        hcnt = rcnt[hpos]
-        csum = np.cumsum(hcnt)
-        from ._cellstream import BUFFER_ROWS as _CAP
-
-        gb = [0]
-        while gb[-1] < len(hpos):
-            prev = csum[gb[-1] - 1] if gb[-1] else 0
-            j = int(np.searchsorted(csum, prev + _CAP, side="left")) + 1
-            gb.append(min(max(j, gb[-1] + 1), len(hpos)))
-        for ga, gz in zip(gb[:-1], gb[1:]):
-            grp = hpos[ga:gz]
-            gcnt = rcnt[grp]
-            li = np.repeat(grp, gcnt)
-            ri = _expand_ranges(r0[grp], r1[grp])
-            # bbox prefilter (lbb already dwithin-padded)
-            pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
-                   & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
-            for la, ra in zip(lattr, rattr):
-                pre &= _values_equal(la[li], ra[ri])
-            li = li[pre]
-            ri = ri[pre]
-            if not len(li):
-                continue
-            keep = _canonical_cells(lbb[li], rbb[ri], lres[li], rres[ri],
-                                    domain) == lcell[li]
-            li = li[keep]
-            ri = ri[keep]
-            if not len(li):
-                continue
-            ok = pairwise_predicate(predicate, lb.take(li), rb.take(ri),
-                                    distance)
-            li = li[ok]
-            ri = ri[ok]
-            if not len(li):
-                continue
-            o_lid.append(lid_arr[li])
-            o_rid.append(rid_arr[ri])
-            if emit_geom:
-                o_lw.append(lw[li])
-        if not o_lid:
-            return None
-        d = {"__xlid": np.concatenate(o_lid),
-             "__xrid": np.concatenate(o_rid)}
-        if emit_geom:
-            d["__lgeom"] = np.concatenate(o_lw)
-        return pd.DataFrame(d)
+        l = pdf[lmask].reset_index(drop=True)
+        r = pdf[~lmask].reset_index(drop=True)
+        pairs = None
+        out = []
+        for li, ri in _cell_candidates(
+                gid[lmask], gid[~lmask], cell[lmask], lbb, rbb, lres, rres,
+                domain, [l[a].to_numpy() for a in acols],
+                [r[a].to_numpy() for a in acols]):
+            if pairs is None:  # first candidates: decode once per block
+                pairs = body(l, r, lbb, rbb)
+            o = pairs(li, ri)
+            if o is not None:
+                out.append(o)
+        return pd.concat(out, ignore_index=True) if out else None
 
     def fn(it):
         from ._cellstream import stream_groups
 
         yield from stream_groups(it, keys, _process)
 
-    schema = f"__xlid {lid_t}, __xrid {rid_t}"
-    if emit_geom:
-        schema += ", __lgeom binary"
     return tagged.mapInPandas(fn, schema=schema)
+
+
+def _refine_body(predicate: str, distance, emit_geom: bool):
+    """sjoin's ``_cogroup_pairs`` kernel: the exact predicate, as matched
+    (__xlid, __xrid[, __lgeom]) pairs; no candidate pair's WKB leaves the
+    pass."""
+
+    def body(l, r, lbb, rbb):
+        from ..geom.predicates import pairwise_predicate
+        from ..geom.wkb import from_wkb
+
+        lw = l["__geom"].to_numpy(dtype=object)
+        lb = from_wkb(lw)
+        rb = from_wkb(r["__geom"])
+        lid = l["__lid"].to_numpy()
+        rid = r["__rid"].to_numpy()
+
+        def pairs(li, ri):
+            ok = pairwise_predicate(predicate, lb.take(li), rb.take(ri),
+                                    distance)
+            li = li[ok]
+            ri = ri[ok]
+            if not len(li):
+                return None
+            d = {"__xlid": lid[li], "__xrid": rid[ri]}
+            if emit_geom:
+                d["__lgeom"] = lw[li]
+            return pd.DataFrame(d)
+
+        return pairs
+
+    return body
 
 
 def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str,
@@ -471,16 +509,8 @@ def sjoin(
     if isinstance(on_attribute, str):
         on_attribute = [on_attribute]
     on_attribute = list(on_attribute or [])
-    for col in on_attribute:
-        if col not in left.columns or col not in right.columns:
-            raise ValueError(f"on_attribute column {col!r} missing from a side")
-        if col in (left_geom, right_geom):
-            raise ValueError("on_attribute cannot be the geometry column")
-        for df in (left, right):
-            if isinstance(df.schema[col].dataType,
-                          (ArrayType, MapType, StructType)):
-                raise ValueError(
-                    f"on_attribute column {col!r} must be an atomic type")
+    _check_keys(left, right, on_attribute, (left_geom, right_geom),
+                "on_attribute")
 
     raw_left = left
     left, lid = _prep_side(left, left_geom, left_id, "l")
@@ -494,10 +524,9 @@ def sjoin(
     # an explicit salting request signals a shuffle-scale build side and
     # on_attribute needs the attribute key: both take the cogroup pass
     plan = plan_join(
-        left, right, rid, (left_geom, right_geom), resolution, domain,
-        broadcast=(False if on_attribute or salt_hot_cells
-                   else broadcast_right),
-        pad=pad, raw_probe=raw_left, raw_build=raw_right)
+        raw_left, raw_right, rid, (left_geom, right_geom), resolution,
+        domain, broadcast=(False if on_attribute or salt_hot_cells
+                           else broadcast_right), pad=pad)
 
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
@@ -516,17 +545,16 @@ def sjoin(
         # big×big: union-cogroup by cell — geometry crosses the wire once
         # per cover cell, pairs leave as ids; dwithin covers the probe
         # bbox padded by the distance
-        lcov = left.select(lid, F.col(left_geom).alias("__lgeom"), "__bb",
-                           *on_attribute).withColumn(
-            "__cells", plan.cover("probe", pad))
-        rcov = right.select(rid, F.col(right_geom).alias("__rgeom"), "__bb",
-                            *on_attribute).withColumn(
-            "__cells", plan.cover("build"))
-        refined = _cogroup_refined(lcov, rcov, lid, rid, predicate,
-                                   distance, pad, plan.resolution, domain,
-                                   salt_hot_cells, hot_cell_threshold,
-                                   salt_factor, emit_geom=narrow,
-                                   on_attribute=on_attribute)
+        schema = (f"__xlid {dict(left.dtypes)[lid]}, "
+                  f"__xrid {dict(right.dtypes)[rid]}")
+        refined = _cogroup_pairs(
+            plan, left, right, lid, rid,
+            _refine_body(predicate, distance, narrow),
+            schema + (", __lgeom binary" if narrow else ""),
+            geoms=(left_geom, right_geom), pad=pad,
+            on_attribute=on_attribute,
+            salt=((hot_cell_threshold, salt_factor) if salt_hot_cells
+                  else None))
     return _assemble(refined, left, right, lid, rid, ldata, rdata, narrow,
                      how, left_geom, lsuffix, rsuffix)
 

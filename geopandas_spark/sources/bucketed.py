@@ -9,9 +9,10 @@ by ``cell`` with the same bucket count cogroup by cell with NO Exchange
 on either side (Spark's bucketing spec satisfies the cogroup's required
 distribution), so each incremental join is one map-side Arrow pass.
 
-Each cell group's pairs are generated, deduped by the reference-point
-rule (operators/sjoin.py's ``_canonical_cells``) and refined in-kernel,
-so multi-cell geometries still yield each pair exactly once without a
+Each cell group's candidate pairs come from the block function of
+sjoin's shuffle pass (operators/sjoin.py's ``_cell_candidates``: bbox
+prefilter and the reference-point rule) and are refined in-kernel, so
+multi-cell geometries still yield each pair exactly once without a
 dropDuplicates shuffle, and no candidate pair's WKB crosses Arrow.
 """
 
@@ -42,7 +43,7 @@ def write_bucketed_cells(
     out = df.withColumn(
         "cell", F.explode(st_cells(geom, resolution, domain=domain)))
     # bbox_cover coarsens any row whose cover would exceed max_cells;
-    # sjoin_bucketed's cell equi-join matches SAME-res cells only, so a
+    # sjoin_bucketed's cell cogroup matches SAME-res cells only, so a
     # coarsened row would be silently unjoinable (ADVICE r2). Bucketed
     # tables can't carry ancestor chains without a cartesian blow-up at
     # the coarse levels, so validate BEFORE writing: reject if any row
@@ -125,30 +126,18 @@ def sjoin_bucketed(
             from ..geom.kernels import bounds
             from ..geom.predicates import pairwise_predicate
             from ..geom.wkb import from_wkb
-            from ..operators._cellstream import BUFFER_ROWS
-            from ..operators.sjoin import _canonical_cells
+            from ..operators.sjoin import _cell_candidates
 
             lb = from_wkb(lt.column(left_geom).to_pandas())
             rb = from_wkb(rt.column(rgeom_out).to_pandas())
-            lbb = np.nan_to_num(bounds(lb))
-            rbb = np.nan_to_num(bounds(rb))
-            # left rows in blocks: a hot cell's nl x nr candidate grid
-            # stays bounded in memory
-            step = max(1, BUFFER_ROWS // nr)
-            for l0 in range(0, nl, step):
-                m = min(step, nl - l0)
-                li = np.repeat(np.arange(l0, l0 + m), nr)
-                ri = np.tile(np.arange(nr), m)
-                keep = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
-                        & (lbb[li, 1] <= rbb[ri, 3])
-                        & (rbb[ri, 1] <= lbb[li, 3]))
-                li, ri = li[keep], ri[keep]
-                # every row's cover sits at `resolution` (validated at
-                # write), so each pair's canonical cell is at that res
-                res = np.full(len(li), resolution)
-                keep = (_canonical_cells(lbb[li], rbb[ri], res, res, domain)
-                        == key[0].as_py())
-                li, ri = li[keep], ri[keep]
+            # one group: this cell. Every row's cover sits at
+            # `resolution` (validated at write), so each pair's
+            # canonical cell is at that res
+            for li, ri in _cell_candidates(
+                    np.zeros(nl), np.zeros(nr), np.full(nl, key[0].as_py()),
+                    np.nan_to_num(bounds(lb)), np.nan_to_num(bounds(rb)),
+                    np.full(nl, resolution), np.full(nr, resolution),
+                    domain):
                 ok = np.asarray(pairwise_predicate(
                     predicate, lb.take(li), rb.take(ri)), dtype=bool)
                 o_l.append(li[ok])

@@ -106,24 +106,24 @@ CASES = {
     "sjoin/forced": (lambda f: _sjoin(f, broadcast_right=True), {},
                      ((4,), (None,), 2)),
     "sjoin/row_cap": (lambda f: _sjoin(f), {"cap": ROW_CAP},
-                      ((), (ROW_CAP,), 5)),
+                      ((), (ROW_CAP,), 3)),
     "sjoin/row_cap_res6": (lambda f: _sjoin(f, resolution=6),
-                           {"cap": ROW_CAP}, ((), (ROW_CAP,), 5)),
+                           {"cap": ROW_CAP}, ((), (ROW_CAP,), 3)),
     "sjoin/stats_first": (lambda f: _sjoin(f), {"stats_first": True},
                           ((4,), (None,), 3)),
     "sjoin/stats_first_no_fit": (
         lambda f: _sjoin(f), {"stats_first": True, "exploded": 1},
         ((), (), 2)),
     "sjoin/on_attribute": (lambda f: _sjoin(f, on_attribute="k"), {},
-                           ((), (), 4)),
+                           ((), (), 2)),
     "sjoin/salt": (lambda f: _sjoin(f, salt_hot_cells=True,
                                     hot_cell_threshold=2), {},
-                   ((), (), 7)),
+                   ((), (), 5)),
     "sjoin/no_broadcast": (lambda f: _sjoin(f, broadcast_right=False), {},
-                           ((), (), 4)),
+                           ((), (), 2)),
     "sjoin/dwithin_no_broadcast": (
         lambda f: _sjoin(f, predicate="dwithin", distance=0.05,
-                         broadcast_right=False), {}, ((), (), 4)),
+                         broadcast_right=False), {}, ((), (), 2)),
     **{f"nearest/{build}/{bcast}": (_nearest(build, bcast), {}, want)
        for (build, bcast), want in {
            ("centers", None): ((2,), (888888,), 1),
@@ -152,12 +152,12 @@ CASES = {
                 ((3,), (888888,), 3)),
     "overlay/row_cap": (lambda f: overlay(f["sa"], f["sb"], id1="i1",
                                           id2="i2", make_valid=False),
-                        {"cap": ROW_CAP}, ((), (ROW_CAP,), 8)),
+                        {"cap": ROW_CAP}, ((), (ROW_CAP,), 6)),
     "overlay/pair_on": (lambda f: overlay(f["sa"], f["sb"], id1="i1",
                                           id2="i2", make_valid=False,
-                                          pair_on="k"), {}, ((), (), 7)),
+                                          pair_on="k"), {}, ((), (), 5)),
     "overlay_candidates": (lambda f: overlay_candidates(
-        f["sa"], f["sb"], id1="i1", id2="i2"), {}, ((), (), 4)),
+        f["sa"], f["sb"], id1="i1", id2="i2"), {}, ((), (), 2)),
 }
 
 

@@ -164,6 +164,13 @@ def test_overlay_pair_on(spark):
         assert got == want and len(got) == n, (ktype, sorted(got))
     with pytest.raises(ValueError, match="pair_on"):
         overlay(df1, df2.drop("k"), id1="i", id2="j", pair_on="k")
+    # sjoin's on_attribute checks
+    with pytest.raises(ValueError, match="atomic"):
+        overlay(df1.withColumn("a", F.array("i")),
+                df2.withColumn("a", F.array("j")), id1="i", id2="j",
+                pair_on="a")
+    with pytest.raises(ValueError, match="geometry"):
+        overlay(df1, df2, id1="i", id2="j", pair_on="geometry")
 
 
 def _star_wkt(cx, cy, r):
@@ -334,6 +341,46 @@ def test_overlay_narrow_matches_join(spark, star_frames, monkeypatch, path,
     assert "EvalPython" not in p and "Join" not in p, p
     assert "Join" in plan(joined)
 
+
+
+@pytest.mark.parametrize("case", ["forced", "pair_on", "candidates"])
+def test_shuffle_pair_pass_plan(spark, star_frames, monkeypatch, case):
+    """The shuffle plans of overlay (narrow and forced; pair_on) and
+    overlay_candidates pair rows in sjoin's cell cogroup, a MapInPandas
+    pass. localCheckpoint is made a no-op so the pass stays in the
+    executed plan. No join node pairs rows on a cell (the narrow overlay
+    and overlay_candidates have no join at all; pair_on's are the
+    assembly's id joins), and every ArrowEvalPython node is one of the
+    inputs' prep UDFs: the bounds of one geometry or the cover of its
+    bbox. overlay_candidates has no aggregate (no dedup exchange)."""
+    from geopandas_spark.operators import _planner as P
+    from geopandas_spark.operators.overlay import overlay_candidates
+
+    p1, p2 = star_frames
+    df1 = spark.createDataFrame(p1.assign(i=range(len(p1)), k=0))
+    df2 = spark.createDataFrame(p2.assign(j=range(len(p2)), k=0))
+    monkeypatch.setattr(type(df1), "localCheckpoint",
+                        lambda self, eager=True, storageLevel=None: self)
+    if case == "forced":
+        monkeypatch.setattr(P, "BROADCAST_EXPLODED_ROWS", 0)
+        out = overlay(df1.drop("k"), df2.drop("k"), id1="i", id2="j",
+                      make_valid=False)
+    elif case == "pair_on":
+        out = overlay(df1, df2, id1="i", id2="j", make_valid=False,
+                      pair_on="k")
+    else:
+        out = overlay_candidates(df1, df2, id1="i", id2="j")
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    joins = [ln for ln in plan.splitlines() if "Join" in ln]
+    assert not any("__cell" in ln for ln in joins), plan
+    assert len(joins) == (2 if case == "pair_on" else 0), plan
+    prep = (r"_f\((?:\w+#\d+L?|__bb#\d+\.minx, __bb#\d+\.miny, "
+            r"__bb#\d+\.maxx, __bb#\d+\.maxy)\)#\d+")
+    for node in re.findall(r"ArrowEvalPython \[([^\]]*)\]", plan):
+        assert re.fullmatch(prep, node), node
+    if case == "candidates":
+        assert "Aggregate" not in plan, plan
+    assert "MapInPandas" in plan, plan
 
 
 @pytest.fixture(scope="module")
