@@ -274,16 +274,15 @@ def test_mixed_resolution_giant_polygons(spark, bcast, giant, pred):
         assert sum(1 for _, b in exp if b == giant_ids[1]) > 100
 
 
-@pytest.mark.parametrize("ids", ["given", "auto"])
-def test_cogroup_same_result(data, spark, ids):
+def test_cogroup_same_result(data, spark):
     # broadcast_right=False forces the union-cogroup-by-cell pass; with
     # auto ids, pid and tid stay data columns
     pdf, tdf, lb, rb = data
-    kw = {"left_id": "pid", "right_id": "tid"} if ids == "given" else {}
-    out = sjoin(pdf, tdf, broadcast_right=False, **kw).toPandas()
-    got = set(zip(out.pid.astype(int), out.tid.astype(int)))
-    assert len(out) == len(got)
-    assert got == brute(lb, rb, "intersects")
+    for kw in ({"left_id": "pid", "right_id": "tid"}, {}):
+        out = sjoin(pdf, tdf, broadcast_right=False, **kw).toPandas()
+        got = set(zip(out.pid.astype(int), out.tid.astype(int)))
+        assert len(out) == len(got)
+        assert got == brute(lb, rb, "intersects")
 
 
 def test_cogroup_salted_same_result(data, spark):
