@@ -19,8 +19,8 @@ outcome as one ``JoinPlan``:
 2. **Pick the resolution and the plan.**
    * sjoin and overlay (``plan_join``): a given ``resolution`` is kept.
      Otherwise one map-only job reads the probe's extents and the grid
-     is sized so an average geometry covers ~1-2 cells. The build broadcasts when
-     its estimated exploded cell cover is at most
+     is sized so an average geometry covers ~1-2 cells. The build
+     broadcasts when its estimated exploded cell cover is at most
      ``BROADCAST_EXPLODED_ROWS`` (``_fits``), or when forced.
      ``on_attribute``, ``salt_hot_cells``, ``pair_on``,
      ``broadcast_right=False`` and ``overlay_candidates`` always take the
@@ -41,10 +41,9 @@ outcome as one ``JoinPlan``:
    bbox spans more than ``max_cells`` fine cells is covered at a coarser
    resolution. The cell cogroup of sjoin, overlay and overlay_candidates
    (``sjoin._cogroup_pairs``) therefore has the other side emit ancestor
-   cells (``_ancestors_udf``) down to each
-   side's floor, the coarsest cover res its largest bbox can fall back
-   to (``_min_cover_res``), so mixed-resolution pairs still meet on a
-   common cell. kNN's shuffle plan joins on exact fine-cell equality, so
+   cells (``_ancestors_udf``) down to each side's floor, the coarsest
+   cover res its largest bbox can fall back to (``_min_cover_res``), so
+   mixed-resolution pairs still meet on a common cell. kNN's shuffle plan joins on exact fine-cell equality, so
    it clamps the whole grid to the res its largest build bbox still
    covers at full res instead; the floors are then the resolution and
    the cover has no chain. The clamp reads the build's stats even when

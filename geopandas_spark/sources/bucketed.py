@@ -13,7 +13,7 @@ Each cell group's candidate pairs come from the block function of
 sjoin's shuffle pass (operators/sjoin.py's ``_cell_candidates``: bbox
 prefilter and the reference-point rule) and are refined in-kernel, so
 multi-cell geometries still yield each pair exactly once without a
-dropDuplicates shuffle, and no candidate pair's WKB crosses Arrow.
+dedup shuffle, and no candidate pair's WKB crosses Arrow.
 """
 
 from __future__ import annotations
