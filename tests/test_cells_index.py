@@ -125,3 +125,80 @@ def test_bbox_cover_matches_per_row_reference():
     for k in range(n):
         assert np.array_equal(flat[off[k]:off[k + 1]], want[k])
         assert len(want[k]) <= 16
+
+
+def _fine_split(bb, res, max_cells):
+    """One-resolution cover of bboxes ``bb`` (n, 4): (row, cell) pairs of
+    the rows covering at most ``max_cells`` cells, and the giant rows.
+    A NaN row is in neither."""
+    live = ~np.isnan(bb).any(axis=1)
+    bz = np.nan_to_num(bb)
+    i0, j0 = C._grid_ij(bz[:, 0], bz[:, 1], res, C.DOMAIN_UNIT)
+    i1, j1 = C._grid_ij(bz[:, 2], bz[:, 3], res, C.DOMAIN_UNIT)
+    cnt = (i1 - i0 + 1) * (j1 - j0 + 1)
+    giant = live & (cnt > max_cells)
+    keep = np.flatnonzero(live & ~giant)
+    rows, ii, jj = C.expand_rects(i0[keep], j0[keep], i1[keep], j1[keep])
+    return keep[rows], C.pack(res, C.morton_encode(ii, jj)), giant
+
+
+def _overlap(a, b):
+    return ((a[:, None, 0] <= b[None, :, 2]) & (b[None, :, 0] <= a[:, None, 2])
+            & (a[:, None, 1] <= b[None, :, 3]) & (b[None, :, 1] <= a[:, None, 3]))
+
+
+def test_fine_grid_giant_split_emits_each_pair_once():
+    """The shuffle join's one-resolution scheme, in numpy: rows meet in
+    the cells of one fine grid and a pair is kept only in the cell of
+    (max minx, max miny); giant rows (over ``max_cells``) skip the cells
+    and pair by a bbox test instead, every left row against the right
+    giants and every right non-giant row against the left giants. On
+    random bboxes with grid-snapped (touching) edges, boxes on and beyond
+    the domain edge, NaN rows and giants on both sides, every
+    bbox-overlapping pair (the left bbox padded) comes out exactly
+    once."""
+    rng = np.random.default_rng(13)
+    both = 0
+    for trial in range(40):
+        res = int(rng.integers(2, 9))
+        max_cells = int(rng.choice([1, 8, 64, 4096]))
+        pad = float(rng.choice([0.0, 0.01]))
+        sides = []
+        for n in rng.integers(5, 60, 2):
+            lo = rng.random((n, 2)) * 1.2 - 0.1
+            ext = rng.random((n, 2)) ** 3 * rng.choice([0.05, 0.5, 1.2])
+            bb = np.hstack([lo, lo + ext])
+            snap = rng.random(n) < 0.3  # edges on grid lines
+            bb[snap] = np.round(bb[snap] * (1 << res)) / (1 << res)
+            bb[rng.random(n) < 0.05] = np.nan
+            bb[rng.integers(n)] = [-0.2, 0.0, 1.0, 1.3]  # a giant
+            sides.append(bb)
+        lbb = sides[0] + np.array([-pad, -pad, pad, pad])
+        rbb = sides[1]
+        lrow, lcell, lgiant = _fine_split(lbb, res, max_cells)
+        rrow, rcell, rgiant = _fine_split(rbb, res, max_cells)
+        got = []
+        # cell join with the reference-point rule
+        for c in np.intersect1d(lcell, rcell):
+            for a in lrow[lcell == c]:
+                for b in rrow[rcell == c]:
+                    if not _overlap(lbb[a:a + 1], rbb[b:b + 1])[0, 0]:
+                        continue
+                    ref = C.point_cell(max(lbb[a, 0], rbb[b, 0]),
+                                       max(lbb[a, 1], rbb[b, 1]), res,
+                                       C.DOMAIN_UNIT)
+                    if ref == c:
+                        got.append((a, b))
+        # giant passes
+        rg = np.flatnonzero(rgiant)
+        got += [(a, rg[b]) for a, b in zip(*np.nonzero(
+            _overlap(lbb, rbb[rg])))]
+        lg = np.flatnonzero(lgiant)
+        rn = np.flatnonzero(~rgiant)
+        got += [(lg[a], rn[b]) for a, b in zip(*np.nonzero(
+            _overlap(lbb[lg], rbb[rn])))]
+        want = set(zip(*np.nonzero(_overlap(lbb, rbb))))
+        assert len(got) == len(set(got)), trial
+        assert set(got) == want, trial
+        both += bool(lgiant.any() and rgiant.any())
+    assert both >= 10

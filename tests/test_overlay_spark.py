@@ -78,8 +78,9 @@ def test_overlay_union_attr_padding(frames, spark):
 
 def test_overlay_candidates_matches_brute_force(spark):
     """overlay_candidates == the exact bbox-overlap pair set (brute
-    force over all bboxes), including touching bboxes, mixed sizes that
-    force min-res ancestor chains, and empty geometries (dropped)."""
+    force over all bboxes), including touching bboxes, mixed sizes, a
+    giant on each side (a bbox over max_cells cells at the auto
+    resolution) and empty geometries (dropped)."""
     from geopandas_spark.operators.overlay import overlay_candidates
 
     rng = np.random.RandomState(7)
@@ -94,6 +95,11 @@ def test_overlay_candidates_matches_brute_force(spark):
     for j in range(40):
         x, y = rng.rand(2) * 0.8
         boxes2.append((x, y, 0.02, 0.02))
+    # 400 tiny boxes per side bring the auto resolution to 7, where a
+    # 0.9 x 0.9 box covers ~13k cells: a giant on each side
+    for boxes in (boxes1, boxes2):
+        boxes += [(x, y, 0.001, 0.001) for x, y in rng.rand(400, 2) * 0.99]
+        boxes.append((0.03, 0.05, 0.9, 0.9))
     # a guaranteed exactly-touching pair
     boxes1.append((0.9, 0.9, 0.05, 0.05))
     boxes2.append((0.95, 0.9, 0.05, 0.05))
@@ -113,10 +119,15 @@ def test_overlay_candidates_matches_brute_force(spark):
             if x1 <= x2 + w2 and x2 <= x1 + w1 and y1 <= y2 + h2 and y2 <= y1 + h1:
                 want.add((i, j))
     assert got == want
-    assert (len(boxes1) - 1, 40) in got  # the touching pair survived
+    touch = (len(boxes1) - 1, len(boxes2) - 1)
+    assert touch in got  # the touching pair survived
+    giants = (len(boxes1) - 2, len(boxes2) - 2)
+    assert giants in got
+    assert sum(1 for i, _ in got if i == giants[0]) > 300
+    assert sum(1 for _, j in got if j == giants[1]) > 300
     # envelope-intersection bounds are the pairwise max/min of the bboxes
     row = (overlay_candidates(df1, df2, id1="i", id2="j")
-           .filter((F.col("i") == len(boxes1) - 1) & (F.col("j") == 40))
+           .filter((F.col("i") == touch[0]) & (F.col("j") == touch[1]))
            .collect()[0])
     assert row["iminx"] == pytest.approx(0.95) and row["imaxx"] == pytest.approx(0.95)
 
@@ -162,6 +173,30 @@ def test_overlay_pair_on(spark):
         want = {(r["i"], r["j"]) for r in full.collect()
                 if sql_eq(k1[r["i"]], k2[r["j"]])}
         assert got == want and len(got) == n, (ktype, sorted(got))
+    # a giant on each side (a 0.9 x 0.9 square among 0.002 squares: over
+    # max_cells cells at the auto resolution, 7), keys with a NULL
+    rng = np.random.default_rng(3)
+    sq = [rect(x, y, 0.002, 0.002) for x, y in rng.random((400, 2)) * 0.99]
+    big = list(B.to_wkb(W.from_wkt(
+        sq[:200] + [rect(0.04, 0.05, 0.9, 0.9)]
+        + sq[200:] + [rect(0.02, 0.03, 0.9, 0.9)])))
+    k1 = [None if i == 7 else i % 2 for i in range(201)]
+    k2 = [i % 2 for i in range(201)]
+    gd1 = spark.createDataFrame(list(zip(range(201), k1, big[:201])),
+                                "i long, k long, geometry binary")
+    gd2 = spark.createDataFrame(list(zip(range(201), k2, big[201:])),
+                                "j long, k long, geometry binary")
+    keyed = overlay(gd1, gd2, how="intersection", id1="i", id2="j",
+                    make_valid=False, pair_on="k")
+    got = [(r["i"], r["j"]) for r in keyed.collect()]
+    full = overlay(gd1, gd2, how="intersection", id1="i", id2="j",
+                   make_valid=False)
+    want = {(r["i"], r["j"]) for r in full.collect()
+            if sql_eq(k1[r["i"]], k2[r["j"]])}
+    assert set(got) == want and len(got) == len(want)
+    assert (200, 200) in want  # the giants meet
+    assert sum(1 for i, _ in want if i == 200) > 50
+    assert sum(1 for _, j in want if j == 200) > 50
     with pytest.raises(ValueError, match="pair_on"):
         overlay(df1, df2.drop("k"), id1="i", id2="j", pair_on="k")
     # sjoin's on_attribute checks

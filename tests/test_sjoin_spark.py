@@ -236,9 +236,10 @@ def _giant_side(rng, n_pts, n_small, giant: bool):
 @pytest.mark.parametrize("giant", ["left", "right", "both"])
 @pytest.mark.parametrize("bcast", [True, False])
 def test_mixed_resolution_giant_polygons(spark, bcast, giant, pred):
-    """A giant polygon on either side (its cover falls back to a coarse
-    res at resolution=8) plus NULL and EMPTY geometry rows: both plans
-    return exactly the brute-force pair set, one row per pair."""
+    """A giant polygon on either side (its bbox spans more than
+    max_cells cells at resolution=8) plus NULL and EMPTY geometry rows:
+    both plans return exactly the brute-force pair set, one row per
+    pair, and so does ``on_attribute`` with giants on both sides."""
     import pandas as pd
 
     rng = np.random.default_rng(5)
@@ -272,6 +273,26 @@ def test_mixed_resolution_giant_polygons(spark, bcast, giant, pred):
         assert sum(1 for a, _ in exp if a == giant_ids[0]) > 20
     if giant_ids[1] is not None:
         assert sum(1 for _, b in exp if b == giant_ids[1]) > 100
+    if giant == "both" and not bcast:
+        # on_attribute (always the cogroup plan) with giants on both
+        # sides: a key of id % 3 with NULL keys, which never pair
+        def key(i):
+            return None if i % 11 == 4 else i % 3
+
+        ldf = spark.createDataFrame([(i, key(i), w) for i, w in enumerate(lw)],
+                                    "lid long, k long, geometry binary")
+        rdf = spark.createDataFrame([(i, key(i), w) for i, w in enumerate(rw)],
+                                    "rid long, k long, geometry binary")
+        out = sjoin(ldf, rdf, predicate=pred, distance=dist, left_id="lid",
+                    right_id="rid", resolution=8, on_attribute="k")
+        got = [(r.lid, r.index_right)
+               for r in out.select("lid", "index_right").collect()]
+        keyed = {(a, b) for a, b in exp
+                 if key(a) is not None and key(a) == key(b)}
+        assert set(got) == keyed
+        assert len(got) == len(keyed)
+        assert sum(1 for a, b in keyed if a == giant_ids[0]) > 5
+        assert sum(1 for a, b in keyed if b == giant_ids[1]) > 20
 
 
 def test_cogroup_same_result(data, spark):

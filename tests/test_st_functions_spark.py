@@ -302,3 +302,41 @@ def test_get_coordinates_exploded_include_z(spark):
     assert rows[2]["z"] is None or math.isnan(rows[2]["z"])
     out2 = st.st_get_coordinates_exploded(df, "g", ["id"])
     assert "z" not in out2.columns
+
+
+@pytest.mark.parametrize("compact", [False, True])
+def test_st_cells_matches_numpy_cover(spark, compact):
+    """st_cells == index.cells.bbox_cover (then compact_cover) of each
+    row's bbox: NULL for a NULL or EMPTY geometry, one cell for a point,
+    a full cover for a normal polygon, and the coarse fallback of a row
+    over ``max_cells``."""
+    from geopandas_spark.geom import wkb as B
+    from geopandas_spark.geom import wkt as W
+    from geopandas_spark.index import cells as C
+
+    wkt = ["POINT (0.3 0.7)",
+           "POLYGON ((0.1 0.1, 0.16 0.1, 0.16 0.13, 0.1 0.13, 0.1 0.1))",
+           "POLYGON ((0.02 0.03, 0.97 0.03, 0.97 0.98, 0.02 0.98, 0.02 0.03))",
+           "LINESTRING (0.5 0.5, 0.55 0.62)"]
+    bbs = [(0.3, 0.7, 0.3, 0.7), (0.1, 0.1, 0.16, 0.13),
+           (0.02, 0.03, 0.97, 0.98), (0.5, 0.5, 0.55, 0.62)]
+    geoms = ([None, B.to_wkb(W.from_wkt(["POLYGON EMPTY"]))[0]]
+             + list(B.to_wkb(W.from_wkt(wkt))))
+    df = spark.createDataFrame(list(enumerate(geoms)),
+                               "id long, geometry binary")
+    res, max_cells = 6, 64
+    got = [r["c"] for r in df.select("id", st.st_cells(
+        "geometry", res, compact=compact, max_cells=max_cells).alias("c"))
+        .orderBy("id").collect()]
+    bb = np.array(bbs)
+    flat, off = C.bbox_cover(bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3], res,
+                             max_cells=max_cells)
+    if compact:
+        flat, off = C.compact_cover(flat, off)
+    want = [None, None] + [flat[off[i]:off[i + 1]].tolist()
+                           for i in range(len(bbs))]
+    assert got == want
+    # the over-max_cells row fell back to a coarser res; the others did not
+    assert C.cell_res(np.array(got[4])).max() < res
+    assert C.cell_res(np.array(got[3])).max() == res or compact
+    assert len(got[2]) == 1 and len(got[3]) > 1 and len(got[5]) > 1
