@@ -1112,8 +1112,8 @@ def q_overlay_star_candidates(spark, sf_dir) -> DataFrame:
     inputs as ``overlay_star_intersection`` IS closed-form (the star
     radius pattern is fixed, so each bbox is the rect center plus fixed
     multiples of the half-width), and ``overlay_candidates`` runs the
-    same cover/resolution/ancestor-chain/cell-cogroup plan as
-    ``overlay``'s shuffle plan but stops at the envelope test. Emits per
+    same resolution, one-resolution cover, cell cogroup and giant pass
+    as ``overlay``'s shuffle plan but stops at the envelope test. Emits per
     pair the envelope intersection area — fully SQL-reproducible; the
     non-closed-form GH intersection areas stay pinned by the
     GH-vs-sweep pytest parity."""

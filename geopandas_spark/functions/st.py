@@ -340,33 +340,16 @@ def st_clip_by_rect(geom, minx: float, miny: float, maxx: float, maxy: float) ->
 # indexing
 
 
-def st_cells_from_bbox(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
-                       compact: bool = False, max_cells: int = 4096) -> Column:
-    """Cell cover from ALREADY-COMPUTED bounds columns — skips the WKB
-    decode that st_cells pays (the joins compute st_bounds once in
-    _prep_side; round-1 decoded the geometry a second time to cover it)."""
+def _cell_lists(flat: np.ndarray, offsets: np.ndarray,
+                null: np.ndarray) -> pd.Series:
+    """Ragged cells (flat ids, offsets) as an ``array<long>`` pandas UDF
+    result, NULL where ``null``: one Arrow list array, no per-row loop.
+    Shared by ``st_cells`` and the join cover (operators/_planner.py)."""
+    import pyarrow as pa
 
-    @pandas_udf("array<long>")
-    def _f(mnx: pd.Series, mny: pd.Series, mxx: pd.Series,
-           mxy: pd.Series) -> pd.Series:
-        from ..index import cells as C
-
-        a = mnx.to_numpy(dtype=np.float64)
-        b = mny.to_numpy(dtype=np.float64)
-        c = mxx.to_numpy(dtype=np.float64)
-        d = mxy.to_numpy(dtype=np.float64)
-        miss = np.isnan(a)
-        flat, off = C.bbox_cover(np.nan_to_num(a), np.nan_to_num(b),
-                                 np.nan_to_num(c), np.nan_to_num(d),
-                                 res, domain=domain, max_cells=max_cells)
-        if compact:
-            flat, off = C.compact_cover(flat, off)
-        return pd.Series([
-            None if miss[i] else flat[off[i]:off[i + 1]].tolist()
-            for i in range(len(a))
-        ])
-
-    return _f(_col(minx), _col(miny), _col(maxx), _col(maxy))
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int64()), pa.array(flat, type=pa.int64()),
+        mask=pa.array(null)).to_pandas()
 
 
 def st_cells(geom, res: int, domain=DOMAIN_UNIT, compact: bool = False,
@@ -388,11 +371,7 @@ def st_cells(geom, res: int, domain=DOMAIN_UNIT, compact: bool = False,
                                  res, domain=domain, max_cells=max_cells)
         if compact:
             flat, off = C.compact_cover(flat, off)
-        out = [
-            None if miss[i] else flat[off[i] : off[i + 1]].tolist()
-            for i in range(len(s))
-        ]
-        return pd.Series(out)
+        return _cell_lists(flat, off, miss)
 
     return _f(_col(geom))
 

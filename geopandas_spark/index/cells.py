@@ -114,13 +114,6 @@ def cell_bounds(ids: np.ndarray, domain=DOMAIN_UNIT) -> np.ndarray:
     return np.column_stack([x0 + i * w, y0 + j * h, x0 + (i + 1) * w, y0 + (j + 1) * h])
 
 
-def parent(ids: np.ndarray, steps: int = 1) -> np.ndarray:
-    ids = np.asarray(ids, dtype=np.int64)
-    r = cell_res(ids).astype(np.int64)
-    m = cell_morton(ids) >> np.int64(2 * steps)
-    return ((r - steps) << np.int64(_RES_SHIFT)) | m
-
-
 def grid_disk(ids: np.ndarray, k: int = 1) -> np.ndarray:
     """(n, (2k+1)^2) neighbor cells within Chebyshev distance k (clamped at
     the domain edge -> duplicates possible; callers dedupe). Same role as
@@ -145,26 +138,29 @@ def bbox_cover_counts(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT):
     return (i1 - i0 + 1) * (j1 - j0 + 1)
 
 
+def _cover_rects(minx, miny, maxx, maxy, res: int, domain, max_cells: int):
+    """(per-row res, i0, j0, i1, j1): each bbox's grid rectangle at
+    ``res``, coarsened one level at a time while it spans more than
+    ``max_cells`` cells. A level down is a right shift of the grid
+    coords, which equals ``_grid_ij`` at that level exactly (the grid
+    sizes are powers of two)."""
+    i0, j0 = _grid_ij(minx, miny, res, domain)
+    i1, j1 = _grid_ij(maxx, maxy, res, domain)
+    res_row = np.full(len(i0), res, dtype=np.int64)
+    while True:
+        over = ((i1 - i0 + 1) * (j1 - j0 + 1) > max_cells).astype(np.int64)
+        if not over.any():
+            return res_row, i0, j0, i1, j1
+        res_row -= over
+        i0, j0, i1, j1 = i0 >> over, j0 >> over, i1 >> over, j1 >> over
+
+
 def cover_res(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
               max_cells: int = 4096) -> np.ndarray:
     """Per-row cover resolution: ``res`` unless the bbox would need more
     than ``max_cells`` cells, in which case the row falls back to coarser
-    levels (deterministic — the refine stage recomputes this to find the
-    canonical dedup cell of a candidate pair)."""
-    i0, j0 = _grid_ij(minx, miny, res, domain)
-    i1, j1 = _grid_ij(maxx, maxy, res, domain)
-    counts = (i1 - i0 + 1) * (j1 - j0 + 1)
-    res_row = np.full(len(i0), res, dtype=np.int64)
-    while (counts > max_cells).any():
-        over = counts > max_cells
-        res_row[over] -= 1
-        sh = np.where(over, 1, 0)
-        i0 = i0 >> sh
-        i1 = i1 >> sh
-        j0 = j0 >> sh
-        j1 = j1 >> sh
-        counts = (i1 - i0 + 1) * (j1 - j0 + 1)
-    return res_row
+    levels (deterministic)."""
+    return _cover_rects(minx, miny, maxx, maxy, res, domain, max_cells)[0]
 
 
 def expand_rects(i0, j0, i1, j1) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -189,25 +185,15 @@ def bbox_cover(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
     Returns (flat_ids int64[T], offsets int64[n+1]) ragged output. Rows
     whose cover would exceed ``max_cells`` fall back to progressively
     coarser resolutions for *that row only* — those rows' cells have a
-    smaller res in the id, so the cogroup join emits ancestor cells for
-    the other side (operators/sjoin.py).
+    smaller res in the id. This is ``st_cells``' cover; the joins cover
+    at one resolution and treat such a row as a giant instead
+    (operators/_planner.py).
     """
-    minx = np.asarray(minx, dtype=np.float64)
-    n_rows = len(minx)
-    res_row = cover_res(minx, miny, maxx, maxy, res, domain, max_cells)
-    # grid coords at each row's final res, one pass per distinct res
-    i0 = np.empty(n_rows, dtype=np.int64)
-    j0 = np.empty(n_rows, dtype=np.int64)
-    i1 = np.empty(n_rows, dtype=np.int64)
-    j1 = np.empty(n_rows, dtype=np.int64)
-    for r in np.unique(res_row):
-        m = res_row == r
-        a, b = _grid_ij(minx[m], np.asarray(miny)[m], int(r), domain)
-        c, d = _grid_ij(np.asarray(maxx)[m], np.asarray(maxy)[m], int(r), domain)
-        i0[m], j0[m], i1[m], j1[m] = a, b, c, d
+    res_row, i0, j0, i1, j1 = _cover_rects(minx, miny, maxx, maxy, res,
+                                           domain, max_cells)
     rows, ii, jj = expand_rects(i0, j0, i1, j1)
     flat = (res_row[rows] << np.int64(_RES_SHIFT)) | morton_encode(ii, jj)
-    offsets = np.zeros(n_rows + 1, dtype=np.int64)
+    offsets = np.zeros(len(i0) + 1, dtype=np.int64)
     np.cumsum((i1 - i0 + 1) * (j1 - j0 + 1), out=offsets[1:])
     return flat, offsets
 

@@ -37,24 +37,30 @@ outcome as one ``JoinPlan``:
      headers come out of the collected build, and a large build that
      fits is collected for them. This is a plan choice, not correctness:
      both kNN plans are bit-identical.
-3. **Cover scheme of the shuffle plan** (``JoinPlan.cover``). A row whose
-   bbox spans more than ``max_cells`` fine cells is covered at a coarser
-   resolution. The cell cogroup of sjoin, overlay and overlay_candidates
-   (``sjoin._cogroup_pairs``) therefore has the other side emit ancestor
-   cells (``_ancestors_udf``) down to each side's floor, the coarsest
-   cover res its largest bbox can fall back to (``_min_cover_res``), so
-   mixed-resolution pairs still meet on a common cell. kNN's shuffle plan joins on exact fine-cell equality, so
-   it clamps the whole grid to the res its largest build bbox still
-   covers at full res instead; the floors are then the resolution and
-   the cover has no chain. The clamp reads the build's stats even when
-   the caller gave the resolution: correctness must not depend on a hint.
-   A broadcast build is keyed on one fine grid with giant rows as
-   always-candidates (``_buildindex``) and needs no floors.
+3. **Cover scheme of the shuffle plan** (``JoinPlan.cover``): one
+   resolution per join, the broadcast index's layout
+   (``_buildindex``). A row covers its cells at ``resolution`` only; a
+   row whose cover at the worst grid alignment would exceed
+   ``MAX_CELLS`` is a giant (``_giant``), gets no cells and stays out of
+   the cell cogroup (``sjoin._cogroup_pairs``). A side may hold a giant
+   only if its largest bbox is one (``_min_cover_res`` below the
+   resolution: the stats bound every row); the planner then collects
+   that side's giants in one job bounded at ``BROADCAST_MAX_ROWS``,
+   filtered on the same cover column as the cogroup, and the other
+   side streams against them (``sjoin._giant_pairs``). A side whose
+   giants pass the bound clamps the resolution to the smaller
+   ``_min_cover_res`` of the two sides, where no row is a giant. kNN's
+   shuffle plan always clamps, to its build's ``_min_cover_res``: it
+   joins on exact fine-cell equality and has no giant pass. The clamp
+   reads the stats even when the caller gave the resolution:
+   correctness must not depend on a hint.
 
 Every job the planner starts is one of: the build collect, the build's
-or the probe's ``_side_stats``. Each reads the caller's raw probe or the
-un-widened build, never a widened frame, whose repartition would add a
-shuffle stage to the job. The stats of a frame read only its geometry
+or the probe's ``_side_stats``, a side's giant collect. Each reads the
+caller's raw probe or the un-widened build, never a widened frame,
+whose repartition would add a shuffle stage to the job; only the
+probe's giant collect reads the prepped probe, whose ids the cogroup
+uses. The stats of a frame read only its geometry
 column, so a raw frame and its prepped frame give the same stats.
 """
 
@@ -68,7 +74,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from ..functions.st import st_cells_from_bbox
+from ..functions.st import _cell_lists
+from ..index import cells as C
 from ..index.cells import MAX_RES, cell_size, pick_resolution
 from ._buildindex import (PARTIAL_SCHEMA, BuildTable, bbox_partial,
                           collect_build, combine_partials)
@@ -80,51 +87,47 @@ BROADCAST_EXPLODED_ROWS = 2_000_000
 # more rows than this never passes _fits: the bounded build collect stops
 # one row past it. Derived, not a knob.
 BROADCAST_MAX_ROWS = BROADCAST_EXPLODED_ROWS * 4 // 9
+# a shuffle row covering more cells than this at the join's resolution
+# is a giant (the broadcast index's always-row threshold)
+MAX_CELLS = 4096
 
 
 @dataclass(frozen=True)
 class JoinPlan:
     """What a join runs. ``table`` is the collected build side to
     broadcast (``_buildindex.BuildTable``), or None for the shuffle plan.
-    ``probe_floor`` / ``build_floor`` are the coarsest cover res each
-    side's rows can fall back to; a broadcast plan has both at
-    ``resolution``."""
+    ``giants`` holds the shuffle plan's collected giant rows of the
+    probe and the build side (``_collect_giants``), None for a side
+    without any."""
 
     resolution: int
     table: BuildTable | None
-    probe_floor: int
-    build_floor: int
     domain: tuple
+    giants: tuple = (None, None)
 
-    def cover(self, side: str, pad: float = 0.0) -> Column:
-        """Shuffle cover cells of a prepped ``side`` ("probe" or "build")
-        from its ``__bb`` struct (no second WKB decode), the bbox padded
-        by ``pad`` (dwithin), with ancestors down to the other side's
-        floor."""
-        floor = self.build_floor if side == "probe" else self.probe_floor
-        lo = [F.col("__bb.minx"), F.col("__bb.miny")]
-        hi = [F.col("__bb.maxx"), F.col("__bb.maxy")]
-        if pad:
-            lo = [c - pad for c in lo]
-            hi = [c + pad for c in hi]
-        cells = st_cells_from_bbox(*lo, *hi, self.resolution,
-                                   domain=self.domain)
-        if floor < self.resolution:
-            cells = _ancestors_udf(floor)(cells)
-        return cells
+    def cover(self, pad: float = 0.0) -> Column:
+        """Shuffle cover cells at ``resolution`` of a prepped side from
+        its ``__bb`` struct (no second WKB decode), the bbox padded by
+        ``pad`` (dwithin): empty for a giant, NULL without a bbox, so
+        ``explode`` keeps both out of the cogroup."""
+        return _cover_udf(self.resolution, self.domain, pad)(
+            *[F.col(f"__bb.{c}") for c in ("minx", "miny", "maxx", "maxy")])
 
 
 def plan_join(probe: DataFrame, build: DataFrame, bid: str,
               geoms: tuple[str, str], resolution: int | None, domain, *,
-              broadcast: bool | None, pad: float = 0.0) -> JoinPlan:
+              broadcast: bool | None, prepped: tuple[DataFrame, str],
+              pad: float = 0.0, keys: list[str] = ()) -> JoinPlan:
     """Plan of sjoin, overlay and overlay_candidates.
 
     ``probe`` is the caller's raw probe and ``build`` the un-widened
     build side (prepped, so it carries ``bid`` for the collect): every
     planner job reads them, never the widened frames the passes read,
     whose repartition would add a shuffle stage to each job.
-    ``broadcast`` False skips the decision; ``pad`` widens the probe's
-    bboxes (dwithin)."""
+    ``prepped`` is the prepped probe and its id column, which the probe's
+    giant collect reads. ``broadcast`` False skips the decision; ``pad``
+    widens the probe's bboxes (dwithin); ``keys`` are the equality
+    columns the giants carry (``on_attribute`` / ``pair_on``)."""
     pgeom, bgeom = geoms
     stats = [None, None]
     if broadcast is not False:
@@ -137,14 +140,38 @@ def plan_join(probe: DataFrame, build: DataFrame, bid: str,
             if broadcast or _fits(stats[1], res, domain):
                 if table is None:  # fits, so n <= BROADCAST_MAX_ROWS
                     table = collect_build(build, bid, bgeom)
-                return JoinPlan(res, table, res, res, domain)
+                return JoinPlan(res, table, domain)
     stats = [s if s is not None else _side_stats(df, g)
              for s, df, g in zip(stats, (probe, build), geoms)]
     if resolution is None:
         resolution = _estimate_resolution(stats, domain)
-    return JoinPlan(resolution, None,
-                    _min_cover_res(stats[0], resolution, domain, pad),
-                    _min_cover_res(stats[1], resolution, domain), domain)
+    clamp = [_min_cover_res(stats[0], resolution, domain, pad),
+             _min_cover_res(stats[1], resolution, domain)]
+    plan = JoinPlan(resolution, None, domain)
+    giants = [None, None]
+    for k, (df, id_col, geom, p) in enumerate(
+            (prepped + (pgeom, pad), (build, bid, bgeom, 0.0))):
+        if clamp[k] == resolution:  # no row of this side can be a giant
+            continue
+        table = _collect_giants(df, id_col, geom, plan.cover(p), keys)
+        if table is None:  # over the bound: clamp, so no row is a giant
+            return JoinPlan(min(clamp), None, domain)
+        giants[k] = table if table.n else None
+    return JoinPlan(resolution, None, domain, tuple(giants))
+
+
+def _collect_giants(df: DataFrame, id_col: str, geom: str, cover: Column,
+                    keys: list[str]) -> BuildTable | None:
+    """The giant rows (empty ``cover``) of a prepped side, collected like
+    a build side (bounded at ``BROADCAST_MAX_ROWS``; None past it). Their
+    id column holds a struct of the id and the ``keys`` values as
+    ``__a0``..; a row with a NULL key never pairs and is left out."""
+    giant = F.size(cover) == 0
+    for c in keys:
+        giant &= F.col(c).isNotNull()
+    return collect_build(df.filter(giant).withColumn("__gid", F.struct(
+        id_col, *[F.col(c).alias(f"__a{i}") for i, c in enumerate(keys)])),
+        "__gid", geom, BROADCAST_MAX_ROWS)
 
 
 def plan_nearest(build: DataFrame, bid: str, geom: str,
@@ -171,9 +198,8 @@ def plan_nearest(build: DataFrame, bid: str, geom: str,
     if broadcast:
         if table is None:  # fits, so n <= BROADCAST_MAX_ROWS
             table = collect_build(build, bid, geom)
-        return JoinPlan(resolution, table, resolution, resolution, domain)
-    resolution = _min_cover_res(stats, resolution, domain)
-    return JoinPlan(resolution, None, resolution, resolution, domain)
+        return JoinPlan(resolution, table, domain)
+    return JoinPlan(_min_cover_res(stats, resolution, domain), None, domain)
 
 
 def _size_build(build: DataFrame, bid: str, geom: str,
@@ -287,64 +313,49 @@ def _all_lineal_headers(prefixes: list[str]) -> bool:
 
 def _min_cover_res(stats: dict, resolution: int, domain,
                    pad: float = 0.0) -> int:
-    """Lower bound on the per-row cover res this side can produce
-    (bbox_cover's max_cells fallback on the largest bbox, worst grid
-    alignment). Never higher than any actual row's res."""
-    w = stats["mw"] + 2 * pad
-    h = stats["mh"] + 2 * pad
+    """The clamp rule: the finest res, at most ``resolution``, where this
+    side's largest bbox (padded by ``pad``) is no giant (``_giant``), so
+    no row of the side is one."""
     for r in range(resolution, 0, -1):
-        cw, ch = cell_size(r, domain)
-        nx = int(np.floor(w / cw)) + 2
-        ny = int(np.floor(h / ch)) + 2
-        if nx * ny <= 4096:  # the covers' max_cells
+        if not _giant(np.array([[0.0, 0.0, stats["mw"], stats["mh"]]]), r,
+                      domain, pad)[0]:
             return r
     return 0
 
 
-def _ancestors_udf(down_to: int):
-    """array<long> cells -> cells + ancestor chain down to ``down_to``.
+def _giant(bb: np.ndarray, resolution: int, domain,
+           pad: float = 0.0) -> np.ndarray:
+    """Which bbox rows of ``bb`` (n, 4), padded by ``pad``, are giants at
+    ``resolution``: their cover at the worst grid alignment (extent in
+    cells plus two per axis) exceeds ``MAX_CELLS``. An extent rule, so
+    the stats of a side bound every row's split exactly; a NaN row is
+    none."""
+    cw, ch = cell_size(resolution, domain)
+    nx = np.floor((bb[:, 2] - bb[:, 0] + 2 * pad) / cw) + 2
+    ny = np.floor((bb[:, 3] - bb[:, 1] + 2 * pad) / ch) + 2
+    return nx * ny > MAX_CELLS
 
-    Vectorized over the whole Arrow batch: each cell's parents down to
-    ``down_to`` appended per resolution step, then one lexsort for the
-    per-row unique — no per-row Python loop. Only the shuffle cell
-    cogroup uses cover ancestors; the broadcast index is a single fine
-    grid."""
+
+def _cover_udf(resolution: int, domain, pad: float):
+    """bbox columns -> array<long> cells at ``resolution`` of the bbox
+    padded by ``pad``: every grid cell of a non-giant row, empty for a
+    giant, NULL for a NaN bbox."""
 
     @pandas_udf("array<long>")
-    def _f(cells: pd.Series) -> pd.Series:
-        import pyarrow as pa
-
-        from ..index import cells as C
-
-        n = len(cells)
-        arr = pa.array(cells, type=pa.list_(pa.int64()))
-        offs = arr.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        flat = arr.values.to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False)
-        lens = np.diff(offs)
-        prow = np.repeat(np.arange(n, dtype=np.int64), lens)
-        nulls = None
-        if arr.null_count:
-            nulls = arr.is_null().to_numpy(zero_copy_only=False)
-            keep = ~np.repeat(nulls, lens)
-            flat, prow = flat[keep], prow[keep]
-        cflat, crow = [flat], [prow]
-        if len(flat):
-            res = C.cell_res(flat)
-            for step in range(1, int(res.max()) - down_to + 1):
-                m = res - step >= down_to
-                cflat.append(C.parent(flat[m], step))
-                crow.append(prow[m])
-        cflat, crow = np.concatenate(cflat), np.concatenate(crow)
-        order = np.lexsort((cflat, crow))
-        cs, rs = cflat[order], crow[order]
-        first = np.ones(len(cs), dtype=bool)
-        first[1:] = (cs[1:] != cs[:-1]) | (rs[1:] != rs[:-1])
-        cs, rs = cs[first], rs[first]
-        bounds_ = np.append(0, np.cumsum(np.bincount(rs, minlength=n)))
-        out = [None if (nulls is not None and nulls[i])
-               else cs[bounds_[i]:bounds_[i + 1]]
-               for i in range(n)]
-        return pd.Series(out, dtype=object)
+    def _f(mnx: pd.Series, mny: pd.Series, mxx: pd.Series,
+           mxy: pd.Series) -> pd.Series:
+        bb = np.column_stack([s.to_numpy(dtype=np.float64)
+                              for s in (mnx, mny, mxx, mxy)])
+        miss = np.isnan(bb[:, 0])
+        keep = ~(miss | _giant(bb, resolution, domain, pad))
+        bb = np.nan_to_num(bb[keep]) + np.array([-pad, -pad, pad, pad])
+        i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
+        i1, j1 = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
+        _, ii, jj = C.expand_rects(i0, j0, i1, j1)
+        off = np.zeros(len(keep) + 1, dtype=np.int64)
+        off[1:][keep] = (i1 - i0 + 1) * (j1 - j0 + 1)
+        np.cumsum(off, out=off)
+        return _cell_lists(C.pack(resolution, C.morton_encode(ii, jj)), off,
+                           miss)
 
     return _f

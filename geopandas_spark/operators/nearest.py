@@ -975,7 +975,7 @@ def sjoin_nearest(
     else:
         matched = _shuffle_knn_matched(
             left, right, lid, rid, left_geom, right_geom,
-            plan.cover("build"),
+            plan.cover(),
             resolution, domain, min_cell, k_cap, grid_n, max_distance,
             exclusive, narrow, lid_t, rid_t)
 

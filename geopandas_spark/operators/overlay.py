@@ -269,14 +269,14 @@ def overlay_candidates(
     """Exact bbox-overlap candidate pair set of an overlay — the
     SQL-reproducible stage of the overlay plan.
 
-    Runs the same prep, bbox-stats, resolution pick, cover generation,
-    min-res ancestor chains and cell cogroup as ``overlay``'s shuffle plan
-    but stops at the envelope test: one row per (df1, df2) pair whose
+    Runs the same prep, bbox-stats, resolution pick, one-resolution
+    cover, cell cogroup and giant pass as ``overlay``'s shuffle plan but
+    stops at the envelope test: one row per (df1, df2) pair whose
     bounding boxes overlap or touch, with the envelope-intersection
     bounds (``iminx/iminy/imaxx/imaxy``). Every emitted value is
     closed-form over the input bboxes, so an external SQL engine can
     reproduce the full result hash — auditing the candidate machinery
-    (cover resolution, ancestor chains, the reference-point rule) that
+    (cover resolution, the giant split, the reference-point rule) that
     the general-polygon intersection kernel rides on; the intersection
     areas themselves have no closed form and stay pinned by the
     GH-vs-sweep parity tests (tests/test_unary_binary.py).
@@ -285,9 +285,10 @@ def overlay_candidates(
     WKB moves — and each pair is emitted once, in its canonical cell.
     """
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
-    df2p, i2 = _prep_side(df2, geom, id2, "o2")
-    plan = plan_join(df1, df2, i2, (geom, geom), resolution, domain,
-                     broadcast=False)
+    raw2, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
+    df2p = _widen_build(raw2, geom)
+    plan = plan_join(df1, raw2, i2, (geom, geom), resolution, domain,
+                     broadcast=False, prepped=(df1p, i1))
     pairs = _cogroup_pairs(
         plan, df1p, df2p, i1, i2, _envelope_body,
         f"__i1 {dict(df1p.dtypes)[i1]}, __i2 {dict(df2p.dtypes)[i2]}, "
@@ -383,7 +384,8 @@ def overlay(
     df2p = _widen_build(raw2, geom)
     # as in sjoin; pair_on always rides the shuffle plan
     plan = plan_join(df1, raw2, i2, (geom, geom), resolution, domain,
-                     broadcast=False if pair_on else None)
+                     broadcast=False if pair_on else None,
+                     prepped=(df1p, i1), keys=pair_on)
     df1c = df1p.drop("__bb")
     df2c = df2p.drop("__bb")
 

@@ -27,15 +27,19 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
      (probe, build) key where a pair can repeat, and refines. No join,
      no shuffle.
    * **Cogroup** (``_cogroup_pairs`` with the ``_refine_body``
-     kernel): every other case. Both sides are exploded per cover cell,
-     union-tagged and hash-partitioned by (cell, salt[, attribute
-     hash]). Each group's pairs are generated in-kernel and kept only in
-     their canonical cell (reference-point rule, ``_canonical_cells``);
-     ``on_attribute`` equality is checked exactly per pair. Hot cells
-     are salted on request (build rows replicated into salt buckets,
-     probe rows hashed into one). The same pass, with another kernel,
-     is overlay's and overlay_candidates' shuffle plan, and its block
-     function ``_cell_candidates`` is ``sjoin_bucketed``'s.
+     kernel): every other case. Both sides are exploded per cover cell
+     of one fine grid (the broadcast index's layout), union-tagged and
+     hash-partitioned by (cell, salt[, attribute hash]). Each group's
+     pairs are generated in-kernel and kept only in their canonical
+     cell (reference-point rule, ``_canonical_cells``); ``on_attribute``
+     equality is checked exactly per pair. A giant row (its cover over
+     the cell limit) skips the cells: the planner collects and
+     broadcasts a side's giants, and ``_giant_pairs`` streams the other
+     side against them through the same kernel. Hot cells are salted
+     on request (build rows replicated into salt buckets, probe rows
+     hashed into one). The same pass, with another kernel, is overlay's
+     and overlay_candidates' shuffle plan, and its block function
+     ``_cell_candidates`` is ``sjoin_bucketed``'s.
 3. **Assemble** (``_assemble``): suffix collided columns, attach
    ``index_right`` (``index_left`` for how='right'), null-pad outer
    rows. When both sides carry only (id, geometry) and how='inner', the
@@ -180,26 +184,19 @@ def _broadcast_probe_refined(lraw, build, predicate: str, distance,
     return lraw.mapInArrow(fn, schema=schema)
 
 
-def _canonical_cells(lbb: np.ndarray, rbb: np.ndarray, lres: np.ndarray,
-                     rres: np.ndarray, domain) -> np.ndarray:
+def _canonical_cells(lbb: np.ndarray, rbb: np.ndarray, resolution: int,
+                     domain) -> np.ndarray:
     """Reference-point rule: the one cell that owns a candidate pair.
 
-    A pair sharing k cover cells is kept only in the cell, at the pair's
-    coarser per-row cover res, that contains (max(minx), max(miny)) of
-    the two bboxes. That point lies in both bboxes and both sides emit
-    ancestors down to the other's coarsest res, so the cell is always
-    among the pair's joined cells. Replaces a dropDuplicates shuffle with
-    map-side math."""
+    A pair sharing k cover cells is kept only in the cell that contains
+    (max(minx), max(miny)) of the two bboxes. That point lies in both
+    bboxes, and both sides cover every cell of their bbox at the one
+    resolution, so the cell is always among the pair's joined cells.
+    Replaces a dropDuplicates shuffle with map-side math."""
     from ..index import cells as C
 
-    rc = np.minimum(lres, rres)
-    rx = np.maximum(lbb[:, 0], rbb[:, 0])
-    ry = np.maximum(lbb[:, 1], rbb[:, 1])
-    canon = np.empty(len(rc), dtype=np.int64)
-    for r in np.unique(rc):
-        m = rc == r
-        canon[m] = C.point_cell(rx[m], ry[m], int(r), domain)
-    return canon
+    return C.point_cell(np.maximum(lbb[:, 0], rbb[:, 0]),
+                        np.maximum(lbb[:, 1], rbb[:, 1]), resolution, domain)
 
 
 def _values_equal(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -210,7 +207,19 @@ def _values_equal(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return eq
 
 
-def _cell_candidates(lg, rg, lcell, lbb, rbb, lres, rres, domain,
+def _pair_mask(li, ri, lbb, rbb, lattr=(), rattr=()) -> np.ndarray:
+    """Which candidate pairs (li, ri) can match: their bboxes (the left
+    one already dwithin-padded) overlap or touch, and their attribute
+    values are equal (``_values_equal``). Shared by the cell cogroup and
+    the giant pass."""
+    m = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
+         & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
+    for la, ra in zip(lattr, rattr):
+        m &= _values_equal(la[li], ra[ri])
+    return m
+
+
+def _cell_candidates(lg, rg, lcell, lbb, rbb, resolution, domain,
                      lattr=(), rattr=()):
     """Candidate pairs of one block of cell groups, yielded as (li, ri)
     row-index chunks built from at most ~``BUFFER_ROWS`` cross-product
@@ -219,9 +228,8 @@ def _cell_candidates(lg, rg, lcell, lbb, rbb, lres, rres, domain,
 
     ``lg`` / ``rg`` are the sorted group numbers of the left / right
     rows; each left row meets every right row of its group. A pair is
-    kept when the bboxes (the left one already dwithin-padded) overlap,
-    its attribute values are equal (``_values_equal``) and the left
-    row's group cell ``lcell`` is the pair's canonical cell, so a pair
+    kept when it passes ``_pair_mask`` and the left row's group cell
+    ``lcell`` is the pair's canonical cell at ``resolution``, so a pair
     that shares several cells comes out once."""
     from ..geom.ragged import _expand_ranges
     from ._cellstream import BUFFER_ROWS
@@ -239,18 +247,36 @@ def _cell_candidates(lg, rg, lcell, lbb, rbb, lres, rres, domain,
         ga = gz
         li = np.repeat(grp, r1[grp] - r0[grp])
         ri = _expand_ranges(r0[grp], r1[grp])
-        pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
-               & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
-        for la, ra in zip(lattr, rattr):
-            pre &= _values_equal(la[li], ra[ri])
+        pre = _pair_mask(li, ri, lbb, rbb, lattr, rattr)
         li = li[pre]
         ri = ri[pre]
         if not len(li):
             continue
-        keep = _canonical_cells(lbb[li], rbb[ri], lres[li], rres[ri],
+        keep = _canonical_cells(lbb[li], rbb[ri], resolution,
                                 domain) == lcell[li]
         if keep.any():
             yield li[keep], ri[keep]
+
+
+_BCOLS = ["__bx0", "__by0", "__bx1", "__by1"]
+
+
+def _pass_rows(df: DataFrame, id_col: str, id_alias: str, geom,
+               on_attribute: list[str], *extra) -> DataFrame:
+    """The columns a shuffle pair pass reads of one prepped side: its id
+    as ``id_alias``, its ``__bb`` as ``_BCOLS``, its WKB as ``__geom``
+    (when ``geom`` names it) and the ``on_attribute`` values as
+    ``__a0``..; rows with a NULL attribute never pair and are dropped."""
+    if on_attribute:
+        df = df.filter(reduce(operator.and_, [
+            F.col(c).isNotNull() for c in on_attribute]))
+    return df.select(
+        F.col(id_col).alias(id_alias),
+        *[F.col(f"__bb.{f}").alias(c)
+          for f, c in zip(("minx", "miny", "maxx", "maxy"), _BCOLS)],
+        *([F.col(geom).alias("__geom")] if geom else []),
+        *[F.col(c).alias(f"__a{i}") for i, c in enumerate(on_attribute)],
+        *extra)
 
 
 def _cogroup_pairs(plan, left: DataFrame, right: DataFrame, lid: str,
@@ -270,7 +296,9 @@ def _cogroup_pairs(plan, left: DataFrame, right: DataFrame, lid: str,
     ``_cell_candidates``; ``body(l, r, lbb, rbb)`` makes the block's pair
     kernel from its left and right rows (pandas, ids as ``__lid`` /
     ``__rid``) and bboxes, and that kernel maps each (li, ri) chunk to
-    output rows of ``schema`` (or None).
+    output rows of ``schema`` (or None). Giant rows (``plan.giants``)
+    have an empty cover and skip the cells: ``_giant_pairs`` runs the
+    same ``body`` on their pairs, and its rows are unioned in.
 
     ``salt`` = (hot_cell_threshold, salt_factor): build rows of hot cells
     are replicated into ``salt_factor`` buckets, probe rows hash into one
@@ -286,52 +314,27 @@ def _cogroup_pairs(plan, left: DataFrame, right: DataFrame, lid: str,
     """
     spark = left.sparkSession
     acols = [f"__a{i}" for i in range(len(on_attribute))]
-    bcols = ["__bx0", "__by0", "__bx1", "__by1"]
-
-    def tag(df, id_col, id_alias, geom, cells, side):
-        if on_attribute:
-            df = df.filter(reduce(operator.and_, [
-                F.col(c).isNotNull() for c in on_attribute]))
-        return df.select(
-            F.col(id_col).alias(id_alias),
-            *[F.col(f"__bb.{f}").alias(c)
-              for f, c in zip(("minx", "miny", "maxx", "maxy"), bcols)],
-            *([F.col(geom).alias("__geom")] if geom else []),
-            *[F.col(c).alias(a) for c, a in zip(on_attribute, acols)],
-            F.explode(cells).alias("__cell"),
-        ).withColumn("__side", F.lit(side))
-
     lgeom, rgeom = geoms or (None, None)
-    lx = tag(left, lid, "__lid", lgeom, plan.cover("probe", pad), 1)
-    rx = tag(right, rid, "__rid", rgeom, plan.cover("build"), 0)
-    salted = False
+    lx = _pass_rows(left, lid, "__lid", lgeom, on_attribute,
+                    F.explode(plan.cover(pad)).alias("__cell"),
+                    F.lit(1).alias("__side"))
+    rx = _pass_rows(right, rid, "__rid", rgeom, on_attribute,
+                    F.explode(plan.cover()).alias("__cell"),
+                    F.lit(0).alias("__side"))
+    lsalt = rsalt = F.lit(0).cast("long")
     if salt is not None:
         threshold, factor = salt
-        hot = (
-            rx.groupBy("__cell").count()
-            .filter(F.col("count") >= int(threshold))
-            .select(F.col("__cell").alias("__hc"))
-        )
-        hot_list = [r["__hc"] for r in hot.collect()]
+        hot_list = [r["__cell"] for r in rx.groupBy("__cell").count()
+                    .filter(F.col("count") >= int(threshold)).collect()]
         if hot_list:
-            S = int(factor)
-            lx = lx.withColumn(
-                "__salt",
-                F.when(F.col("__cell").isin(hot_list),
-                       F.pmod(F.xxhash64(F.col("__lid")), F.lit(S)))
-                .otherwise(F.lit(0)).cast("long"))
-            rx = rx.withColumn(
-                "__salt_arr",
-                F.when(F.col("__cell").isin(hot_list),
-                       F.sequence(F.lit(0), F.lit(S - 1)))
-                .otherwise(F.array(F.lit(0))),
-            ).withColumn("__salt0", F.explode("__salt_arr")
-                         ).withColumn("__salt", F.col("__salt0").cast("long")
-                         ).drop("__salt_arr", "__salt0")
-            salted = True
-    if not salted:
-        lx = lx.withColumn("__salt", F.lit(0).cast("long"))
-        rx = rx.withColumn("__salt", F.lit(0).cast("long"))
+            hot = F.col("__cell").isin(hot_list)
+            lsalt = F.when(hot, F.pmod(F.xxhash64("__lid"), F.lit(int(factor)))
+                           ).otherwise(0).cast("long")
+            rsalt = F.explode(F.when(hot, F.sequence(F.lit(0), F.lit(
+                int(factor) - 1))).otherwise(F.array(F.lit(0)))
+                .cast("array<long>"))
+    lx = lx.withColumn("__salt", lsalt)
+    rx = rx.withColumn("__salt", rsalt)
 
     # explicit partition count (AQE would size this exchange by bytes;
     # the pass is compute-bound — see operators/nearest.py)
@@ -347,34 +350,23 @@ def _cogroup_pairs(plan, left: DataFrame, right: DataFrame, lid: str,
     resolution, domain = plan.resolution, plan.domain
 
     def _process(pdf):
-        from ..index import cells as C
-
         lmask = pdf["__side"].to_numpy() == 1
         if not lmask.any() or lmask.all():
             return None
-        cell = pdf["__cell"].to_numpy(dtype=np.int64)
-        chg = np.empty(len(pdf), dtype=bool)
-        chg[0] = True
-        chg[1:] = cell[1:] != cell[:-1]
-        for k in keys[1:]:
-            kv = pdf[k].to_numpy(dtype=np.int64)
-            chg[1:] |= kv[1:] != kv[:-1]
-        gid = np.cumsum(chg)
-        bb = np.nan_to_num(pdf[bcols].to_numpy(dtype=np.float64))
+        kv = pdf[keys].to_numpy(dtype=np.int64)
+        gid = np.cumsum(np.r_[True, (kv[1:] != kv[:-1]).any(axis=1)])
+        cell = kv[:, 0]
+        bb = np.nan_to_num(pdf[_BCOLS].to_numpy(dtype=np.float64))
         lbb = bb[lmask]
         if pad:
             lbb = lbb + np.array([-pad, -pad, pad, pad])
         rbb = bb[~lmask]
-        lres = C.cover_res(lbb[:, 0], lbb[:, 1], lbb[:, 2], lbb[:, 3],
-                           resolution, domain=domain)
-        rres = C.cover_res(rbb[:, 0], rbb[:, 1], rbb[:, 2], rbb[:, 3],
-                           resolution, domain=domain)
         l = pdf[lmask].reset_index(drop=True)
         r = pdf[~lmask].reset_index(drop=True)
         pairs = None
         out = []
         for li, ri in _cell_candidates(
-                gid[lmask], gid[~lmask], cell[lmask], lbb, rbb, lres, rres,
+                gid[lmask], gid[~lmask], cell[lmask], lbb, rbb, resolution,
                 domain, [l[a].to_numpy() for a in acols],
                 [r[a].to_numpy() for a in acols]):
             if pairs is None:  # first candidates: decode once per block
@@ -389,7 +381,81 @@ def _cogroup_pairs(plan, left: DataFrame, right: DataFrame, lid: str,
 
         yield from stream_groups(it, keys, _process)
 
-    return tagged.mapInPandas(fn, schema=schema)
+    out = tagged.mapInPandas(fn, schema=schema)
+    pgiants, bgiants = plan.giants
+    if bgiants is not None:
+        out = out.unionByName(_giant_pairs(
+            plan, left, lid, lgeom, bgiants, True, body, schema, pad,
+            on_attribute))
+    if pgiants is not None:
+        out = out.unionByName(_giant_pairs(
+            plan, right, rid, rgeom, pgiants, False, body, schema, pad,
+            on_attribute))
+    return out
+
+
+def _giant_pairs(plan, stream: DataFrame, id_col: str, geom, giants,
+                 probe: bool, body, schema: str, pad: float,
+                 on_attribute: list[str]) -> DataFrame:
+    """The giant pass: pairs of one side's rows with the other side's
+    giants (``plan.giants``: rows whose cover exceeds the cell limit, so
+    the cell cogroup never sees them), broadcast like a build side.
+
+    ``probe`` True streams every probe row against the build giants;
+    False streams the build's non-giant rows (split by the cover's own
+    rule, ``_planner._giant``) against the probe giants. So a pair with
+    a build giant comes out of the first, one with only a probe giant
+    out of the second, and every other pair out of the cogroup: each
+    exactly once.
+    Per streamed batch, every (row, giant) pair that passes
+    ``_pair_mask`` goes to the cogroup's ``body(l, r, lbb, rbb)``, the
+    giants as the other side's rows."""
+    import pyarrow as pa
+
+    from ._planner import _giant
+
+    acols = [f"__a{i}" for i in range(len(on_attribute))]
+    t = giants.tbl
+    g = pa.Table.from_arrays(
+        [*t.column("i").combine_chunks().flatten(), t.column("g")],
+        ["__rid" if probe else "__lid", *acols, "__geom"]).to_pandas()
+    padding = np.array([-pad, -pad, pad, pad])
+    bc = stream.sparkSession.sparkContext.broadcast(
+        (g, giants.bb if probe else giants.bb + padding))
+    resolution, domain = plan.resolution, plan.domain
+
+    def fn(it):
+        from ._cellstream import BUFFER_ROWS
+
+        g, gbb = bc.value
+        m = len(g)
+        step = max(1, BUFFER_ROWS // m)
+        for pdf in it:
+            sbb = pdf[_BCOLS].to_numpy(dtype=np.float64)
+            if probe:
+                l, r, lbb, rbb = pdf, g, sbb + padding, gbb
+            else:  # a build giant's pairs came out of the probe pass
+                keep = ~_giant(sbb, resolution, domain)
+                pdf = pdf[keep].reset_index(drop=True)
+                l, r, lbb, rbb = g, pdf, gbb, sbb[keep]
+            lattr = [l[a].to_numpy() for a in acols]
+            rattr = [r[a].to_numpy() for a in acols]
+            pairs = None
+            for s0 in range(0, len(pdf), step):
+                si = np.arange(s0, min(s0 + step, len(pdf)))
+                si, gi = si.repeat(m), np.tile(np.arange(m), len(si))
+                li, ri = (si, gi) if probe else (gi, si)
+                ok = _pair_mask(li, ri, lbb, rbb, lattr, rattr)
+                if not ok.any():
+                    continue
+                if pairs is None:  # first candidates: decode once per batch
+                    pairs = body(l, r, lbb, rbb)
+                o = pairs(li[ok], ri[ok])
+                if o is not None:
+                    yield o
+
+    return _pass_rows(stream, id_col, "__lid" if probe else "__rid", geom,
+                      on_attribute).mapInPandas(fn, schema=schema)
 
 
 def _refine_body(predicate: str, distance, emit_geom: bool):
@@ -526,7 +592,8 @@ def sjoin(
     plan = plan_join(
         raw_left, raw_right, rid, (left_geom, right_geom), resolution,
         domain, broadcast=(False if on_attribute or salt_hot_cells
-                           else broadcast_right), pad=pad)
+                           else broadcast_right), prepped=(left, lid),
+        pad=pad, keys=on_attribute)
 
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,

@@ -44,10 +44,9 @@ def write_bucketed_cells(
         "cell", F.explode(st_cells(geom, resolution, domain=domain)))
     # bbox_cover coarsens any row whose cover would exceed max_cells;
     # sjoin_bucketed's cell cogroup matches SAME-res cells only, so a
-    # coarsened row would be silently unjoinable (ADVICE r2). Bucketed
-    # tables can't carry ancestor chains without a cartesian blow-up at
-    # the coarse levels, so validate BEFORE writing: reject if any row
-    # fell back (one extra pass; writes are one-time by design).
+    # coarsened row would be silently unjoinable (ADVICE r2), so
+    # validate BEFORE writing: reject if any row fell back (one extra
+    # pass; writes are one-time by design).
     mn = (out.agg(F.min(F.shiftright("cell", _RES_SHIFT)).alias("r"))
           .collect()[0]["r"])
     if mn is not None and int(mn) < resolution:
@@ -136,8 +135,7 @@ def sjoin_bucketed(
             for li, ri in _cell_candidates(
                     np.zeros(nl), np.zeros(nr), np.full(nl, key[0].as_py()),
                     np.nan_to_num(bounds(lb)), np.nan_to_num(bounds(rb)),
-                    np.full(nl, resolution), np.full(nr, resolution),
-                    domain):
+                    resolution, domain):
                 ok = np.asarray(pairwise_predicate(
                     predicate, lb.take(li), rb.take(ri)), dtype=bool)
                 o_l.append(li[ok])

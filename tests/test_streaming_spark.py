@@ -329,9 +329,9 @@ def test_sjoin_nearest_stream_coarse_right(spark):
 
 
 def test_sjoin_stream_coarse_covers_exact(spark):
-    """Rows whose cover falls back to a coarser res (max_cells exceeded)
-    still join exactly — ancestor chains both ways + canonical-res
-    refine (ADVICE r2: coarsened rows were silently unjoinable)."""
+    """Rows whose cover exceeds max_cells still join exactly: the
+    static side's giant rows are always-candidates of the broadcast
+    index (ADVICE r2: coarsened rows were silently unjoinable)."""
     from geopandas_spark.geom import wkt as W
     from geopandas_spark.geom.wkb import to_wkb
     from geopandas_spark.operators.sjoin import sjoin
