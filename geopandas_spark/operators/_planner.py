@@ -46,9 +46,9 @@ outcome as one ``JoinPlan``:
    only if its largest bbox is one (``_min_cover_res`` below the
    resolution: the stats bound every row); the planner then collects
    that side's giants in one job bounded at ``BROADCAST_MAX_ROWS``,
-   filtered on the same cover column as the cogroup, and the other
-   side streams against them (``sjoin._giant_pairs``). A side whose
-   giants pass the bound clamps the resolution to the smaller
+   filtered by the rule the cover applies (``JoinPlan.giant``), and
+   the other side streams against them (``sjoin._giant_pairs``). A side
+   whose giants pass the bound clamps the resolution to the smaller
    ``_min_cover_res`` of the two sides, where no row is a giant. kNN's
    shuffle plan always clamps, to its build's ``_min_cover_res``: it
    joins on exact fine-cell equality and has no giant pass. The clamp
@@ -110,8 +110,16 @@ class JoinPlan:
         its ``__bb`` struct (no second WKB decode), the bbox padded by
         ``pad`` (dwithin): empty for a giant, NULL without a bbox, so
         ``explode`` keeps both out of the cogroup."""
-        return _cover_udf(self.resolution, self.domain, pad)(
-            *[F.col(f"__bb.{c}") for c in ("minx", "miny", "maxx", "maxy")])
+        res, domain = self.resolution, self.domain  # pickle no tables
+        return _bbox_udf("array<long>",
+                         lambda bb: _cells(bb, res, domain, pad))
+
+    def giant(self, pad: float = 0.0) -> Column:
+        """Whether each row of a prepped side is a giant (``_giant``):
+        the rows whose ``cover`` is empty, without building the cells."""
+        res, domain = self.resolution, self.domain
+        return _bbox_udf("boolean", lambda bb: pd.Series(
+            _giant(bb, res, domain, pad)))
 
 
 def plan_join(probe: DataFrame, build: DataFrame, bid: str,
@@ -153,20 +161,19 @@ def plan_join(probe: DataFrame, build: DataFrame, bid: str,
             (prepped + (pgeom, pad), (build, bid, bgeom, 0.0))):
         if clamp[k] == resolution:  # no row of this side can be a giant
             continue
-        table = _collect_giants(df, id_col, geom, plan.cover(p), keys)
+        table = _collect_giants(df, id_col, geom, plan.giant(p), keys)
         if table is None:  # over the bound: clamp, so no row is a giant
             return JoinPlan(min(clamp), None, domain)
         giants[k] = table if table.n else None
     return JoinPlan(resolution, None, domain, tuple(giants))
 
 
-def _collect_giants(df: DataFrame, id_col: str, geom: str, cover: Column,
+def _collect_giants(df: DataFrame, id_col: str, geom: str, giant: Column,
                     keys: list[str]) -> BuildTable | None:
-    """The giant rows (empty ``cover``) of a prepped side, collected like
-    a build side (bounded at ``BROADCAST_MAX_ROWS``; None past it). Their
-    id column holds a struct of the id and the ``keys`` values as
-    ``__a0``..; a row with a NULL key never pairs and is left out."""
-    giant = F.size(cover) == 0
+    """The ``giant`` rows of a prepped side, collected like a build side
+    (bounded at ``BROADCAST_MAX_ROWS``; None past it). Their id column
+    holds a struct of the id and the ``keys`` values as ``__a0``..; a
+    row with a NULL key never pairs and is left out."""
     for c in keys:
         giant &= F.col(c).isNotNull()
     return collect_build(df.filter(giant).withColumn("__gid", F.struct(
@@ -336,26 +343,30 @@ def _giant(bb: np.ndarray, resolution: int, domain,
     return nx * ny > MAX_CELLS
 
 
-def _cover_udf(resolution: int, domain, pad: float):
-    """bbox columns -> array<long> cells at ``resolution`` of the bbox
-    padded by ``pad``: every grid cell of a non-giant row, empty for a
-    giant, NULL for a NaN bbox."""
+def _bbox_udf(rtype: str, fn) -> Column:
+    """``fn`` (bboxes (n, 4) -> pd.Series) over a prepped side's ``__bb``
+    struct, as a pandas UDF of return type ``rtype``."""
 
-    @pandas_udf("array<long>")
+    @pandas_udf(rtype)
     def _f(mnx: pd.Series, mny: pd.Series, mxx: pd.Series,
            mxy: pd.Series) -> pd.Series:
-        bb = np.column_stack([s.to_numpy(dtype=np.float64)
-                              for s in (mnx, mny, mxx, mxy)])
-        miss = np.isnan(bb[:, 0])
-        keep = ~(miss | _giant(bb, resolution, domain, pad))
-        bb = np.nan_to_num(bb[keep]) + np.array([-pad, -pad, pad, pad])
-        i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
-        i1, j1 = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
-        _, ii, jj = C.expand_rects(i0, j0, i1, j1)
-        off = np.zeros(len(keep) + 1, dtype=np.int64)
-        off[1:][keep] = (i1 - i0 + 1) * (j1 - j0 + 1)
-        np.cumsum(off, out=off)
-        return _cell_lists(C.pack(resolution, C.morton_encode(ii, jj)), off,
-                           miss)
+        return fn(np.column_stack([s.to_numpy(dtype=np.float64)
+                                   for s in (mnx, mny, mxx, mxy)]))
 
-    return _f
+    return _f(*[F.col(f"__bb.{c}") for c in ("minx", "miny", "maxx", "maxy")])
+
+
+def _cells(bb: np.ndarray, resolution: int, domain, pad: float) -> pd.Series:
+    """Cover cells at ``resolution`` of each bbox row of ``bb`` padded by
+    ``pad``: every grid cell of a non-giant row, empty for a giant, NULL
+    for a NaN bbox."""
+    miss = np.isnan(bb[:, 0])
+    keep = ~(miss | _giant(bb, resolution, domain, pad))
+    bb = np.nan_to_num(bb[keep]) + np.array([-pad, -pad, pad, pad])
+    i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
+    i1, j1 = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
+    _, ii, jj = C.expand_rects(i0, j0, i1, j1)
+    off = np.zeros(len(keep) + 1, dtype=np.int64)
+    off[1:][keep] = (i1 - i0 + 1) * (j1 - j0 + 1)
+    np.cumsum(off, out=off)
+    return _cell_lists(C.pack(resolution, C.morton_encode(ii, jj)), off, miss)
