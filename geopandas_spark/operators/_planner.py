@@ -110,7 +110,8 @@ class JoinPlan:
         its ``__bb`` struct (no second WKB decode), the bbox padded by
         ``pad`` (dwithin): empty for a giant, NULL without a bbox, so
         ``explode`` keeps both out of the cogroup."""
-        res, domain = self.resolution, self.domain  # pickle no tables
+        # plain values: the UDF closure must not pickle the giant tables
+        res, domain = self.resolution, self.domain
         return _bbox_udf("array<long>",
                          lambda bb: _cells(bb, res, domain, pad))
 
