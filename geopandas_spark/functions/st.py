@@ -343,13 +343,15 @@ def st_clip_by_rect(geom, minx: float, miny: float, maxx: float, maxy: float) ->
 def _cell_lists(flat: np.ndarray, offsets: np.ndarray,
                 null: np.ndarray) -> pd.Series:
     """Ragged cells (flat ids, offsets) as an ``array<long>`` pandas UDF
-    result, NULL where ``null``: one Arrow list array, no per-row loop.
-    Shared by ``st_cells`` and the join cover (operators/_planner.py)."""
-    import pyarrow as pa
-
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int64()), pa.array(flat, type=pa.int64()),
-        mask=pa.array(null)).to_pandas()
+    result, NULL where ``null``: lists of Python ints, sliced by ``map``
+    in C with no per-row Python loop. pyspark copies each result row
+    with ``list()``, and Python ints are the elements it converts
+    fastest. Shared by ``st_cells`` and the join cover
+    (operators/_planner.py)."""
+    out = pd.Series(list(map(flat.tolist().__getitem__, map(
+        slice, offsets[:-1].tolist(), offsets[1:].tolist()))), dtype=object)
+    out[null] = None
+    return out
 
 
 def st_cells(geom, res: int, domain=DOMAIN_UNIT, compact: bool = False,
