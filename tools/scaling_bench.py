@@ -513,10 +513,6 @@ def report(results: dict, fname: str = "BENCH.md") -> None:
         "```",
     ]
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    addendum = os.path.join(root, "tools", "BENCH_ADDENDUM.md")
-    if os.path.isfile(addendum):
-        with open(addendum) as f:
-            lines += ["", f.read().rstrip()]
     path = os.path.join(root, fname)
     with open(path, "w") as f:
         f.write("\n".join(lines) + "\n")
