@@ -155,14 +155,6 @@ def _cover_rects(minx, miny, maxx, maxy, res: int, domain, max_cells: int):
         i0, j0, i1, j1 = i0 >> over, j0 >> over, i1 >> over, j1 >> over
 
 
-def cover_res(minx, miny, maxx, maxy, res: int, domain=DOMAIN_UNIT,
-              max_cells: int = 4096) -> np.ndarray:
-    """Per-row cover resolution: ``res`` unless the bbox would need more
-    than ``max_cells`` cells, in which case the row falls back to coarser
-    levels (deterministic)."""
-    return _cover_rects(minx, miny, maxx, maxy, res, domain, max_cells)[0]
-
-
 def expand_rects(i0, j0, i1, j1) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Every grid cell of each rectangle [i0..i1] x [j0..j1] as flat
     (row, i, j) arrays, i-major within a rectangle — one repeat/arange

@@ -135,18 +135,6 @@ class BuildIndex:
         import pyarrow.compute as pc
 
         tbl = build.tbl
-        bb = build.bb
-        live = ~np.isnan(bb).any(axis=1)
-        bb = np.nan_to_num(bb)
-        i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
-        i1, j1 = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
-        cnt = (i1 - i0 + 1) * (j1 - j0 + 1)
-        giant = live & (cnt > max_cells)
-        keyed = np.flatnonzero(live & ~giant)
-        rows, ii, jj = C.expand_rects(i0[keyed], j0[keyed], i1[keyed],
-                                      j1[keyed])
-        keys = ii * np.int64(1 << resolution) + jj
-        order = np.argsort(keys, kind="stable")
         # WKB ships as ONE buffer + offsets: pickling many small bytes
         # objects is driver-serial time the workers re-pay on unpickle.
         # NULL geometries ship as empty ranges and come back as NULL. The
@@ -164,9 +152,8 @@ class BuildIndex:
                     woff[0]:woff[-1]].tobytes()
         self.key = uuid.uuid4().hex
         self.bc = build.sc.broadcast({
-            "wbuf": wbuf, "woff": woff - woff[0], "keys": keys[order],
-            "rows": keyed[rows][order], "always": np.flatnonzero(giant),
-            "multi": bool(len(keyed) and cnt[keyed].max() > 1)})
+            "wbuf": wbuf, "woff": woff - woff[0],
+            **grid_keys(build.bb, resolution, domain, max_cells)})
         self.ids = tbl["i"].combine_chunks()
         self.id_type = build.id_type
         self.resolution = resolution
@@ -187,29 +174,32 @@ class BuildIndex:
         return self.ids.take(rows).to_numpy(zero_copy_only=False)
 
 
-class _Build:
-    """Decoded build side on a worker: geometry batch, nan-zeroed bounds,
-    WKB per row (one Arrow array), the sorted (key, row) index and the
-    always-rows."""
+def grid_keys(bb: np.ndarray, resolution: int, domain,
+              max_cells: int = 4096) -> dict:
+    """The layout of the module docstring over bboxes ``bb`` (n, 4) at
+    ``resolution``: the sorted cell ``keys`` and their ``rows``, the
+    ``always`` rows (over ``max_cells`` cells), and ``multi``: whether
+    some keyed row spans several cells. Driver-side numpy, no job."""
+    live = ~np.isnan(bb).any(axis=1)
+    bb = np.nan_to_num(bb)
+    i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
+    i1, j1 = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
+    cnt = (i1 - i0 + 1) * (j1 - j0 + 1)
+    giant = live & (cnt > max_cells)
+    keyed = np.flatnonzero(live & ~giant)
+    rows, ii, jj = C.expand_rects(i0[keyed], j0[keyed], i1[keyed], j1[keyed])
+    keys = ii * np.int64(1 << resolution) + jj
+    order = np.argsort(keys, kind="stable")
+    return {"keys": keys[order], "rows": keyed[rows][order],
+            "always": np.flatnonzero(giant),
+            "multi": bool(len(keyed) and cnt[keyed].max() > 1)}
 
-    def __init__(self, v: dict, resolution: int, domain):
-        import pyarrow as pa
 
-        from ..geom.kernels import bounds
-        from ..geom.wkb import from_wkb
+class GridIndex:
+    """Worker-side lookup of a ``grid_keys`` index over ``nb`` rows:
+    the candidate rows of probe rectangles."""
 
-        # one Arrow binary array over the shipped buffer; an empty range
-        # is a NULL geometry
-        woff = v["woff"]
-        nb = len(woff) - 1
-        valid = np.diff(woff) > 0
-        self.wkb = pa.Array.from_buffers(
-            pa.large_binary(), nb,
-            [pa.py_buffer(np.packbits(valid, bitorder="little")),
-             pa.py_buffer(woff), pa.py_buffer(v["wbuf"])],
-            null_count=int(nb - valid.sum()))
-        self.batch = from_wkb(self.wkb.to_numpy(zero_copy_only=False))
-        self.bounds = np.nan_to_num(bounds(self.batch))
+    def __init__(self, v: dict, nb: int, resolution: int, domain):
         self.nb = nb
         self.keys, self.rows = v["keys"], v["rows"]
         self.always, self.multi = v["always"], v["multi"]
@@ -267,6 +257,31 @@ class _Build:
         i1, j1 = self.grid_ij(bb[ok, 2], bb[ok, 3])
         for li, bi in self.candidates(i0, i1, j0, j1, cap):
             yield ok[li], bi
+
+
+class _Build(GridIndex):
+    """Decoded build side on a worker: geometry batch, nan-zeroed bounds,
+    WKB per row (one Arrow array), and its ``GridIndex``."""
+
+    def __init__(self, v: dict, resolution: int, domain):
+        import pyarrow as pa
+
+        from ..geom.kernels import bounds
+        from ..geom.wkb import from_wkb
+
+        # one Arrow binary array over the shipped buffer; an empty range
+        # is a NULL geometry
+        woff = v["woff"]
+        nb = len(woff) - 1
+        valid = np.diff(woff) > 0
+        self.wkb = pa.Array.from_buffers(
+            pa.large_binary(), nb,
+            [pa.py_buffer(np.packbits(valid, bitorder="little")),
+             pa.py_buffer(woff), pa.py_buffer(v["wbuf"])],
+            null_count=int(nb - valid.sum()))
+        self.batch = from_wkb(self.wkb.to_numpy(zero_copy_only=False))
+        self.bounds = np.nan_to_num(bounds(self.batch))
+        super().__init__(v, nb, resolution, domain)
 
     @cached_property
     def puntal(self) -> bool:

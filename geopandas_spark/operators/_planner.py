@@ -47,13 +47,13 @@ outcome as one ``JoinPlan``:
    resolution: the stats bound every row); the planner then collects
    that side's giants in one job bounded at ``BROADCAST_MAX_ROWS``,
    filtered by the rule the cover applies (``JoinPlan.giant``), and
-   the other side streams against them (``sjoin._giant_pairs``). A side
-   whose giants pass the bound clamps the resolution to the smaller
-   ``_min_cover_res`` of the two sides, where no row is a giant. kNN's
-   shuffle plan always clamps, to its build's ``_min_cover_res``: it
-   joins on exact fine-cell equality and has no giant pass. The clamp
-   reads the stats even when the caller gave the resolution:
-   correctness must not depend on a hint.
+   the other side streams against them, keyed on a grid of their own
+   (``sjoin._giant_pairs``). A side whose giants pass the bound clamps
+   the resolution to the smaller ``_min_cover_res`` of the two sides,
+   where no row is a giant. kNN's shuffle plan always clamps, to its
+   build's ``_min_cover_res``: it joins on exact fine-cell equality and
+   has no giant pass. The clamp reads the stats even when the caller
+   gave the resolution: correctness must not depend on a hint.
 
 Every job the planner starts is one of: the build collect, the build's
 or the probe's ``_side_stats``, a side's giant collect. Each reads the

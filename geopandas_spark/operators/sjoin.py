@@ -34,8 +34,9 @@ Physical plan (SURVEY.md §2.4 / §4), designed for 1000-executor scale:
      cell (reference-point rule, ``_canonical_cells``); ``on_attribute``
      equality is checked exactly per pair. A giant row (its cover over
      the cell limit) skips the cells: the planner collects and
-     broadcasts a side's giants, and ``_giant_pairs`` streams the other
-     side against them through the same kernel. Hot cells are salted
+     broadcasts a side's giants, keyed on a coarser grid of their own,
+     and ``_giant_pairs`` streams the other side against them through
+     the same kernel. Hot cells are salted
      on request (build rows replicated into salt buckets, probe rows
      hashed into one). The same pass, with another kernel, is overlay's
      and overlay_candidates' shuffle plan, and its block function
@@ -407,43 +408,48 @@ def _giant_pairs(plan, stream: DataFrame, id_col: str, geom, giants,
     a build giant comes out of the first, one with only a probe giant
     out of the second, and every other pair out of the cogroup: each
     exactly once.
-    Per streamed batch, every (row, giant) pair that passes
-    ``_pair_mask`` goes to the cogroup's ``body(l, r, lbb, rbb)``, the
-    giants as the other side's rows."""
-    import pyarrow as pa
-
+    The giants are keyed on a grid of their own, where an average giant
+    covers ~1-2 cells (``_buildindex.grid_keys``; one far past the
+    average is an always-row), so a streamed row meets only the giants
+    near it. Every candidate pair that passes ``_pair_mask`` goes to the
+    cogroup's ``body(l, r, lbb, rbb)``, the giants as the other side's
+    rows."""
+    from ..index.cells import pick_resolution
+    from ._buildindex import GridIndex, grid_keys
     from ._planner import _giant
 
     acols = [f"__a{i}" for i in range(len(on_attribute))]
-    t = giants.tbl
-    g = pa.Table.from_arrays(
-        [*t.column("i").combine_chunks().flatten(), t.column("g")],
-        ["__rid" if probe else "__lid", *acols, "__geom"]).to_pandas()
-    padding = np.array([-pad, -pad, pad, pad])
-    bc = stream.sparkSession.sparkContext.broadcast(
-        (g, giants.bb if probe else giants.bb + padding))
+    spark = stream.sparkSession
+    g = _udf_frame(giants, ["__rid" if probe else "__lid", *acols],
+                   spark.conf.get("spark.sql.session.timeZone"))
+    g["__geom"] = giants.tbl.column("g").to_pandas()
+    gbb = giants.bb if probe else giants.bb + np.array([-pad, -pad, pad, pad])
+    st = giants.stats()
+    gres = min(plan.resolution, pick_resolution(st["aw"], st["ah"],
+                                                domain=plan.domain))
+    bc = spark.sparkContext.broadcast(
+        (g, gbb, grid_keys(gbb, gres, plan.domain)))
     resolution, domain = plan.resolution, plan.domain
 
     def fn(it):
         from ._cellstream import BUFFER_ROWS
 
-        g, gbb = bc.value
-        m = len(g)
-        step = max(1, BUFFER_ROWS // m)
+        g, gbb, keys = bc.value
+        index = GridIndex(keys, len(g), gres, domain)
         for pdf in it:
             sbb = pdf[_BCOLS].to_numpy(dtype=np.float64)
             if probe:
-                l, r, lbb, rbb = pdf, g, sbb + padding, gbb
+                sbb = sbb + np.array([-pad, -pad, pad, pad])
+                l, r, lbb, rbb = pdf, g, sbb, gbb
             else:  # a build giant's pairs came out of the probe pass
                 keep = ~_giant(sbb, resolution, domain)
                 pdf = pdf[keep].reset_index(drop=True)
-                l, r, lbb, rbb = g, pdf, gbb, sbb[keep]
+                sbb = sbb[keep]
+                l, r, lbb, rbb = g, pdf, gbb, sbb
             lattr = [l[a].to_numpy() for a in acols]
             rattr = [r[a].to_numpy() for a in acols]
             pairs = None
-            for s0 in range(0, len(pdf), step):
-                si = np.arange(s0, min(s0 + step, len(pdf)))
-                si, gi = si.repeat(m), np.tile(np.arange(m), len(si))
+            for si, gi in index.bbox_candidates(sbb, BUFFER_ROWS):
                 li, ri = (si, gi) if probe else (gi, si)
                 ok = _pair_mask(li, ri, lbb, rbb, lattr, rattr)
                 if not ok.any():
@@ -456,6 +462,22 @@ def _giant_pairs(plan, stream: DataFrame, id_col: str, geom, giants,
 
     return _pass_rows(stream, id_col, "__lid" if probe else "__rid", geom,
                       on_attribute).mapInPandas(fn, schema=schema)
+
+
+def _udf_frame(table, names: list[str], tz: str) -> pd.DataFrame:
+    """The fields of a collected table's id struct (``_planner``'s giant
+    collect: the id, then the key values) as columns ``names``, converted
+    as ``mapInPandas`` converts its input (pyspark's serializer, session
+    time zone), so a giant's id and keys compare equal to the streamed
+    side's: ``toArrow`` hands timestamps over tz-aware in UTC, a pandas
+    UDF naive in time zone ``tz``."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+
+    ser = ArrowStreamPandasSerializer(tz, False, False)
+    cols = table.tbl.column("i").combine_chunks().flatten()
+    return pd.DataFrame({
+        n: ser.arrow_to_pandas(c, k, spark_type=f.dataType)
+        for k, (n, c, f) in enumerate(zip(names, cols, table.id_type.fields))})
 
 
 def _refine_body(predicate: str, distance, emit_geom: bool):

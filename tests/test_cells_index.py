@@ -111,16 +111,21 @@ def test_bbox_cover_matches_per_row_reference():
     maxx[:3] = [1.3, 0.0, 0.5]
     flat, off = C.bbox_cover(minx, miny, maxx, maxy, 8, max_cells=16)
 
-    res = C.cover_res(minx, miny, maxx, maxy, 8, max_cells=16)
-    assert len(np.unique(res)) > 2
+    res = []
     want = []
     for k in range(n):
-        r = int(res[k])
-        (i0,), (j0,) = C._grid_ij([minx[k]], [miny[k]], r, C.DOMAIN_UNIT)
-        (i1,), (j1,) = C._grid_ij([maxx[k]], [maxy[k]], r, C.DOMAIN_UNIT)
+        r = 9
+        while True:  # the finest res <= 8 where the row spans <= 16 cells
+            r -= 1
+            (i0,), (j0,) = C._grid_ij([minx[k]], [miny[k]], r, C.DOMAIN_UNIT)
+            (i1,), (j1,) = C._grid_ij([maxx[k]], [maxy[k]], r, C.DOMAIN_UNIT)
+            if (i1 - i0 + 1) * (j1 - j0 + 1) <= 16:
+                break
+        res.append(r)
         ii = np.repeat(np.arange(i0, i1 + 1), j1 - j0 + 1)
         jj = np.tile(np.arange(j0, j1 + 1), i1 - i0 + 1)
         want.append(C.pack(r, C.morton_encode(ii, jj)))
+    assert len(set(res)) > 2
     assert off[-1] == sum(len(w) for w in want)
     for k in range(n):
         assert np.array_equal(flat[off[k]:off[k + 1]], want[k])
@@ -147,12 +152,31 @@ def _overlap(a, b):
             & (a[:, None, 1] <= b[None, :, 3]) & (b[None, :, 1] <= a[:, None, 3]))
 
 
+def _giant_index_pairs(sbb, gbb, gres, max_cells):
+    """(stream row, giant row) pairs of overlapping bboxes, looked up as
+    the giant pass does: the giants keyed by ``grid_keys`` at ``gres``,
+    the stream rows probing them in small candidate blocks."""
+    from geopandas_spark.operators._buildindex import GridIndex, grid_keys
+
+    index = GridIndex(grid_keys(gbb, gres, C.DOMAIN_UNIT, max_cells),
+                      len(gbb), gres, C.DOMAIN_UNIT)
+    out = []
+    for si, gi in index.bbox_candidates(sbb, 7):
+        a, b = sbb[si], gbb[gi]
+        ok = ((a[:, 0] <= b[:, 2]) & (b[:, 0] <= a[:, 2])
+              & (a[:, 1] <= b[:, 3]) & (b[:, 1] <= a[:, 3]))
+        out += zip(si[ok], gi[ok])
+    return out
+
+
 def test_fine_grid_giant_split_emits_each_pair_once():
     """The shuffle join's one-resolution scheme, in numpy: rows meet in
     the cells of one fine grid and a pair is kept only in the cell of
     (max minx, max miny); giant rows (over ``max_cells``) skip the cells
-    and pair by a bbox test instead, every left row against the right
-    giants and every right non-giant row against the left giants. On
+    and pair through a grid index of their own at a coarser resolution
+    (``_buildindex.grid_keys``, its own always-rows included), every
+    left row against the right giants and every right non-giant row
+    against the left giants. On
     random bboxes with grid-snapped (touching) edges, boxes on and beyond
     the domain edge, NaN rows and giants on both sides, every
     bbox-overlapping pair (the left bbox padded) comes out exactly
@@ -189,14 +213,16 @@ def test_fine_grid_giant_split_emits_each_pair_once():
                                        C.DOMAIN_UNIT)
                     if ref == c:
                         got.append((a, b))
-        # giant passes
+        # giant passes, the giants keyed on a coarser grid of their own
+        gres = int(rng.integers(0, res + 1))
+        gcells = int(rng.choice([1, 4, 4096]))
         rg = np.flatnonzero(rgiant)
-        got += [(a, rg[b]) for a, b in zip(*np.nonzero(
-            _overlap(lbb, rbb[rg])))]
+        got += [(a, rg[b]) for a, b in _giant_index_pairs(
+            lbb, rbb[rg], gres, gcells)]
         lg = np.flatnonzero(lgiant)
         rn = np.flatnonzero(~rgiant)
-        got += [(lg[a], rn[b]) for a, b in zip(*np.nonzero(
-            _overlap(lbb[lg], rbb[rn])))]
+        got += [(lg[b], rn[a]) for a, b in _giant_index_pairs(
+            rbb[rn], lbb[lg], gres, gcells)]
         want = set(zip(*np.nonzero(_overlap(lbb, rbb))))
         assert len(got) == len(set(got)), trial
         assert set(got) == want, trial

@@ -109,6 +109,15 @@ _ATTRS = {
         lambda k: F.concat(F.lit("s"), (k % 3).cast("string")),
         lambda k: f"s{k % 3}",
     )],
+    # Arrow hands a collected timestamp over tz-aware, a pandas UDF
+    # naive in session time; the values are the key k % 3, in micros
+    "timestamp": [(
+        lambda k: F.when(k % 5 == 0, F.lit(None).cast("timestamp"))
+                   .otherwise(F.timestamp_micros(k % 3 * 86_400_000_001)),
+        lambda k: None if k % 5 == 0 else k % 3,
+        lambda k: F.timestamp_micros(k % 3 * 86_400_000_001),
+        lambda k: k % 3,
+    )],
     "two": [
         (lambda k: k % 2, lambda k: k % 2, lambda k: k % 2, lambda k: k % 2),
         (lambda k: F.concat(F.lit("s"), (k % 3).cast("string")),
@@ -232,6 +241,18 @@ def _giant_side(rng, n_pts, n_small, giant: bool):
     return out
 
 
+def _brute_wkb(lw, rw, pred, dist=None):
+    """Brute-force (left index, right index) pairs of two WKB lists."""
+    lv = [i for i, w in enumerate(lw) if w is not None]
+    rv = [i for i, w in enumerate(rw) if w is not None]
+    lb = B.from_wkb(np.repeat(np.array([lw[i] for i in lv], dtype=object),
+                              len(rv)))
+    rb = B.from_wkb(np.tile(np.array([rw[i] for i in rv], dtype=object),
+                            len(lv)))
+    truth = pairwise_predicate(pred, lb, rb, dist).reshape(len(lv), len(rv))
+    return {(lv[a], rv[b]) for a, b in zip(*np.nonzero(truth))}
+
+
 @pytest.mark.parametrize("pred", ["intersects", "dwithin"])
 @pytest.mark.parametrize("giant", ["left", "right", "both"])
 @pytest.mark.parametrize("bcast", [True, False])
@@ -255,14 +276,7 @@ def test_mixed_resolution_giant_polygons(spark, bcast, giant, pred):
     got = [(r.lid, r.index_right)
            for r in out.select("lid", "index_right").collect()]
 
-    lv = [i for i, w in enumerate(lw) if w is not None]
-    rv = [i for i, w in enumerate(rw) if w is not None]
-    lb = B.from_wkb(np.repeat(np.array([lw[i] for i in lv], dtype=object),
-                              len(rv)))
-    rb = B.from_wkb(np.tile(np.array([rw[i] for i in rv], dtype=object),
-                            len(lv)))
-    truth = pairwise_predicate(pred, lb, rb, dist).reshape(len(lv), len(rv))
-    exp = {(lv[a], rv[b]) for a, b in zip(*np.nonzero(truth))}
+    exp = _brute_wkb(lw, rw, pred, dist)
     assert set(got) == exp
     assert len(got) == len(exp)
     giant_ids = {"left": (len(lw) - 3, None), "right": (None, len(rw) - 3),
@@ -293,6 +307,40 @@ def test_mixed_resolution_giant_polygons(spark, bcast, giant, pred):
         assert len(got) == len(keyed)
         assert sum(1 for a, b in keyed if a == giant_ids[0]) > 5
         assert sum(1 for a, b in keyed if b == giant_ids[1]) > 20
+
+
+@pytest.mark.parametrize("attr", list(_ATTRS))
+def test_on_attribute_giants(spark, attr):
+    """on_attribute with a giant on each side: the giant pass compares
+    keys the driver collected with streamed ones, and every key type
+    (in a session time zone other than UTC) gives the brute-force pair
+    set, the giants' pairs included."""
+    import pandas as pd
+
+    rng = np.random.default_rng(5)
+    lw = _giant_side(rng, 200, 8, True)
+    rw = _giant_side(rng, 30, 8, True)
+    cols = [f"a{i}" for i in range(len(_ATTRS[attr]))]
+    ldf = spark.createDataFrame(
+        pd.DataFrame({"lid": np.arange(len(lw)), "geometry": lw}))
+    rdf = spark.createDataFrame(
+        pd.DataFrame({"rid": np.arange(len(rw)), "geometry": rw}))
+    for c, (lcol, _, rcol, _) in zip(cols, _ATTRS[attr]):
+        ldf = ldf.withColumn(c, lcol(F.col("lid")))
+        rdf = rdf.withColumn(c, rcol(F.col("rid")))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        got = [(r.lid, r.index_right) for r in sjoin(
+            ldf, rdf, left_id="lid", right_id="rid", resolution=8,
+            on_attribute=cols).select("lid", "index_right").collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    exp = {(a, b) for a, b in _brute_wkb(lw, rw, "intersects")
+           if all(_sql_eq(lv(a), rv(b)) for _, lv, _, rv in _ATTRS[attr])}
+    assert sorted(got) == sorted(exp)
+    gl, gr = len(lw) - 3, len(rw) - 3
+    assert any(a == gl for a, _ in exp) and any(b == gr for _, b in exp)
 
 
 def test_cogroup_same_result(data, spark):
