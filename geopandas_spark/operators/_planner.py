@@ -115,13 +115,6 @@ class JoinPlan:
         return _bbox_udf("array<long>",
                          lambda bb: _cells(bb, res, domain, pad))
 
-    def giant(self, pad: float = 0.0) -> Column:
-        """Whether each row of a prepped side is a giant (``_giant``):
-        the rows whose ``cover`` is empty, without building the cells."""
-        res, domain = self.resolution, self.domain
-        return _bbox_udf("boolean", lambda bb: pd.Series(
-            _giant(bb, res, domain, pad)))
-
 
 def plan_join(probe: DataFrame, build: DataFrame, bid: str,
               geoms: tuple[str, str], resolution: int | None, domain, *,
@@ -156,25 +149,28 @@ def plan_join(probe: DataFrame, build: DataFrame, bid: str,
         resolution = _estimate_resolution(stats, domain)
     clamp = [_min_cover_res(stats[0], resolution, domain, pad),
              _min_cover_res(stats[1], resolution, domain)]
-    plan = JoinPlan(resolution, None, domain)
     giants = [None, None]
     for k, (df, id_col, geom, p) in enumerate(
             (prepped + (pgeom, pad), (build, bid, bgeom, 0.0))):
         if clamp[k] == resolution:  # no row of this side can be a giant
             continue
-        table = _collect_giants(df, id_col, geom, plan.giant(p), keys)
+        table = _collect_giants(df, id_col, geom, resolution, domain, p, keys)
         if table is None:  # over the bound: clamp, so no row is a giant
             return JoinPlan(min(clamp), None, domain)
         giants[k] = table if table.n else None
     return JoinPlan(resolution, None, domain, tuple(giants))
 
 
-def _collect_giants(df: DataFrame, id_col: str, geom: str, giant: Column,
-                    keys: list[str]) -> BuildTable | None:
-    """The ``giant`` rows of a prepped side, collected like a build side
-    (bounded at ``BROADCAST_MAX_ROWS``; None past it). Their id column
-    holds a struct of the id and the ``keys`` values as ``__a0``..; a
-    row with a NULL key never pairs and is left out."""
+def _collect_giants(df: DataFrame, id_col: str, geom: str, resolution: int,
+                    domain, pad: float, keys: list[str]) -> BuildTable | None:
+    """The giants of a prepped side (``_giant`` on its ``__bb``, bboxes
+    padded by ``pad``: the rows whose ``JoinPlan.cover`` is empty,
+    without building the cells), collected like a build side (bounded
+    at ``BROADCAST_MAX_ROWS``; None past it). Their id column holds a
+    struct of the id and the ``keys`` values as ``__a0``..; a row with a
+    NULL key never pairs and is left out."""
+    giant = _bbox_udf("boolean", lambda bb: pd.Series(
+        _giant(bb, resolution, domain, pad)))
     for c in keys:
         giant &= F.col(c).isNotNull()
     return collect_build(df.filter(giant).withColumn("__gid", F.struct(
@@ -360,14 +356,11 @@ def _bbox_udf(rtype: str, fn) -> Column:
 def _cells(bb: np.ndarray, resolution: int, domain, pad: float) -> pd.Series:
     """Cover cells at ``resolution`` of each bbox row of ``bb`` padded by
     ``pad``: every grid cell of a non-giant row, empty for a giant, NULL
-    for a NaN bbox."""
+    for a NaN bbox. No row is coarsened (``bbox_cover`` unbounded)."""
     miss = np.isnan(bb[:, 0])
     keep = ~(miss | _giant(bb, resolution, domain, pad))
     bb = np.nan_to_num(bb[keep]) + np.array([-pad, -pad, pad, pad])
-    i0, j0 = C._grid_ij(bb[:, 0], bb[:, 1], resolution, domain)
-    i1, j1 = C._grid_ij(bb[:, 2], bb[:, 3], resolution, domain)
-    _, ii, jj = C.expand_rects(i0, j0, i1, j1)
-    off = np.zeros(len(keep) + 1, dtype=np.int64)
-    off[1:][keep] = (i1 - i0 + 1) * (j1 - j0 + 1)
-    np.cumsum(off, out=off)
-    return _cell_lists(C.pack(resolution, C.morton_encode(ii, jj)), off, miss)
+    flat, off = C.bbox_cover(*bb.T, resolution, domain, max_cells=np.inf)
+    out = np.zeros(len(keep) + 1, dtype=np.int64)
+    out[1:][keep] = np.diff(off)
+    return _cell_lists(flat, np.cumsum(out), miss)

@@ -39,7 +39,7 @@ from ..index.cells import DOMAIN_UNIT
 from ._buildindex import BuildIndex
 from ._planner import plan_join
 from .sjoin import (_check_keys, _cogroup_pairs, _output_columns,
-                    _prep_side, _suffix_columns, _widen_build)
+                    _pair_mask, _prep_side, _suffix_columns, _widen_build)
 
 VALID_HOW = ("intersection", "union", "identity", "symmetric_difference", "difference")
 
@@ -98,8 +98,7 @@ def _broadcast_probe_intersection(probe_raw, build, i1: str, *,
             lws = pdf["__g1"].to_numpy(dtype=object)
             for li, ri in b.bbox_candidates(lbb, _CAP):
                 # bbox prefilter: disjoint bboxes cannot intersect
-                pre = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
-                       & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
+                pre = _pair_mask(li, ri, lbb, rbb)
                 li = li[pre]
                 ri = ri[pre]
                 if not len(li):

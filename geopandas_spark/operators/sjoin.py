@@ -162,10 +162,7 @@ def _broadcast_probe_refined(lraw, build, predicate: str, distance,
                 # bbox prefilter (lbb already dwithin-padded): prunes
                 # exact predicate work; any predicate in VALID_PRED is
                 # false on bbox-disjoint (beyond pad) pairs
-                pre = ((lbb[ls, 0] <= rbb[rs, 2])
-                       & (rbb[rs, 0] <= lbb[ls, 2])
-                       & (lbb[ls, 1] <= rbb[rs, 3])
-                       & (rbb[rs, 1] <= lbb[ls, 3]))
+                pre = _pair_mask(ls, rs, lbb, rbb)
                 ls = ls[pre]
                 rs = rs[pre]
                 if not len(ls):
@@ -418,11 +415,23 @@ def _giant_pairs(plan, stream: DataFrame, id_col: str, geom, giants,
     from ._buildindex import GridIndex, grid_keys
     from ._planner import _giant
 
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
+    from pyspark.sql.types import BinaryType
+
     acols = [f"__a{i}" for i in range(len(on_attribute))]
     spark = stream.sparkSession
-    g = _udf_frame(giants, ["__rid" if probe else "__lid", *acols],
-                   spark.conf.get("spark.sql.session.timeZone"))
-    g["__geom"] = giants.tbl.column("g").to_pandas()
+    # the giants' ids, keys and WKB, converted as mapInPandas converts
+    # the streamed rows (session time zone), so their values compare
+    # equal: toArrow hands timestamps over tz-aware in UTC, a pandas UDF
+    # naive in session time
+    ser = ArrowStreamPandasSerializer(
+        spark.conf.get("spark.sql.session.timeZone"), False, False)
+    g = pd.DataFrame({
+        n: ser.arrow_to_pandas(c, 0, spark_type=t) for n, c, t in zip(
+            ["__rid" if probe else "__lid", *acols, "__geom"],
+            [*giants.tbl.column("i").combine_chunks().flatten(),
+             giants.tbl.column("g")],
+            [*[f.dataType for f in giants.id_type.fields], BinaryType()])})
     gbb = giants.bb if probe else giants.bb + np.array([-pad, -pad, pad, pad])
     st = giants.stats()
     gres = min(plan.resolution, pick_resolution(st["aw"], st["ah"],
@@ -462,22 +471,6 @@ def _giant_pairs(plan, stream: DataFrame, id_col: str, geom, giants,
 
     return _pass_rows(stream, id_col, "__lid" if probe else "__rid", geom,
                       on_attribute).mapInPandas(fn, schema=schema)
-
-
-def _udf_frame(table, names: list[str], tz: str) -> pd.DataFrame:
-    """The fields of a collected table's id struct (``_planner``'s giant
-    collect: the id, then the key values) as columns ``names``, converted
-    as ``mapInPandas`` converts its input (pyspark's serializer, session
-    time zone), so a giant's id and keys compare equal to the streamed
-    side's: ``toArrow`` hands timestamps over tz-aware in UTC, a pandas
-    UDF naive in time zone ``tz``."""
-    from pyspark.sql.pandas.serializers import ArrowStreamPandasSerializer
-
-    ser = ArrowStreamPandasSerializer(tz, False, False)
-    cols = table.tbl.column("i").combine_chunks().flatten()
-    return pd.DataFrame({
-        n: ser.arrow_to_pandas(c, k, spark_type=f.dataType)
-        for k, (n, c, f) in enumerate(zip(names, cols, table.id_type.fields))})
 
 
 def _refine_body(predicate: str, distance, emit_geom: bool):
