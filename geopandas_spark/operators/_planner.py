@@ -46,7 +46,7 @@ outcome as one ``JoinPlan``:
    only if its largest bbox is one (``_min_cover_res`` below the
    resolution: the stats bound every row); the planner then collects
    that side's giants in one job bounded at ``BROADCAST_MAX_ROWS``,
-   filtered by the rule the cover applies (``JoinPlan.giant``), and
+   filtered by the rule the cover applies (``_collect_giants``), and
    the other side streams against them, keyed on a grid of their own
    (``sjoin._giant_pairs``). A side whose giants pass the bound clamps
    the resolution to the smaller ``_min_cover_res`` of the two sides,

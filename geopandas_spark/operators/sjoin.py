@@ -208,8 +208,8 @@ def _values_equal(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 def _pair_mask(li, ri, lbb, rbb, lattr=(), rattr=()) -> np.ndarray:
     """Which candidate pairs (li, ri) can match: their bboxes (the left
     one already dwithin-padded) overlap or touch, and their attribute
-    values are equal (``_values_equal``). Shared by the cell cogroup and
-    the giant pass."""
+    values are equal (``_values_equal``). Shared by the cell cogroup,
+    the giant pass and the broadcast probes."""
     m = ((lbb[li, 0] <= rbb[ri, 2]) & (rbb[ri, 0] <= lbb[li, 2])
          & (lbb[li, 1] <= rbb[ri, 3]) & (rbb[ri, 1] <= lbb[li, 3]))
     for la, ra in zip(lattr, rattr):
