@@ -132,6 +132,28 @@ def test_build_stats_match_sql(spark, kind):
             == (kind == "puntal"))
 
 
+@pytest.mark.parametrize("kind", ["mixed", "lineal", "puntal"])
+def test_build_bboxes_match_st_bounds(spark, kind):
+    """The collected build's bboxes equal Spark's ``st_bounds`` of the
+    same rows, row for row (NULL, EMPTY, big-endian and EWKB rows
+    included): NaN wherever Spark gives NULL."""
+    from geopandas_spark.functions.st import st_bounds
+
+    build = _frame(spark, _build_rows(kind, seed=len(kind)))
+    rp, rid = S._prep_side(build, "geometry", "rid", "r", widen=False)
+    table = _buildindex.collect_build(rp, rid, "geometry")
+    got = table.bb[np.argsort(table.tbl["i"].to_numpy())]
+
+    rows = build.select("rid", st_bounds("geometry").alias("b")) \
+        .orderBy("rid").collect()
+    want = np.array([[np.nan if r.b is None or r.b[c] is None else r.b[c]
+                      for c in ("minx", "miny", "maxx", "maxy")]
+                     for r in rows], dtype=np.float64)
+    assert got.shape == want.shape == (build.count(), 4)
+    assert np.isnan(want).any()  # the NULL / EMPTY rows are in the test
+    np.testing.assert_array_equal(got, want)
+
+
 def test_row_cap_derived_from_exploded_bound():
     # every row counts >= 1.5 x 1.5 cells in _est_exploded
     cap = P.BROADCAST_MAX_ROWS
