@@ -19,11 +19,15 @@ per grid row it spans. Soundness: ``_grid_ij`` is monotone (floor, then
 clamp), so two bboxes that overlap (or touch) share at least one cell.
 
 The driver collects the build side once (``collect_build``, one job,
-bounded by the row cap) and keys that table (``BuildIndex``); the join
-planner (operators/_planner.py) sizes the build, decides the broadcast
-from the same table's stats and picks the resolution. Each worker
-process decodes it once into a ``_Build`` held in a small bounded cache
-keyed by the index's uuid, and reuses it across tasks.
+bounded by the row cap) as (id, WKB) only and decodes the bboxes from
+that WKB itself (``BuildTable``), so the job evaluates the caller's
+geometry expression once per row: a collected ``__bb`` next to the
+geometry would re-run it, as Catalyst inlines the expression into the
+bounds UDF's input. The driver keys that table (``BuildIndex``); the
+join planner (operators/_planner.py) sizes the build, decides the
+broadcast from the same table's stats and picks the resolution. Each
+worker process decodes it once into a ``_Build`` held in a small
+bounded cache keyed by the index's uuid, and reuses it across tasks.
 """
 
 from __future__ import annotations
@@ -41,7 +45,6 @@ _CACHE: dict = {}
 _CACHE_MAX = 4
 
 
-_BB = ("minx", "miny", "maxx", "maxy")
 # Spark schema of one bbox_partial row
 PARTIAL_SCHEMA = ("n long, sw double, cw long, mw double,"
                   " sh double, ch long, mh double")
@@ -73,21 +76,24 @@ def combine_partials(rows) -> dict:
 
 class BuildTable:
     """Driver-side Arrow copy of one build side: ``tbl`` holds (i = id,
-    g = WKB, minx..maxy = its ``__bb``) of a ``_prep_side`` frame, row
-    order = build row index. Everything the driver decides about a
-    broadcast build (its stats, its geometry-type headers, its index) is
-    derived from this one table, so the build crosses the JVM<->Python
-    boundary once per operator call."""
+    g = WKB) of a frame, row order = build row index, and ``bb`` (n, 4)
+    the rows' bboxes, decoded from that WKB on the driver by the kernel
+    ``st_bounds`` runs (bit-identical; NaN for a null or empty
+    geometry). Everything the driver decides about a broadcast build
+    (its stats, its geometry-type headers, its index) is derived from
+    this one table, so the build crosses the JVM<->Python boundary once
+    per operator call."""
 
     def __init__(self, tbl, id_type, sc):
+        from ..geom.kernels import bounds
+        from ..geom.wkb import from_wkb
+
         self.tbl = tbl
         self.id_type = id_type
         self.sc = sc
         self.n = tbl.num_rows
-        # NULL __bb fields (null or empty geometries) come back as NaN
-        self.bb = np.column_stack([
-            tbl[c].to_numpy(zero_copy_only=False).astype(np.float64)
-            for c in _BB]).reshape(self.n, 4)
+        self.bb = bounds(from_wkb(
+            tbl["g"].to_numpy(zero_copy_only=False))).reshape(self.n, 4)
 
     def stats(self) -> dict:
         """``_planner._side_stats``'s dict for this side, from the
@@ -106,11 +112,11 @@ class BuildTable:
 
 def collect_build(df, id_col: str, geom_col: str,
                   limit: int | None = None) -> BuildTable | None:
-    """Arrow-collect (id, wkb, __bb) of ``df`` (a ``_prep_side`` frame)
-    in one job. With ``limit``, at most ``limit + 1`` rows are collected
-    and an overflowing build returns None."""
-    sel = df.select(F.col(id_col).alias("i"), F.col(geom_col).alias("g"),
-                    *[F.col(f"__bb.{c}").alias(c) for c in _BB])
+    """Arrow-collect (id, wkb) of ``df`` in one job; the bboxes are
+    decoded on the driver (``BuildTable``). With ``limit``, at most
+    ``limit + 1`` rows are collected and an overflowing build returns
+    None."""
+    sel = df.select(F.col(id_col).alias("i"), F.col(geom_col).alias("g"))
     if limit is not None:
         sel = sel.limit(limit + 1)
     tbl = sel.toArrow().combine_chunks()

@@ -62,14 +62,20 @@ whose repartition would add a shuffle stage to the job; only the
 probe's giant collect reads the prepped probe, whose ids the cogroup
 uses. The stats of a frame read only its geometry
 column, so a raw frame and its prepped frame give the same stats.
+With an auto resolution and a build that may broadcast, the probe's
+stats job runs on a thread of its own beside the build's sizing
+(``_beside``), in the caller's job group: either plan reads those
+stats, so the job is never wasted.
 """
 
 from __future__ import annotations
 
+from concurrent import futures
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -133,11 +139,20 @@ def plan_join(probe: DataFrame, build: DataFrame, bid: str,
     pgeom, bgeom = geoms
     stats = [None, None]
     if broadcast is not False:
-        table, stats[1] = _size_build(build, bid, bgeom, broadcast)
+        # an auto resolution reads the probe's stats on either plan: that
+        # job runs beside the build's sizing
+        probe_stats = (_beside(_side_stats, probe, pgeom)
+                       if resolution is None else None)
+        try:
+            table, stats[1] = _size_build(build, bid, bgeom, broadcast)
+            if probe_stats is not None:
+                stats[0] = probe_stats.result()
+        finally:  # never leave the stats job running past the call
+            if probe_stats is not None:
+                futures.wait([probe_stats])
         if stats[1] is not None:
             res = resolution
             if res is None:
-                stats[0] = _side_stats(probe, pgeom)
                 res = _estimate_resolution(stats, domain)
             if broadcast or _fits(stats[1], res, domain):
                 if table is None:  # fits, so n <= BROADCAST_MAX_ROWS
@@ -237,6 +252,23 @@ def _collect_first(build: DataFrame) -> bool:
         return int(size) <= int(limit)
     except Exception:
         return True
+
+
+def _beside(fn, df: DataFrame, *args) -> futures.Future:
+    """``fn(df, *args)`` on a thread of its own, started now, so its
+    Spark jobs run beside the caller's. The thread inherits the caller's
+    job group and local properties, so its jobs are attributed as the
+    caller's own."""
+    out = futures.Future()
+
+    def run():
+        try:
+            out.set_result(fn(df, *args))
+        except BaseException as e:  # re-raised by result(), as in an executor
+            out.set_exception(e)
+
+    InheritableThread(run, session=df.sparkSession).start()
+    return out
 
 
 def _side_stats(df: DataFrame, geom: str) -> dict:

@@ -951,13 +951,13 @@ def sjoin_nearest(
                         broadcast=broadcast_right, max_distance=max_distance)
     resolution = plan.resolution
     min_cell = min(cell_size(resolution, domain))
-    # later passes over the right side (shuffle kNN, assembly re-join)
-    # are map passes: widen it now (ids already fixed)
-    right = _widen_build(right, right_geom)
-
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
         right_geom, how)
+    if plan.table is None or not narrow:
+        # later passes over the right side (shuffle kNN, assembly
+        # re-join) are map passes: widen it (ids already fixed)
+        right = _widen_build(right, right_geom)
 
     grid_n = 1 << resolution
     k_cap = grid_n  # full-grid disk == brute force

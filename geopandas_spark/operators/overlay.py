@@ -379,13 +379,19 @@ def overlay(
         df1 = df1.withColumn(geom, st_make_valid(geom))
         df2 = df2.withColumn(geom, st_make_valid(geom))
     df1p, i1 = _prep_side(df1, geom, id1, "o1")
-    raw2, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
-    df2p = _widen_build(raw2, geom)
+    df2p, i2 = _prep_side(df2, geom, id2, "o2", widen=False)
     # as in sjoin; pair_on always rides the shuffle plan
-    plan = plan_join(df1, raw2, i2, (geom, geom), resolution, domain,
+    plan = plan_join(df1, df2p, i2, (geom, geom), resolution, domain,
                      broadcast=False if pair_on else None,
                      prepped=(df1p, i1), keys=pair_on)
     df1c = df1p.drop("__bb")
+    d1cols, d2cols, narrow = _output_columns(
+        df1c, df2p.drop("__bb"), i1, i2, id1 is None, id2 is None, geom,
+        geom, "inner")
+    inter_only = how == "intersection"
+    if plan.table is None or not (inter_only and narrow):
+        # as in sjoin: widen the build only for a pass that reads it
+        df2p = _widen_build(df2p, geom)
     df2c = df2p.drop("__bb")
 
     # pairs rows = intersecting pairs, with the intersection geometry
@@ -394,7 +400,6 @@ def overlay(
     # so the residual stages are unaffected). how='intersection' needs
     # neither input geometry after the kernel, and keeps only polygonal
     # results there when keep_geom_type.
-    inter_only = how == "intersection"
     kernel = {"polygonal": inter_only and keep_geom_type,
               "geoms": not inter_only}
     if plan.table is not None:
@@ -422,8 +427,6 @@ def overlay(
     # piece and residuals).
     pairs = pairs.localCheckpoint(eager=False)
 
-    d1cols, d2cols, narrow = _output_columns(
-        df1c, df2c, i1, i2, id1 is None, id2 is None, geom, geom, "inner")
     m1, m2 = _suffix_columns(df1c.select(d1cols), df2c.select(d2cols),
                              lsuffix, rsuffix, exclude={geom})
     if inter_only and narrow:

@@ -107,9 +107,12 @@ def _check_keys(left: DataFrame, right: DataFrame, cols: list[str],
 
 def _widen_build(df: DataFrame, geom: str) -> DataFrame:
     """``conf.widen`` a ``_prep_side(widen=False)`` build side for the
-    map passes that read it; its driver collect reads the un-widened
-    frame. Its bbox is recomputed after the repartition, so the bounds
-    UDF runs in the widened tasks, as on a side prepped with ``widen``."""
+    map passes that read it (a shuffle pair pass, an assembly re-join);
+    its driver collect reads the un-widened frame. Called only once the
+    plan shows such a pass, since the widen's partition count costs a
+    physical planning. Its bbox is recomputed after the repartition, so
+    the bounds UDF runs in the widened tasks, as on a side prepped with
+    ``widen``."""
     return conf.widen(df.drop("__bb")).withColumn("__bb", st_bounds(geom))
 
 
@@ -513,8 +516,9 @@ def _prep_side(df: DataFrame, geom: str, id_col: str | None, tag: str,
     UDF-bearing map passes that read this frame parallelize. A broadcast
     build side is prepped with ``widen=False``: its first consumer is a
     driver collect, where the repartition only adds a shuffle stage to
-    the eager job; the map passes read it through ``_widen_build`` (the
-    checkpointed ids are already fixed).
+    the eager job; the map passes that read it after the plan is chosen
+    read it through ``_widen_build`` (the checkpointed ids are already
+    fixed).
 
     Auto ids come from monotonically_increasing_id, which Spark defines as
     NONDETERMINISTIC across plan branches — the join assembles results by
@@ -595,17 +599,13 @@ def sjoin(
 
     raw_left = left
     left, lid = _prep_side(left, left_geom, left_id, "l")
-    raw_right, rid = _prep_side(right, right_geom, right_id, "r",
-                                widen=False)
-    # every pass that reads the build side after the decision (cogroup,
-    # assembly re-join) is a map pass: widen it (ids already fixed)
-    right = _widen_build(raw_right, right_geom)
+    right, rid = _prep_side(right, right_geom, right_id, "r", widen=False)
 
     pad = float(distance) if (predicate == "dwithin" and distance) else 0.0
     # an explicit salting request signals a shuffle-scale build side and
     # on_attribute needs the attribute key: both take the cogroup pass
     plan = plan_join(
-        raw_left, raw_right, rid, (left_geom, right_geom), resolution,
+        raw_left, right, rid, (left_geom, right_geom), resolution,
         domain, broadcast=(False if on_attribute or salt_hot_cells
                            else broadcast_right), prepped=(left, lid),
         pad=pad, keys=on_attribute)
@@ -613,6 +613,10 @@ def sjoin(
     ldata, rdata, narrow = _output_columns(
         left, right, lid, rid, left_id is None, right_id is None, left_geom,
         right_geom, how)
+    if plan.table is None or not narrow:
+        # the passes that read the build side after the decision (cogroup,
+        # assembly re-join) are map passes: widen it (ids already fixed)
+        right = _widen_build(right, right_geom)
     if plan.table is not None:
         # small build side: single probe-side pass, no join, no explode.
         # The probe ships ONLY (id, wkb); bounds and the index lookup

@@ -318,3 +318,104 @@ def test_eager_job_budget(spark, tmp_path, monkeypatch):
     assert outs["sjoin"].count() > 0
     assert outs["sjoin_nearest"].count() >= n
     assert outs["overlay"].count() > 0
+
+
+def test_build_geometry_evaluated_once(spark, tmp_path, count_builds):
+    """The construct phase of a broadcast join evaluates the caller's
+    build geometry once per row: the build collect reads (id, WKB) only,
+    and the bboxes come from that WKB on the driver (a collected bbox
+    beside the geometry would run the caller's expression a second
+    time). Single-partition builds, so the bounded collect reads every
+    row exactly once."""
+    from pyspark.sql.functions import pandas_udf
+
+    from geopandas_spark.operators.sjoin import sjoin
+
+    r = np.random.default_rng(8)
+    pts = spark.read.parquet(_single_file(tmp_path, "pts", pd.DataFrame(
+        {"lid": np.arange(300), "geometry": list(B.to_wkb(
+            points_batch(r.random(300), r.random(300))))})))
+    builds = {"rects": _rects(r, 40), "sb": _rects(r, 30, 0.2),
+              "centers": list(B.to_wkb(points_batch(r.random(50),
+                                                    r.random(50))))}
+    sa = spark.read.parquet(_single_file(tmp_path, "sa", pd.DataFrame(
+        {"i1": np.arange(30), "geometry": _rects(r, 30, 0.2)})))
+
+    def counted(name, id_name):
+        """The build as a single-file parquet read whose geometry runs
+        through a pandas UDF counting the rows it evaluates."""
+        acc = spark.sparkContext.accumulator(0)
+
+        @pandas_udf("binary")
+        def _count(s: pd.Series) -> pd.Series:
+            acc.add(len(s))
+            return s
+
+        df = spark.read.parquet(_single_file(tmp_path, name, pd.DataFrame(
+            {id_name: np.arange(len(builds[name])),
+             "geometry": builds[name]})))
+        return df.withColumn("geometry", _count("geometry")), acc
+
+    rects, acc_r = counted("rects", "rid")
+    sjoin(pts, rects, left_id="lid", right_id="rid", resolution=6)
+    centers, acc_c = counted("centers", "rid")
+    sjoin_nearest(pts, centers, left_id="lid", right_id="rid",
+                  distance_col="d")
+    sb, acc_b = counted("sb", "i2")
+    overlay(sa, sb, id1="i1", id2="i2", make_valid=False)
+    assert len(count_builds) == 3  # all three broadcast
+    assert ((acc_r.value, acc_c.value, acc_b.value)
+            == (len(builds["rects"]), len(builds["centers"]),
+                len(builds["sb"])))
+
+
+@pytest.mark.parametrize("case,want", [
+    ("sjoin/broadcast", 0), ("nearest/broadcast", 0),
+    ("overlay/broadcast", 0), ("sjoin/shuffle", 1), ("nearest/shuffle", 1),
+    ("overlay/shuffle", 1), ("sjoin/left", 1), ("nearest/left", 1),
+    ("overlay/columns", 1)])
+def test_build_widened_only_when_read(spark, monkeypatch, count_builds,
+                                      case, want):
+    """The build side is widened (``_widen_build``) only when a pass
+    after the plan reads it: the shuffle pair pass or an assembly
+    re-join. A broadcast join with narrow assembly never reads it."""
+    from geopandas_spark.operators import nearest as N
+    from geopandas_spark.operators import overlay as O
+
+    calls = []
+    orig = S._widen_build
+
+    def spy(df, geom):
+        calls.append(geom)
+        return orig(df, geom)
+
+    for mod in (S, N, O):
+        monkeypatch.setattr(mod, "_widen_build", spy)
+    r = np.random.default_rng(4)
+    pts = _frame(spark, list(B.to_wkb(points_batch(r.random(80),
+                                                   r.random(80)))), "lid")
+    rects = _frame(spark, _rects(r, 20))
+    centers = _frame(spark, list(B.to_wkb(points_batch(r.random(20),
+                                                       r.random(20)))))
+    sa = _frame(spark, _rects(r, 15, 0.3), "i1")
+    sb = _frame(spark, _rects(r, 15, 0.3), "i2")
+    op, plan = case.split("/")
+    if plan == "left":  # data columns on both sides: a re-join assembly
+        pts, rects, centers = (f.withColumn("k", F.lit(1))
+                               for f in (pts, rects, centers))
+    kw = {"broadcast_right": False} if plan == "shuffle" else {}
+    how = {"how": "left"} if plan == "left" else {}
+    if op == "sjoin":
+        out = S.sjoin(pts, rects, left_id="lid", right_id="rid", **kw, **how)
+    elif op == "nearest":
+        out = sjoin_nearest(pts, centers, left_id="lid", right_id="rid",
+                            **kw, **how)
+    else:
+        if plan == "columns":
+            sb = sb.withColumn("k", F.lit(1))
+        if plan == "shuffle":  # overlay has no broadcast switch
+            monkeypatch.setattr(P, "BROADCAST_EXPLODED_ROWS", 0)
+        out = overlay(sa, sb, id1="i1", id2="i2", make_valid=False)
+    assert len(calls) == want, calls
+    assert len(count_builds) == (plan != "shuffle")
+    assert out.count() > 0
