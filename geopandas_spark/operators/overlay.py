@@ -386,8 +386,7 @@ def overlay(
                      prepped=(df1p, i1), keys=pair_on)
     df1c = df1p.drop("__bb")
     d1cols, d2cols, narrow = _output_columns(
-        df1c, df2p.drop("__bb"), i1, i2, id1 is None, id2 is None, geom,
-        geom, "inner")
+        df1c, df2p, i1, i2, id1 is None, id2 is None, geom, geom, "inner")
     inter_only = how == "intersection"
     if plan.table is None or not (inter_only and narrow):
         # as in sjoin: widen the build only for a pass that reads it

@@ -8,7 +8,10 @@ comes from that collect.
 * a build over the row cap falls back to the stats job + shuffle pass
   and still returns the brute-force pairs;
 * the eager (construct-phase) Spark job budget of sjoin, sjoin_nearest
-  and overlay on single-file parquet inputs.
+  and overlay on single-file parquet inputs;
+* the construct phase evaluates the build's geometry once per row (the
+  bboxes are decoded from the collected WKB, equal to ``st_bounds``),
+  and widens the build only for a pass that reads it.
 """
 
 import struct
